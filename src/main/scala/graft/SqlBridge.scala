@@ -30,6 +30,27 @@ object SqlBridge {
       to.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.analyzed)
 
+  /** `df` in one partition, the plan of `coalesce(1)`: a no-shuffle
+    * `Repartition(1)`. When the analyzed root is a global `Sort`, the sort
+    * moves INSIDE that partition instead (a local `Sort` over the
+    * `Repartition(1)`): one sorted partition is globally sorted, so the
+    * range exchange and its sampling job, which would recompute the whole
+    * child, are dropped. Physically the result is a `CoalesceExec(1)`
+    * reporting `SinglePartition`, which also satisfies the distribution
+    * of any group-by, global aggregate or sort stacked on it, so those run
+    * with no exchange either. */
+  def singlePartition(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+    val one = df.queryExecution.analyzed match {
+      case s: Sort if s.global =>
+        s.copy(global = false, child = Repartition(1, shuffle = false, s.child))
+      case p => Repartition(1, shuffle = false, p)
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], one)
+  }
+
   /** Truncate `df`'s SQL lineage: a new frame whose logical plan is a
     * LEAF (`LogicalRDD`) over `df`'s executed RDD — the plan-surgery
     * half of `Dataset.checkpoint` (classic.Dataset.checkpoint:

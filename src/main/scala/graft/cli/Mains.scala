@@ -1,6 +1,6 @@
 package graft.cli
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import org.apache.spark.sql.SparkSession
 import graft.gen.SyntheticBitacora
 import graft.ops.Kpi
@@ -29,6 +29,24 @@ object CliUtil {
     * changed (ADVICE r14). */
   def pinLocale(): Unit = java.util.Locale.setDefault(java.util.Locale.ROOT)
 
+  /** Everything a CLI `main` does around its stage: [[pinLocale]], a UTF-8
+    * stdout, the flags, and a session stopped at the end. The stdout swap
+    * is process-wide like the locale pin, so it happens here and never in
+    * a stage's `run`: the JVM's default charset follows the host locale
+    * (ASCII with LANG unset, printing "P?rez"), while the reference prints
+    * UTF-8 everywhere. */
+  def main(name: String, args: Array[String])(
+      body: (SparkSession, Map[String, String]) => Unit): Unit = {
+    pinLocale()
+    val out = new java.io.PrintStream(System.out, true,
+      java.nio.charset.StandardCharsets.UTF_8)
+    System.setOut(out)
+    Console.withOut(out) {
+      val spark = session(name)
+      try body(spark, parseArgs(args)) finally spark.stop()
+    }
+  }
+
   def session(name: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     SparkSession.builder()
@@ -44,15 +62,30 @@ object CliUtil {
 }
 
 /** Stage [1]: the reference's HTTP client run (http_client.py:199-211) —
-  * the same eight tasks in the same order (the cookie round-trip depends on
-  * session ordering) plus the three artifacts the reference persists:
+  * the same eight tasks plus the three artifacts the reference persists:
   * pretty `datos.json`, raw `datos.xml`, extracted-title `titulo.html`.
+  *
+  * Task [1], basic auth, runs first and alone, as a gate: when it fails,
+  * the run stops before any other request is sent. Tasks [2]–[8] are
+  * independent of each other (the cookie round-trip keeps its order
+  * inside its own one-task session), so they then start together, as
+  * Spark jobs on a small thread pool, and the 403 task's retry backoff
+  * (500 + 1000 ms) overlaps the other fetches. Their results are awaited
+  * in reference order, and in that order each console line is printed,
+  * each artifact written and each check raised, so the output reads
+  * exactly as a sequential run's.
   *
   *   runMain graft.cli.ClienteHttp --base_url https://httpbin.org --out out
   */
 object ClienteHttp {
   import java.nio.file.Path
+  import scala.concurrent.{Await, ExecutionContext, Future}
+  import scala.concurrent.duration.Duration
   import graft.sources.{HttpArtifacts, HttpIngest}
+
+  /** Threads running tasks [2]–[8]: the 403 task holds one through its
+    * backoff, the six quick fetches share the rest. */
+  private val Threads = 4
 
   def run(spark: SparkSession, baseUrl: String, outDir: Path): Unit = {
     // [1] basic auth — hard failure unless authenticated (http_client.py:80-88)
@@ -63,107 +96,114 @@ object ClienteHttp {
       "Autenticación no exitosa: authenticated != true")
     println(s"[AUTH BASIC] OK: user=${auth.getAs[String]("user")}")
 
-    // [2] cookie round-trip within one ordered session (http_client.py:91-103)
-    val cookies = HttpIngest.cookieSession(spark,
-      s"$baseUrl/cookies/set?session=activa", s"$baseUrl/cookies").collect()
-    val sess = cookies.last.getAs[String]("session_cookie")
-    require(sess == "activa", s"Cookie session no establecida correctamente. session=$sess")
-    println(s"[COOKIES] OK: session=$sess")
+    // created here, so its threads inherit the caller's Spark local
+    // properties (job group, scheduler pool, tags)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Threads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+    try {
+      // [2] cookie round-trip within one ordered session (http_client.py:91-103)
+      val cookies = Future(HttpIngest.cookieSession(spark,
+        s"$baseUrl/cookies/set?session=activa", s"$baseUrl/cookies").collect())
+      // [3] tolerated 403 — retried, logged, continue (http_client.py:106-115)
+      val st = Future(HttpIngest.tolerated403(spark, s"$baseUrl/status/403").collect().head)
+      // [4] /get JSON (http_client.py:118-123)
+      val getBody = Future(HttpIngest.extractJson(spark, s"$baseUrl/get")
+        .collect().head.getAs[String]("body"))
+      // [5] /xml raw body + parsed slide summary (http_client.py:126-137)
+      val xml = Future {
+        val body = HttpIngest.read(spark, Seq(s"$baseUrl/xml"), Map.empty)
+          .collect().head.getAs[String]("body")
+        (body, HttpIngest.xmlSlidesOfBody(spark, body).collect())
+      }
+      // [6] /html → title → h1 → SIN_TITULO chain (http_client.py:150-169)
+      val title = Future(HttpIngest.extractHtmlTitle(spark, s"$baseUrl/html")
+        .collect().head.getAs[String]("title"))
+      // [7] form POST echo (http_client.py:172-184)
+      val form = Future(HttpIngest.postForm(spark, s"$baseUrl/post", Seq(
+        "nombre" -> "Juan", "apellido" -> "Pérez",
+        "correo" -> "juan.perez@example.com",
+        "mensaje" -> "Este es un mensaje de prueba.")).collect().head)
+      // [8] redirect follow → final args (http_client.py:187-196)
+      val red = Future(HttpIngest.redirect(spark, s"$baseUrl/redirect-to?url=/get")
+        .collect().head)
 
-    // [3] tolerated 403 — retried, logged, continue (http_client.py:106-115)
-    val st = HttpIngest.tolerated403(spark, s"$baseUrl/status/403").collect().head
-    println(s"[403] status final: ${st.getAs[Int]("status_code")} " +
-      s"(${st.getAs[Int]("attempts")} intentos). Registrando evento y continuando...")
+      val sess = await(cookies).last.getAs[String]("session_cookie")
+      require(sess == "activa", s"Cookie session no establecida correctamente. session=$sess")
+      println(s"[COOKIES] OK: session=$sess")
 
-    // [4] /get JSON → pretty-printed datos.json (http_client.py:118-123)
-    val getBody = HttpIngest.extractJson(spark, s"$baseUrl/get")
-      .collect().head.getAs[String]("body")
-    HttpArtifacts.writeText(outDir.resolve("datos.json"), HttpArtifacts.prettyJson(getBody))
-    println(s"[JSON] Guardado en ${outDir.resolve("datos.json")}")
+      val st403 = await(st)
+      println(s"[403] status final: ${st403.getAs[Int]("status_code")} " +
+        s"(${st403.getAs[Int]("attempts")} intentos). Registrando evento y continuando...")
 
-    // [5] /xml → raw body datos.xml + parsed slide summary (http_client.py:126-137)
-    val xmlBody = HttpIngest.read(spark, Seq(s"$baseUrl/xml"), Map.empty)
-      .collect().head.getAs[String]("body")
-    HttpArtifacts.writeText(outDir.resolve("datos.xml"), xmlBody)
-    val resumen = HttpIngest.xmlSlidesOfBody(spark, xmlBody).collect()
-      .map(r => s"{type: ${r.getAs[String]("slide_type")}, title: ${r.getAs[String]("title")}}")
-      .mkString(", ")
-    println(s"[XML] Guardado en ${outDir.resolve("datos.xml")}; resumen slides: [$resumen]")
+      // pretty-printed datos.json
+      HttpArtifacts.writeText(outDir.resolve("datos.json"), HttpArtifacts.prettyJson(await(getBody)))
+      println(s"[JSON] Guardado en ${outDir.resolve("datos.json")}")
 
-    // [6] /html → title → h1 → SIN_TITULO chain → titulo.html (http_client.py:150-169)
-    val title = HttpIngest.extractHtmlTitle(spark, s"$baseUrl/html")
-      .collect().head.getAs[String]("title")
-    HttpArtifacts.writeText(outDir.resolve("titulo.html"), title)
-    println(s"[HTML] Título extraído: $title")
+      val (xmlBody, slides) = await(xml)
+      HttpArtifacts.writeText(outDir.resolve("datos.xml"), xmlBody)
+      val resumen = slides
+        .map(r => s"{type: ${r.getAs[String]("slide_type")}, title: ${r.getAs[String]("title")}}")
+        .mkString(", ")
+      println(s"[XML] Guardado en ${outDir.resolve("datos.xml")}; resumen slides: [$resumen]")
 
-    // [7] form POST echo (http_client.py:172-184)
-    val form = HttpIngest.postForm(spark, s"$baseUrl/post", Seq(
-      "nombre" -> "Juan", "apellido" -> "Pérez",
-      "correo" -> "juan.perez@example.com",
-      "mensaje" -> "Este es un mensaje de prueba.")).collect().head
-    println(s"[POST] Respuesta form: ${form.getAs[String]("form_echo")}")
+      val t = await(title)
+      HttpArtifacts.writeText(outDir.resolve("titulo.html"), t)
+      println(s"[HTML] Título extraído: $t")
 
-    // [8] redirect follow → final args (http_client.py:187-196)
-    val red = HttpIngest.redirect(spark, s"$baseUrl/redirect-to?url=/get").collect().head
-    println(s"[REDIRECT] status: ${red.getAs[Int]("status_code")}, " +
-      s"args: ${red.getAs[String]("final_args")}")
+      println(s"[POST] Respuesta form: ${await(form).getAs[String]("form_echo")}")
+
+      val r = await(red)
+      println(s"[REDIRECT] status: ${r.getAs[Int]("status_code")}, " +
+        s"args: ${r.getAs[String]("final_args")}")
+    } finally {
+      // a failed check returns only once every started request has ended
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
   }
 
-  def main(args: Array[String]): Unit = {
-    CliUtil.pinLocale()
-    val a = CliUtil.parseArgs(args)
-    val spark = CliUtil.session("cliente_http")
-    try run(spark,
-      a.getOrElse("base_url", "https://httpbin.org"),
-      Paths.get(a.getOrElse("out", "out")))
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    CliUtil.main("cliente_http", args) { (spark, a) =>
+      run(spark,
+        a.getOrElse("base_url", "https://httpbin.org"),
+        Paths.get(a.getOrElse("out", "out")))
+    }
 }
 
 /** Stage [2]: seeded synthetic bitácora → JSONL. */
 object GenerarDatos {
-  def main(args: Array[String]): Unit = {
-    CliUtil.pinLocale()
-    val a = CliUtil.parseArgs(args)
-    val spark = CliUtil.session("generar_datos")
-    try SyntheticBitacora.writeJsonl(
-      SyntheticBitacora.generate(spark,
-        n = a.getOrElse("n_registros", "500").toLong,
-        seed = a.getOrElse("seed", "42").toLong,
-        days = a.getOrElse("days", "3").toInt),
-      a.getOrElse("salida", "out/datos_jsonl"),
-      singleFile = true)
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    CliUtil.main("generar_datos", args) { (spark, a) =>
+      SyntheticBitacora.writeJsonl(
+        SyntheticBitacora.generate(spark,
+          n = a.getOrElse("n_registros", "500").toLong,
+          seed = a.getOrElse("seed", "42").toLong,
+          days = a.getOrElse("days", "3").toInt),
+        a.getOrElse("salida", "out/datos_jsonl"),
+        singleFile = true)
+    }
 }
 
 /** Stage [3]: JSONL bitácora → sorted KPI CSV. */
 object CalcularKpi {
-  def main(args: Array[String]): Unit = {
-    CliUtil.pinLocale()
-    val a = CliUtil.parseArgs(args)
-    val spark = CliUtil.session("calcular_kpi")
-    try {
+  def main(args: Array[String]): Unit =
+    CliUtil.main("calcular_kpi", args) { (spark, a) =>
       val in = a.getOrElse("input", sys.error("--input required"))
       val out = a.getOrElse("output", sys.error("--output required"))
       Kpi.writeKpiCsv(Kpi.bitacoraKpi(Kpi.readBitacora(spark, in)), out)
-    } finally spark.stop()
-  }
+    }
 }
 
 /** Stage [4]: KPI CSV → HTML report + the two chart PNGs
   * (the reference's full artifact set, generar_reporte.py:263-292). */
 object GenerarReporte {
-  def main(args: Array[String]): Unit = {
-    CliUtil.pinLocale()
-    val a = CliUtil.parseArgs(args)
-    val spark = CliUtil.session("generar_reporte")
-    try {
+  def main(args: Array[String]): Unit =
+    CliUtil.main("generar_reporte", args) { (spark, a) =>
       val in = a.getOrElse("input", sys.error("--input required"))
       val out = a.getOrElse("output", "out/report.html")
       val umbral = a.getOrElse("umbral_p90", "300").toDouble
       Report.writeReportArtifacts(Kpi.readKpiCsv(spark, in), umbral, Paths.get(out))
       println(s"[generar_reporte] wrote $out (+ ${Report.RequestsPngName}, ${Report.P90PngName})")
-    } finally spark.stop()
-  }
+    }
 }

@@ -54,12 +54,4 @@ object NpPercentile {
       .when(t >= 0.5, b - (b - a) * (lit(1.0) - t))
       .otherwise(a + (b - a) * t)
   }
-
-  /** Aggregate building block: the sorted per-group value buffer to feed
-    * [[ofSorted]] after the aggregation. Buffers the group's values like
-    * the reference itself does (per-group `elapsed` lists,
-    * calcular_kpi.py:74-83) — bounded by group size, NOT corpus size; for
-    * hash-portable outputs at scale prefer the builtin `percentile`
-    * (count-map buffer, and bit-identical to DuckDB). */
-  def sortedValues(value: Column): Column = sort_array(collect_list(value))
 }

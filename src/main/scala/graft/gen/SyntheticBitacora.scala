@@ -1,5 +1,7 @@
 package graft.gen
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.IOUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +63,42 @@ object SyntheticBitacora {
       parse.as("parse_result"))
   }
 
-  /** K1 — JSONL sink (one compact object per line, UTF-8 native). */
+  /** K1 — JSONL sink (one compact object per line, UTF-8 native), in
+    * overwrite mode.
+    *
+    * `singleFile` writes the same bytes as `coalesce(1)` without funnelling
+    * generation into one task: the partitions are written in parallel to a
+    * hidden staging directory beside `path`, their `part-*` files are
+    * concatenated in part order into the first part's name (coalesce reads
+    * partitions 0..n−1 in that order, and `rand(seed)` seeds per partition
+    * either way), and the staging directory is renamed onto `path`. A
+    * failure therefore never leaves a half-written `path`. */
   def writeJsonl(df: DataFrame, path: String, singleFile: Boolean = false): Unit =
-    (if (singleFile) df.coalesce(1) else df).write.mode("overwrite").json(path)
+    if (!singleFile) df.write.mode("overwrite").json(path)
+    else {
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      val fs = new Path(path).getFileSystem(conf)
+      val target = fs.makeQualified(new Path(path))
+      val staging = new Path(target.getParent,
+        s".${target.getName}.staging-${java.util.UUID.randomUUID()}")
+      def move(from: Path, to: Path): Unit =
+        if (!fs.rename(from, to))
+          throw new java.io.IOException(s"could not rename $from to $to")
+      try {
+        df.write.json(staging.toString)
+        val parts = fs.listStatus(staging).map(_.getPath)
+          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        val merged = new Path(staging, "_merged")
+        val out = fs.create(merged, false)
+        try parts.foreach { p =>
+          val in = fs.open(p)
+          try IOUtils.copyBytes(in, out, 1 << 16, false) finally in.close()
+        } finally out.close()
+        parts.foreach(fs.delete(_, false))
+        // Spark writes at least one part file, an empty one for an empty frame
+        move(merged, parts.head)
+        if (fs.exists(target)) fs.delete(target, true)
+        move(staging, target)
+      } finally fs.delete(staging, true)
+    }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge
 import org.apache.spark.sql.types._
 
 /** The reference's core query (stage [3], /root/reference/src/calcular_kpi.py):
@@ -11,6 +12,10 @@ import org.apache.spark.sql.types._
   *   scan → null-guard filter (P1) → key derivation (P2/P3) + lenient casts
   *   (P4-P6) → hash aggregate A1-A6 (partial+final around an Exchange on the
   *   group key) → py_round 2dp (P11, CPython-identical half-even) → sort (O1).
+  * The sort is a global `orderBy` on the returned frame. The single-CSV
+  * sink ([[writeKpiCsv]]) runs it inside its one output task, so the CLI
+  * recipe pays no range exchange for it; a caller that collects or writes
+  * a partitioned directory gets the usual range-partitioned sort.
   *
   * Scale notes: the only non-streaming aggregate is the exact percentile
   * (`Percentile`, ObjectHashAggregate — buffers values per group, same cost
@@ -46,10 +51,12 @@ object Kpi {
     * calcular_kpi.py:52 (strptime raise). */
   def dateUtc(tsString: Column, strict: Boolean = true): Column = {
     val parsed = to_date(try_to_timestamp(tsString, lit("yyyy-MM-dd'T'HH:mm:ss'Z'")))
+    // `parsed` appears once: a CaseWhen testing `parsed.isNull` and then
+    // returning `parsed` parses every timestamp twice (the branch copy is
+    // not eliminated); coalesce evaluates the raise only on a null parse
     if (strict)
-      when(tsString.isNotNull && parsed.isNull,
-        raise_error(concat(lit("timestamp_utc does not match yyyy-MM-ddTHH:mm:ssZ: "), tsString)))
-        .otherwise(parsed)
+      coalesce(parsed, when(tsString.isNotNull,
+        raise_error(concat(lit("timestamp_utc does not match yyyy-MM-ddTHH:mm:ssZ: "), tsString))))
     else parsed
   }
 
@@ -131,9 +138,12 @@ object Kpi {
       else if (crossEngineExact)
         (percentile(col("elapsed_ms"), lit(0.9)), identity)
       else
-        (collect_list(col("_scan_kv")),
-          c => graft.functions.NpPercentile.ofSorted(
-            sort_array(transform(c, valueOf)), 0.9))
+        // sorted ONCE, in the aggregate's result projection: `ofSorted`
+        // repeats its argument about 15 times, and every copy of an inline
+        // sort_array(transform(..)) gets fresh lambda-variable ids, so
+        // subexpression elimination would never merge them
+        (sort_array(transform(collect_list(col("_scan_kv")), valueOf)),
+          c => graft.functions.NpPercentile.ofSorted(c, 0.9))
     // Mean tiers. crossEngineExact: exact DECIMAL(18,2) sum (elapsed is
     // 2-dp by contract) divided once in double — the correctly-rounded
     // true mean, which DuckDB replays for the hash-portable oracle gate.
@@ -216,10 +226,14 @@ object Kpi {
     spark.read.option("header", "true").schema(kpiSchema).csv(path)
 
   /** K2 — single-CSV sink reproducing the reference's file contract
-    * (calcular_kpi.py:121-153). `coalesce(1)` is a small-scale compat mode
-    * only — at scale, drop it and write a partitioned directory. */
+    * (calcular_kpi.py:121-153). `singleFile` funnels every row into one
+    * task ([[SqlBridge.singlePartition]], the plan of `coalesce(1)`); a
+    * sorted frame such as [[bitacoraKpi]]'s is sorted inside that task,
+    * so the sink runs no range exchange and no sampling job. A
+    * small-scale compat mode only — at scale, drop it and write a
+    * partitioned directory. */
   def writeKpiCsv(kpi: DataFrame, dir: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) kpi.coalesce(1) else kpi
+    val out = if (singleFile) SqlBridge.singlePartition(kpi) else kpi
     out.select(kpiColumns.map(col): _*)
       .write.mode("overwrite").option("header", "true").csv(dir)
   }

@@ -2,6 +2,7 @@ package graft.report
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge
 import graft.functions.PyRoundExpression.pyRound
 
 /** Stage [4] — the reporting query + HTML sink
@@ -9,9 +10,10 @@ import graft.functions.PyRoundExpression.pyRound
   * rounded half-even 2dp like the CSV contract (unlike the oracle-exact
   * variants in QueriesKpi, which skip rounding for cross-engine hashing).
   *
-  * The aggregations run distributed; only the final ≤#endpoints rows cross
-  * the driver boundary at render time (generar_reporte.py:263-275 note in
-  * SURVEY §3.2).
+  * The aggregations run in Spark over the KPI table, in one partition
+  * (it holds one row per day and endpoint); only the final ≤#endpoints
+  * rows cross the driver boundary at render time (generar_reporte.py:263-275
+  * note in SURVEY §3.2).
   */
 object Report {
 
@@ -140,15 +142,21 @@ object Report {
        |</body></html>""".stripMargin
   }
 
+  /** The card values and the endpoint table, collected. The KPI table
+    * has one row per day and endpoint, so both aggregates run over ONE
+    * partition ([[SqlBridge.singlePartition]]): it satisfies the
+    * group-by, the global aggregate and the sort, which then need no
+    * exchange, and each collect is a single job. */
+  private def collectTables(kpi: DataFrame, umbralP90: Double): (Row, Seq[Row]) = {
+    val one = SqlBridge.singlePartition(kpi)
+    (globalMetrics(one).collect().head, endpointTable(one, umbralP90).collect().toSeq)
+  }
+
   /** End-to-end stage [4]: KPI table → HTML string (driver-side render over
     * the collected ≤#endpoints rows). */
   def buildReport(kpi: DataFrame, umbralP90: Double): String = {
-    val cached = kpi.cache() // shared scan for the two aggregations (§3.2)
-    try {
-      val g = globalMetrics(cached).collect().head
-      val e = endpointTable(cached, umbralP90).collect().toSeq
-      renderHtml(g, e, umbralP90)
-    } finally { cached.unpersist(false); () }
+    val (g, e) = collectTables(kpi, umbralP90)
+    renderHtml(g, e, umbralP90)
   }
 
   /** The reference's fixed chart basenames (generar_reporte.py:269-270). */
@@ -162,22 +170,18 @@ object Report {
   def writeReportArtifacts(kpi: DataFrame, umbralP90: Double,
                            outHtml: java.nio.file.Path): Unit = {
     import java.nio.file.Files
-    val cached = kpi.cache()
-    try {
-      val g = globalMetrics(cached).collect().head
-      val e = endpointTable(cached, umbralP90).collect().toSeq
-      val dir = Option(outHtml.toAbsolutePath.getParent).get
-      Files.createDirectories(dir)
-      Charts.plotRequests(
-        e.map(_.getAs[String]("endpoint_base")),
-        e.map(_.getAs[Long]("requests_total")),
-        dir.resolve(RequestsPngName))
-      Charts.plotP90(
-        e.map(_.getAs[String]("endpoint_base")),
-        e.map(_.getAs[Double]("p90_elapsed_ms")),
-        dir.resolve(P90PngName))
-      Files.writeString(outHtml, renderHtml(g, e, umbralP90, withImages = true))
-      ()
-    } finally { cached.unpersist(false); () }
+    val (g, e) = collectTables(kpi, umbralP90)
+    val dir = Option(outHtml.toAbsolutePath.getParent).get
+    Files.createDirectories(dir)
+    Charts.plotRequests(
+      e.map(_.getAs[String]("endpoint_base")),
+      e.map(_.getAs[Long]("requests_total")),
+      dir.resolve(RequestsPngName))
+    Charts.plotP90(
+      e.map(_.getAs[String]("endpoint_base")),
+      e.map(_.getAs[Double]("p90_elapsed_ms")),
+      dir.resolve(P90PngName))
+    Files.writeString(outHtml, renderHtml(g, e, umbralP90, withImages = true))
+    ()
   }
 }

@@ -25,9 +25,12 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val retrySetHits = new AtomicInteger(0)
   private val retryFailHits = new AtomicInteger(0)
   private val retryCookieSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  // every request the stub answers
+  private val served = new AtomicInteger(0)
 
   private def reply(ex: HttpExchange, code: Int, body: String,
       headers: Map[String, String] = Map.empty): Unit = {
+    served.incrementAndGet()
     headers.foreach { case (k, v) => ex.getResponseHeaders.add(k, v) }
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
@@ -45,6 +48,11 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (auth.contains(expected))
         reply(ex, 200, """{"authenticated": true, "user": "usuario_test"}""")
       else reply(ex, 401, "")
+    })
+    // basic auth that answers but does not authenticate: the stage-[1]
+    // gate's failure path (base URL `$base/denied`)
+    server.createContext("/denied", (ex: HttpExchange) => {
+      reply(ex, 200, """{"authenticated": false, "user": "usuario_test"}""")
     })
     server.createContext("/cookies/set", (ex: HttpExchange) => {
       reply(ex, 200, """{"cookies": {}}""",
@@ -236,7 +244,21 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("K3/K4 stage-[1] CLI e2e: 8 tasks in order, writes the 3 artifacts") {
     val out = java.nio.file.Files.createTempDirectory("graft_stage1")
-    graft.cli.ClienteHttp.run(spark, base, out)
+    val console = new java.io.ByteArrayOutputStream()
+    served.set(0)
+    Console.withOut(new java.io.PrintStream(console, true, StandardCharsets.UTF_8)) {
+      graft.cli.ClienteHttp.run(spark, base, out)
+    }
+    // tasks [2]-[8] run concurrently, yet the console keeps the
+    // reference's order
+    val lines = new String(console.toByteArray, StandardCharsets.UTF_8).linesIterator.toSeq
+    assert(lines.map(l => l.take(l.indexOf(']') + 1)) == Seq("[AUTH BASIC]", "[COOKIES]",
+      "[403]", "[JSON]", "[XML]", "[HTML]", "[POST]", "[REDIRECT]"), lines.mkString("\n"))
+    assert(lines(2).contains("(3 intentos)"))
+    assert(lines(6).contains("\"apellido\":\"Pérez\""))
+    // 1 auth + 2 cookie + 3 for the retried 403 + get, xml, html, post +
+    // the redirect and its target
+    assert(served.get == 12)
 
     // K3 — pretty /get JSON (http_client.py:121): parses back to the stub
     // body and carries the indent-2 layout
@@ -253,6 +275,17 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val titulo = new String(
       java.nio.file.Files.readAllBytes(out.resolve("titulo.html")), StandardCharsets.UTF_8)
     assert(titulo == "Herman Melville - Moby-Dick")
+  }
+
+  test("stage-[1] gate: failed basic auth stops the run before any other request") {
+    val out = java.nio.file.Files.createTempDirectory("graft_stage1_denied")
+    served.set(0)
+    val e = intercept[IllegalArgumentException] {
+      graft.cli.ClienteHttp.run(spark, s"$base/denied", out)
+    }
+    assert(e.getMessage.contains("authenticated != true"))
+    assert(served.get == 1)
+    assert(java.nio.file.Files.list(out).count() == 0)
   }
 
   test("prettyJson matches python json.dumps(ensure_ascii=False, indent=2)") {

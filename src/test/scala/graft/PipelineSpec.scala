@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.gen.SyntheticBitacora
 import graft.ops.Kpi
@@ -122,6 +123,127 @@ class PipelineSpec extends AnyFunSuite {
       assert(statusRow.getAs[Long]("client_4xx") == 1)
       assert(statusRow.getAs[Long]("parse_errors") == 1)
     } finally q.stop()
+  }
+
+  /** Runs `body` under a job group of its own and returns the jobs it
+    * started and the executed plans of the SQL executions it finished,
+    * both read after the listener bus has drained. */
+  private def jobsAndPlans(body: => Unit)
+      : (Int, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val group = s"pipelinespec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.graftbridge.CoreBridge.drainListeners(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    sc.setJobGroup(group, "recipe sink")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graftbridge.CoreBridge.drainListeners(sc)
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    (jobs.get, plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq)
+  }
+
+  /** Every physical node of `p`, including those behind adaptive
+    * execution's wrappers. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val direct = p.collect { case n => n }
+    direct ++ direct.flatMap {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => Nil
+    }
+  }
+
+  test("recipe sinks: no range exchange, one p90 sort, at most 2 jobs each") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, SortArray}
+    val dir = java.nio.file.Files.createTempDirectory("graft_sinks")
+    // a log spread over 3 files, so the scan-order key spans files
+    SyntheticBitacora.generate(spark, 3000, seed = 5, endUtcSeconds = Some(1754956800L))
+      .coalesce(3).write.json(s"$dir/log")
+    assert(java.nio.file.Files.list(dir.resolve("log")).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".json")) == 3)
+    def kpi = Kpi.bitacoraKpi(Kpi.readBitacora(spark, s"$dir/log"))
+
+    val (kpiJobs, kpiPlans) = jobsAndPlans(Kpi.writeKpiCsv(kpi, s"$dir/kpi"))
+    assert(kpiPlans.size == 1, s"expected the write's plan, got ${kpiPlans.size}")
+    val plan = kpiPlans.head
+    assert(!plan.toString.toLowerCase.contains("rangepartitioning"),
+      s"the single-file sink still range-partitions:\n$plan")
+    // the faithful p90 sorts its value buffer once per group; the avg's
+    // sort of the (key, value) buffer is the other, separate sort_array
+    val p90Sorts = nodes(plan).flatMap(_.expressions)
+      .flatMap(_.collect { case s: SortArray if s.base.isInstanceOf[ArrayTransform] => s })
+    assert(p90Sorts.size == 1, s"p90 buffer sorted ${p90Sorts.size} times:\n$plan")
+    assert(kpiJobs <= 2, s"KPI sink ran $kpiJobs jobs")
+    // same rows, same order as the frame itself
+    val back = Kpi.readKpiCsv(spark, s"$dir/kpi")
+    assert(back.collect().toSeq == kpi.collect().toSeq)
+
+    val (reportJobs, _) = jobsAndPlans(
+      Report.writeReportArtifacts(back, 300.0, dir.resolve("report.html")))
+    assert(reportJobs <= 2, s"report ran $reportJobs jobs")
+  }
+
+  test("writeJsonl(singleFile): coalesce(1)'s bytes, written in parallel") {
+    import java.nio.file.{Files, Path, Paths}
+    val dir = Files.createTempDirectory("graft_jsonl_single")
+    def frame(n: Long, seed: Long) =
+      SyntheticBitacora.generate(spark, n, seed = seed, endUtcSeconds = Some(1754956800L))
+    def partFiles(d: Path): Seq[Path] = Files.list(d).iterator().asScala
+      .filter(p => p.getFileName.toString.startsWith("part-") &&
+        p.getFileName.toString.endsWith(".json")).toSeq
+    def onlyPart(d: Path): Array[Byte] = {
+      val parts = partFiles(d)
+      assert(parts.size == 1, s"$d holds ${parts.size} part files")
+      Files.readAllBytes(parts.head)
+    }
+    def sameBytes(df: org.apache.spark.sql.DataFrame, out: Path): Unit = {
+      val ref = Files.createTempDirectory("graft_jsonl_ref").resolve("ref")
+      df.coalesce(1).write.json(ref.toString)
+      assert(java.util.Arrays.equals(onlyPart(out), onlyPart(ref)))
+    }
+
+    val first = frame(4000, 3)
+    assert(first.rdd.getNumPartitions == 4)
+    val out = dir.resolve("datos")
+    SyntheticBitacora.writeJsonl(first, out.toString, singleFile = true)
+    sameBytes(first, out)
+    assert(spark.read.json(out.toString).count() == 4000)
+
+    // overwrite: the second call's output replaces the first
+    val second = frame(500, 4)
+    SyntheticBitacora.writeJsonl(second, out.toString, singleFile = true)
+    sameBytes(second, out)
+    // no staging directory left beside the target
+    assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("datos"))
+
+    // a relative path resolves against the working directory
+    val rel = s"target/graft_jsonl_rel_${java.util.UUID.randomUUID()}"
+    try {
+      SyntheticBitacora.writeJsonl(first, rel, singleFile = true)
+      sameBytes(first, Paths.get(rel).toAbsolutePath)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(rel))
   }
 
   test("report endpoint table: weighted means + alerta flag") {
