@@ -228,17 +228,9 @@ object Bench {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // cpus is free-form env text ("*" is a legal local[] arg): emit it as
-    // a bare JSON number only when it actually is one
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus + "\""
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpusJson = Bench.cpusJson(cpus)
+    val spark = graft.cli.CliUtil.builder(s"local[$cpus]", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       // rank-filter pre-trim for corpus-scale quotas (see Verify.scala)
       .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
       // Shuffle files are only deleted after their RDDs are GARBAGE
@@ -546,9 +538,7 @@ object Bench {
   private def miniJson(metric: String, total: Double, sfDir: String,
       cpus: String, contended: Boolean, results: Seq[(String, Double)],
       detailPath: String): String = {
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus + "\""
+    val cpusJson = Bench.cpusJson(cpus)
     def line(top: Seq[(String, Double)]): String = {
       val qj = top.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
         .mkString("{", ",", "}")
@@ -560,10 +550,24 @@ object Bench {
     line(ranked.take(n))
   }
 
-  /** `/x/BENCH_DETAIL.json` → `/x/BENCH_DETAIL_c32.json` for cpus=32. */
-  private def cpusKeyedPath(path: String, cpus: String): String = {
+  /** `cpus` is free-form env text ("*" is a legal local[] arg): a bare
+    * JSON number only when it is ASCII digits (`isDigit` also accepts
+    * non-ASCII digits, which JSON does not), else a quoted string. */
+  private[graft] def cpusJson(cpus: String): String =
+    if (cpus.matches("[0-9]+")) cpus
+    else "\"" + cpus.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c => c.toString
+    } + "\""
+
+  /** `/x/BENCH_DETAIL.json` → `/x/BENCH_DETAIL_c32.json` for cpus=32. The
+    * extension is looked for in the file name only: `/x/run.d/BENCH` →
+    * `/x/run.d/BENCH_c32`. */
+  private[graft] def cpusKeyedPath(path: String, cpus: String): String = {
     val i = path.lastIndexOf('.')
-    if (i < 0) s"${path}_c$cpus" else s"${path.substring(0, i)}_c$cpus${path.substring(i)}"
+    if (i <= path.lastIndexOf('/')) s"${path}_c$cpus"
+    else s"${path.substring(0, i)}_c$cpus${path.substring(i)}"
   }
 
   private def writeArtifact(path: String, line: String): Unit =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -34,16 +34,12 @@ object BenchStream {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON %.3f must be dot-decimal (ADVICE r13)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.cli.CliUtil.builder(s"local[$cpus]", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // rows/batches/state are summed from recentProgress, which keeps
       // only the last N entries (default 100) — raise it so a small-mft
       // or large-staging run can't silently undercount (ADVICE r15)
       .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.ui.enabled", "false")
       // bound dead-shuffle-file accumulation on big heaps (see Bench)
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "120s"))

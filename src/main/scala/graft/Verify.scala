@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,11 +20,7 @@ object Verify {
     // Requires SPARK_HOME (executor launch) and SPARK_GRAFT_JARS (the
     // packaged graft jar, fetched by executors at task deserialization).
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.cli.CliUtil.builder(master, cpus)
       // rank-filter pre-trim (WindowGroupLimit) for corpus-scale quotas:
       // the 1000-row default defeats it for any realistic target_n
       .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
@@ -121,6 +116,15 @@ object Verify {
     val oracleFile =
       if (only.isDefined) "oracle_sql.partial.json" else "oracle_sql.json"
     Files.writeString(Paths.get(s"$outDir/$oracleFile"), json)
+    // this JVM's codegen totals (under local-cluster, the driver's only):
+    // every session shares one class loader (see CliUtil.builder), so a
+    // run compiles each distinct class once; a return to per-session
+    // recompiling shows here as a jump in both
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val compileMs = org.apache.spark.sql.catalyst.expressions.codegen
+      .CodeGenerator.compileTime / 1000000L
+    println(s"[verify] codegen: $compiles classes compiled in $compileMs ms")
     spark.stop()
   }
 }

@@ -47,14 +47,30 @@ object CliUtil {
     }
   }
 
-  def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The session policy every factory shares (the CLI mains, Verify,
+    * Bench, BenchStream, the test session); each adds its own confs.
+    *
+    * Artifact isolation is off. Spark 4.1 turns it on by default, which
+    * gives every SparkSession its own executor class loader, and Spark
+    * caches generated code per (class loader, code). The engine makes new
+    * sessions all the time: each `LoopCache.loopSession` clone (rebuilt
+    * after every `LoopCache.clearMemo`) and each streaming query's
+    * internal clone. With isolation on, each of them would recompile the
+    * same classes and run them cold. The engine adds no session artifacts
+    * (`spark.jars` is context-wide), so one shared class loader loses
+    * nothing, and every session shares one codegen cache per JVM. */
+  def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+
+  def session(name: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    builder(s"local[$cpus]", cpus)
+      .appName(name)
       // rank-filter pre-trim for corpus-scale quotas (see Verify.scala)
       .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
       .getOrCreate()

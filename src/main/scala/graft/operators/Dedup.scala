@@ -278,15 +278,22 @@ object Dedup {
     * of the two-filter union that scans it twice and doubles the
     * partition count of every banding stage downstream (r19, guide
     * §1.2 — measured on q81: the union shape ran every screen stage
-    * 64-wide over two staged-table scans). */
+    * 64-wide over two staged-table scans).
+    *
+    * A NULL tag fails the query: the row is neither new nor old, and the
+    * split below would drop it from both sides without a word. */
   def incrementalLshCandidatePairsTagged(
       sigs: DataFrame, idCol: String, isNewCol: String,
       numPerm: Int = 64, bands: Int = 16,
       maxBucketSize: Int = 200): DataFrame = {
     requireIntegralId(sigs, idCol, "incrementalLshCandidatePairsTagged")
+    // checked in the same projection (no extra job): coalesce evaluates
+    // the raise only on a NULL tag
     incrementalLshCore(
       sigs.select(col(idCol).cast("long").as("id"), col("sig"),
-        col(isNewCol).cast("boolean").as("is_new")),
+        coalesce(col(isNewCol).cast("boolean"), raise_error(concat_ws("",
+          lit(s"incrementalLshCandidatePairsTagged: NULL $isNewCol for $idCol "),
+          col(idCol).cast("string")))).as("is_new")),
       numPerm, bands, maxBucketSize)
   }
 

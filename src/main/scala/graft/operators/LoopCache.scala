@@ -93,7 +93,12 @@ object LoopCache {
     * clear the cache between queries for cold honesty must ALSO clear
     * the memo, or a memoized operator's "cold" run silently returns the
     * previous invocation's frame (and the session-lived map keeps its
-    * captured plans/RDDs alive). */
+    * captured plans/RDDs alive).
+    *
+    * Dropping the loop-session clones costs no recompilation: the next
+    * [[loopSession]] clone finds the previous clone's generated classes
+    * in Spark's codegen cache. That is JVM-level code reuse, like the
+    * JIT's, not result reuse, so it needs no reuse label. */
   def clearMemo(): Unit = {
     memoMap.synchronized(memoMap.clear())
     // the loop-session memo is the same kind of session-lived state: a
@@ -164,7 +169,15 @@ object LoopCache {
     * driver barrier + scheduling round-trip per shuffle per round — at
     * node-sized volumes that overhead IS the round. Sessions are memoized
     * per (parent, width) so repeated operator calls share one clone.
-    * Kill switch: SPARK_GRAFT_LOOPTUNE=0 returns the parent unchanged. */
+    * Kill switch: SPARK_GRAFT_LOOPTUNE=0 returns the parent unchanged.
+    *
+    * A new clone costs no recompilation. Every session factory turns
+    * artifact isolation off (`CliUtil.builder`), so clones share the
+    * parent's executor class loader and with it Spark's codegen cache,
+    * which is keyed by (class loader, code). With isolation on (Spark
+    * 4.1's default), each clone would recompile every round's classes. The
+    * reuse is of compiled code, JVM-wide like the JIT's, not of results,
+    * so a warm loop served by it needs no reuse label. */
   private val tunedSessions = scala.collection.mutable.HashMap
     .empty[(org.apache.spark.sql.SparkSession, Int),
       org.apache.spark.sql.SparkSession]

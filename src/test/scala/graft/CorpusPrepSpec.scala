@@ -195,6 +195,25 @@ class CorpusPrepSpec extends AnyFunSuite {
     assert(incSet == batch)
   }
 
+  test("tagged incremental LSH: a NULL tag fails the query with a named error") {
+    import graft.operators.Dedup
+    val text = (1 to 40).map(i => s"word$i").mkString(" ")
+    val sigs = Dedup.minHashSignatures(
+      Seq((1L, text), (2L, text), (3L, text)).toDF("doc_id", "text"),
+      "doc_id", "text")
+      .withColumn("is_new",
+        when(col("doc_id") === 1L, lit(true))
+          .when(col("doc_id") === 2L, lit(false)))
+    val e = intercept[Exception](Dedup.incrementalLshCandidatePairsTagged(
+      sigs, "doc_id", "is_new").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msgs.contains("NULL is_new for doc_id 3"), msgs)
+    // tagged in full (3 old), new doc 1 pairs with both old copies
+    assert(Dedup.incrementalLshCandidatePairsTagged(
+      sigs.na.fill(false, Seq("is_new")), "doc_id", "is_new").count() == 2)
+  }
+
   test("exactDedupProjected ≡ exactDedup on kept columns; text absent from " +
       "the window shuffle") {
     import graft.operators.Dedup

@@ -11,11 +11,7 @@ object SparkTestSession {
     // idempotency spec (HttpSourceSpec) needs Spark's real at-least-once
     // task re-execution path. Tests that expect job failure still fail
     // (after one extra attempt); nothing else observes the difference.
-    val s = SparkSession.builder()
-      .master("local[4,2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = graft.cli.CliUtil.builder("local[4,2]", "4")
       // match the prod factories (Verify/Bench/Mains): rank-filter
       // pre-trim must engage at corpus-scale quotas
       .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")

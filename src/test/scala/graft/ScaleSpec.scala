@@ -703,6 +703,35 @@ class ScaleSpec extends AnyFunSuite {
     spark.range(10).toDF("id").unpersist(blocking = true)
   }
 
+  test("generated code compiles once per JVM: a rebuilt loop clone recompiles nothing") {
+    import graft.operators.{LoopCache, PageRank}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // artifact isolation would give every session (each loop clone) its
+    // own class loader, and with it its own codegen cache
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (2L, 4L), (4L, 5L),
+      (5L, 4L), (6L, 7L)).toDF("src", "dst")
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()
+    val adj = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
+      .groupBy(col("src"), col("outdeg"))
+      .agg(sort_array(collect_list(col("dst"))).as("dsts"))
+    def run() = PageRank.fixedPointAdj(adj, nodes, iterations = 3)
+      .collect().map(_.toSeq).toSet
+    // the reset every bench and Verify pass makes: the memo and its loop
+    // clone go, so the second run builds a new clone
+    def reset(): Unit = { spark.catalog.clearCache(); LoopCache.clearMemo() }
+    reset()
+    val first = run()
+    reset()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    reset()
+    assert(second == first)
+    assert(compiled == 0, s"the second identical run compiled $compiled classes")
+  }
+
   test("k-core adjacency round: node-sized exchanges only, stationary adjacency") {
     import graft.operators.LoopCache
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec

@@ -13,6 +13,38 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  test("stream replay: the second identical replay compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingKpi
+    val work = java.nio.file.Files.createTempDirectory("graft_replay")
+    val logDir = work.resolve("log").toString
+    Seq(
+      ("2026-08-10T00:00:01Z", "/get?a=1", "200", "12.5", "ok"),
+      ("2026-08-10T00:10:00Z", "/get", "404", "7", "ok"),
+      ("2026-08-10T03:00:00Z", "/xml", "500", "x", "parse_error"),
+      ("2026-08-11T05:00:00Z", "/get", "200", "30", "ok"))
+      .toDF("timestamp_utc", "endpoint", "status_code", "elapsed_ms", "parse_result")
+      .coalesce(1).write.json(logDir)
+    // each replay is a new streaming query, so Spark runs it in a new
+    // cloned session; a fresh checkpoint makes the two replays identical
+    def replay(n: Int): Long = {
+      val q = StreamingKpi.kpiStream(StreamingKpi.normalizedStream(
+          spark.readStream.schema(graft.ops.Kpi.bitacoraSchema).json(logDir)))
+        .writeStream.format("noop").outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", work.resolve(s"ckpt-$n").toString)
+        .start()
+      try q.awaitTermination() finally q.stop()
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    assert(replay(1) == 4)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(replay(2) == 4)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the second identical replay compiled $compiled classes")
+  }
+
   test("streaming dedup: first doc per digest passes, in-horizon dups suppressed") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, Timestamp)]
