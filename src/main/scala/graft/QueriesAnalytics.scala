@@ -162,8 +162,11 @@ object QueriesAnalytics {
     // per-customer average in place (r19, guide §2.4 "remove shuffles
     // outright"): one scan, one custkey exchange, no join. Arithmetic is
     // value-identical — the same DECIMAL(18,2) sum cast to DOUBLE, then
-    // one IEEE double division by the same count.
-    val o = Tables.orders(spark, sfDir)
+    // one IEEE double division by the same count. NULL keys are dropped
+    // first: the subquery's `o2.o_custkey = o.o_custkey` matches nothing
+    // for them (so they are never above average), whereas a window would
+    // pool them into one partition with an average of their own.
+    val o = Tables.orders(spark, sfDir).filter(col("o_custkey").isNotNull)
     val w = Window.partitionBy(col("o_custkey"))
     val cavg = (sum(col("o_totalprice").cast("decimal(18,2)")).over(w)
       .cast("double") / count(lit(1)).over(w)).as("cavg")

@@ -609,9 +609,8 @@ object QueriesGraph {
   // exercised; mean-degree collapses to an empty core by round 3.
   // -------------------------------------------------------------------
   def kcoreParts(spark: SparkSession, sfDir: String): DataFrame =
-    // adjacency twin (round 13): the edge-layout peel went supralinear
-    // at the sf10 probe once the alive set outgrew the broadcast
-    // estimate — see KCore.runAdj for the plan shape
+    // the staged adjacency feeds the peel directly — see KCore for the
+    // plan shape
     operators.KCore
       .survivorsAtMeanFractionAdj(Tables.copurchaseAdjacency(spark, sfDir),
         num = 3, den = 4, rounds = 3)
@@ -714,15 +713,9 @@ object QueriesGraph {
     // node-sized operands the HITS rounds iterate over (Hits.scoresAdj)
     val keyedOn = Seq(Tables.path(sfDir, "orders"), Tables.path(sfDir, "lineitem"))
     val custAdj = operators.Staging.stagedOrDerive(spark, "purchase_adj_cust",
-        keyedOn) {
-      edges.groupBy(col("custkey").as("id"))
-        .agg(sort_array(collect_list(col("partkey"))).as("nbrs"))
-    }
+        keyedOn)(operators.Adjacency.neighbors(edges, "custkey", "partkey"))
     val partAdj = operators.Staging.stagedOrDerive(spark, "purchase_adj_part",
-        keyedOn) {
-      edges.groupBy(col("partkey").as("id"))
-        .agg(sort_array(collect_list(col("custkey"))).as("nbrs"))
-    }
+        keyedOn)(operators.Adjacency.neighbors(edges, "partkey", "custkey"))
     val s = operators.Hits.scoresAdj(custAdj, partAdj, rounds = 3)
     def top(role: String): DataFrame = s.filter(col("role") === role)
       .orderBy(col("score").desc, col("id")).limit(10)
@@ -909,15 +902,11 @@ object QueriesGraph {
     }
     val liPath = Seq(Tables.path(sfDir, "lineitem"))
     val fwdAdj = Tables.rebalance(operators.Staging.stagedOrDerive(spark,
-        "precedence_adj_fwd", liPath) {
-      e.groupBy(col("src").as("id"))
-        .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-    })
+        "precedence_adj_fwd", liPath)(
+      operators.Adjacency.neighbors(e, "src", "dst")))
     val bwdAdj = Tables.rebalance(operators.Staging.stagedOrDerive(spark,
-        "precedence_adj_bwd", liPath) {
-      e.groupBy(col("dst").as("id"))
-        .agg(sort_array(collect_list(col("src"))).as("nbrs"))
-    })
+        "precedence_adj_bwd", liPath)(
+      operators.Adjacency.neighbors(e, "dst", "src")))
     // pivot = smallest source part id (same value as min(src) over e)
     val pivot = operators.LoopCache
       .pinnedRow(fwdAdj.agg(min(col("id")).as("p"))).getLong(0)

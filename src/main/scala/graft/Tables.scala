@@ -209,9 +209,7 @@ object Tables {
     // scan has files (the q56/q120 single-task floor)
     rebalance(graft.operators.Staging.stagedOrDerive(spark, "copurchase_adj",
         Seq(path(sfDir, "lineitem"))) {
-      copurchaseEdgesWithDeg(spark, sfDir)
-        .groupBy(col("src"), col("outdeg"))
-        .agg(sort_array(collect_list(col("dst"))).as("dsts"))
+      graft.operators.Adjacency.directed(copurchaseEdgesWithDeg(spark, sfDir))
     })
 
   /** Distinct node ids of the co-purchase graph — staged so the
@@ -220,9 +218,7 @@ object Tables {
   def copurchaseNodes(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Staging.stagedOrDerive(spark, "copurchase_nodes",
         Seq(path(sfDir, "lineitem"))) {
-      val e = copurchaseEdgesWithDeg(spark, sfDir)
-      e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
+      graft.operators.Adjacency.nodes(copurchaseEdgesWithDeg(spark, sfDir))
     }
 
   /** Undirected ADJACENCY of the top-10 sparsified graph: (id, sorted
@@ -233,10 +229,8 @@ object Tables {
     // rebalanced for the same reason as [[copurchaseAdjacency]]
     rebalance(graft.operators.Staging.stagedOrDerive(spark,
         "copurchase_top10_adj", Seq(path(sfDir, "lineitem"))) {
-      val e = copurchaseTop10Edges(spark, sfDir)
-      e.select(col("u").as("id"), col("v").as("nb"))
-        .union(e.select(col("v").as("id"), col("u").as("nb")))
-        .groupBy(col("id")).agg(sort_array(collect_list(col("nb"))).as("nbrs"))
+      graft.operators.Adjacency.undirected(copurchaseTop10Edges(spark, sfDir),
+        "u", "v")
     })
 
   /** WEIGHTED undirected adjacency over the co-purchase pair counts:
@@ -246,12 +240,10 @@ object Tables {
   def copurchaseWeightedAdjacency(spark: SparkSession, sfDir: String): DataFrame =
     rebalance(graft.operators.Staging.stagedOrDerive(spark, "copurchase_wadj",
         Seq(path(sfDir, "lineitem"))) {
-      val half = copurchasePairCounts(spark, sfDir)
-        .select(col("src"), col("dst"), expr("1000000L div cnt").as("w"))
-      half.select(col("src").as("id"), struct(col("dst").as("d"), col("w")).as("nb"))
-        .unionByName(half.select(col("dst").as("id"),
-          struct(col("src").as("d"), col("w")).as("nb")))
-        .groupBy(col("id")).agg(sort_array(collect_list(col("nb"))).as("nbrs"))
+      graft.operators.Adjacency.undirectedWeighted(
+        copurchasePairCounts(spark, sfDir)
+          .select(col("src"), col("dst"), expr("1000000L div cnt").as("w")),
+        "src", "dst", "w")
     })
 
   /** Market-basket aggregates over DISTINCT (order, part) occurrences —

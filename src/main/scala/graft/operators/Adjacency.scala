@@ -1,0 +1,92 @@
+package graft.operators
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+/** The adjacency layouts the iterative graph operators loop over, built
+  * from edge rows: one row per node with its neighbors packed into a
+  * sorted array. Per round a loop then joins |nodes| rows and fans the
+  * edges out inside a codegen'd explode, instead of scanning one row per
+  * edge (see [[PageRank.fixedPointAdj]]). The staged graph tables
+  * ([[graft.Tables]]) and the edge-list entry points of every loop
+  * operator build their layouts here.
+  *
+  * Duplicate edges keep their multiplicity: `collect_list` keeps every
+  * row, so a doubled edge appears twice in its neighbor array (and
+  * twice in `outdeg`). */
+object Adjacency {
+
+  /** BIGINT (src, dst) projection of `edges(srcCol, dstCol)` — the
+    * common first step of every edge-list entry point. */
+  def arcs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+
+  /** Directed (src, outdeg, dsts) over (src, dst) rows. A precomputed
+    * `outdeg` column (the staged degree artifact,
+    * [[graft.Tables.copurchaseEdgesWithDeg]]) is kept as it is;
+    * otherwise `outdeg` counts each source's edge rows. */
+  def directed(edges: DataFrame): DataFrame =
+    if (edges.columns.contains("outdeg"))
+      edges.groupBy(col("src"), col("outdeg")).agg(sorted(col("dst")).as("dsts"))
+    else
+      edges.groupBy(col("src"))
+        .agg(count(lit(1)).as("outdeg"), sorted(col("dst")).as("dsts"))
+
+  /** Node ids of (src, dst) rows: sources ∪ targets, distinct. */
+  def nodes(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct()
+
+  /** (id, nbrs): each `key` value with its sorted `nbr` values. Over
+    * (src, dst) rows `neighbors(e, "src", "dst")` is the forward list,
+    * `neighbors(e, "dst", "src")` the reverse one. */
+  def neighbors(edges: DataFrame, key: String, nbr: String): DataFrame =
+    edges.groupBy(col(key).as("id")).agg(sorted(col(nbr)).as("nbrs"))
+
+  /** Undirected (id, nbrs) over (a, b) pairs: each pair lists each end
+    * as the other's neighbor. */
+  def undirected(edges: DataFrame, a: String, b: String): DataFrame =
+    pack(edges.select(col(a).as("id"), col(b).as("nb"))
+      .union(edges.select(col(b).as("id"), col(a).as("nb"))))
+
+  /** Weighted undirected (id, nbrs) over (a, b, w) rows: `nbrs` holds
+    * sorted (d, w) structs, each row an arc both ways. (A directed
+    * weighted list is [[neighbors]] over a (d, w) struct column.) */
+  def undirectedWeighted(edges: DataFrame, a: String, b: String,
+      w: String): DataFrame =
+    pack(weightedArcs(edges, a, b, w)
+      .unionByName(weightedArcs(edges, b, a, w)))
+
+  /** A loop's stationary operand over directed layout `adj`: BIGINT
+    * (src, outdeg, dsts), hash-partitioned by the per-round join key and
+    * sorted, so no round needs an exchange or a sort on this side — only
+    * the node-sized table it joins moves. The width comes from the EDGE
+    * volume (Σ outdeg, one node-sized pass); rounds run at that width
+    * with static plans (see LoopCache.loopSession for why adaptive
+    * re-planning is the wrong default inside a fixed-shape loop), and
+    * `others` come back bound to the same loop session. Returns (width,
+    * pinned operand, others). Called inside a memo build, so the volume
+    * read is a plain head(): a warm call never gets here. */
+  private[operators] def pinDirected(adj: DataFrame, others: DataFrame*)
+      : (Int, DataFrame, Seq[DataFrame]) = {
+    val a0 = adj.select(col("src").cast("long").as("src"),
+      col("outdeg").cast("long").as("outdeg"),
+      col("dsts").cast("array<long>").as("dsts"))
+    val w = LoopCache.loopWidth(adj.sparkSession,
+      a0.agg(coalesce(sum(col("outdeg")), lit(0L))).head().getLong(0))
+    val tuned = LoopCache.tunedInputs(w, a0 +: others: _*)
+    (w, tuned.head.repartition(w, col("src")).sortWithinPartitions("src")
+      .persist(StorageLevel.MEMORY_AND_DISK), tuned.tail)
+  }
+
+  private def weightedArcs(edges: DataFrame, from: String, to: String,
+      w: String): DataFrame =
+    edges.select(col(from).as("id"), struct(col(to).as("d"), col(w)).as("nb"))
+
+  private def pack(rows: DataFrame): DataFrame =
+    rows.groupBy(col("id")).agg(sorted(col("nb")).as("nbrs"))
+
+  private def sorted(c: Column): Column = sort_array(collect_list(c))
+}

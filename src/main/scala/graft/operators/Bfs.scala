@@ -12,12 +12,14 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   * distance). Integer levels with a min-aggregate per round: exact,
   * order-invariant, replayable by unrolled CTEs.
   *
-  * Per round: one edge⋈frontier join against the cached pre-partitioned
-  * edge table and one (id, min level) aggregate — the level table holds
-  * REACHED nodes only, so early rounds shuffle frontier-sized data, and
-  * an unreached node simply never appears (no dense node table). Rounds
-  * are fixed (k-hop neighborhood semantics), not run-to-convergence:
-  * the caller picks the radius, the cost model stays predictable.
+  * One loop, over an ADJACENCY layout (id, sorted nbrs array). Per
+  * round: one frontier⋈adjacency join against the cached pre-partitioned
+  * layout, the edge fanout inside a codegen'd explode, and one (id, min
+  * level) aggregate — the level table holds REACHED nodes only, so early
+  * rounds shuffle frontier-sized data, and an unreached node simply
+  * never appears (no dense node table). Rounds are fixed (k-hop
+  * neighborhood semantics), not run-to-convergence: the caller picks
+  * the radius, the cost model stays predictable.
   *
   * DEEP-ROUNDS SAFE (round 14): BFS and [[ShortestPath]] are the two
   * loop operators whose round count legitimately scales with GRAPH
@@ -43,23 +45,41 @@ object Bfs {
   /** Hop levels from `seeds` within `rounds` hops over DIRECTED edges
     * (pass both orientations for undirected semantics). Returns
     * (id, level) for reached nodes; seeds are level 0 even when also
-    * reachable by a longer path (min wins). */
+    * reachable by a longer path (min wins). Runs [[levelsAdj]] over the
+    * forward neighbor list [[Adjacency]] builds. */
   def levels(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, rounds: Int = 3): DataFrame = {
+      seeds: DataFrame, seedCol: String, rounds: Int = 3): DataFrame =
+    levelsAdj(Adjacency.neighbors(Adjacency.arcs(edges, srcCol, dstCol),
+      "src", "dst"), seeds, seedCol, rounds)
+
+  /** The BFS loop over an ADJACENCY layout (id, sorted nbrs array): per
+    * round the frontier joins the node-sized adjacency and the edge
+    * fanout happens inside a codegen'd explode — no edge-row cache scan
+    * per round (see PageRank.fixedPointAdj for the cost argument). */
+  def levelsAdj(adj: DataFrame, seeds: DataFrame, seedCol: String,
+      rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .repartition(col("src"))
+    val a0 = adj.select(col("id").cast("long").as("src"),
+      col("nbrs").cast("array<long>").as("nbrs"))
     val s0 = seeds.select(col(seedCol).cast("long").as("id")).distinct()
       .select(col("id"), lit(0L).as("level"))
     LoopCache.memo(
-      Seq("bfs", LoopCache.planKey(e), LoopCache.planKey(s0), rounds)) {
-      e.persist(StorageLevel.MEMORY_AND_DISK)
-      var lv = s0
-      var pinnedPrev = s0 // seed table: step's release is a no-op
+      Seq("bfs-adj", LoopCache.planKey(a0), LoopCache.planKey(s0), rounds)) {
+      // loop-tuned width + static rounds over a src-partitioned stationary
+      // operand (see LoopCache.loopSession); a plain head(), as a warm
+      // call returns the memo above first
+      val w = LoopCache.loopWidth(adj.sparkSession, a0.agg(coalesce(
+        sum(size(col("nbrs")).cast("long")), lit(0L))).head().getLong(0))
+      val Seq(aT, s0T) = LoopCache.tunedInputs(w, a0, s0)
+      val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      var lv = s0T
+      var pinnedPrev = s0T // seed table: step's release is a no-op
       for (_ <- 1 to rounds) {
-        val next = e.join(lv, col("src") === col("id"))
-          .select(col("dst").as("id"), (col("level") + 1L).as("level"))
+        val next = a.join(lv, col("src") === col("id"))
+          .select((col("level") + 1L).as("level"),
+            explode(col("nbrs")).as("id"))
+          .select(col("id"), col("level"))
         // PIN each round, RELEASE the previous (LoopCache.step): the
         // level table is referenced twice per round (kept side of the
         // union + the next frontier join), so an uncached formulation
@@ -73,49 +93,8 @@ object Bfs {
         lv = SqlBridge.reRoot(pinned)
         pinnedPrev = pinned
       }
-      e.unpersist(blocking = false) // final lv is materialized; edges done
-      lv
+      a.unpersist(blocking = false) // final lv is materialized; adjacency done
+      LoopCache.untuned(lv)
     }
-  }
-
-  /** [[levels]] over a STAGED adjacency layout (id, sorted nbrs array):
-    * per round the frontier joins the node-sized adjacency and the edge
-    * fanout happens inside a codegen'd explode — no edge-row cache scan
-    * per round (see PageRank.fixedPointAdj for the cost argument). */
-  def levelsAdj(adj: DataFrame, seeds: DataFrame, seedCol: String,
-      rounds: Int = 3): DataFrame = {
-    require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    val a0 = adj.select(col("id").cast("long").as("src"),
-      col("nbrs").cast("array<long>").as("nbrs"))
-    // loop-tuned width + static rounds over a src-partitioned stationary
-    // operand (see LoopCache.loopSession)
-    val w = LoopCache.loopWidth(adj.sparkSession, LoopCache.pinnedRow(
-      a0.agg(coalesce(sum(size(col("nbrs")).cast("long")), lit(0L))))
-      .getLong(0))
-    val Seq(aT, seedsT) = LoopCache.tunedInputs(w, a0, seeds)
-    val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
-    val s0 = seedsT.select(col(seedCol).cast("long").as("id")).distinct()
-      .select(col("id"), lit(0L).as("level"))
-    LoopCache.untuned(
-      LoopCache.memo(
-        Seq("bfs-adj", LoopCache.planKey(a), LoopCache.planKey(s0), rounds)) {
-        a.persist(StorageLevel.MEMORY_AND_DISK)
-        var lv = s0
-        var pinnedPrev = s0
-        for (_ <- 1 to rounds) {
-          val next = a.join(lv, col("src") === col("id"))
-            .select((col("level") + 1L).as("level"),
-              explode(col("nbrs")).as("id"))
-            .select(col("id"), col("level"))
-          val pinned = LoopCache.step(
-            lv.unionByName(next)
-              .groupBy(col("id")).agg(min(col("level")).as("level")),
-            pinnedPrev)
-          lv = SqlBridge.reRoot(pinned)
-          pinnedPrev = pinned
-        }
-        a.unpersist(blocking = false)
-        lv
-      })
   }
 }

@@ -44,20 +44,23 @@ import org.apache.spark.storage.StorageLevel
   *     renders every nested level twice: final + initial plan) is
   *     exponential in rounds regardless of data size.
   *
-  * Scale shape: per round, one edge⋈hub join + per-target sum (the
-  * authority update), one edge⋈authority join + per-source sum (the hub
-  * update), and two single-row maxes over node-sized tables. Score
-  * tables are node-sized; the edge table is the only big operand, cached
-  * once per cold invocation and released after.
+  * Scale shape: one loop, over two ADJACENCY layouts — (id, sorted
+  * out-neighbor array) per source and (id, sorted in-neighbor array) per
+  * target. Per round, one source-adjacency⋈hub join whose explode feeds
+  * a per-target sum (the authority update), one target-adjacency⋈
+  * authority join feeding a per-source sum (the hub update), and one
+  * single-row max per half-round. Every joined operand is node-sized;
+  * the edge volume only appears inside the codegen'd explodes. The
+  * edge-list entry point ([[scores]]) builds both layouts with
+  * [[Adjacency]] and runs the same loop.
   *
-  * Cache contract: each half-round pins its score table and releases the
-  * superseded one ([[LoopCache.step]]); the raw pre-normalization table
-  * is pinned only while its max + normalized child materialize. An
-  * invocation leaves exactly the hub and authority FINALS live. Warm
-  * re-invocations return the memoized result ([[LoopCache.memo]] —
-  * required here because every round's literal divisor is data-derived,
-  * so the final plan cannot be rebuilt without re-running the loop):
-  * zero jobs, zero new entries.
+  * Cache contract: each half-round pins its raw score table and releases
+  * the superseded one; the normalizing divisor rides as a literal into
+  * the next half-round's projection. An invocation leaves exactly the
+  * hub and authority FINALS live. Warm re-invocations return the
+  * memoized result ([[LoopCache.memo]] — required here because every
+  * round's literal divisor is data-derived, so the final plan cannot be
+  * rebuilt without re-running the loop): zero jobs, zero new entries.
   */
 object Hits {
 
@@ -65,30 +68,25 @@ object Hits {
   val Scale: Long = 1000000L
 
   /** `rounds` exact HITS iterations over `edges(srcCol → dstCol)`
-    * (duplicate edges NOT deduplicated — pre-`distinct` a simple graph).
-    * Returns (role, id, score): role 'hub' for source-side nodes, 'auth'
-    * for target-side, with the per-round max score landing at ~`scale`
+    * (duplicate edges NOT deduplicated — a doubled edge adds its score
+    * twice to both sums; pre-`distinct` a simple graph). Returns (role,
+    * id, score): role 'hub' for source-side nodes, 'auth' for
+    * target-side, with the per-round max score landing at ~`scale`
     * (divide-first: a round whose max is under 2·scale divides by 1 and
-    * keeps raw sums — resolution never shrinks with graph size). */
+    * keeps raw sums — resolution never shrinks with graph size). Runs
+    * [[scoresAdj]] over the two neighbor lists [[Adjacency]] builds. */
   def scores(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 3, scale: Long = Scale): DataFrame = {
-    require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    require(scale >= 1, s"scale=$scale must be >= 1")
-    val e = edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .repartition(col("src"))
-    LoopCache.memo(Seq("hits", LoopCache.planKey(e), rounds, scale)) {
-      run(e, rounds, scale)
-    }
+    val e = Adjacency.arcs(edges, srcCol, dstCol)
+    scoresAdj(Adjacency.neighbors(e, "src", "dst"),
+      Adjacency.neighbors(e, "dst", "src"), rounds, scale)
   }
 
-  /** [[scores]] over STAGED adjacency layouts: `srcAdj` = (id, sorted
+  /** The HITS loop over ADJACENCY layouts: `srcAdj` = (id, sorted
     * out-neighbor array) per source, `dstAdj` = (id, sorted in-neighbor
     * array) per target. Each half-round joins the NODE-sized adjacency
     * with the node-sized score table and delivers scores through a
-    * codegen'd explode — the edge-layout loop re-scanned the cached edge
-    * table (one UnsafeRow per edge) twice per round. Identical
-    * divide-first L∞ arithmetic, identical results. */
+    * codegen'd explode. */
   def scoresAdj(srcAdj: DataFrame, dstAdj: DataFrame,
       rounds: Int = 3, scale: Long = Scale): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
@@ -97,112 +95,62 @@ object Hits {
       col("nbrs").cast("array<long>").as("nbrs"))
     val da0 = dstAdj.select(col("id").cast("long").as("aid"),
       col("nbrs").cast("array<long>").as("nbrs"))
-    // loop-tuned width + static half-rounds over aid-partitioned
-    // stationary operands (see LoopCache.loopSession); volume = the
-    // larger adjacency's edge count (each half-round explodes one side)
-    val vol = math.max(
-      LoopCache.pinnedRow(sa0.agg(coalesce(
-        sum(size(col("nbrs")).cast("long")), lit(0L)))).getLong(0),
-      LoopCache.pinnedRow(da0.agg(coalesce(
-        sum(size(col("nbrs")).cast("long")), lit(0L)))).getLong(0))
-    val w = LoopCache.loopWidth(srcAdj.sparkSession, vol)
-    val Seq(saT, daT) = LoopCache.tunedInputs(w, sa0, da0)
-    val sa = saT.repartition(w, col("aid")).sortWithinPartitions("aid")
-    val da = daT.repartition(w, col("aid")).sortWithinPartitions("aid")
-    LoopCache.untuned(
-      LoopCache.memo(Seq("hits-adj", LoopCache.planKey(sa), LoopCache.planKey(da),
-          rounds, scale)) {
-        runAdj(sa, da, rounds, scale)
-      })
-  }
-
-  private def runAdj(sa: DataFrame, da: DataFrame, rounds: Int,
-      scale: Long): DataFrame = {
-    sa.persist(StorageLevel.MEMORY_AND_DISK)
-    da.persist(StorageLevel.MEMORY_AND_DISK)
-    // Same driver-read-max + re-root protocol as [[run]], with two cost
-    // cuts: the edge⋈score join becomes adjacency⋈score + explode, and
-    // the per-half-round NORMALIZED table never materializes — the
-    // `div den` rides as a literal inside the NEXT half-round's
-    // projection (and the final select), so each half-round is ONE job:
-    // the max aggregate, whose scan doubles as the raw table's cache
-    // force. (The old shape paid materialize + max + normalized-force =
-    // 3 jobs per half-round; at bench scale the loop is job-count
-    // bound, not data bound.) Arithmetic is unchanged: in_s = r div den
-    // per node, exactly the s the eager shape stored.
-    def update(prevRaw: DataFrame, prevDen: Long, adj: DataFrame,
-        prevPinned: DataFrame): (DataFrame, Long, DataFrame) = {
-      val raw = adj.join(
-          prevRaw.select(col("id"), expr(s"r div ${prevDen}L").as("in_s")),
-          col("aid") === col("id"))
-        .select(col("in_s"), explode(col("nbrs")).as("oid"))
-        .groupBy(col("oid")).agg(sum(col("in_s")).as("r"))
-        .select(col("oid").as("id"), col("r"))
-      raw.persist(StorageLevel.MEMORY_AND_DISK)
-      // one job: materializes raw's cache AND reads the max
-      val mxRow = raw.agg(max(col("r"))).head()
-      val den =
-        if (mxRow.isNullAt(0)) 1L else math.max(mxRow.getLong(0) / scale, 1L)
-      prevPinned.unpersist(blocking = false)
-      (SqlBridge.reRoot(raw), den, raw)
+    LoopCache.memo(Seq("hits-adj", LoopCache.planKey(sa0),
+        LoopCache.planKey(da0), rounds, scale)) {
+      // loop-tuned width + static half-rounds over aid-partitioned
+      // stationary operands (see LoopCache.loopSession); volume = the
+      // larger adjacency's edge count (each half-round explodes one
+      // side). Plain head()s: a warm call returns the memo above first.
+      def edgeCount(a: DataFrame): Long = a.agg(coalesce(
+        sum(size(col("nbrs")).cast("long")), lit(0L))).head().getLong(0)
+      val w = LoopCache.loopWidth(srcAdj.sparkSession,
+        math.max(edgeCount(sa0), edgeCount(da0)))
+      val Seq(saT, daT) = LoopCache.tunedInputs(w, sa0, da0)
+      val sa = saT.repartition(w, col("aid")).sortWithinPartitions("aid")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val da = daT.repartition(w, col("aid")).sortWithinPartitions("aid")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // One half-round: sum incoming scores per target, read the max on
+      // the driver (divide-first L∞), pin the raw table, release the
+      // superseded one, then re-root on the materialized RDD so the next
+      // round's plan starts from a leaf. The NORMALIZED table never
+      // materializes — the `div den` rides as a literal inside the NEXT
+      // half-round's projection (and the final select), so each
+      // half-round is ONE job: the max aggregate, whose scan doubles as
+      // the raw table's cache force (at bench scale the loop is job-count
+      // bound, not data bound).
+      def update(prevRaw: DataFrame, prevDen: Long, adj: DataFrame,
+          prevPinned: DataFrame): (DataFrame, Long, DataFrame) = {
+        val raw = adj.join(
+            prevRaw.select(col("id"), expr(s"r div ${prevDen}L").as("in_s")),
+            col("aid") === col("id"))
+          .select(col("in_s"), explode(col("nbrs")).as("oid"))
+          .groupBy(col("oid")).agg(sum(col("in_s")).as("r"))
+          .select(col("oid").as("id"), col("r"))
+        raw.persist(StorageLevel.MEMORY_AND_DISK)
+        // one job: materializes raw's cache AND reads the max
+        val mxRow = raw.agg(max(col("r"))).head()
+        val den =
+          if (mxRow.isNullAt(0)) 1L else math.max(mxRow.getLong(0) / scale, 1L)
+        prevPinned.unpersist(blocking = false)
+        (SqlBridge.reRoot(raw), den, raw)
+      }
+      // seed: every source at `scale` with a unit divisor
+      val seed = sa.select(col("aid").as("id"), lit(scale).as("r"))
+      var (hubs, hubDen, hubsPinned) = (seed, 1L, seed)
+      var (auths, authDen, authsPinned) = (null: DataFrame, 1L, seed)
+      for (_ <- 1 to rounds) {
+        val (a, ad, ap) = update(hubs, hubDen, sa, authsPinned) // auth ← hubs
+        val (h, hd, hp) = update(a, ad, da, hubsPinned)         // hub  ← auths
+        auths = a; authDen = ad; authsPinned = ap
+        hubs = h; hubDen = hd; hubsPinned = hp
+      }
+      sa.unpersist(blocking = false)
+      da.unpersist(blocking = false)
+      LoopCache.untuned(hubs.select(lit("hub").as("role"), col("id"),
+          expr(s"r div ${hubDen}L").as("score"))
+        .unionByName(auths.select(lit("auth").as("role"), col("id"),
+          expr(s"r div ${authDen}L").as("score"))))
     }
-    // seed: every source at `scale` with a unit divisor
-    val seed = sa.select(col("aid").as("id"), lit(scale).as("r"))
-    var (hubs, hubDen, hubsPinned) = (seed, 1L, seed)
-    var (auths, authDen, authsPinned) = (null: DataFrame, 1L, seed)
-    for (_ <- 1 to rounds) {
-      val (a, ad, ap) = update(hubs, hubDen, sa, authsPinned) // auth ← hubs
-      val (h, hd, hp) = update(a, ad, da, hubsPinned)         // hub  ← auths
-      auths = a; authDen = ad; authsPinned = ap
-      hubs = h; hubDen = hd; hubsPinned = hp
-    }
-    sa.unpersist(blocking = false)
-    da.unpersist(blocking = false)
-    hubs.select(lit("hub").as("role"), col("id"),
-        expr(s"r div ${hubDen}L").as("score"))
-      .unionByName(auths.select(lit("auth").as("role"), col("id"),
-        expr(s"r div ${authDen}L").as("score")))
-  }
-
-  private def run(e: DataFrame, rounds: Int, scale: Long): DataFrame = {
-    e.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // One half-round: sum incoming scores per target, normalize by the
-    // driver-read max (divide-first L∞), pin + force the result, release
-    // the superseded score table, then re-root on the materialized RDD
-    // so the next round's plan starts from a leaf. The raw table is
-    // pinned so its two consumers (the max job + the normalized force)
-    // execute it once; released as soon as the normalized table is live.
-    // Returns (flat plan for round N+1, pinned frame for the releases).
-    def update(scoresTbl: DataFrame, joinKey: String, outKey: String,
-        prevPinned: DataFrame): (DataFrame, DataFrame) = {
-      val raw = e.join(scoresTbl.withColumnRenamed("s", "in_s"),
-          col(joinKey) === col("id"))
-        .groupBy(col(outKey).as("oid")).agg(sum(col("in_s")).as("r"))
-        .select(col("oid").as("id"), col("r"))
-      raw.persist(StorageLevel.MEMORY_AND_DISK)
-      val mxRow = raw.agg(max(col("r"))).head()
-      val den = // empty graph → null max → divide by 1
-        if (mxRow.isNullAt(0)) 1L else math.max(mxRow.getLong(0) / scale, 1L)
-      val pinned = LoopCache.step(
-        raw.select(col("id"), expr(s"r div ${den}L").as("s")), prevPinned)
-      raw.unpersist(blocking = false)
-      (SqlBridge.reRoot(pinned), pinned)
-    }
-
-    val seed = e.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(scale).as("s"))
-    var (hubs, hubsPinned) = (seed, seed)
-    var (auths, authsPinned) = (null: DataFrame, seed)
-    for (_ <- 1 to rounds) {
-      val (a, ap) = update(hubs, "src", "dst", authsPinned)
-      val (h, hp) = update(a, "dst", "src", hubsPinned)
-      auths = a; authsPinned = ap
-      hubs = h; hubsPinned = hp
-    }
-    e.unpersist(blocking = false) // finals are materialized; edges done
-    hubs.select(lit("hub").as("role"), col("id"), col("s").as("score"))
-      .unionByName(auths.select(
-        lit("auth").as("role"), col("id"), col("s").as("score")))
   }
 }

@@ -15,19 +15,35 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   * neighbor label with ties to the SMALLEST label, and the round count is
   * fixed — the same rules an external engine can replay verbatim.
   *
-  * Per round: one edge⋈label join (edges cached + pre-partitioned, the
-  * label table is node-sized) and one (node, label) count aggregate whose
-  * argmax runs as a `max(struct(count, −label))` partial aggregate — the
-  * q63 shape — so there is NO per-node ranking window anywhere. */
+  * One loop, over an undirected ADJACENCY layout (id, sorted nbrs
+  * array). Per round: one label⋈adjacency join (the adjacency cached +
+  * pre-partitioned, the label table node-sized), a codegen'd explode
+  * delivering each label to its neighbors, and a (node, label) count
+  * whose argmax runs as a `max(struct(count, −label))` aggregate — the
+  * q63 shape — so there is NO per-node ranking window anywhere. The
+  * edge-list entry point ([[communities]]) builds the layout with
+  * [[Adjacency]] and runs the same loop. */
 object LabelPropagation {
 
   /** Run `rounds` synchronous LPA rounds over UNDIRECTED edges (pass
-    * each edge once; both orientations are generated here). Labels start
+    * each edge once; both orientations are generated here, and a pair
+    * listed twice — in either orientation — counts once). Labels start
     * as the node id. Returns (id, community). Isolated nodes never
     * appear (no neighbors → no label source); positive ids required (the
-    * argmax negates labels for the tie-break). */
+    * argmax negates labels for the tie-break). Runs [[communitiesAdj]]
+    * over the layout [[Adjacency]] builds. */
   def communities(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int = 4): DataFrame = {
+      rounds: Int = 4): DataFrame =
+    communitiesAdj(Adjacency.undirected(
+        Adjacency.arcs(edges, srcCol, dstCol), "src", "dst")
+      .select(col("id"), array_distinct(col("nbrs")).as("nbrs")), rounds)
+
+  /** The LPA loop over an undirected ADJACENCY layout (id, sorted nbrs
+    * array): per round labels join the node-sized adjacency and a
+    * codegen'd explode delivers each label to its neighbors. Each entry
+    * of a neighbor list is one vote, so a caller wanting simple-graph
+    * semantics passes duplicate-free lists (as [[communities]] does). */
+  def communitiesAdj(adj: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     // DEEP-ROUNDS SAFE (round 16): rounds is caller-supplied, so each
     // round is pinned AND re-rooted (the BFS/PageRank pattern) — the SQL
@@ -35,53 +51,14 @@ object LabelPropagation {
     // the measured superlinear Catalyst planning cliff (SCALE.md r14);
     // warm re-invocations return the memoized final. Staleness contract:
     // PageRank's object scaladoc.
-    LoopCache.memo(Seq("lpa", LoopCache.planKey(edges), srcCol, dstCol,
-        rounds)) {
-      val ue = edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .union(edges.select(col(dstCol).cast("long"), col(srcCol).cast("long")))
-        .distinct()
-        .repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var labels = ue.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lab"))
-      var pinnedPrev = labels // identity seed, never persisted: no-op release
-      for (_ <- 1 to rounds) {
-        val pinned = LoopCache.step(
-          ue.join(labels, col("src") === col("id"))
-            .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("c"))
-            .groupBy(col("dst"))
-            .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("best"))
-            .select(col("dst").as("id"), (-col("best.nl")).as("lab")),
-          pinnedPrev)
-        labels = SqlBridge.reRoot(pinned)
-        pinnedPrev = pinned
-      }
-      LoopCache.finish(labels.select(col("id"), col("lab").as("community")),
-        ue, pinnedPrev)
-    }
-  }
-
-  /** [[communities]] over a STAGED undirected adjacency layout (id,
-    * sorted nbrs array): per round ONE exchange — labels join the
-    * node-sized adjacency, a codegen'd explode delivers each label to
-    * its neighbors, and the argmax collapses into a single aggregate via
-    * a bounded mode-of-sorted-list expression (neighbor lists are top-k
-    * sparsified, so the collected list is ≤ 2k labels). The edge-layout
-    * loop paid two exchanges per round (count per (node,label), then
-    * argmax per node); same labels, same min-label tie-break. */
-  def communitiesAdj(adj: DataFrame, rounds: Int = 4): DataFrame = {
-    require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    // DEEP-ROUNDS SAFE (round 16): memo + per-round pin/reRoot — see
-    // [[communities]].
     LoopCache.memo(Seq("lpaAdj", LoopCache.planKey(adj), rounds)) {
     val a0 = adj.select(col("id").cast("long").as("nid"),
       col("nbrs").cast("array<long>").as("nbrs"))
     // loop-tuned width + static rounds over an id-partitioned stationary
-    // operand (see LoopCache.loopSession)
-    val pairVolume = LoopCache.pinnedRow(
-      a0.agg(coalesce(sum(size(col("nbrs")).cast("long")), lit(0L))))
-      .getLong(0)
+    // operand (see LoopCache.loopSession); a plain head(), as a warm call
+    // returns the memo above first
+    val pairVolume = a0.agg(coalesce(sum(size(col("nbrs")).cast("long")),
+      lit(0L))).head().getLong(0)
     val w = LoopCache.loopWidth(adj.sparkSession, pairVolume)
     // the PAIR exchange is sized from the pair volume itself, NOT capped
     // at the core count (q120's PairRowsPerTask discipline): each round
@@ -97,7 +74,7 @@ object LabelPropagation {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // most frequent label, ties to the SMALLEST — as the two-level
     // CODEGEN argmax (count per (dst, lab), then max(struct(c, −lab))
-    // per dst: the q63 shape the edge-layout rounds use), with the
+    // per dst: the q63 shape), with the
     // q120 exchange discipline: the explode ships RAW (lab, dst) pairs
     // through one explicit dst-keyed repartition, and BOTH aggregates
     // run post-exchange (hash(dst) satisfies each one's clustering, so

@@ -31,13 +31,14 @@ object LoopCache {
   def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
 
   /** Pin-and-read a tiny aggregate whose VALUE feeds plan construction
-    * (PageRank's token scale from the node count, sampling-rate
-    * targets): the frame is persisted on first read, so re-invocations
-    * of the same operator read the cached row instead of re-driving the
-    * scan behind it — without this, a data-derived constant forces a
-    * full pass per invocation even when the operator's final table is
-    * still pinned. One deliberate session-lived cache entry per distinct
-    * frame, bounded by its single-row size. */
+    * (BM25's corpus statistics, sampling-rate targets): the frame is
+    * persisted on first read, so re-invocations of the same operator read
+    * the cached row instead of re-driving the scan behind it — without
+    * this, a data-derived constant forces a full pass per invocation even
+    * when the operator's final table is still pinned. Inside a [[memo]]
+    * build a plain `head()` does instead: a warm call returns the memo
+    * before reaching it. One deliberate session-lived cache entry per
+    * distinct frame, bounded by its single-row size. */
   def pinnedRow(df: DataFrame): org.apache.spark.sql.Row = {
     if (!cached(df)) df.persist(StorageLevel.MEMORY_AND_DISK)
     df.head()
@@ -169,7 +170,6 @@ object LoopCache {
     * driver barrier + scheduling round-trip per shuffle per round — at
     * node-sized volumes that overhead IS the round. Sessions are memoized
     * per (parent, width) so repeated operator calls share one clone.
-    * Kill switch: SPARK_GRAFT_LOOPTUNE=0 returns the parent unchanged.
     *
     * A new clone costs no recompilation. Every session factory turns
     * artifact isolation off (`CliUtil.builder`), so clones share the
@@ -183,8 +183,7 @@ object LoopCache {
       org.apache.spark.sql.SparkSession]
   def loopSession(parent: org.apache.spark.sql.SparkSession,
       width: Int): org.apache.spark.sql.SparkSession =
-    if (sys.env.get("SPARK_GRAFT_LOOPTUNE").contains("0")) parent
-    else tunedSessions.synchronized {
+    tunedSessions.synchronized {
       tunedSessions.getOrElseUpdate((parent, width), {
         val s = parent.newSession()
         s.conf.set("spark.sql.shuffle.partitions", width.toString)

@@ -37,12 +37,16 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   * cross-engine exact at any data size. Explicit `initTokens` requests
   * are still validated and rejected loudly if they could wrap.
   *
-  * Scale shape: the edge table is joined on `src` every iteration, so it
-  * is hash-partitioned once and cached — per iteration only the rank
-  * table (one row per NODE, not per edge) re-shuffles, and the per-target
-  * token sum combines map-side. Five iterations = five node-sized
-  * shuffles over a stationary edge layout; that is the standard Pregel
-  * cost model, with none of its float nondeterminism.
+  * Scale shape: one loop, over the ADJACENCY layout (src, outdeg, dsts)
+  * — one row per source, destinations packed in an array. It is joined
+  * on `src` every iteration, so it is hash-partitioned once and cached;
+  * per iteration only the rank table (one row per NODE, not per edge)
+  * re-shuffles, and the edges fan out inside a codegen'd explode feeding
+  * the per-target token sum. Five iterations = five node-sized shuffles
+  * over a stationary layout; that is the standard Pregel cost model,
+  * with none of its float nondeterminism. The edge-list entry points
+  * ([[fixedPoint]], [[personalized]]) build the layout with
+  * [[Adjacency]] and run the same loop.
   *
   * Staleness contract (all variants, round 16): results are memoized for
   * the session by canonicalized input plan + parameters
@@ -83,40 +87,12 @@ object PageRank {
     math.min(cap, scaled)
   }
 
-  /** Shared prep: validated parameters + the cached, src-partitioned
-    * (src, dst, outdeg) table. */
-  private def prepare(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, dampNum: Long, dampDen: Long): DataFrame = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(dampNum >= 0 && dampNum <= dampDen,
-      s"damping $dampNum/$dampDen must lie in [0, 1]")
-    // a precomputed `outdeg` column (the staged degree artifact —
-    // Tables.copurchaseEdgesWithDeg) skips the per-query degree
-    // aggregate+join: at the 100 TB design point degrees are derived
-    // once WITH the edge list, not re-shuffled per query (VERDICT r11 #1)
-    val withDeg =
-      if (edges.columns.contains("outdeg"))
-        edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"),
-          col("outdeg").cast("long").as("outdeg"))
-      else {
-        val e = edges.select(
-          col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-        e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-      }
-    // stationary per-iteration operand: edges + out-degree, partitioned
-    // by src ONCE and cached — iterations re-shuffle only the rank table
-    withDeg
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
   /** Resolve the token scale: auto-derive from the mass-holding node
     * count ([[AutoTokens]]), or validate an explicit request — worst-case
     * rank ≈ `massNodes·initTokens`, multiplied by dampNum inside the
-    * iteration, must fit BIGINT. The count costs one pass over the cached
-    * edge table, which doubles as the cache materialization the first
-    * round would pay anyway. Returns (initTokens, teleport share). */
+    * iteration, must fit BIGINT. The count costs one pass over the
+    * node-sized node (or seed) table. Returns (initTokens, teleport
+    * share). */
   private def resolveTokens(initTokens: Long, dampNum: Long, dampDen: Long,
       massNodes: => Long): (Long, Long) = {
     val n = math.max(massNodes, 1L)
@@ -136,84 +112,31 @@ object PageRank {
     (tokens, (tokens / dampDen) * (dampDen - dampNum))
   }
 
-  private def contribution(withRank: DataFrame, dampNum: Long,
-      dampDen: Long): DataFrame =
-    withRank
-      .select(col("dst"),
-        expr(s"(r * ${dampNum}L) div (${dampDen}L * outdeg)").as("c"))
-      .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-
   /** Run `iterations` exact PageRank steps over `edges(srcCol, dstCol)`
     * (duplicate edges are NOT deduplicated here — pre-`distinct` if the
-    * graph is simple). Returns (id, rank_tokens) for every node that
-    * appears as a source or a target. */
+    * graph is simple; a doubled edge counts twice in `outdeg` and carries
+    * its tokens twice). Returns (id, rank_tokens) for every node that
+    * appears as a source or a target. Runs [[fixedPointAdj]] over the
+    * layout [[Adjacency]] builds. */
   def fixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, initTokens: Long = AutoTokens,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(dampNum >= 0 && dampNum <= dampDen,
-      s"damping $dampNum/$dampDen must lie in [0, 1]")
-    // DEEP-ROUNDS SAFE (round 15): iterations is caller-supplied, so like
-    // BFS/k-core each round is pinned AND re-rooted — the SQL plan never
-    // nests across rounds, killing the superlinear Catalyst planning cost
-    // the KCoreDepthProbe measured past ~10 rounds in this plan shape.
-    // Warm re-invocations return the memoized final (zero jobs); all
-    // persists live INSIDE the memo build so a hit re-pins nothing.
-    LoopCache.memo(Seq("pagerank", LoopCache.planKey(edges), srcCol, dstCol,
-        iterations, initTokens, dampNum, dampDen)) {
-      val withDeg = prepare(edges, srcCol, dstCol, iterations, dampNum, dampDen)
-      // the node count feeds the token scale, i.e. PLAN construction — a
-      // pinned 1-row aggregate (LoopCache.pinnedRow) so only the first
-      // invocation pays the pass (which doubles as the edge-cache
-      // materialization)
-      val (initTok, teleport) = resolveTokens(initTokens, dampNum, dampDen,
-        LoopCache.pinnedRow(
-          withDeg.select(col("src")).union(withDeg.select(col("dst")))
-            .distinct().agg(count(lit(1)))).getLong(0))
-      // The rank table stays SPARSE: it only carries nodes with in-edges.
-      // A node absent from it has a known rank — `initTokens` before the
-      // first round, exactly `teleport` afterwards (no in-edges ⟹ nothing
-      // but the teleport share) — so a coalesce default replaces the dense
-      // per-iteration node join, halving the stages per round: one edge⋈rank
-      // join + one token sum, nothing else.
-      var ranks: Option[DataFrame] = None
-      var pinnedPrev = edges.sparkSession.emptyDataFrame // round 0: no-op release
-      var default = initTok
-      for (_ <- 1 to iterations) {
-        val withRank = ranks match {
-          case None => withDeg.withColumn("r", lit(initTok)) // round 1: uniform
-          case Some(rk) => withDeg.join(rk, col("src") === col("id"), "left")
-            .withColumn("r", coalesce(col("r"), lit(default)))
-        }
-        val contrib = contribution(withRank, dampNum, dampDen)
-        val pinned = LoopCache.step(
-          contrib.select(col("dst").as("id"),
-            (lit(teleport) + col("contrib")).as("r")),
-          pinnedPrev)
-        ranks = Some(SqlBridge.reRoot(pinned))
-        pinnedPrev = pinned
-        default = teleport
-      }
-      // densify once at the end: sources ∪ targets, teleport-only fill —
-      // then pin the result and release the edge + last-round anchors
-      val nodes = withDeg.select(col("src").as("id"))
-        .union(withDeg.select(col("dst").as("id"))).distinct()
-      LoopCache.finish(
-        nodes.join(ranks.get, Seq("id"), "left")
-          .select(col("id"), coalesce(col("r"), lit(teleport)).as("rank_tokens")),
-        withDeg, pinnedPrev)
-    }
+    val e = Adjacency.arcs(edges, srcCol, dstCol)
+    fixedPointAdj(Adjacency.directed(e), Adjacency.nodes(e), iterations,
+      initTokens, dampNum, dampDen)
   }
 
-  /** [[fixedPoint]] over a staged ADJACENCY layout (src, outdeg, dsts) +
-    * node table: identical token arithmetic — each edge still carries
-    * `(r·dampNum) div (dampDen·outdeg)` — but the per-round operand is
-    * node-sized (one row per source, destinations packed in an array),
+  /** The PageRank loop, over an ADJACENCY layout (src, outdeg, dsts) +
+    * node table (staged: Tables.copurchaseAdjacency/copurchaseNodes; from
+    * an edge list: [[fixedPoint]]). Each edge carries
+    * `(r·dampNum) div (dampDen·outdeg)` tokens, but the per-round operand
+    * is node-sized (one row per source, destinations packed in an array),
     * so the join probes |nodes| rows and the edge volume only appears
-    * inside a codegen'd explode feeding the partial aggregate. Per-row
-    * engine overhead (cache scan, UnsafeRow hashing) was the dominant
-    * per-round cost of the edge-layout loop; this is the GraphX-style
-    * edge-partition answer, expressed declaratively. */
+    * inside a codegen'd explode feeding the partial aggregate — no
+    * per-edge row is scanned, hashed or joined per round. This is the
+    * GraphX-style edge-partition answer, expressed declaratively. The
+    * node table's row count is the mass-holding node count the token
+    * scale derives from. */
   def fixedPointAdj(adj: DataFrame, nodes: DataFrame, iterations: Int = 5,
       initTokens: Long = AutoTokens,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
@@ -221,31 +144,24 @@ object PageRank {
     require(dampNum >= 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen must lie in [0, 1]")
     // DEEP-ROUNDS SAFE (round 16): caller-supplied round count, so each
-    // round is pinned AND re-rooted like fixedPoint — the SQL plan never
-    // nests across rounds (the KCoreDepthProbe planning cliff); warm
-    // re-invocations return the memoized final. Same staleness contract
-    // as every memoized operator: see the object scaladoc.
+    // round is pinned AND re-rooted — the SQL plan never nests across
+    // rounds (the KCoreDepthProbe planning cliff); warm re-invocations
+    // return the memoized final. Same staleness contract as every
+    // memoized operator: see the object scaladoc.
     LoopCache.memo(Seq("pagerankAdj", LoopCache.planKey(adj),
         LoopCache.planKey(nodes), iterations, initTokens, dampNum, dampDen)) {
-      val a0 = adj.select(col("src").cast("long").as("src"),
-        col("outdeg").cast("long").as("outdeg"),
-        col("dsts").cast("array<long>").as("dsts"))
-      // loop exchange width from the EDGE volume (one pinned node-sized
-      // pass); rounds execute at that width with static plans — see
-      // LoopCache.loopSession for why adaptive re-planning is the wrong
-      // default inside a fixed-shape loop
-      val w = LoopCache.loopWidth(adj.sparkSession, LoopCache.pinnedRow(
-        a0.agg(coalesce(sum(col("outdeg")), lit(0L)))).getLong(0))
-      val Seq(aT, nodesT) = LoopCache.tunedInputs(w, a0,
+      val (_, a, Seq(nodeIds)) = Adjacency.pinDirected(adj,
         nodes.select(col("id").cast("long").as("id")))
-      // stationary operand: hash-partitioned by the per-round join key and
-      // sorted, so every round's rank join needs NO exchange and NO sort on
-      // the adjacency side — only the node-sized rank table moves
-      val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nodeIds = nodesT
+      // a plain head(), like the width read: a pinned row would outlive
+      // the call as one more cache entry, and a warm call never gets here
       val (initTok, teleport) = resolveTokens(initTokens, dampNum, dampDen,
-        LoopCache.pinnedRow(nodeIds.agg(count(lit(1)))).getLong(0))
+        nodeIds.agg(count(lit(1))).head().getLong(0))
+      // The rank table stays SPARSE: it only carries nodes with in-edges.
+      // A node absent from it has a known rank — `initTokens` before the
+      // first round, exactly `teleport` afterwards (no in-edges ⟹ nothing
+      // but the teleport share) — so a coalesce default replaces a dense
+      // per-iteration node join: one adjacency⋈rank join + one token sum
+      // per round, nothing else.
       var ranks: Option[DataFrame] = None
       var pinnedPrev = adj.sparkSession.emptyDataFrame // round 0: no-op release
       var default = initTok
@@ -276,8 +192,25 @@ object PageRank {
     }
   }
 
-  /** [[personalized]] over the staged adjacency layout — same arithmetic,
-    * node-sized rounds (see [[fixedPointAdj]]). */
+  /** PERSONALIZED fixed-point PageRank: teleport mass flows only to the
+    * `seeds` node set, so ranks measure proximity to the seeds — the
+    * random-walk-with-restart recommender. Same exact-token semantics as
+    * [[fixedPoint]] (BIGINT sums, truncating division, dropped sink
+    * mass); non-seed nodes start at 0 and hold only propagated mass, so
+    * the result is exactly replayable by an external engine. Total mass
+    * is seeds·initTokens, so the overflow guard counts seeds, not nodes.
+    * Runs [[personalizedAdj]] over the layout [[Adjacency]] builds;
+    * duplicate edges keep their multiplicity, as in [[fixedPoint]]. */
+  def personalized(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, seedCol: String,
+      iterations: Int = 5, initTokens: Long = AutoTokens,
+      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame =
+    personalizedAdj(Adjacency.directed(Adjacency.arcs(edges, srcCol, dstCol)),
+      seeds, seedCol, iterations, initTokens, dampNum, dampDen)
+
+  /** The personalized loop over the adjacency layout — [[fixedPointAdj]]'s
+    * arithmetic and node-sized rounds, with the seed teleport re-entering
+    * each round. */
   def personalizedAdj(adj: DataFrame, seeds: DataFrame, seedCol: String,
       iterations: Int = 5, initTokens: Long = AutoTokens,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
@@ -289,24 +222,19 @@ object PageRank {
     LoopCache.memo(Seq("pprAdj", LoopCache.planKey(adj),
         LoopCache.planKey(seeds), seedCol, iterations, initTokens,
         dampNum, dampDen)) {
-      val a0 = adj.select(col("src").cast("long").as("src"),
-        col("outdeg").cast("long").as("outdeg"),
-        col("dsts").cast("array<long>").as("dsts"))
-      // same loop tuning as fixedPointAdj: edge-volume-derived width,
-      // static plans, src-partitioned stationary operand
-      val w = LoopCache.loopWidth(adj.sparkSession, LoopCache.pinnedRow(
-        a0.agg(coalesce(sum(col("outdeg")), lit(0L)))).getLong(0))
-      val Seq(aT, seedsT) = LoopCache.tunedInputs(w, a0,
+      val (w, a, Seq(seedsT)) = Adjacency.pinDirected(adj,
         seeds.select(col(seedCol).cast("long").as("id")))
-      val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // seeds are STATIONARY like the adjacency: partitioned on the id key
       // once, so the per-round teleport re-entry join needs no exchange
       val seedIds = seedsT.distinct()
         .repartition(w, col("id")).sortWithinPartitions("id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // total mass is seeds·initTokens, so the token scale derives from the
+      // SEED count, not the node count (mirrored by the q110 oracle SQL)
       val (initTok, teleport) = resolveTokens(initTokens, dampNum, dampDen,
-        LoopCache.pinnedRow(seedIds.agg(count(lit(1)))).getLong(0))
+        seedIds.agg(count(lit(1))).head().getLong(0))
+      // ranks stay sparse: nodes holding mass only. Round 1: seeds at
+      // initTokens. Each round: propagate, then re-add the seed teleport.
       var ranks = seedIds.select(col("id"), lit(initTok).as("r"))
       var pinnedPrev = ranks // seed projection, never persisted: no-op release
       for (_ <- 1 to iterations) {
@@ -314,11 +242,10 @@ object PageRank {
           .select(expr(s"(r * ${dampNum}L) div (${dampDen}L * outdeg)").as("c"),
             explode(col("dsts")).as("dst"))
           .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-        // teleport re-entry: propagated mass ⟗ seed rows. The old
-        // union+re-sum re-exchanged the node-sized rank table every round;
-        // the full-outer join runs exchange-free — contrib leaves its
-        // aggregate hash-partitioned on the id and the seed side is the
-        // pinned stationary layout above. Same sums, exactly.
+        // teleport re-entry: propagated mass ⟗ seed rows. The full-outer
+        // join runs exchange-free — contrib leaves its aggregate
+        // hash-partitioned on the id and the seed side is the pinned
+        // stationary layout above.
         val pinned = LoopCache.step(
           contrib.select(col("dst").as("id"), col("contrib").as("r"))
             .join(seedIds.withColumn("t", lit(true)), Seq("id"), "full_outer")
@@ -330,58 +257,6 @@ object PageRank {
       }
       LoopCache.finish(
         ranks.select(col("id"), col("r").as("rank_tokens")), a, seedIds,
-        pinnedPrev)
-    }
-  }
-
-  /** PERSONALIZED fixed-point PageRank: teleport mass flows only to the
-    * `seeds` node set, so ranks measure proximity to the seeds — the
-    * random-walk-with-restart recommender. Same exact-token semantics as
-    * [[fixedPoint]] (BIGINT sums, truncating division, dropped sink
-    * mass); non-seed nodes start at 0 and hold only propagated mass, so
-    * the result is exactly replayable by an external engine. Total mass
-    * is seeds·initTokens, so the overflow guard counts seeds, not nodes.
-    *
-    * Everything keeps [[fixedPoint]]'s shape: stationary cached edges,
-    * node-sized shuffles; the seed teleport re-enters through a
-    * co-partitioned union+sum. */
-  def personalized(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String,
-      iterations: Int = 5, initTokens: Long = AutoTokens,
-      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
-    // DEEP-ROUNDS SAFE (round 16): memo + per-round pin/reRoot, the
-    // fixedPoint shape (caller-supplied round count → plans never nest).
-    LoopCache.memo(Seq("ppr", LoopCache.planKey(edges), srcCol, dstCol,
-        LoopCache.planKey(seeds), seedCol, iterations, initTokens,
-        dampNum, dampDen)) {
-      val withDeg = prepare(edges, srcCol, dstCol, iterations, dampNum, dampDen)
-      val seedIds = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // total mass is seeds·initTokens, so the token scale derives from the
-      // SEED count, not the node count (mirrored by the q110 oracle SQL);
-      // pinned 1-row aggregate — same warm-path rationale as fixedPoint
-      val (initTok, teleport) = resolveTokens(initTokens, dampNum, dampDen,
-        LoopCache.pinnedRow(seedIds.agg(count(lit(1)))).getLong(0))
-
-      // ranks stay sparse: nodes holding mass only. Round 1: seeds at
-      // initTokens. Each round: propagate, then re-add the seed teleport.
-      var ranks = seedIds.select(col("id"), lit(initTok).as("r"))
-      var pinnedPrev = ranks // seed projection, never persisted: no-op release
-      for (_ <- 1 to iterations) {
-        val withRank = withDeg.join(ranks, col("src") === col("id"))
-        val contrib = contribution(withRank, dampNum, dampDen)
-        // propagated mass ∪ seed teleport rows, re-summed on the id key the
-        // contrib aggregate already established (co-partitioned, tiny)
-        val pinned = LoopCache.step(
-          contrib.select(col("dst").as("id"), col("contrib").as("r"))
-            .unionByName(seedIds.select(col("id"), lit(teleport).as("r")))
-            .groupBy(col("id")).agg(sum(col("r")).as("r")),
-          pinnedPrev)
-        ranks = SqlBridge.reRoot(pinned)
-        pinnedPrev = pinned
-      }
-      LoopCache.finish(
-        ranks.select(col("id"), col("r").as("rank_tokens")), withDeg, seedIds,
         pinnedPrev)
     }
   }

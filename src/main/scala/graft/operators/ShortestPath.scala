@@ -20,10 +20,13 @@ import org.apache.spark.storage.StorageLevel
   * rule). Overflow: caller guarantees `max_weight · rounds` fits BIGINT
   * — with cent-scale weights that is ~10^14 hops of headroom.
   *
-  * Scale shape: the edge table is the only big operand, src-partitioned
-  * and pinned once per cold invocation; each round shuffles only the
-  * node-sized frontier (dist table) into the join and min-combines
-  * map-side. Round plans are RE-ROOTED on their pinned RDDs
+  * Scale shape: one loop, over a weighted ADJACENCY layout — (id, nbrs)
+  * with nbrs an array of (d, w) structs, src-partitioned and pinned once
+  * per cold invocation; each round joins the node-sized frontier (dist
+  * table) against it, fans the edges out inside a codegen'd explode and
+  * min-combines map-side. The edge-list entry point ([[distances]])
+  * builds the layout with [[Adjacency]] and runs the same loop. Round
+  * plans are RE-ROOTED on their pinned RDDs
   * ([[SqlBridge.reRoot]]) so the logical plan never nests across rounds
   * — depth is limited by data, not by Catalyst plan rendering (the
   * [[Hits]] lesson). Warm re-invocations return the memoized frame
@@ -36,82 +39,52 @@ object ShortestPath {
   /** Cheapest ≤`rounds`-hop cost from any seed to every reached node,
     * over `edges(srcCol → dstCol, weightCol)` with non-negative BIGINT
     * weights. Seeds start at cost 0 (min wins if a seed is also
-    * reachable). Returns (id, cost). */
+    * reachable). Returns (id, cost). Runs [[distancesAdj]] over the
+    * weighted neighbor list [[Adjacency]] builds. */
   def distances(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, seeds: DataFrame, seedCol: String,
-      rounds: Int = 3): DataFrame = {
-    require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    val e = edges.select(
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
-        col(weightCol).cast("long").as("w"))
-      .repartition(col("src"))
-    val s0 = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-      .select(col("id"), lit(0L).as("cost"))
-    LoopCache.memo(
-      Seq("sssp", LoopCache.planKey(e), LoopCache.planKey(s0), rounds)) {
-      run(e, s0, rounds)
-    }
-  }
+      rounds: Int = 3): DataFrame =
+    distancesAdj(Adjacency.neighbors(edges.select(
+        col(srcCol).cast("long").as("src"),
+        struct(col(dstCol).cast("long").as("d"),
+          col(weightCol).cast("long").as("w")).as("nb")), "src", "nb"),
+      seeds, seedCol, rounds)
 
-  private def run(e: DataFrame, s0: DataFrame, rounds: Int): DataFrame = {
-    e.persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = s0
-    var pinnedPrev = s0 // seed table: step's release is a no-op
-    for (_ <- 1 to rounds) {
-      val relaxed = e.join(dist, col("src") === col("id"))
-        .select(col("dst").as("id"), (col("cost") + col("w")).as("cost"))
-      val pinned = LoopCache.step(
-        dist.unionByName(relaxed)
-          .groupBy(col("id")).agg(min(col("cost")).as("cost")),
-        pinnedPrev)
-      dist = SqlBridge.reRoot(pinned)
-      pinnedPrev = pinned
-    }
-    e.unpersist(blocking = false) // final dist is materialized; edges done
-    dist
-  }
-
-  /** [[distances]] over a STAGED weighted adjacency layout — (id, nbrs)
+  /** The relaxation loop over a weighted ADJACENCY layout — (id, nbrs)
     * with nbrs an array of (d, w) structs: per relaxation the distance
     * frontier joins the node-sized adjacency and edges fan out inside a
-    * codegen'd explode (see PageRank.fixedPointAdj). Same min-plus
-    * BIGINT arithmetic, same results. */
+    * codegen'd explode (see PageRank.fixedPointAdj). */
   def distancesAdj(adj: DataFrame, seeds: DataFrame, seedCol: String,
       rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     val a0 = adj.select(col("id").cast("long").as("src"), col("nbrs"))
-    // loop-tuned width + static rounds over a src-partitioned stationary
-    // operand (see LoopCache.loopSession)
-    val w = LoopCache.loopWidth(adj.sparkSession, LoopCache.pinnedRow(
-      a0.agg(coalesce(sum(size(col("nbrs")).cast("long")), lit(0L))))
-      .getLong(0))
-    val Seq(aT, seedsT) = LoopCache.tunedInputs(w, a0, seeds)
-    val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
-    val s0 = seedsT.select(col(seedCol).cast("long").as("id")).distinct()
+    val s0 = seeds.select(col(seedCol).cast("long").as("id")).distinct()
       .select(col("id"), lit(0L).as("cost"))
-    LoopCache.untuned(
-      LoopCache.memo(
-        Seq("sssp-adj", LoopCache.planKey(a), LoopCache.planKey(s0), rounds)) {
-        runAdj(a, s0, rounds)
-      })
-  }
-
-  private def runAdj(a: DataFrame, s0: DataFrame, rounds: Int): DataFrame = {
-    a.persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = s0
-    var pinnedPrev = s0
-    for (_ <- 1 to rounds) {
-      val relaxed = a.join(dist, col("src") === col("id"))
-        .select(col("cost"), explode(col("nbrs")).as("nb"))
-        .select(col("nb.d").as("id"), (col("cost") + col("nb.w")).as("cost"))
-      val pinned = LoopCache.step(
-        dist.unionByName(relaxed)
-          .groupBy(col("id")).agg(min(col("cost")).as("cost")),
-        pinnedPrev)
-      dist = SqlBridge.reRoot(pinned)
-      pinnedPrev = pinned
+    LoopCache.memo(
+      Seq("sssp-adj", LoopCache.planKey(a0), LoopCache.planKey(s0), rounds)) {
+      // loop-tuned width + static rounds over a src-partitioned stationary
+      // operand (see LoopCache.loopSession); a plain head(), as a warm
+      // call returns the memo above first
+      val w = LoopCache.loopWidth(adj.sparkSession, a0.agg(coalesce(
+        sum(size(col("nbrs")).cast("long")), lit(0L))).head().getLong(0))
+      val Seq(aT, s0T) = LoopCache.tunedInputs(w, a0, s0)
+      val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      var dist = s0T
+      var pinnedPrev = s0T // seed table: step's release is a no-op
+      for (_ <- 1 to rounds) {
+        val relaxed = a.join(dist, col("src") === col("id"))
+          .select(col("cost"), explode(col("nbrs")).as("nb"))
+          .select(col("nb.d").as("id"), (col("cost") + col("nb.w")).as("cost"))
+        val pinned = LoopCache.step(
+          dist.unionByName(relaxed)
+            .groupBy(col("id")).agg(min(col("cost")).as("cost")),
+          pinnedPrev)
+        dist = SqlBridge.reRoot(pinned)
+        pinnedPrev = pinned
+      }
+      a.unpersist(blocking = false) // final dist is materialized; adjacency done
+      LoopCache.untuned(dist)
     }
-    a.unpersist(blocking = false)
-    dist
   }
 }

@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * cost per round — this probe is the done-criterion for that claim
   * (VERDICT r15 #1).
   *
-  * Operators covered: PageRank.fixedPoint (edge layout),
-  * PageRank.fixedPointAdj, PageRank.personalized, PageRank.personalizedAdj,
-  * LabelPropagation.communities, LabelPropagation.communitiesAdj,
-  * KCore.survivors (edge layout).
+  * Operators covered: PageRank.fixedPointAdj, PageRank.personalizedAdj,
+  * LabelPropagation.communitiesAdj. The edge-list entry points run these
+  * same loops.
   *
   * Usage: tools/run_main.sh graft.tools.LoopDepthProbe DIR R1 [R2...]
   *        [only=name,name]
@@ -43,25 +42,14 @@ object LoopDepthProbe {
       .orderBy(col("l_partkey")).limit(3)
 
     val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
-      "pagerank_edge" -> (r => graft.operators.PageRank.fixedPoint(
-        graft.Tables.copurchaseEdgesWithDeg(spark, dir), "src", "dst",
-        iterations = r)),
       "pagerank_adj" -> (r => graft.operators.PageRank.fixedPointAdj(
         graft.Tables.copurchaseAdjacency(spark, dir),
         graft.Tables.copurchaseNodes(spark, dir), iterations = r)),
-      "ppr_edge" -> (r => graft.operators.PageRank.personalized(
-        graft.Tables.copurchaseEdges(spark, dir), "src", "dst",
-        seeds(), "l_partkey", iterations = r)),
       "ppr_adj" -> (r => graft.operators.PageRank.personalizedAdj(
         graft.Tables.copurchaseAdjacency(spark, dir),
         seeds(), "l_partkey", iterations = r)),
-      "lpa_edge" -> (r => graft.operators.LabelPropagation.communities(
-        graft.Tables.copurchaseTop10Edges(spark, dir), "u", "v", rounds = r)),
       "lpa_adj" -> (r => graft.operators.LabelPropagation.communitiesAdj(
-        graft.Tables.copurchaseTop10Adjacency(spark, dir), rounds = r)),
-      "kcore_edge" -> (r => graft.operators.KCore.survivors(
-        graft.Tables.copurchaseEdges(spark, dir), "src", "dst",
-        k = 4L, rounds = r)))
+        graft.Tables.copurchaseTop10Adjacency(spark, dir), rounds = r)))
 
     for ((name, fn) <- ops if only.forall(_.contains(name)); r <- rounds) {
       spark.catalog.clearCache()

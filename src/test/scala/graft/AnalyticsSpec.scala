@@ -131,6 +131,22 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------------------------
+  // q58 — the window keeps the correlated subquery's NULL semantics
+  // ------------------------------------------------------------------
+  test("q58 above-average orders: a NULL customer key matches no customer") {
+    // the SQL spec's `o2.o_custkey = o.o_custkey` never matches NULL, so a
+    // NULL-key order is never above average. Customer 1 averages 200.
+    val dir = java.nio.file.Files.createTempDirectory("graft_q58")
+    Seq((1L, Option(1L), 100.0, "1-URGENT"), (2L, Option(1L), 300.0, "1-URGENT"),
+      (3L, None, 500.0, "2-HIGH"), (4L, None, 50.0, "2-HIGH"))
+      .toDF("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+      .write.parquet(s"$dir/orders.parquet")
+    val got = QueriesAnalytics.correlatedAboveAvg(spark, dir.toString).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got == Seq(("1-URGENT", 1L, 300.0)))
+  }
+
+  // ------------------------------------------------------------------
   // q66 — multimodal metadata is a pure function of the payload (the
   // decode pipeline stays deterministic across repartitioning)
   // ------------------------------------------------------------------

@@ -74,6 +74,54 @@ class ScaleSpec extends AnyFunSuite {
     } <= 2, "kmeans leaked per-round centroid tables / the corpus anchor")
   }
 
+  test("LoopCache: each adjacency loop keeps its edge entry point's live-entry bound") {
+    val sc = spark.sparkContext
+    val edges = (for {
+      a <- 1L to 30L; b <- 1L to 30L
+      if a != b && (a % 7 == b % 7 || a + 1 == b)
+    } yield (a, b)).toDF("src", "dst")
+    val seeds = Seq(1L, 2L).toDF("id")
+    def nbrs(e: org.apache.spark.sql.DataFrame, key: String, nbr: String) =
+      e.groupBy(col(key).as("id")).agg(sort_array(collect_list(col(nbr))).as("nbrs"))
+    def withDeg(e: org.apache.spark.sql.DataFrame) = e.groupBy(col("src"))
+      .agg(count(lit(1)).as("outdeg"), sort_array(collect_list(col("dst"))).as("dsts"))
+    val adj = withDeg(edges)
+    val nodes = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct()
+    val sym = edges.union(edges.select(col("dst"), col("src"))).distinct()
+    val wadj = edges.withColumn("nb", struct(col("dst").as("d"), (col("src") % 5L + 1L).as("w")))
+      .groupBy(col("src").as("id")).agg(sort_array(collect_list(col("nb"))).as("nbrs"))
+    spark.catalog.clearCache()
+    operators.LoopCache.clearMemo()
+    // (name, live entries a first call may leave, whether exactly that many)
+    val loops: Seq[(String, Int, Boolean, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("fixedPointAdj", 2, false,
+        () => operators.PageRank.fixedPointAdj(adj, nodes, iterations = 5)),
+      ("personalizedAdj", 2, false,
+        () => operators.PageRank.personalizedAdj(adj, seeds, "id", iterations = 5)),
+      ("communitiesAdj", 1, false,
+        () => operators.LabelPropagation.communitiesAdj(nbrs(sym, "src", "dst"), rounds = 5)),
+      ("levelsAdj", 1, false,
+        () => operators.Bfs.levelsAdj(nbrs(edges, "src", "dst"), seeds, "id", rounds = 5)),
+      ("distancesAdj", 1, false,
+        () => operators.ShortestPath.distancesAdj(wadj, seeds, "id", rounds = 5)),
+      ("scoresAdj", 2, true, () => operators.Hits.scoresAdj(
+        nbrs(edges, "src", "dst"), nbrs(edges, "dst", "src"), rounds = 5)),
+      ("survivorsAdj", 2, false,
+        () => operators.KCore.survivorsAdj(withDeg(sym), k = 3L, rounds = 5)))
+    for ((name, bound, exact, run) <- loops) {
+      val before = sc.getPersistentRDDs.size
+      run().count()
+      val first = sc.getPersistentRDDs.size - before
+      assert(if (exact) first == bound else first <= bound,
+        s"$name left $first live cache entries, bound $bound")
+      val afterFirst = sc.getPersistentRDDs.size
+      run().count()
+      assert(sc.getPersistentRDDs.size == afterFirst,
+        s"$name warm re-invocation added cache entries")
+    }
+  }
+
   test("selective filters and projections reach the parquet scan") {
     val sf = "/root/testdata/sf0.001"
     val q11 = QueriesRelational.filterRevenue(spark, sf)
