@@ -1,5 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
+import graft.tools.TaskEnvelope
 
 /** Benchmark main: runs the headline queries (Queries.benchNames) on
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the `noop` sink
@@ -16,10 +19,24 @@ import org.apache.spark.sql.SparkSession
   * pass re-runs such spans (bounded retries) until the sentinel is clean
   * or retries run out; the artifact records the full sentinel series and
   * a `contended` flag so a reader can audit the measurement itself.
+  *
+  * PROFILES: every timed query run carries a [[TaskEnvelope]] (jobs,
+  * stages, tasks, executor CPU/run/GC time, shuffle bytes, spill, peak
+  * task memory), attached around the timed region and drained after it.
+  * The detail file records, per tier, the envelope of the run whose time
+  * that tier reports (`profiles_cold`, `profiles`; prodcold: `profiles`),
+  * and lists as `reuse` the queries whose reported warm run ran no Spark
+  * job — a memo or cached result, not work. The stdout lines carry no
+  * profile.
+  *
+  * Profiling one query: `SPARK_GRAFT_BENCH_ONLY=<name>[,name...]`
+  * (optionally with `SPARK_GRAFT_BENCH_MODE=prodcold`) runs the same
+  * protocol on the subset, and the detail file holds its profiles.
   */
 object Bench {
 
-  // Probe sizing is from MEASURED noise (tools/SentinelProbe): at 1e7
+  // Probe sizing is from MEASURED noise (N back-to-back sentinel timings
+  // at each row count; the artifact's `sentinels` series): at 1e7
   // rows the job is scheduling-dominated (max/min ~2.5x on an idle box —
   // the first r9 run flagged itself contended on its own jitter); at 2e9
   // rows (~0.45 s) the idle band is ±15%, i.e. a clean reading can sit
@@ -336,24 +353,32 @@ object Bench {
     // passes the other reports a clean number — the artifact must still
     // show the failures so a cold-only regression stays visible.
     val failCounts = scala.collection.mutable.LinkedHashMap[String, Int]()
-    def timeQuery(q: Queries.Q): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+    // the envelope's listener is attached before and drained after the
+    // timed region, so the time is what it was without the profile
+    def timeQuery(q: Queries.Q): Run = {
+      var sec = -1.0
+      val env = TaskEnvelope.measure(spark) {
+        val t0 = System.nanoTime()
+        try {
+          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          sec = (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
           failCounts(q.name) = failCounts.getOrElse(q.name, 0) + 1
-          false
         }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      }
+      Run(sec, env)
     }
     // -1 means "no sample from this attempt", not "poison every other
     // attempt": min of the successful readings, -1 only when EVERY
     // attempt failed. (r9 shape: one transient failure inside any of up
     // to 3 warm chunk retries permanently reported the query failed and
     // dropped it from the warm total even when other attempts passed.)
-    def merge(a: Double, b: Double): Double =
-      if (a < 0) b else if (b < 0) a else math.min(a, b)
+    // The kept run's envelope comes with its time.
+    def merge(a: Run, b: Run): Run =
+      if (a.sec < 0) b else if (b.sec < 0) a else if (b.sec < a.sec) b else a
+    def secs(rs: Seq[(String, Run)]) = rs.map { case (n, r) => n -> r.sec }
+    def envs(rs: Seq[(String, Run)]) = rs.map { case (n, r) => n -> r.env }
 
     // PRODUCTION-COLD tier (SPARK_GRAFT_BENCH_MODE=prodcold): one pass,
     // caches + operator memos dropped BEFORE each query, so every query
@@ -362,7 +387,7 @@ object Bench {
     // classloading). One-pass by design, so contention cannot be retried
     // away — the sentinel series is recorded for the reader instead.
     if (sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("prodcold")) {
-      val results = qs.grouped(SentinelChunk).flatMap { chunk =>
+      val runs = qs.grouped(SentinelChunk).flatMap { chunk =>
         val times = chunk.map { q =>
           spark.catalog.clearCache()
           graft.operators.LoopCache.clearMemo()
@@ -372,16 +397,19 @@ object Bench {
         times
       }.toSeq
       if (sustainedDrift()) contended = true
+      val results = secs(runs)
       val total = results.collect { case (_, v) if v >= 0 => v }.sum
       val qj = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
         .mkString("{", ",", "}")
       val sj = sentinels.map(s => f"$s%.3f").mkString("[", ",", "]")
-      val line = f"""{"metric":"total_prodcold","value":$total%.3f,"unit":"sec",$warmupJson,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"sentinels":$sj,"contended":$contended,"staged":${graft.operators.Staging.provenanceJson},"queries":$qj}"""
-      println(line)
+      val fields = f""""metric":"total_prodcold","value":$total%.3f,"unit":"sec",$warmupJson,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"sentinels":$sj,"contended":$contended,"staged":${graft.operators.Staging.provenanceJson},"queries":$qj"""
+      println(s"{$fields}")
       // the prodcold artifact lands in its own file too, so the official
-      // record never depends on shell redirection of the sbt log
+      // record never depends on shell redirection of the sbt log; only
+      // the file carries the profiles
       val prodcoldPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
         java.nio.file.Paths.get("BENCH_PRODCOLD.json").toAbsolutePath.toString)
+      val line = s"""{$fields,"profiles":${profilesJson(envs(runs))}}"""
       writeArtifact(prodcoldPath, line)
       writeArtifact(cpusKeyedPath(prodcoldPath, cpus), line)
       // ABSOLUTE LAST stdout line: a minimal record that survives any
@@ -421,7 +449,7 @@ object Bench {
     // directly (the cold tier cannot be re-measured honestly, so the
     // artifact must say so rather than certify a load-poisoned cold
     // total with contended:false).
-    val passA: Seq[(String, Double)] = qs.grouped(SentinelChunk).flatMap { chunk =>
+    val passA: Seq[(String, Run)] = qs.grouped(SentinelChunk).flatMap { chunk =>
       chunkBoundary()
       val times = chunk.map(q => q.name -> timeQuery(q))
       if (probe() > sentinelBase * SentinelDriftMax) contended = true
@@ -442,7 +470,7 @@ object Bench {
     // trigger-happy here only costs wall-clock while guaranteeing a
     // span measured under even moderate load is re-measured before it
     // lands in the artifact (VERDICT r9 #2's done-criterion).
-    val warmByName = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val warmByName = scala.collection.mutable.LinkedHashMap[String, Run]()
     qs.grouped(SentinelChunk).foreach { chunk =>
       var attempt = 0
       var clean = false
@@ -458,7 +486,9 @@ object Bench {
       if (!clean) contended = true
     }
     if (sustainedDrift()) contended = true
-    val results = passA.map { case (n, a) => n -> merge(a, warmByName(n)) }
+    val warmRuns = passA.map { case (n, a) => n -> merge(a, warmByName(n)) }
+    val results = secs(warmRuns)
+    val coldTimes = secs(passA)
 
     def qjson(rs: Seq[(String, Double)]) =
       rs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
@@ -470,10 +500,9 @@ object Bench {
     // Queries where one whole tier produced no sample (every attempt in
     // that tier failed) but the other tier succeeded: the merged number
     // is real, but the artifact must say it's one-tier-only (ADVICE r10).
-    val warmMap = warmByName.toMap
-    val partial = passA.collect {
-      case (n, a) if (a < 0) != (warmMap.getOrElse(n, -1.0) < 0) &&
-        merge(a, warmMap.getOrElse(n, -1.0)) >= 0 => "\"" + n + "\""
+    val warmMap = warmByName.map { case (n, r) => n -> r.sec }.toMap
+    val partial = coldTimes.collect {
+      case (n, a) if (a < 0) != (warmMap.getOrElse(n, -1.0) < 0) => "\"" + n + "\""
     }.mkString("[", ",", "]")
     val failCountsJ = failCounts
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -487,7 +516,7 @@ object Bench {
     // totals, the audit verdict, and the 20 heaviest warm queries —
     // under ~1.5 KB, so it parses from the tail.
     val staged = graft.operators.Staging.provenanceJson
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$warmupJson,"cache_scope":"$cacheScope","total_cold":${totalOf(passA)}%.3f,"queries_cold":${qjson(passA)},"failed":$failed,"partial":$partial,"attempt_failures":$failCountsJ,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"sentinels":$sj,"contended":$contended,"staged":$staged,"queries":${qjson(results)}}"""
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$warmupJson,"cache_scope":"$cacheScope","total_cold":${totalOf(coldTimes)}%.3f,"queries_cold":${qjson(coldTimes)},"failed":$failed,"partial":$partial,"attempt_failures":$failCountsJ,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"sentinels":$sj,"contended":$contended,"staged":$staged,"queries":${qjson(results)},"profiles_cold":${profilesJson(envs(passA))},"profiles":${profilesJson(envs(warmRuns))},"reuse":${reuseJson(warmRuns)}}"""
     // Detail file lands next to the checkout being benched: env override
     // first, else the working directory (NOT a hardcoded absolute path —
     // a bench run from another checkout must not write into this one).
@@ -505,7 +534,7 @@ object Bench {
     // explicitly marked: renamed key + truncation flag. Naive
     // round-over-round tail comparers must use the detail file.
     val topWarm = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-    val shortLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$warmupJson,"cache_scope":"$cacheScope","total_cold":${totalOf(passA)}%.3f,"n_queries":${results.size},"failed":$failed,"partial":$partial,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"contended":$contended,"staged":$staged,"detail":"$detailPath","queries_truncated":true,"queries_top20":${qjson(topWarm)}}"""
+    val shortLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$warmupJson,"cache_scope":"$cacheScope","total_cold":${totalOf(coldTimes)}%.3f,"n_queries":${results.size},"failed":$failed,"partial":$partial,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"contended":$contended,"staged":$staged,"detail":"$detailPath","queries_truncated":true,"queries_top20":${qjson(topWarm)}}"""
     println(shortLine)
     // The round-total also lands in its OWN clean file (VERDICT r11 #3):
     // BENCH_r{8..11}.json all read "parsed": null because the total line
@@ -549,6 +578,26 @@ object Bench {
     while (n > 5 && line(ranked.take(n)).length > 1850) n -= 1
     line(ranked.take(n))
   }
+
+  /** One timed run: its seconds (-1 when it failed) and its envelope. */
+  private final case class Run(sec: Double, env: TaskEnvelope.Env)
+
+  /** `{"<query>":{"jobs":..,...},...}`: one profile per query, the
+    * envelope's counters in Spark's units (`cpu_ns`; `run_ms`, `gc_ms`;
+    * bytes for the rest). */
+  private[graft] def profilesJson(envs: Seq[(String, TaskEnvelope.Env)]): String =
+    compact(render(org.json4s.JObject(envs.toList.map { case (n, e) =>
+      n -> (("jobs" -> e.jobs) ~ ("stages" -> e.stages) ~ ("tasks" -> e.tasks) ~
+        ("cpu_ns" -> e.cpuNs) ~ ("run_ms" -> e.runMs) ~ ("gc_ms" -> e.gcMs) ~
+        ("shuffle_write" -> e.shuffleWrite) ~ ("shuffle_read" -> e.shuffleRead) ~
+        ("input" -> e.input) ~ ("mem_spill" -> e.memSpill) ~
+        ("disk_spill" -> e.diskSpill) ~ ("peak_task_mem" -> e.peakTaskMem))
+    })))
+
+  /** Queries whose reported warm run ran no Spark job: the time is a
+    * memo or cache read, labelled as reuse, not speed. */
+  private def reuseJson(warm: Seq[(String, Run)]): String =
+    compact(render(warm.collect { case (n, r) if r.env.jobs == 0 => n }))
 
   /** `cpus` is free-form env text ("*" is a legal local[] arg): a bare
     * JSON number only when it is ASCII digits (`isDigit` also accepts

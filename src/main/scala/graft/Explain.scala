@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection helper: dumps `.explain("formatted")` for the named
   * queries (or every bench query) so pushdown/broadcast/codegen can be
@@ -9,12 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else Queries.benchNames
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.cli.CliUtil.builder("local[4]", "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

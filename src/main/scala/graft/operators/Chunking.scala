@@ -243,7 +243,10 @@ object Chunking {
     // tokenize passes). So the occurrence count is folded into the list
     // (cnt == size(starts)) and the removal branch anchors `starts`
     // with a provably-true filter (a group gathers >= 1 start), which
-    // blocks the pruner without changing a row.
+    // blocks the pruner without changing a row. Nothing but the optimizer
+    // leaving always-true predicates alone keeps that filter; ScaleSpec's
+    // "q87/q167/q77 one-pass pre-counts: the tokenize exchange is shared"
+    // fails if a Spark upgrade folds it.
     val pre = blocks
       .groupBy(col(idCol), col("block"))
       .agg(collect_list(col("start")).as("starts"))

@@ -75,8 +75,8 @@ object KCore {
     // round is pinned AND re-rooted, so the SQL plan never nests across
     // rounds — a plan-identity warm probe would keep full nesting, whose
     // planning cost blows up superlinearly past ~10 rounds
-    // (KCoreDepthProbe: rounds=20 pinned a driver core for 30+ min of
-    // pure Catalyst work). A deep peel is a legitimate ask (a
+    // (LoopDepthProbe kcore_adj: rounds=20 pinned a driver core for 30+
+    // min of pure Catalyst work). A deep peel is a legitimate ask (a
     // high-layering graph peels one layer per round), so the threshold
     // parameters ride the memo key (`keyTag`) in place of plan identity;
     // warm re-invocations return the memoized final. RDD lineage is kept

@@ -54,8 +54,8 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   * plan returns the first call's result even if the files behind it
   * changed mid-session. That is the engine-wide memo design (caches are
   * cost model, never correctness-of-freshness); harnesses that mutate
-  * inputs between calls must run [[LoopCache.clearMemo]] — Verify, Bench
-  * and TimeQueries all do.
+  * inputs between calls must run [[LoopCache.clearMemo]] — Verify and
+  * Bench both do.
   */
 object PageRank {
 
@@ -145,8 +145,8 @@ object PageRank {
       s"damping $dampNum/$dampDen must lie in [0, 1]")
     // DEEP-ROUNDS SAFE (round 16): caller-supplied round count, so each
     // round is pinned AND re-rooted — the SQL plan never nests across
-    // rounds (the KCoreDepthProbe planning cliff); warm re-invocations
-    // return the memoized final. Same staleness contract as every
+    // rounds (the LoopDepthProbe kcore_adj planning cliff); warm
+    // re-invocations return the memoized final. Same staleness contract as every
     // memoized operator: see the object scaladoc.
     LoopCache.memo(Seq("pagerankAdj", LoopCache.planKey(adj),
         LoopCache.planKey(nodes), iterations, initTokens, dampNum, dampDen)) {

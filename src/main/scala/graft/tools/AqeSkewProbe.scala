@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** AQE skew-join demonstration on REAL skew (SCALE.md round 14): the
@@ -22,12 +21,8 @@ object AqeSkewProbe {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.headOption.getOrElse("/tmp/skew100x")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.cli.CliUtil.builder("local[32]", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Executor-kill chaos gate (VERDICT r17 #2): run catalog queries on a
   * REAL 2-executor local-cluster, `kill -9` one executor JVM while the
@@ -57,11 +56,7 @@ object ChaosKillProbe {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar",
     ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.cli.CliUtil.builder(master, "8")
       .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
       .config("spark.jars", sys.env("SPARK_GRAFT_JARS"))
       .config("spark.executor.extraJavaOptions", addOpens)

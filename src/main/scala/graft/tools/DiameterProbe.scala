@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diameter-growth evidence for the skewed replica corpus (SCALE.md
@@ -19,12 +18,7 @@ object DiameterProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val rounds = args(1).toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.cli.CliUtil.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     for (dir <- args(0) +: args.drop(2)) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Hot-day / hot-hour probe for the sweep-line decomposition
@@ -33,12 +32,8 @@ object HotDayProbe {
     val reps = if (args.length > 1) args(1).toInt else 3
     val mode = if (args.length > 2) args(2) else "day"
     require(mode == "day" || mode == "hour", s"mode must be day|hour: $mode")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.cli.CliUtil.builder("local[32]", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

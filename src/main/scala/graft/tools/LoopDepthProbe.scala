@@ -1,40 +1,40 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deep-rounds cost probe for the WHOLE caller-budgeted loop-operator
-  * family (companion to DiameterProbe for BFS/SSSP and KCoreDepthProbe
-  * for the adjacency peel): times each operator at increasing round
-  * budgets on the same corpus, cold per measurement (cache + memo
-  * cleared). The r14 finding was that the nested-plan loop's per-round
-  * Catalyst planning cost grows SUPERLINEARLY past ~10 rounds (measured
-  * 30+ min of pure driver-side planning at rounds=20); after the
-  * memo+reRoot migration every operator here must read LINEAR marginal
-  * cost per round — this probe is the done-criterion for that claim
-  * (VERDICT r15 #1).
+  * family (companion to DiameterProbe for BFS/SSSP): times each operator
+  * at increasing round budgets on the same corpus, cold per measurement
+  * (cache + memo cleared). The r14 finding was that the nested-plan
+  * loop's per-round Catalyst planning cost grows SUPERLINEARLY past ~10
+  * rounds (measured 30+ min of pure driver-side planning at rounds=20);
+  * after the memo+reRoot migration every operator here must read LINEAR
+  * marginal cost per round — this probe is the done-criterion for that
+  * claim (VERDICT r15 #1).
   *
   * Operators covered: PageRank.fixedPointAdj, PageRank.personalizedAdj,
-  * LabelPropagation.communitiesAdj. The edge-list entry points run these
-  * same loops.
+  * LabelPropagation.communitiesAdj, and, when `k=` is given, the k-core
+  * peel KCore.survivorsAdj (`kcore_adj`; its alive set shrinks
+  * monotonically and usually fixes within a few rounds, but a
+  * high-layering graph peels one layer per round). The edge-list entry
+  * points run these same loops.
   *
   * Usage: tools/run_main.sh graft.tools.LoopDepthProbe DIR R1 [R2...]
-  *        [only=name,name]
+  *        [only=name,name] [k=K]
   */
 object LoopDepthProbe {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args(0)
-    val (onlyArgs, roundArgs) = args.drop(1).partition(_.startsWith("only="))
-    val only = onlyArgs.headOption
-      .map(_.stripPrefix("only=").split(",").map(_.trim).toSet)
+    val (optArgs, roundArgs) = args.drop(1).partition(_.contains("="))
+    val opts = optArgs.map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
+    val only = opts.get("only").map(_.split(",").map(_.trim).toSet)
+    val k = opts.get("k").map(_.toLong)
+    require(k.isDefined || !only.exists(_.contains("kcore_adj")),
+      "kcore_adj needs k=K")
     val rounds = roundArgs.map(_.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.cli.CliUtil.builder("local[32]", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -49,9 +49,12 @@ object LoopDepthProbe {
         graft.Tables.copurchaseAdjacency(spark, dir),
         seeds(), "l_partkey", iterations = r)),
       "lpa_adj" -> (r => graft.operators.LabelPropagation.communitiesAdj(
-        graft.Tables.copurchaseTop10Adjacency(spark, dir), rounds = r)))
+        graft.Tables.copurchaseTop10Adjacency(spark, dir), rounds = r)),
+      "kcore_adj" -> (r => graft.operators.KCore.survivorsAdj(
+        graft.Tables.copurchaseAdjacency(spark, dir), k.get, r)))
 
-    for ((name, fn) <- ops if only.forall(_.contains(name)); r <- rounds) {
+    for ((name, fn) <- ops if only.forall(_.contains(name)) &&
+        (name != "kcore_adj" || k.isDefined); r <- rounds) {
       spark.catalog.clearCache()
       graft.operators.LoopCache.clearMemo()
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{FuzzyMatch, SortedNeighborhood}
@@ -20,12 +19,8 @@ object SkewProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val ks = if (args.length > 1) args(1).split(",").map(_.trim.toInt).toSeq
       else Seq(0, 100, 20, 10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.cli.CliUtil.builder("local[32]", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.Tables.rebalance(

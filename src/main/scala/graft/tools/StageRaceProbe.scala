@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Cross-process staging race probe (VERDICT r17 #8): two of these
@@ -33,12 +32,7 @@ object StageRaceProbe {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val root = Paths.get(sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
       sys.error("SPARK_GRAFT_STAGE_DIR must point at the shared race root")))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.cli.CliUtil.builder("local[8]", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // rendezvous: announce readiness, then spin until the peer is ready

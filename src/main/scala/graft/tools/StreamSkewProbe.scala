@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -23,16 +22,12 @@ object StreamSkewProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.headOption.getOrElse("/tmp/skew100x")
     val rateCap = if (args.length > 1) args(1).toLong else 100000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.cli.CliUtil.builder("local[32]", "32")
       // the drained-rows report sums recentProgress, which keeps only the
       // last N progress entries (default 100) — fine at 8 batches, but a
       // silent undercount if staging or maxFilesPerTrigger changes
       // (ADVICE r15); raise the buffer well past any batch count here
       .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
