@@ -61,8 +61,8 @@ object SqlBridge {
     * previous round's, and Spark's per-action plan-string rendering
     * (AQE renders each nested level twice: final + initial plan) goes
     * exponential in rounds — driver OOM on a 7-edge graph at 4 rounds,
-    * independent of data size. Pin (and force) `df` BEFORE re-rooting,
-    * so the wrapped RDD reads the cache instead of recomputing. */
+    * independent of data size. Pin and force `df` BEFORE re-rooting, so
+    * the RDD reads the cache, unless it is read once (`LoopCache.chain`). */
   def reRoot(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]

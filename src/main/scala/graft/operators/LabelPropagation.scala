@@ -46,7 +46,7 @@ object LabelPropagation {
   def communitiesAdj(adj: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     // DEEP-ROUNDS SAFE (round 16): rounds is caller-supplied, so each
-    // round is pinned AND re-rooted (the BFS/PageRank pattern) — the SQL
+    // round is pinned AND re-rooted (the BFS pattern) — the SQL
     // plan never nests across rounds, so a deep-budget call cannot hit
     // the measured superlinear Catalyst planning cliff (SCALE.md r14);
     // warm re-invocations return the memoized final. Staleness contract:

@@ -61,6 +61,16 @@ object LoopCache {
     pinned
   }
 
+  /** Every `ChainRounds`-th round of a loop run as one plan (PageRank,
+    * whose round reads its predecessor once) re-roots the chain on its
+    * RDD, unpinned: the final's one job still computes each round once,
+    * but analysis stays linear in rounds and a deep chain cannot overflow
+    * the driver's stack (an unbroken one did by 160 rounds). */
+  val ChainRounds = 20
+  def chain(round: Int, next: DataFrame): DataFrame =
+    if (round % ChainRounds != 0) next
+    else org.apache.spark.sql.graftbridge.SqlBridge.reRoot(next)
+
   /** Driver-side result memo for operators whose round plans embed
     * DATA-DEPENDENT literals (HITS bakes each round's max into the next
     * divisor): their final plan cannot even be CONSTRUCTED without
@@ -177,7 +187,9 @@ object LoopCache {
     * which is keyed by (class loader, code). With isolation on (Spark
     * 4.1's default), each clone would recompile every round's classes. The
     * reuse is of compiled code, JVM-wide like the JIT's, not of results,
-    * so a warm loop served by it needs no reuse label. */
+    * so a warm loop served by it needs no reuse label. Class names omit
+    * the codegen stage id, which differs per round of a loop run as one
+    * plan: with it, each round would compile its own copy of each class. */
   private val tunedSessions = scala.collection.mutable.HashMap
     .empty[(org.apache.spark.sql.SparkSession, Int),
       org.apache.spark.sql.SparkSession]
@@ -188,6 +200,7 @@ object LoopCache {
         val s = parent.newSession()
         s.conf.set("spark.sql.shuffle.partitions", width.toString)
         s.conf.set("spark.sql.adaptive.enabled", "false")
+        s.conf.set("spark.sql.codegen.useIdInClassName", "false")
         s
       })
     }

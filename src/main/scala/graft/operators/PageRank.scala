@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graftbridge.SqlBridge
-
 /** Fixed-point (integer) PageRank — link-graph centrality with BIGINT
   * "rank tokens" instead of float probabilities.
   *
@@ -38,13 +36,16 @@ import org.apache.spark.sql.graftbridge.SqlBridge
   * are still validated and rejected loudly if they could wrap.
   *
   * Scale shape: one loop, over the ADJACENCY layout (src, outdeg, dsts)
-  * — one row per source, destinations packed in an array. It is joined
-  * on `src` every iteration, so it is hash-partitioned once and cached;
-  * per iteration only the rank table (one row per NODE, not per edge)
-  * re-shuffles, and the edges fan out inside a codegen'd explode feeding
-  * the per-target token sum. Five iterations = five node-sized shuffles
-  * over a stationary layout; that is the standard Pregel cost model,
-  * with none of its float nondeterminism. The edge-list entry points
+  * — one row per source, destinations packed in an array, hash-
+  * partitioned on `src` once and cached. Per round only the rank table
+  * (one row per NODE, not per edge) moves, and the edges fan out inside
+  * a codegen'd explode feeding the per-target token sum. A round reads
+  * its predecessor once, so the rounds chain with no per-round pin into
+  * one plan ([[LoopCache.chain]]) that [[LoopCache.finish]] runs as ONE
+  * job: the Pregel cost model without its float nondeterminism or a
+  * driver round trip per superstep. (BFS, SSSP and k-core read the
+  * predecessor twice, HITS bakes its values into the next round: those
+  * pin every round with [[LoopCache.step]].) The edge-list entry points
   * ([[fixedPoint]], [[personalized]]) build the layout with
   * [[Adjacency]] and run the same loop.
   *
@@ -143,11 +144,10 @@ object PageRank {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
     require(dampNum >= 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen must lie in [0, 1]")
-    // DEEP-ROUNDS SAFE (round 16): caller-supplied round count, so each
-    // round is pinned AND re-rooted — the SQL plan never nests across
-    // rounds (the LoopDepthProbe kcore_adj planning cliff); warm
-    // re-invocations return the memoized final. Same staleness contract as every
-    // memoized operator: see the object scaladoc.
+    // DEEP-ROUNDS SAFE: one job, no per-round pin, and LoopCache.chain
+    // keeps planning linear in rounds (LoopDepthProbe pagerank_adj).
+    // Warm re-invocations return the memoized final; staleness contract:
+    // see the object scaladoc.
     LoopCache.memo(Seq("pagerankAdj", LoopCache.planKey(adj),
         LoopCache.planKey(nodes), iterations, initTokens, dampNum, dampDen)) {
       val (_, a, Seq(nodeIds)) = Adjacency.pinDirected(adj,
@@ -163,13 +163,16 @@ object PageRank {
       // per-iteration node join: one adjacency⋈rank join + one token sum
       // per round, nothing else.
       var ranks: Option[DataFrame] = None
-      var pinnedPrev = adj.sparkSession.emptyDataFrame // round 0: no-op release
       var default = initTok
-      for (_ <- 1 to iterations) {
+      for (i <- 1 to iterations) {
+        // shuffled hash join building the rank side, which the previous
+        // token sum left hash(id, w)-partitioned: neither side moves, and
+        // no round starts a broadcast job
         val withRank = ranks match {
           case None => a.withColumn("r", lit(initTok))
-          case Some(rk) => a.join(rk, col("src") === col("id"), "left")
-            .withColumn("r", coalesce(col("r"), lit(default)))
+          case Some(rk) =>
+            a.join(rk.hint("shuffle_hash"), col("src") === col("id"), "left")
+              .withColumn("r", coalesce(col("r"), lit(default)))
         }
         // the per-edge token value is constant across a source's fanout,
         // so it is computed ONCE per source row, before the explode
@@ -177,18 +180,14 @@ object PageRank {
           .select(expr(s"(r * ${dampNum}L) div (${dampDen}L * outdeg)").as("c"),
             explode(col("dsts")).as("dst"))
           .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-        val pinned = LoopCache.step(
-          contrib.select(col("dst").as("id"),
-            (lit(teleport) + col("contrib")).as("r")),
-          pinnedPrev)
-        ranks = Some(SqlBridge.reRoot(pinned))
-        pinnedPrev = pinned
+        ranks = Some(LoopCache.chain(i, contrib.select(col("dst").as("id"),
+          (lit(teleport) + col("contrib")).as("r"))))
         default = teleport
       }
       LoopCache.finish(
         nodeIds.join(ranks.get, Seq("id"), "left")
           .select(col("id"), coalesce(col("r"), lit(teleport)).as("rank_tokens")),
-        a, pinnedPrev)
+        a)
     }
   }
 
@@ -217,47 +216,39 @@ object PageRank {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
     require(dampNum >= 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen must lie in [0, 1]")
-    // DEEP-ROUNDS SAFE (round 16): memo + per-round pin/reRoot, exactly
-    // the fixedPointAdj shape above.
+    // DEEP-ROUNDS SAFE: one unpinned chain, re-rooted every ChainRounds
+    // rounds and run as one job, exactly the fixedPointAdj shape above.
     LoopCache.memo(Seq("pprAdj", LoopCache.planKey(adj),
         LoopCache.planKey(seeds), seedCol, iterations, initTokens,
         dampNum, dampDen)) {
       val (w, a, Seq(seedsT)) = Adjacency.pinDirected(adj,
         seeds.select(col(seedCol).cast("long").as("id")))
-      // seeds are STATIONARY like the adjacency: partitioned on the id key
-      // once, so the per-round teleport re-entry join needs no exchange
-      val seedIds = seedsT.distinct()
-        .repartition(w, col("id")).sortWithinPartitions("id")
+      // id-partitioned like the adjacency: round 1's join moves neither side
+      val seedIds = seedsT.distinct().repartition(w, col("id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // total mass is seeds·initTokens, so the token scale derives from the
       // SEED count, not the node count (mirrored by the q110 oracle SQL)
       val (initTok, teleport) = resolveTokens(initTokens, dampNum, dampDen,
         seedIds.agg(count(lit(1))).head().getLong(0))
+      // teleport re-entry: each round's token sum also reads one row per
+      // seed, so a seed holds its share with no in-edge, and the ranks
+      // leave hash(id, w)-partitioned (no outer join, no rank exchange)
+      val teleportRows = seedIds.select(lit(teleport).as("c"), col("id").as("dst"))
       // ranks stay sparse: nodes holding mass only. Round 1: seeds at
       // initTokens. Each round: propagate, then re-add the seed teleport.
       var ranks = seedIds.select(col("id"), lit(initTok).as("r"))
-      var pinnedPrev = ranks // seed projection, never persisted: no-op release
-      for (_ <- 1 to iterations) {
-        val contrib = a.join(ranks, col("src") === col("id"))
-          .select(expr(s"(r * ${dampNum}L) div (${dampDen}L * outdeg)").as("c"),
-            explode(col("dsts")).as("dst"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-        // teleport re-entry: propagated mass ⟗ seed rows. The full-outer
-        // join runs exchange-free — contrib leaves its aggregate
-        // hash-partitioned on the id and the seed side is the pinned
-        // stationary layout above.
-        val pinned = LoopCache.step(
-          contrib.select(col("dst").as("id"), col("contrib").as("r"))
-            .join(seedIds.withColumn("t", lit(true)), Seq("id"), "full_outer")
-            .select(col("id"), (coalesce(col("r"), lit(0L)) +
-              when(col("t").isNotNull, lit(teleport)).otherwise(lit(0L))).as("r")),
-          pinnedPrev)
-        ranks = SqlBridge.reRoot(pinned)
-        pinnedPrev = pinned
+      for (i <- 1 to iterations) {
+        // shuffled hash join on the rank side, as in fixedPointAdj
+        ranks = LoopCache.chain(i,
+          a.join(ranks.hint("shuffle_hash"), col("src") === col("id"))
+            .select(expr(s"(r * ${dampNum}L) div (${dampDen}L * outdeg)").as("c"),
+              explode(col("dsts")).as("dst"))
+            .unionByName(teleportRows)
+            .groupBy(col("dst")).agg(sum(col("c")).as("r"))
+            .select(col("dst").as("id"), col("r")))
       }
       LoopCache.finish(
-        ranks.select(col("id"), col("r").as("rank_tokens")), a, seedIds,
-        pinnedPrev)
+        ranks.select(col("id"), col("r").as("rank_tokens")), a, seedIds)
     }
   }
 }

@@ -5,19 +5,15 @@ import org.apache.spark.sql.functions._
 /** Deep-rounds cost probe for the WHOLE caller-budgeted loop-operator
   * family (companion to DiameterProbe for BFS/SSSP): times each operator
   * at increasing round budgets on the same corpus, cold per measurement
-  * (cache + memo cleared). The r14 finding was that the nested-plan
-  * loop's per-round Catalyst planning cost grows SUPERLINEARLY past ~10
-  * rounds (measured 30+ min of pure driver-side planning at rounds=20);
-  * after the memo+reRoot migration every operator here must read LINEAR
-  * marginal cost per round — this probe is the done-criterion for that
-  * claim (VERDICT r15 #1).
-  *
-  * Operators covered: PageRank.fixedPointAdj, PageRank.personalizedAdj,
-  * LabelPropagation.communitiesAdj, and, when `k=` is given, the k-core
-  * peel KCore.survivorsAdj (`kcore_adj`; its alive set shrinks
-  * monotonically and usually fixes within a few rounds, but a
-  * high-layering graph peels one layer per round). The edge-list entry
-  * points run these same loops.
+  * (cache + memo cleared). Every operator here must read LINEAR marginal
+  * cost per round (nested round plans once cost 30+ min of driver-side
+  * planning at rounds=20). PageRank.fixedPointAdj and
+  * PageRank.personalizedAdj run their rounds as one plan
+  * (LoopCache.chain); LabelPropagation.communitiesAdj and, when `k=` is
+  * given, the k-core peel KCore.survivorsAdj (`kcore_adj`; usually fixed
+  * within a few rounds, but a high-layering graph peels one layer per
+  * round) pin and re-root every round. The edge-list entry points run
+  * these same loops.
   *
   * Usage: tools/run_main.sh graft.tools.LoopDepthProbe DIR R1 [R2...]
   *        [only=name,name] [k=K]

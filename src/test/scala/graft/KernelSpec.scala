@@ -277,6 +277,53 @@ class KernelSpec extends AnyFunSuite {
     assert(pAdj.except(pEdges).isEmpty && pEdges.except(pAdj).isEmpty)
   }
 
+  test("adjacency PageRank at 25 rounds equals a driver-side token replay") {
+    // the unrolled one-plan loop at depth against an independent replay
+    // of the integer token arithmetic over the edge list: BIGINT `div`
+    // (truncating; every operand is non-negative), sink mass dropped,
+    // and for PPR the seed teleport re-entering each round
+    import graft.operators.PageRank
+    val edges: Seq[(Long, Long)] = (for {
+      a <- 1L to 40L; b <- 1L to 40L
+      if a != b && (a * 7 + b * 3) % 11 == 0
+    } yield (a, b)) ++ Seq((1L, 2L), (1L, 2L), (5L, 41L), (9L, 41L), (42L, 1L))
+    val e = edges.toDF("src", "dst")
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()
+    val adj = e.groupBy(col("src"))
+      .agg(count(lit(1)).as("outdeg"), sort_array(collect_list(col("dst"))).as("dsts"))
+    val outdeg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val ids = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    // the 10^12 token cap applies: 42 mass-holding nodes (or 3 seeds) are
+    // far below the ~108k where the auto scale starts shrinking
+    val init = 1000000000000L
+    val teleport = init / 100L * 15L
+    // one round's propagated tokens per target, from the sources in `r`
+    def propagate(r: Map[Long, Long]): Map[Long, Long] =
+      edges.filter(x => r.contains(x._1))
+        .groupMapReduce(_._2)(x => r(x._1) * 85L / (100L * outdeg(x._1)))(_ + _)
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    var dense = ids.map(_ -> init).toMap
+    for (_ <- 1 to 25) {
+      val c = propagate(dense)
+      dense = ids.map(v => v -> (teleport + c.getOrElse(v, 0L))).toMap
+    }
+    assert(rows(PageRank.fixedPointAdj(adj, nodes, iterations = 25)) == dense)
+    // a repeated seed counts once; a seed outside the graph still holds
+    // its teleport share
+    val seedIds = Seq(1L, 6L, 6L, 50L)
+    val s = seedIds.toSet
+    var sparse = s.map(_ -> init).toMap
+    for (_ <- 1 to 25) {
+      val c = propagate(sparse)
+      sparse = (c.keySet ++ s).map(v =>
+        v -> (c.getOrElse(v, 0L) + (if (s(v)) teleport else 0L))).toMap
+    }
+    assert(rows(PageRank.personalizedAdj(adj, seedIds.toDF("id"), "id",
+      iterations = 25)) == sparse)
+  }
+
   test("adjacency LPA equals edge-layout LPA (mode expression argmax)") {
     import graft.operators.LabelPropagation
     // undirected: communities() generates both orientations internally;

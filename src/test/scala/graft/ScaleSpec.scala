@@ -52,14 +52,14 @@ class ScaleSpec extends AnyFunSuite {
     assert(delta(sc.getPersistentRDDs.size) {
       operators.Bfs.levels(edges, "src", "dst", seeds, "id", rounds = 5).count()
     } <= 1, "Bfs leaked per-round level tables")
-    // PageRank keeps TWO deliberate entries: the pinned final plus the
-    // 1-row node-count aggregate (LoopCache.pinnedRow — the token scale
-    // feeds plan construction, so caching the count is what lets warm
-    // re-invocations skip the edge pass entirely)
+    // PageRank keeps its pinned final. The node count that sizes the
+    // token scale is a plain head() inside the memo build, so it leaves
+    // no entry, and a warm re-invocation skips it through the memo (the
+    // adjacency-loop test below pins PageRank at exactly 1 entry)
     assert(delta(sc.getPersistentRDDs.size) {
       operators.PageRank.fixedPoint(edges, "src", "dst", iterations = 5).count()
     } <= 2, "PageRank leaked its edge anchor")
-    // re-invocation must add NOTHING: count row + final both probe cached
+    // re-invocation must add NOTHING: the memo returns the pinned final
     assert(delta(sc.getPersistentRDDs.size) {
       operators.PageRank.fixedPoint(edges, "src", "dst", iterations = 5).count()
     } == 0, "warm PageRank re-invocation missed its pinned count/final")
@@ -95,9 +95,9 @@ class ScaleSpec extends AnyFunSuite {
     operators.LoopCache.clearMemo()
     // (name, live entries a first call may leave, whether exactly that many)
     val loops: Seq[(String, Int, Boolean, () => org.apache.spark.sql.DataFrame)] = Seq(
-      ("fixedPointAdj", 2, false,
+      ("fixedPointAdj", 1, true,
         () => operators.PageRank.fixedPointAdj(adj, nodes, iterations = 5)),
-      ("personalizedAdj", 2, false,
+      ("personalizedAdj", 1, true,
         () => operators.PageRank.personalizedAdj(adj, seeds, "id", iterations = 5)),
       ("communitiesAdj", 1, false,
         () => operators.LabelPropagation.communitiesAdj(nbrs(sym, "src", "dst"), rounds = 5)),
@@ -120,6 +120,45 @@ class ScaleSpec extends AnyFunSuite {
       assert(sc.getPersistentRDDs.size == afterFirst,
         s"$name warm re-invocation added cache entries")
     }
+  }
+
+  test("PageRank loops: the round count adds no Spark job") {
+    // a PageRank round reads its predecessor once, so the rounds chain
+    // into one plan that LoopCache.finish forces as one job: a cold call
+    // runs the same jobs at 8 rounds as at 3 (a per-round pin would add
+    // a count job per round, a per-round broadcast one more). The deeper
+    // call also compiles no class: the loop session leaves the per-round
+    // codegen stage id out of generated class names.
+    import graft.operators.{LoopCache, PageRank}
+    import graft.tools.TaskEnvelope
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val edges = (for {
+      a <- 1L to 30L; b <- 1L to 30L
+      if a != b && (a % 7 == b % 7 || a + 1 == b)
+    } yield (a, b)).toDF("src", "dst")
+    val adj = edges.groupBy(col("src"))
+      .agg(count(lit(1)).as("outdeg"), sort_array(collect_list(col("dst"))).as("dsts"))
+    val nodes = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct()
+    val seeds = Seq(1L, 2L).toDF("id")
+    def coldJobs(run: => org.apache.spark.sql.DataFrame): Long = {
+      spark.catalog.clearCache()
+      LoopCache.clearMemo()
+      TaskEnvelope.measure(spark) { run; () }.jobs
+    }
+    val loops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "fixedPointAdj" -> (n => PageRank.fixedPointAdj(adj, nodes, iterations = n)),
+      "personalizedAdj" -> (n => PageRank.personalizedAdj(adj, seeds, "id", iterations = n)))
+    for ((name, loop) <- loops) {
+      val three = coldJobs(loop(3))
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val eight = coldJobs(loop(8))
+      assert(eight == three, s"$name ran $three jobs at 3 rounds and $eight at 8")
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+        s"$name compiled new classes for rounds 4 to 8")
+    }
+    spark.catalog.clearCache()
+    LoopCache.clearMemo()
   }
 
   test("selective filters and projections reach the parquet scan") {
@@ -825,7 +864,8 @@ class ScaleSpec extends AnyFunSuite {
 
   test("loop-tuned PageRank round: one node-sized exchange, stationary adjacency") {
     import graft.operators.LoopCache
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
     // mirror fixedPointAdj's round construction on a staged-style
     // adjacency and pin the physical shape the loop relies on: the
     // cached operand is already hash(src, w)-partitioned AND sorted, so
@@ -844,7 +884,7 @@ class ScaleSpec extends AnyFunSuite {
         explode(col("dsts")).as("dst"))
       .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
       .select(col("dst").as("id"), (lit(1L) + col("contrib")).as("r"))
-    val round2 = a.join(r1, col("src") === col("id"), "left")
+    val round2 = a.join(r1.hint("shuffle_hash"), col("src") === col("id"), "left")
       .withColumn("r", coalesce(col("r"), lit(7L)))
       .select(expr("(r * 85L) div (100L * outdeg)").as("c"),
         explode(col("dsts")).as("dst"))
@@ -858,15 +898,18 @@ class ScaleSpec extends AnyFunSuite {
     assert(live.size == 2, s"2 rounds must shuffle exactly twice:\n$sp")
     assert(live.forall(_.outputPartitioning.numPartitions == w),
       s"loop exchanges must run at the derived width $w:\n$sp")
+    // the rank side is never broadcast: a broadcast would be one more
+    // job per round, and the unrolled loop must run as one job
+    assert(sp.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"a round broadcast its rank side:\n$sp")
     // the adjacency enters each round's join straight from the cache: no
-    // Sort and no Exchange above its InMemoryTableScan. The join itself is
-    // SMJ on real data (node-sized rank side exchanged nowhere, sorted
-    // only) and BHJ here where the tiny rank side broadcasts statically —
-    // both keep the stationary side stationary.
+    // Sort and no Exchange above its InMemoryTableScan. The join is a
+    // shuffled hash join building the node-sized rank side, which the
+    // previous round's aggregate leaves hash(id, w)-partitioned, so
+    // neither side is exchanged for it.
     def adjSide(p: org.apache.spark.sql.execution.SparkPlan)
         : Option[org.apache.spark.sql.execution.SparkPlan] = p.collectFirst {
-      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j.left
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
         if j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildRight
         => j.left
     }
