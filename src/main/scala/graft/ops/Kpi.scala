@@ -17,11 +17,14 @@ import org.apache.spark.sql.types._
   * recipe pays no range exchange for it; a caller that collects or writes
   * a partitioned directory gets the usual range-partitioned sort.
   *
-  * Scale notes: the only non-streaming aggregate is the exact percentile
-  * (`Percentile`, ObjectHashAggregate — buffers values per group, same cost
-  * shape as the reference's per-group `elapsed` list, calcular_kpi.py:15,24).
-  * At 100 TB cardinality switch `exactP90 = false` for `approx_percentile`
-  * with bounded error; everything else is a streaming partial agg.
+  * Scale notes: the p90 is the only aggregate whose buffer grows with its
+  * group. Both tiers keep each group's values (the faithful tier a
+  * scan-order list, `crossEngineExact` the `Percentile` value counts), the
+  * same cost shape as the reference's per-group `elapsed` list
+  * (calcular_kpi.py:15,24); everything else is a fixed-size partial agg.
+  * The stream ([[graft.streaming.StreamingKpi]]) runs the same group body
+  * on the `crossEngineExact` tier and keeps that buffer in its state store
+  * until the watermark closes the day.
   */
 object Kpi {
 
@@ -46,29 +49,38 @@ object Kpi {
   def readBitacora(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.schema(bitacoraSchema).option("mode", "FAILFAST").json(path)
 
-  /** P2 — strict timestamp→date projection. With `strict=true`, a non-null
-    * value that does not match the reference's format aborts the job, like
-    * calcular_kpi.py:52 (strptime raise). */
-  def dateUtc(tsString: Column, strict: Boolean = true): Column = {
-    val parsed = to_date(try_to_timestamp(tsString, lit("yyyy-MM-dd'T'HH:mm:ss'Z'")))
+  /** P2 — strict timestamp→date projection: a non-null value that does not
+    * match the reference's format aborts the job, like calcular_kpi.py:52
+    * (strptime raise). */
+  def dateUtc(tsString: Column): Column = strictTimestamp(tsString, to_date(_))
+
+  /** P2 for the stream: the same strict parse, keeping the instant. */
+  private[graft] def eventTime(tsString: Column): Column = strictTimestamp(tsString, identity)
+
+  private def strictTimestamp(tsString: Column, as: Column => Column): Column = {
+    val parsed = as(try_to_timestamp(tsString, lit("yyyy-MM-dd'T'HH:mm:ss'Z'")))
     // `parsed` appears once: a CaseWhen testing `parsed.isNull` and then
     // returning `parsed` parses every timestamp twice (the branch copy is
     // not eliminated); coalesce evaluates the raise only on a null parse
-    if (strict)
-      coalesce(parsed, when(tsString.isNotNull,
-        raise_error(concat(lit("timestamp_utc does not match yyyy-MM-ddTHH:mm:ssZ: "), tsString))))
-    else parsed
+    coalesce(parsed, when(tsString.isNotNull,
+      raise_error(concat(lit("timestamp_utc does not match yyyy-MM-ddTHH:mm:ssZ: "), tsString))))
   }
 
   /** P1+P2+P3+P4-P6 — the normalized projection feeding the aggregate. */
-  def normalized(bitacora: DataFrame, strictTimestamps: Boolean = true): DataFrame = {
+  def normalized(bitacora: DataFrame): DataFrame =
+    normalizedWith(bitacora, dateUtc(col("timestamp_utc")).as("date_utc"))
+
+  /** The normalized projection with `time`, the row's strictly parsed
+    * timestamp_utc, as its first column: the batch's `date_utc`
+    * ([[dateUtc]]) or the stream's `event_time` ([[eventTime]]). */
+  private[graft] def normalizedWith(bitacora: DataFrame, time: Column): DataFrame = {
     val f = bitacora
       .filter(col("timestamp_utc").isNotNull && col("endpoint").isNotNull)
     val anyCastFailed =
       Normalize.castFailed(col("status_code"), "int") ||
       Normalize.castFailed(col("elapsed_ms"), "double")
     f.select(
-      dateUtc(col("timestamp_utc"), strictTimestamps).as("date_utc"),
+      time,
       Normalize.endpointBase(col("endpoint")).as("endpoint_base"),
       Normalize.lenientInt(col("status_code")).as("status_code"),
       Normalize.lenientDouble(col("elapsed_ms")).as("elapsed_ms"),
@@ -87,9 +99,11 @@ object Kpi {
     * on 2-decimal midpoints (caught live by the parity gate).
     *
     * Two output modes:
-    *  - faithful (default): reference contract — plain double avg, p90
-    *    replayed with numpy's exact lerp, both metrics rounded to 2 dp
-    *    with CPython's exact-binary half-even (`py_round`, P11).
+    *  - faithful (default): reference contract — avg replayed with
+    *    np.mean's pairwise sum and p90 with numpy's exact lerp, both over
+    *    the group's values in scan order, and both rounded to 2 dp with
+    *    CPython's exact-binary half-even (`py_round`, P11). Batch only:
+    *    its scan-order key does not survive micro-batch boundaries.
     *  - crossEngineExact: no rounding; avg is computed from an exact
     *    DECIMAL(18,2) sum (elapsed values are 2-dp by contract) divided in
     *    double, and p90 is the builtin `Percentile` — bit-identical to
@@ -97,11 +111,20 @@ object Kpi {
     *    hash-compare gate needs.
     *    (DuckDB's round_even on DOUBLE misrounds near ties, and double sums
     *    are order-dependent, so rounded outputs can NOT be made portable.)
+    *    Neither aggregate depends on input order, so it is also the tier
+    *    the stream serves, exact across any split into micro-batches.
     */
-  def aggregate(
-      normalized: DataFrame,
-      exactP90: Boolean = true,
-      crossEngineExact: Boolean = false): DataFrame = {
+  def aggregate(normalized: DataFrame, crossEngineExact: Boolean = false): DataFrame =
+    aggregateBy(normalized, col("date_utc"), col("date_utc"), crossEngineExact)
+      .orderBy(col("date_utc"), col("endpoint_base"))
+
+  /** The KPI group body of [[aggregate]], shared by batch and stream: the
+    * seven aggregates per (`day`, endpoint_base) group, projected to the
+    * 9 KPI columns with `date` (an expression over `day`, named
+    * date_utc) first. */
+  private[graft] def aggregateBy(
+      normalized: DataFrame, day: Column, date: Column,
+      crossEngineExact: Boolean): DataFrame = {
     // (aggregate expression, post-aggregation transform) — the faithful
     // tier buffers the group's values IN SCAN ORDER (the reference's
     // per-group elapsed lists) and both final aggregates replay numpy on
@@ -121,10 +144,10 @@ object Kpi {
     // degrade the key to mono-id = original partition order. Sorting
     // the buffer by that key replays the reference's sequential-reader
     // order deterministically. Cost: faithful tier only (the
-    // crossEngineExact and approx tiers have no buffer), one struct
+    // crossEngineExact tier carries no scan key), one struct
     // per buffered value plus an in-memory per-group sort the p90
     // already pays anyway.
-    val faithful = exactP90 && !crossEngineExact
+    val faithful = !crossEngineExact
     // flat struct, key fields FIRST: sort_array orders structs
     // lexicographically by field position, so (f, b, i, v) sorts by the
     // scan key with the value along for the ride
@@ -133,9 +156,7 @@ object Kpi {
       monotonically_increasing_id().as("i"), col("elapsed_ms").as("v"))
     val valueOf: Column => Column = x => x.getField("v")
     val (p90Agg, p90Post): (Column, Column => Column) =
-      if (!exactP90)
-        (percentile_approx(col("elapsed_ms"), lit(0.9), lit(10000)), identity)
-      else if (crossEngineExact)
+      if (crossEngineExact)
         (percentile(col("elapsed_ms"), lit(0.9)), identity)
       else
         // sorted ONCE, in the aggregate's result projection: `ofSorted`
@@ -159,9 +180,7 @@ object Kpi {
     // The faithful tier's avg aggregates the SAME collect_list expression
     // as the p90 — Catalyst dedups identical aggregate expressions, so
     // there is ONE physical buffer per group feeding both replays: the
-    // p90 sorts it by VALUE, the avg by the scan-order key. The
-    // approx tier (the 100 TB cardinality switch) has no buffer and is
-    // not parity-gated: it keeps the exact-decimal mean.
+    // p90 sorts it by VALUE, the avg by the scan-order key.
     val (avgAgg, avgPost): (Column, Column => Column) =
       if (faithful)
         (collect_list(col("_scan_kv")),
@@ -182,7 +201,7 @@ object Kpi {
     val input =
       if (faithful) normalized.withColumn("_scan_kv", scanKv) else normalized
     input
-      .groupBy(col("date_utc"), col("endpoint_base"))
+      .groupBy(day, col("endpoint_base"))
       .agg(
         count(lit(1)).as("requests_total"),
         count_if(col("status_code").between(200, 299)).as("success_2xx"),
@@ -192,21 +211,16 @@ object Kpi {
         avgAgg.as("avg_raw"),
         p90Agg.as("p90_raw"))
       .select(
-        col("date_utc"), col("endpoint_base"), col("requests_total"),
+        date, col("endpoint_base"), col("requests_total"),
         col("success_2xx"), col("client_4xx"), col("server_5xx"),
         col("parse_errors"),
         round2(avgPost(col("avg_raw"))).as("avg_elapsed_ms"),
         round2(p90Post(col("p90_raw"))).as("p90_elapsed_ms"))
-      .orderBy(col("date_utc"), col("endpoint_base"))
   }
 
   /** End-to-end reference query: raw bitácora → sorted KPI table. */
-  def bitacoraKpi(
-      bitacora: DataFrame,
-      strictTimestamps: Boolean = true,
-      crossEngineExact: Boolean = false): DataFrame =
-    aggregate(normalized(bitacora, strictTimestamps),
-      crossEngineExact = crossEngineExact)
+  def bitacoraKpi(bitacora: DataFrame, crossEngineExact: Boolean = false): DataFrame =
+    aggregate(normalized(bitacora), crossEngineExact)
 
   /** Output schema of the KPI CSV (explicit — never inferred, SURVEY §1.3). */
   val kpiSchema: StructType = StructType(Seq(

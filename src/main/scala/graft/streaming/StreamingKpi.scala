@@ -1,65 +1,42 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Kpi, Normalize}
+import graft.ops.Kpi
 
 /** Structured Streaming variant of the KPI pipeline (SURVEY §7.1 M5): the
-  * same normalization and aggregation semantics, continuous.
+  * batch KPI's own normalization and group body ([[Kpi.normalizedWith]],
+  * [[Kpi.aggregateBy]]), continuous.
   *
   * Streaming-specific choices:
-  *  - event time = parsed `timestamp_utc`, with a configurable watermark for
-  *    late data (the reference is batch and has no late policy; we default
-  *    to 1 hour);
-  *  - tumbling 1-day windows stand in for the batch job's calendar-day
-  *    group key;
-  *  - exact `percentile` is not streaming-incremental, so the streaming tier
-  *    uses `percentile_approx` (a mergeable sketch) — the documented
-  *    trade-off of SURVEY §7.4 R4;
-  *  - output mode `append` with watermark: a day's KPI row is emitted once
-  *    the watermark passes the window end (suitable for downstream sinks);
-  *    use `update` + foreachBatch for a continuously-revised dashboard.
+  *  - event time = `timestamp_utc` under the batch's strict parse
+  *    ([[Kpi.eventTime]]): a malformed value fails the query with the
+  *    batch's named `timestamp_utc` error;
+  *  - tumbling 1-day windows, whose start is the batch job's calendar-day
+  *    key (`date_utc`) in the sessions' UTC time zone;
+  *  - the `crossEngineExact` tier of [[Kpi.aggregate]]: an exact DECIMAL
+  *    sum for the avg and the exact `Percentile` for the p90, both
+  *    mergeable across micro-batches in any order, so a closed day equals
+  *    `Kpi.bitacoraKpi(rows, crossEngineExact = true)` on the same rows.
+  *    The faithful tier stays batch-only: its scan-order key does not
+  *    survive micro-batch boundaries;
+  *  - a watermark for late data (the reference is batch and has no late
+  *    policy; we default to 1 hour). In `append` mode a day's KPI row is
+  *    emitted once, when the watermark passes the window end; rows that
+  *    arrive after that are dropped. Use `update` + foreachBatch for a
+  *    continuously-revised dashboard.
   */
 object StreamingKpi {
 
   /** Raw string-typed bitácora stream → normalized stream with event time. */
-  def normalizedStream(bitacora: DataFrame): DataFrame = {
-    val anyCastFailed =
-      Normalize.castFailed(col("status_code"), "int") ||
-      Normalize.castFailed(col("elapsed_ms"), "double")
-    bitacora
-      .filter(col("timestamp_utc").isNotNull && col("endpoint").isNotNull)
-      .select(
-        to_timestamp(col("timestamp_utc"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("event_time"),
-        Normalize.endpointBase(col("endpoint")).as("endpoint_base"),
-        Normalize.lenientInt(col("status_code")).as("status_code"),
-        Normalize.lenientDouble(col("elapsed_ms")).as("elapsed_ms"),
-        Normalize.effectiveParseResult(col("parse_result"), anyCastFailed).as("parse_result"))
-      .filter(col("event_time").isNotNull)
-  }
+  def normalizedStream(bitacora: DataFrame): DataFrame =
+    Kpi.normalizedWith(bitacora, Kpi.eventTime(col("timestamp_utc")).as("event_time"))
 
-  /** Windowed KPI aggregate over the normalized stream. */
-  def kpiStream(
-      normalized: DataFrame,
-      watermark: String = "1 hour",
-      windowLength: String = "1 day"): DataFrame =
-    normalized
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), windowLength), col("endpoint_base"))
-      .agg(
-        count(lit(1)).as("requests_total"),
-        count_if(col("status_code").between(200, 299)).as("success_2xx"),
-        count_if(col("status_code").between(400, 499)).as("client_4xx"),
-        count_if(col("status_code").between(500, 599)).as("server_5xx"),
-        count_if(col("parse_result") =!= "ok").as("parse_errors"),
-        bround(avg(col("elapsed_ms")), 2).as("avg_elapsed_ms"),
-        bround(percentile_approx(col("elapsed_ms"), lit(0.9), lit(10000)), 2)
-          .as("p90_elapsed_ms"))
-      .select(
-        to_date(col("window.start")).as("date_utc"), col("endpoint_base"),
-        col("requests_total"), col("success_2xx"), col("client_4xx"),
-        col("server_5xx"), col("parse_errors"),
-        col("avg_elapsed_ms"), col("p90_elapsed_ms"))
+  /** Daily KPI over the normalized stream: the 9 batch KPI columns. */
+  def kpiStream(normalized: DataFrame, watermark: String = "1 hour"): DataFrame =
+    Kpi.aggregateBy(normalized.withWatermark("event_time", watermark),
+      window(col("event_time"), "1 day"),
+      to_date(col("window.start")).as("date_utc"), crossEngineExact = true)
 
   /** Per-endpoint running state for the stateful tier. */
   final case class EndpointState(
@@ -103,16 +80,5 @@ object StreamingKpi {
           state.update(s)
           alerts.iterator
       }
-  }
-
-  /** File-source entry point: watch a directory of JSONL bitácora files and
-    * maintain the KPI table (the streaming analogue of S1 → A1-A6). */
-  def fromJsonlDirectory(
-      spark: SparkSession, inputDir: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val raw = spark.readStream
-      .schema(Kpi.bitacoraSchema)
-      .json(inputDir)
-    kpiStream(normalizedStream(raw), watermark)
   }
 }

@@ -72,6 +72,26 @@ class KpiSpec extends AnyFunSuite {
     assert(e.getMessage.contains("timestamp_utc"))
   }
 
+  test("P2 strict timestamp aborts the stream with the batch's named error") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import graft.streaming.StreamingKpi
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String, String, String, String)]
+    val q = StreamingKpi.kpiStream(StreamingKpi.normalizedStream(mem.toDF().toDF(
+        "timestamp_utc", "endpoint", "status_code", "elapsed_ms", "parse_result")))
+      .writeStream.outputMode("append").format("noop").start()
+    try {
+      mem.addData(("2026-08-11 00:00:00", "/get", "200", "1.0", "ok"))
+      val e = intercept[StreamingQueryException](q.processAllAvailable())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(_.contains(
+        "timestamp_utc does not match yyyy-MM-ddTHH:mm:ssZ: 2026-08-11 00:00:00")),
+        messages.mkString("\n"))
+    } finally q.stop()
+  }
+
   test("P7 bucket boundaries: 199/200/299/300/399/400/499/500/599/0") {
     val rows = Seq(199, 200, 299, 300, 399, 400, 499, 500, 599, 0).map(sc =>
       ("2026-08-11T00:00:00Z", "/get", sc.toString, "1.0", "ok"))

@@ -125,6 +125,50 @@ class PipelineSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming KPI equals the batch KPI's crossEngineExact tier on every closed day") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String, String, String, String)]
+    val cols = Seq("timestamp_utc", "endpoint", "status_code", "elapsed_ms", "parse_result")
+    val q = StreamingKpi.kpiStream(StreamingKpi.normalizedStream(mem.toDF().toDF(cols: _*)))
+      .writeStream.outputMode("append")
+      .format("memory").queryName("kpi_stream_eq").start()
+    // four micro-batches in event-time order; 2026-08-10 and 2026-08-11
+    // are each split across two of them, and so are their /get groups
+    val batches = Seq(
+      Seq(
+        ("2026-08-10T01:00:00Z", "/get?a=1", "200", "100", "ok"),
+        ("2026-08-10T02:00:00Z", "/status/404", "404", "12.25", "ok"),
+        ("2026-08-10T03:00:00Z", "/xml", "abc", "7.5", "ok")), // bad int
+      Seq(
+        ("2026-08-10T20:00:00Z", "/get", "500", "300", "ok"), // p90{100,300} = 280
+        ("2026-08-10T21:00:00Z", "/xml", "200", "xx", "ok"), // bad double
+        ("2026-08-10T21:00:00Z", "/xml", "200", "xx", "ok"), // duplicate row
+        ("2026-08-11T01:00:00Z", "/get", "200", "33.3", "error"),
+        ("2026-08-11T01:00:00Z", "/get", "200", "33.3", "error")),
+      Seq(
+        ("2026-08-11T05:00:00Z", "/get", "302", "0.01", null),
+        (null, "/get", "200", "5", "ok"), // null guard
+        ("2026-08-11T06:00:00Z", "/basic-auth/u/p", "401", "250.5", "ok"),
+        ("2026-08-11T23:30:00Z", "/get", "200", "1000", "ok")),
+      // moves the 1-hour watermark past 2026-08-12T00:00, closing both
+      // earlier days; its own day stays open
+      Seq(("2026-08-12T02:00:00Z", "/get", "200", "1", "ok")))
+    try {
+      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(Kpi.kpiColumns.map(col): _*).collect().toSet
+      val stream = rows(spark.table("kpi_stream_eq"))
+      val batch = rows(Kpi.bitacoraKpi(batches.flatten.toDF(cols: _*),
+        crossEngineExact = true).filter($"date_utc" < to_date(lit("2026-08-12"))))
+      assert(batch.size == 5)
+      assert(stream == batch,
+        s"stream only: ${stream diff batch}; batch only: ${batch diff stream}")
+      val get10 = batch.find(r => r.getAs[String]("endpoint_base") == "/get" &&
+        String.valueOf(r.getAs[Any]("date_utc")) == "2026-08-10").get
+      assert(get10.getAs[Double]("p90_elapsed_ms") == 280.0)
+    } finally q.stop()
+  }
+
   /** Runs `body` under a job group of its own and returns the jobs it
     * started and the executed plans of the SQL executions it finished,
     * both read after the listener bus has drained. */
