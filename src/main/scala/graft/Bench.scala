@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods.{compact, render}
+import graft.ArtifactJson.{fixed, orNull, text}
 import graft.tools.TaskEnvelope
 
 /** Benchmark main: runs the headline queries (Queries.benchNames) on
@@ -39,72 +40,41 @@ object Bench {
   // at each row count; the artifact's `sentinels` series): at 1e7
   // rows the job is scheduling-dominated (max/min ~2.5x on an idle box —
   // the first r9 run flagged itself contended on its own jitter); at 2e9
-  // rows (~0.45 s) the idle band is ±15%, i.e. a clean reading can sit
-  // up to ~1.35x ABOVE the running-min baseline. Round 9's 1.75x
-  // per-probe threshold failed OPEN: the driver's run had sentinels at
-  // 1.2-1.8x base under sustained moderate load, query times ~2x
-  // inflated, and the artifact still said contended=false. Three
-  // detectors now (VERDICT r9 #2 / ADVICE), each covering a load shape
-  // the others miss:
+  // rows the idle band is ±15%, i.e. a clean reading can sit up to
+  // ~1.35x ABOVE the running-min baseline. Round 9's 1.75x per-probe
+  // threshold failed OPEN: the driver's run had sentinels at 1.2-1.8x
+  // base under sustained moderate load, query times ~2x inflated, and
+  // the artifact still said contended=false. Three detectors now
+  // (VERDICT r9 #2 / ADVICE), each covering a load shape the others miss:
   //  - PER-PROBE at 1.4x (just above the idle band's 1.35x reach, so
-  //    jitter alone cannot trip it even once) on the min of two
-  //    back-to-back readings — both must exceed it. Catches bursts.
+  //    jitter alone cannot trip it even once) on the min of three
+  //    back-to-back readings — all must exceed it. Catches bursts.
   //  - SUSTAINED: median of the whole raw sentinel series > 1.3x the
   //    final baseline. Catches the exact r9 shape — persistent moderate
   //    load arriving after a clean baseline (r9's median read ~1.47x
   //    base while no single probe tripped 1.75x). 1.3 not 1.2 because
   //    the baseline is a running MIN: idle median/min alone is ~1.1-1.2.
   //  - ABSOLUTE: the probe is constant work, so its idle time is a
-  //    property of the HOST, not the run. If even the run's best
-  //    (minimum) sentinel exceeds 1.3x the calibrated idle reference,
-  //    the box was loaded for the entire run — the one shape no
-  //    relative check can see (a poisoned baseline normalizes
-  //    everything). Reference = 0.373 s, the judge-confirmed idle
-  //    reading on this box (r9 clean runs); override with
-  //    SPARK_GRAFT_SENTINEL_REF when benching other hardware.
+  //    property of the host and its core count, not the run. If even
+  //    the run's best (minimum) sentinel exceeds 1.3x the committed idle
+  //    reference for this (host, cpus), the box was loaded for the
+  //    entire run — the one shape no relative check can see (a poisoned
+  //    baseline normalizes everything).
   private val SentinelRows = 2000000000L
   private val SentinelChunk = 20
   private val SentinelDriftMax = 1.4
   private val SentinelMedianMax = 1.3
-  // The 0.373 s idle reference is a property of ONE box (the judge-
-  // confirmed calibration host, identified below) — on any other
-  // machine the hardcoded value is meaningless: a slower host would be
-  // permanently flagged contended, a faster one never (ADVICE r10).
-  // Resolution order: explicit env override > per-host calibration
-  // file (written as a running min by every run, so it converges to
-  // the host's true idle floor) > the hardcoded value iff this IS the
-  // calibrated host > None (absolute check skipped with a loud
-  // warning; the two relative detectors still run).
-  private val CalibratedHost = "vm"
+  private val MaxChunkRetries = 2
+
   private def hostName: String =
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: Throwable => "unknown" }
-  private def calibFile: java.nio.file.Path = java.nio.file.Paths.get(
-    sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft_sentinel_ref_$hostName")
-  // (ref value, provenance tag) — the artifact records WHICH floor the
-  // absolute detector used (env/file/hardcoded/none, ADVICE r11), since
-  // the calibration file lives in a world-writable tmpdir and the
-  // hardcoded value is only meaningful on one physical box. The
-  // hardcoded fallback additionally requires an EXPLICIT env marker
-  // (SPARK_GRAFT_CALIBRATED_BOX=1): "hostname == vm" alone is far too
-  // generic an identity to pin a 0.373 s CPU floor on.
-  // Repo-committed seed (round 16): the tmpdir calibration file is a
-  // running min that converges nicely — until the tmpdir is wiped
-  // between sessions, after which the first run re-seeds it with its
-  // OWN (possibly degraded) floor and `contended` silently self-reports
-  // false against it. The committed seed survives wipes; when both
-  // exist the MIN wins, so a live file can tighten the floor but a
-  // freshly re-seeded one can never loosen it past the committed value.
-  // Resolved against a DISCOVERED repo root, not the bare process CWD:
-  // when Bench runs from outside the repo (tools/run_main.sh from
-  // another dir, a cron wrapper) a relative path would silently miss
-  // the committed seed and the contended flag would fall back to the
-  // wipeable tmpdir floor the seed exists to fix (ADVICE r16). Order:
-  // explicit env override; walk UP from CWD to a dir containing
+  // The committed references and the sentinel history live in the repo's
+  // `calibration/`, found from a DISCOVERED repo root rather than the bare
+  // process CWD, so a Bench run from another directory still finds them.
+  // Order: explicit env override; walk UP from CWD to a dir containing
   // build.sbt; finally walk up from THIS CLASS's code location
-  // (target/scala-2.13/classes or the packaged jar live inside the
-  // repo), which covers a CWD entirely outside the repo — verified
-  // live from /tmp at r17.
+  // (target/scala-2.13/classes or the packaged jar live inside the repo).
   private def upTo(marker: String, start: java.nio.file.Path) =
     Iterator.iterate(start.toAbsolutePath)(p => Option(p.getParent).orNull)
       .takeWhile(_ != null).take(16)
@@ -122,108 +92,47 @@ object Bench {
         } catch { case _: Throwable => None }
       }
   }
-  private def repoCalibFile: java.nio.file.Path =
-    repoRoot.getOrElse(java.nio.file.Paths.get("."))
-      .resolve("calibration").resolve(s"sentinel_ref_$hostName")
-  private def readCalib(p: java.nio.file.Path): Option[Double] =
-    try {
-      if (java.nio.file.Files.exists(p))
-        Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .trim.toDouble)
-      else None
-    } catch { case _: Throwable => None }
-  private val sentinelRefResolved: Option[(Double, String)] =
-    sys.env.get("SPARK_GRAFT_SENTINEL_REF").map(v => (v.toDouble, "env"))
-      .orElse {
-        (readCalib(calibFile), readCalib(repoCalibFile)) match {
-          case (Some(f), Some(r)) => Some((math.min(f, r),
-            if (f <= r) "file" else "repo-seed"))
-          case (Some(f), None) => Some((f, "file"))
-          case (None, Some(r)) => Some((r, "repo-seed"))
-          case (None, None) => None
-        }
-      }
-      .orElse(
-        if (hostName == CalibratedHost &&
-            sys.env.get("SPARK_GRAFT_CALIBRATED_BOX").contains("1"))
-          Some((0.373, "hardcoded"))
-        else None)
-  private val SentinelAbsRef: Option[Double] = sentinelRefResolved.map(_._1)
-  private def sentinelRefJson: String = sentinelRefResolved match {
-    case Some((v, src)) => f""""sentinel_ref":$v%.4f,"sentinel_ref_source":"$src""""
-    case None => """"sentinel_ref":null,"sentinel_ref_source":"none""""
-  }
-  /** Running-min self-calibration: record this run's best (minimum)
-    * sentinel so later runs on this host have an idle reference even
-    * without the env var. Min-merged with any existing value — a
-    * loaded run can only leave the stored floor unchanged, never
-    * raise it. */
-  private def updateCalibration(runMin: Double): Unit =
-    try {
-      val prior =
-        if (java.nio.file.Files.exists(calibFile))
-          new String(java.nio.file.Files.readAllBytes(calibFile), "UTF-8").trim.toDouble
-        else Double.MaxValue
-      val v = math.min(prior, runMin)
-      java.nio.file.Files.write(calibFile, f"$v%.4f".getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+  private def calibrationDir: java.nio.file.Path =
+    repoRoot.getOrElse(java.nio.file.Paths.get(".")).resolve("calibration")
 
-  /** Sentinel HISTORY (VERDICT r17 #6): the per-host calibration file
-    * keeps only the running MIN, so "was there ever a quiet window, and
-    * when" is unanswerable after the fact — the standing 2×-gate gap is
-    * exactly that no committed artifact has `contended:false`, because
-    * every measured window so far ran 1.2-1.8× above the committed
-    * 0.1087 s idle floor. Every bench run now APPENDS one JSON line
-    * (UTC time, run floor, resolved ref, contended verdict, sf, mode)
-    * to `calibration/sentinel_history_<host>.jsonl` in the repo, so:
-    * (a) a future quiet window is recognized automatically — the run
-    * that lands within CleanAnchorBand of the committed ref announces
-    * itself on stderr as the clean-anchor candidate, and its history
-    * line is the durable record even if the artifact is overwritten;
-    * (b) the contention narrative ("the floor is the hypervisor's") is
-    * auditable as a time series instead of asserted per-round. Append-
-    * only and best-effort: a read-only checkout must not fail the bench. */
-  private val CleanAnchorBand = 1.10
-  private def appendSentinelHistory(runFloor: Double, contended: Boolean,
-      sfDir: String, mode: String): Unit =
+  /** The idle sentinel reference for (`host`, `cpus`): the committed
+    * floor of a measured idle run, `sentinel_ref_<host>_c<cpus>` under
+    * `dir`, with that file name as its source tag. The floor scales with
+    * the cores a run gets (0.11 s in the committed 32-core reference,
+    * 1.3 s at 4), so a reference taken at another count says nothing. */
+  private[graft] def sentinelRef(dir: java.nio.file.Path, host: String,
+      cpus: String): Option[(Double, String)] = {
+    val name = s"sentinel_ref_${host}_c$cpus"
+    try Some((new String(java.nio.file.Files.readAllBytes(dir.resolve(name)),
+      "UTF-8").trim.toDouble, name))
+    catch { case _: java.io.IOException | _: NumberFormatException => None }
+  }
+
+  /** The `contended` verdict: true when a relative detector fired or the
+    * run's floor sits above 1.3x the idle reference; false only when a
+    * reference exists and nothing fired; unknown (null) otherwise. */
+  private[graft] def verdict(drifted: Boolean, base: Double,
+      ref: Option[Double]): Option[Boolean] =
+    if (drifted) Some(true) else ref.map(r => base > r * SentinelMedianMax)
+
+  /** Sentinel HISTORY (VERDICT r17 #6): every bench run appends one line
+    * (UTC time, run floor, resolved ref, contended verdict, sf, cpus,
+    * mode) to `calibration/sentinel_history_<host>.jsonl`, so the
+    * host's floor over time is an auditable series. Best-effort: a
+    * read-only checkout must not fail the bench. */
+  private def appendSentinelHistory(a: Audit, mode: String): Unit =
     try {
-      val dir = repoRoot.getOrElse(java.nio.file.Paths.get("."))
-        .resolve("calibration")
-      java.nio.file.Files.createDirectories(dir)
       val ts = java.time.format.DateTimeFormatter.ISO_INSTANT
         .format(java.time.Instant.now().truncatedTo(
           java.time.temporal.ChronoUnit.SECONDS))
-      val refJ = SentinelAbsRef.map(r => f"$r%.4f").getOrElse("null")
-      val line = f"""{"ts":"$ts","floor":$runFloor%.4f,"ref":$refJ,"contended":$contended,"sf":"$sfDir","mode":"$mode"}"""
-      java.nio.file.Files.write(dir.resolve(s"sentinel_history_$hostName.jsonl"),
-        (line + "\n").getBytes("UTF-8"),
+      java.nio.file.Files.createDirectories(calibrationDir)
+      java.nio.file.Files.write(
+        calibrationDir.resolve(s"sentinel_history_$hostName.jsonl"),
+        (text(historyLine(ts, a, mode)) + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-      SentinelAbsRef.foreach { ref =>
-        if (runFloor <= ref * CleanAnchorBand && !contended)
-          System.err.println(f"[bench] CLEAN-ANCHOR CANDIDATE: run floor " +
-            f"$runFloor%.4f s within ${(CleanAnchorBand - 1) * 100}%.0f%% of " +
-            f"the idle ref $ref%.4f s and contended=false — commit this " +
-            "run's artifact as the uncontended anchor (VERDICT r17 #6).")
-      }
     } catch { case e: Throwable =>
       System.err.println(s"[bench] sentinel history append failed: ${e.getMessage}") }
-  private val MaxChunkRetries = 2
-
-  /** Floor-normalized total (VERDICT r14 #5 / r15 #4): the sentinel is
-    * constant work, so `idle_ref / run_floor` is the host's slowdown
-    * factor for this run, and `total × idle_ref / run_floor` is the
-    * total this run would have read on the idle calibrated host — the
-    * self-interpreting number for round-over-round comparison on
-    * contended days. Null when no idle reference resolved (the relative
-    * detectors still flag contention; only the normalization needs the
-    * absolute floor). */
-  private def floorNormJson(total: Double, runFloor: Double): String =
-    SentinelAbsRef match {
-      case Some(ref) if runFloor > 0 =>
-        f""""total_floor_normalized":${total * ref / runFloor}%.3f"""
-      case _ => """"total_floor_normalized":null"""
-    }
 
   /** Constant-work probe: seconds for an agg over SentinelRows generated
     * rows. No file IO, no shuffle, nothing cacheable — its time moves
@@ -236,16 +145,9 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // Every machine-parseable line below is built with the f-interpolator,
-    // which formats %.3f through the JVM DEFAULT locale — under a
-    // comma-decimal locale (de_DE…) that emits `57,284` and the JSON
-    // contract breaks (ADVICE r13). The bench is a standalone main, so
-    // pin the default locale once instead of threading Locale.ROOT
-    // through every format site.
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpusJson = Bench.cpusJson(cpus)
+    val ref = sentinelRef(calibrationDir, hostName, cpus)
     val spark = graft.cli.CliUtil.builder(s"local[$cpus]", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // rank-filter pre-trim for corpus-scale quotas (see Verify.scala)
@@ -300,14 +202,13 @@ object Bench {
     graft.operators.Staging.resetProvenance()
     System.err.println(f"[bench] warmup($warmupScope): " +
       f"${(System.nanoTime() - warmupT0) / 1e9}%.1f s (untimed)")
-    val warmupJson = s""""warmup":"$warmupScope""""
     // sentinel baseline: min of 3 at suite start — then tightened to the
     // running min of every later reading, so a baseline itself measured
     // under load cannot make the drift check lenient for the whole run.
     // Taken AFTER warmup so codegen of the probe is excluded.
     var sentinelBase = (1 to 3).map(_ => sentinelTime(spark)).min
     val sentinels = scala.collection.mutable.ArrayBuffer[Double]()
-    var contended = false
+    var drifted = false
     // Every probe takes THREE back-to-back readings — the SAME procedure
     // as the baseline — and decides on their min. A single reading taken
     // right after a heavy query chunk is inflated by GC/page-cache
@@ -332,21 +233,21 @@ object Bench {
     }
     // Sustained moderate load never trips a single probe but inflates
     // every query: flag it from the median of the per-probe mins vs the
-    // final (running-min) baseline; and load present for the WHOLE run
-    // (baseline poisoned too) from the absolute host calibration.
-    if (SentinelAbsRef.isEmpty)
+    // final (running-min) baseline. Load present for the WHOLE run
+    // (baseline poisoned too) is the absolute check in `verdict`.
+    if (ref.isEmpty)
       System.err.println(
-        s"[bench] WARNING: no idle sentinel reference for host '$hostName' " +
-          "(SPARK_GRAFT_SENTINEL_REF unset, no calibration file, not the " +
-          "calibrated box) — the ABSOLUTE contention check is skipped; " +
-          "per-probe and sustained-median checks still apply. This run " +
-          "seeds the per-host calibration file for future runs.")
+        s"[bench] WARNING: no calibration/sentinel_ref_${hostName}_c$cpus, so " +
+          "the absolute contention check is skipped, and `contended` reads " +
+          "null unless a relative detector fires.")
     def sustainedDrift(): Boolean = probeMins.nonEmpty && {
       val sorted = probeMins.sorted
-      val med = sorted(sorted.size / 2)
-      med > sentinelBase * SentinelMedianMax ||
-        SentinelAbsRef.exists(ref => sentinelBase > ref * SentinelMedianMax)
+      sorted(sorted.size / 2) > sentinelBase * SentinelMedianMax
     }
+    def audit(): Audit = Audit(sfDir, cpus, warmupScope, sentinelBase,
+      sentinels.toSeq, ref,
+      verdict(drifted || sustainedDrift(), sentinelBase, ref.map(_._1)),
+      graft.operators.Staging.provenanceObject)
 
     // Per-query failed-ATTEMPT counter (ADVICE r10): min-of-successes
     // merge means a query that deterministically fails in one tier but
@@ -369,16 +270,6 @@ object Bench {
       }
       Run(sec, env)
     }
-    // -1 means "no sample from this attempt", not "poison every other
-    // attempt": min of the successful readings, -1 only when EVERY
-    // attempt failed. (r9 shape: one transient failure inside any of up
-    // to 3 warm chunk retries permanently reported the query failed and
-    // dropped it from the warm total even when other attempts passed.)
-    // The kept run's envelope comes with its time.
-    def merge(a: Run, b: Run): Run =
-      if (a.sec < 0) b else if (b.sec < 0) a else if (b.sec < a.sec) b else a
-    def secs(rs: Seq[(String, Run)]) = rs.map { case (n, r) => n -> r.sec }
-    def envs(rs: Seq[(String, Run)]) = rs.map { case (n, r) => n -> r.env }
 
     // PRODUCTION-COLD tier (SPARK_GRAFT_BENCH_MODE=prodcold): one pass,
     // caches + operator memos dropped BEFORE each query, so every query
@@ -393,33 +284,25 @@ object Bench {
           graft.operators.LoopCache.clearMemo()
           q.name -> timeQuery(q)
         }
-        if (probe() > sentinelBase * SentinelDriftMax) contended = true
+        if (probe() > sentinelBase * SentinelDriftMax) drifted = true
         times
       }.toSeq
-      if (sustainedDrift()) contended = true
-      val results = secs(runs)
-      val total = results.collect { case (_, v) if v >= 0 => v }.sum
-      val qj = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-        .mkString("{", ",", "}")
-      val sj = sentinels.map(s => f"$s%.3f").mkString("[", ",", "]")
-      val fields = f""""metric":"total_prodcold","value":$total%.3f,"unit":"sec",$warmupJson,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"sentinels":$sj,"contended":$contended,"staged":${graft.operators.Staging.provenanceJson},"queries":$qj"""
-      println(s"{$fields}")
+      val a = audit()
+      println(text(prodcoldLine(a, runs, withProfiles = false)))
       // the prodcold artifact lands in its own file too, so the official
       // record never depends on shell redirection of the sbt log; only
       // the file carries the profiles
       val prodcoldPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
         java.nio.file.Paths.get("BENCH_PRODCOLD.json").toAbsolutePath.toString)
-      val line = s"""{$fields,"profiles":${profilesJson(envs(runs))}}"""
+      val line = text(prodcoldLine(a, runs, withProfiles = true))
       writeArtifact(prodcoldPath, line)
       writeArtifact(cpusKeyedPath(prodcoldPath, cpus), line)
       // ABSOLUTE LAST stdout line: a minimal record that survives any
       // log-tail scrape window (BENCH_r{8..12}.json all read "parsed":
       // null because the full line outgrew the driver's ~2000-char tail
       // — VERDICT r12 "what's wrong #1"). Everything else is in the file.
-      println(miniJson("total_prodcold", total, sfDir, cpus, contended,
-        results, prodcoldPath))
-      updateCalibration(sentinelBase)
-      appendSentinelHistory(sentinelBase, contended, sfDir, "prodcold")
+      println(miniLine("total_prodcold", a, secs(runs), prodcoldPath))
+      appendSentinelHistory(a, "prodcold")
       spark.stop()
       return
     }
@@ -452,7 +335,7 @@ object Bench {
     val passA: Seq[(String, Run)] = qs.grouped(SentinelChunk).flatMap { chunk =>
       chunkBoundary()
       val times = chunk.map(q => q.name -> timeQuery(q))
-      if (probe() > sentinelBase * SentinelDriftMax) contended = true
+      if (probe() > sentinelBase * SentinelDriftMax) drifted = true
       times
     }.toSeq
     // NOTE: no clearCache between queries (default suite scope) —
@@ -483,41 +366,19 @@ object Bench {
         clean = probe() <= sentinelBase * SentinelMedianMax
         attempt += 1
       }
-      if (!clean) contended = true
+      if (!clean) drifted = true
     }
-    if (sustainedDrift()) contended = true
-    val warmRuns = passA.map { case (n, a) => n -> merge(a, warmByName(n)) }
-    val results = secs(warmRuns)
-    val coldTimes = secs(passA)
-
-    def qjson(rs: Seq[(String, Double)]) =
-      rs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    def totalOf(rs: Seq[(String, Double)]) =
-      rs.collect { case (_, v) if v >= 0 => v }.sum
-    val total = totalOf(results)
-    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    // Queries where one whole tier produced no sample (every attempt in
-    // that tier failed) but the other tier succeeded: the merged number
-    // is real, but the artifact must say it's one-tier-only (ADVICE r10).
-    val warmMap = warmByName.map { case (n, r) => n -> r.sec }.toMap
-    val partial = coldTimes.collect {
-      case (n, a) if (a < 0) != (warmMap.getOrElse(n, -1.0) < 0) => "\"" + n + "\""
-    }.mkString("[", ",", "]")
-    val failCountsJ = failCounts
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val sj = sentinels.map(s => f"$s%.3f").mkString("[", ",", "]")
+    val a = audit()
+    val passB = warmByName.toSeq
     // Full record — both tiers, every query, the raw sentinel series,
-    // attempt-failure counts — goes to the DETAIL FILE. stdout gets a
-    // SHORT line instead: rounds 8-10 proved the ~5 KB full line never
-    // survives the driver's ~2000-char tail window (BENCH_r{8,9,10}.json
-    // all read "parsed": null), so the official artifact recorded no
-    // headline number three rounds running. The short line carries the
-    // totals, the audit verdict, and the 20 heaviest warm queries —
-    // under ~1.5 KB, so it parses from the tail.
-    val staged = graft.operators.Staging.provenanceJson
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$warmupJson,"cache_scope":"$cacheScope","total_cold":${totalOf(coldTimes)}%.3f,"queries_cold":${qjson(coldTimes)},"failed":$failed,"partial":$partial,"attempt_failures":$failCountsJ,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"sentinels":$sj,"contended":$contended,"staged":$staged,"queries":${qjson(results)},"profiles_cold":${profilesJson(envs(passA))},"profiles":${profilesJson(envs(warmRuns))},"reuse":${reuseJson(warmRuns)}}"""
-    // Detail file lands next to the checkout being benched: env override
+    // attempt-failure counts, profiles — goes to the DETAIL FILE. stdout
+    // gets a SHORT line instead: rounds 8-10 proved the ~5 KB full line
+    // never survives the driver's ~2000-char tail window
+    // (BENCH_r{8,9,10}.json all read "parsed": null). The short line
+    // carries the totals, the audit verdict, and the 20 heaviest warm
+    // queries.
+    //
+    // The detail file lands next to the checkout being benched: env override
     // first, else the working directory (NOT a hardcoded absolute path —
     // a bench run from another checkout must not write into this one).
     // ALSO written to a cpus-keyed sibling (BENCH_DETAIL_c8.json …): the
@@ -527,14 +388,14 @@ object Bench {
     val detailPath = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_DETAIL",
       java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath.toString)
+    val line = text(detailLine(a, cacheScope, passA, passB, failCounts.toSeq))
     writeArtifact(detailPath, line)
     writeArtifact(cpusKeyedPath(detailPath, cpus), line)
     // stdout gets the SHORT line; "queries" would misread as the full
     // per-query dict it held through r10 (ADVICE r11), so the subset is
     // explicitly marked: renamed key + truncation flag. Naive
     // round-over-round tail comparers must use the detail file.
-    val topWarm = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-    val shortLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$warmupJson,"cache_scope":"$cacheScope","total_cold":${totalOf(coldTimes)}%.3f,"n_queries":${results.size},"failed":$failed,"partial":$partial,"sf":"$sfDir","cpus":$cpusJson,"sentinel_base":$sentinelBase%.3f,$sentinelRefJson,${floorNormJson(total, sentinelBase)},"contended":$contended,"staged":$staged,"detail":"$detailPath","queries_truncated":true,"queries_top20":${qjson(topWarm)}}"""
+    val shortLine = text(Bench.shortLine(a, cacheScope, passA, passB, detailPath))
     println(shortLine)
     // The round-total also lands in its OWN clean file (VERDICT r11 #3):
     // BENCH_r{8..11}.json all read "parsed": null because the total line
@@ -546,11 +407,118 @@ object Bench {
     // prodcold branch note). The short line above stays for humans and
     // for BENCH_TOTAL.json; this one exists to parse from a ~2000-char
     // log tail even with sbt's trailing [success] line after it.
-    println(miniJson("total", total, sfDir, cpus, contended, results,
-      detailPath))
-    updateCalibration(sentinelBase)
-    appendSentinelHistory(sentinelBase, contended, sfDir, "two-pass")
+    println(miniLine("total", a, secs(warmRuns(passA, passB)), detailPath))
+    appendSentinelHistory(a, "two-pass")
     spark.stop()
+  }
+
+  /** One timed run: its seconds (-1 when it failed) and its envelope. */
+  private[graft] final case class Run(sec: Double, env: TaskEnvelope.Env)
+
+  /** What every Bench line states about its run: the corpus, the core
+    * count, the warmup scope, the sentinel audit (baseline, raw series,
+    * the (host, cpus) reference with its source, the verdict) and the
+    * stage provenance. */
+  private[graft] final case class Audit(sf: String, cpus: String,
+      warmup: String, base: Double, sentinels: Seq[Double],
+      ref: Option[(Double, String)], contended: Option[Boolean],
+      staged: JValue)
+
+  // -1 means "no sample from this attempt", not "poison every other
+  // attempt": min of the successful readings, -1 only when EVERY
+  // attempt failed. (r9 shape: one transient failure inside any of up
+  // to 3 warm chunk retries permanently reported the query failed and
+  // dropped it from the warm total even when other attempts passed.)
+  // The kept run's envelope comes with its time.
+  private def merge(a: Run, b: Run): Run =
+    if (a.sec < 0) b else if (b.sec < 0) a else if (b.sec < a.sec) b else a
+  private def secs(rs: Seq[(String, Run)]) = rs.map { case (n, r) => n -> r.sec }
+  private def totalOf(rs: Seq[(String, Double)]) =
+    rs.collect { case (_, v) if v >= 0 => v }.sum
+  /** The warm tier: each cold run min-merged with its pass-B runs. */
+  private def warmRuns(cold: Seq[(String, Run)], passB: Seq[(String, Run)]) = {
+    val b = passB.toMap
+    cold.map { case (n, r) => n -> b.get(n).fold(r)(merge(r, _)) }
+  }
+  private def secsJson(rs: Seq[(String, Double)], dp: Int): JObject =
+    JObject(rs.toList.map { case (n, v) => n -> fixed(v, dp) })
+  private def names(ns: Seq[String]): JArray = JArray(ns.toList.map(JString(_)))
+
+  private def headline(metric: String, total: Double, a: Audit): JObject =
+    ("metric" -> metric) ~ ("value" -> fixed(total, 3)) ~ ("unit" -> "sec") ~
+      ("warmup" -> a.warmup)
+  private def contendedJson(a: Audit): JValue = orNull(a.contended)(JBool(_))
+  /** sf, cpus, the sentinel audit and the stage provenance.
+    * `total_floor_normalized` (VERDICT r14 #5 / r15 #4) is
+    * `total × idle_ref / run_floor`: the total this run would have read
+    * on the idle host, null without a reference for this (host, cpus). */
+  private def auditFields(a: Audit, total: Double, series: Boolean): JObject =
+    ("sf" -> a.sf) ~ ("cpus" -> cpusJson(a.cpus)) ~
+      ("sentinel_base" -> fixed(a.base, 3)) ~
+      ("sentinel_ref" -> orNull(a.ref)(r => fixed(r._1, 4))) ~
+      ("sentinel_ref_source" -> a.ref.fold("none")(_._2)) ~
+      ("total_floor_normalized" -> orNull(a.ref.filter(_ => a.base > 0))(
+        r => fixed(total * r._1 / a.base, 3))) ~
+      ("sentinels" -> (if (series) JArray(a.sentinels.toList.map(fixed(_, 3)))
+        else JNothing)) ~
+      ("contended" -> contendedJson(a)) ~ ("staged" -> a.staged)
+
+  /** The prodcold line; the file's copy adds the profiles. */
+  private[graft] def prodcoldLine(a: Audit, runs: Seq[(String, Run)],
+      withProfiles: Boolean): JObject = {
+    val total = totalOf(secs(runs))
+    headline("total_prodcold", total, a) ~ auditFields(a, total, series = true) ~
+      ("queries" -> secsJson(secs(runs), 3)) ~
+      ("profiles" -> (if (withProfiles) profilesJson(envs(runs)) else JNothing))
+  }
+
+  /** Queries that failed in the warm tier, and those where one whole tier
+    * produced no sample but the other did (ADVICE r10): the merged number
+    * is real, but the artifact says it is one-tier-only. */
+  private def failures(cold: Seq[(String, Run)], passB: Seq[(String, Run)]) = {
+    val b = passB.toMap
+    (names(secs(warmRuns(cold, passB)).collect { case (n, v) if v < 0 => n }),
+      names(cold.collect {
+        case (n, r) if (r.sec < 0) != b.get(n).forall(_.sec < 0) => n }))
+  }
+
+  /** The two-pass detail line: both tiers, every query, the raw sentinel
+    * series, attempt-failure counts and both tiers' profiles. */
+  private[graft] def detailLine(a: Audit, cacheScope: String,
+      cold: Seq[(String, Run)], passB: Seq[(String, Run)],
+      failCounts: Seq[(String, Int)]): JObject = {
+    val warm = warmRuns(cold, passB)
+    val total = totalOf(secs(warm))
+    val (failed, partial) = failures(cold, passB)
+    headline("total", total, a) ~ ("cache_scope" -> cacheScope) ~
+      ("total_cold" -> fixed(totalOf(secs(cold)), 3)) ~
+      ("queries_cold" -> secsJson(secs(cold), 3)) ~
+      ("failed" -> failed) ~ ("partial" -> partial) ~
+      ("attempt_failures" -> JObject(failCounts.toList.map {
+        case (n, c) => n -> JInt(c) })) ~
+      auditFields(a, total, series = true) ~
+      ("queries" -> secsJson(secs(warm), 3)) ~
+      ("profiles_cold" -> profilesJson(envs(cold))) ~
+      ("profiles" -> profilesJson(envs(warm))) ~
+      // warm runs that ran no Spark job: a memo or cache read, labelled
+      // as reuse, not speed
+      ("reuse" -> names(warm.collect { case (n, r) if r.env.jobs == 0 => n }))
+  }
+
+  /** The two-pass stdout line (also BENCH_TOTAL.json): totals, the audit
+    * verdict and the 20 heaviest warm queries, under ~1.5 KB. */
+  private[graft] def shortLine(a: Audit, cacheScope: String,
+      cold: Seq[(String, Run)], passB: Seq[(String, Run)],
+      detailPath: String): JObject = {
+    val warm = secs(warmRuns(cold, passB))
+    val total = totalOf(warm)
+    val (failed, partial) = failures(cold, passB)
+    headline("total", total, a) ~ ("cache_scope" -> cacheScope) ~
+      ("total_cold" -> fixed(totalOf(secs(cold)), 3)) ~
+      ("n_queries" -> warm.size) ~ ("failed" -> failed) ~
+      ("partial" -> partial) ~ auditFields(a, total, series = false) ~
+      ("detail" -> detailPath) ~ ("queries_truncated" -> true) ~
+      ("queries_top20" -> secsJson(warm.filter(_._2 >= 0).sortBy(-_._2).take(20), 3))
   }
 
   /** Tail-window-sized headline record: the driver contract's metric/
@@ -564,51 +532,46 @@ object Bench {
     * queries while the whole line stays under 1850 chars (~top-45).
     * `cpus` is stamped so the scaling pair's artifacts are
     * self-identifying. */
-  private def miniJson(metric: String, total: Double, sfDir: String,
-      cpus: String, contended: Boolean, results: Seq[(String, Double)],
-      detailPath: String): String = {
-    val cpusJson = Bench.cpusJson(cpus)
-    def line(top: Seq[(String, Double)]): String = {
-      val qj = top.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
-        .mkString("{", ",", "}")
-      f"""{"metric":"$metric","value":$total%.3f,"unit":"sec","sf":"$sfDir","cpus":$cpusJson,"n_queries":${results.size},"contended":$contended,"detail":"$detailPath","queries_truncated":true,"queries":$qj}"""
-    }
+  private[graft] def miniLine(metric: String, a: Audit,
+      results: Seq[(String, Double)], detailPath: String): String = {
+    def line(top: Seq[(String, Double)]): String = text(
+      ("metric" -> metric) ~ ("value" -> fixed(totalOf(results), 3)) ~
+        ("unit" -> "sec") ~ ("sf" -> a.sf) ~ ("cpus" -> cpusJson(a.cpus)) ~
+        ("n_queries" -> results.size) ~ ("contended" -> contendedJson(a)) ~
+        ("detail" -> detailPath) ~ ("queries_truncated" -> true) ~
+        ("queries" -> secsJson(top, 2)))
     val ranked = results.filter(_._2 >= 0).sortBy(-_._2)
     var n = ranked.size
     while (n > 5 && line(ranked.take(n)).length > 1850) n -= 1
     line(ranked.take(n))
   }
 
-  /** One timed run: its seconds (-1 when it failed) and its envelope. */
-  private final case class Run(sec: Double, env: TaskEnvelope.Env)
+  /** One line of `calibration/sentinel_history_<host>.jsonl`. */
+  private[graft] def historyLine(ts: String, a: Audit, mode: String): JObject =
+    ("ts" -> ts) ~ ("floor" -> fixed(a.base, 4)) ~
+      ("ref" -> orNull(a.ref)(r => fixed(r._1, 4))) ~
+      ("contended" -> contendedJson(a)) ~ ("sf" -> a.sf) ~
+      ("cpus" -> cpusJson(a.cpus)) ~ ("mode" -> mode)
+
+  private def envs(rs: Seq[(String, Run)]) = rs.map { case (n, r) => n -> r.env }
 
   /** `{"<query>":{"jobs":..,...},...}`: one profile per query, the
     * envelope's counters in Spark's units (`cpu_ns`; `run_ms`, `gc_ms`;
     * bytes for the rest). */
-  private[graft] def profilesJson(envs: Seq[(String, TaskEnvelope.Env)]): String =
-    compact(render(org.json4s.JObject(envs.toList.map { case (n, e) =>
+  private[graft] def profilesJson(envs: Seq[(String, TaskEnvelope.Env)]): JObject =
+    JObject(envs.toList.map { case (n, e) =>
       n -> (("jobs" -> e.jobs) ~ ("stages" -> e.stages) ~ ("tasks" -> e.tasks) ~
         ("cpu_ns" -> e.cpuNs) ~ ("run_ms" -> e.runMs) ~ ("gc_ms" -> e.gcMs) ~
         ("shuffle_write" -> e.shuffleWrite) ~ ("shuffle_read" -> e.shuffleRead) ~
         ("input" -> e.input) ~ ("mem_spill" -> e.memSpill) ~
         ("disk_spill" -> e.diskSpill) ~ ("peak_task_mem" -> e.peakTaskMem))
-    })))
-
-  /** Queries whose reported warm run ran no Spark job: the time is a
-    * memo or cache read, labelled as reuse, not speed. */
-  private def reuseJson(warm: Seq[(String, Run)]): String =
-    compact(render(warm.collect { case (n, r) if r.env.jobs == 0 => n }))
+    })
 
   /** `cpus` is free-form env text ("*" is a legal local[] arg): a bare
     * JSON number only when it is ASCII digits (`isDigit` also accepts
-    * non-ASCII digits, which JSON does not), else a quoted string. */
-  private[graft] def cpusJson(cpus: String): String =
-    if (cpus.matches("[0-9]+")) cpus
-    else "\"" + cpus.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c => c.toString
-    } + "\""
+    * non-ASCII digits, which JSON does not), else a string. */
+  private[graft] def cpusJson(cpus: String): JValue =
+    if (cpus.matches("[0-9]+")) JInt(BigInt(cpus)) else JString(cpus)
 
   /** `/x/BENCH_DETAIL.json` → `/x/BENCH_DETAIL_c32.json` for cpus=32. The
     * extension is looked for in the file name only: `/x/run.d/BENCH` →

@@ -3,6 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.json4s._
+import org.json4s.JsonDSL._
+
+import graft.ArtifactJson.{fixed, text}
 
 /** Streaming THROUGHPUT bench — the production-path counterpart of the
   * `streaming/Replay` correctness jig (which collects rows to the driver
@@ -24,14 +28,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object BenchStream {
 
-  private case class TierResult(
+  private[graft] case class TierResult(
       name: String, rows: Long, sec: Double, batches: Int,
       stateRows: Long, stateBytes: Long, timedOut: Boolean = false) {
     def rps: Double = if (sec > 0) rows / sec else 0.0
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON %.3f must be dot-decimal (ADVICE r13)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.cli.CliUtil.builder(s"local[$cpus]", cpus)
@@ -228,35 +231,7 @@ object BenchStream {
           watermark = "1 hour")
       }(docsDir))
 
-    def j(r: TierResult): String =
-      f""""${r.name}":{"rows":${r.rows},"sec":${r.sec}%.3f,""" +
-        f""""rows_per_sec":${r.rps}%.0f,"batches":${r.batches},""" +
-        f""""state_rows":${r.stateRows},"state_bytes":${r.stateBytes},""" +
-        f""""timed_out":${r.timedOut}}"""
-    // headline total covers the three canonical tiers only — the dedup
-    // attribution sweep re-runs one tier at other granularities and must
-    // not inflate the round-over-round comparable
-    val canonical = Set("sessions", "funnel", "dedup")
-    val ran = results.filter(_.sec >= 0) // drop tier-filtered skips
-    val total = ran.filter(r => canonical(r.name)).map(_.sec).sum
-    // A FILTERED run must be distinguishable from the round-over-round
-    // comparable (ADVICE r14): the active filter is recorded in the
-    // artifact, and stream_total is NULLED when any canonical tier was
-    // skipped — a partial sum under the comparable's metric name would
-    // silently read as a full run.
-    val skippedCanonical = (canonical -- ran.map(_.name).toSet).toSeq.sorted
-    // a canonical tier that hit the wall-clock ceiling has no honest
-    // duration either — null the comparable rather than sum a partial
-    val canonicalTimedOut = ran.exists(r => canonical(r.name) && r.timedOut)
-    val totalJson =
-      if (skippedCanonical.nonEmpty || canonicalTimedOut) "null"
-      else f"$total%.3f"
-    val filterJson = tierFilter.map(f =>
-      s""""tiers_filtered":[${f.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""")
-      .getOrElse("")
-    val line = s"""{"metric":"stream_total","value":$totalJson,""" +
-      s"""$filterJson""" +
-      s""""unit":"sec","sf":"$sfDir","tiers":{${ran.map(j).mkString(",")}}}"""
+    val line = text(BenchStream.line(sfDir, tierFilter, results))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM",
       java.nio.file.Paths.get("BENCH_STREAM.json").toAbsolutePath.toString)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
@@ -265,5 +240,34 @@ object BenchStream {
       System.err.println(s"[bench-stream] write failed: ${e.getMessage}") }
     println(line)
     spark.stop()
+  }
+
+  /** The artifact line: the headline total over the three canonical
+    * tiers, then one record per tier that ran (filtered-out tiers carry
+    * sec < 0 and are dropped). The dedup attribution sweep re-runs one
+    * tier at other granularities and must not inflate the
+    * round-over-round comparable. A FILTERED run must be distinguishable
+    * from that comparable (ADVICE r14): the active filter is recorded,
+    * and `value` is null when any canonical tier was skipped or hit the
+    * wall-clock ceiling — a partial sum under the comparable's metric
+    * name would silently read as a full run. */
+  private[graft] def line(sfDir: String, tierFilter: Option[Set[String]],
+      results: Seq[TierResult]): JObject = {
+    val canonical = Set("sessions", "funnel", "dedup")
+    val ran = results.filter(_.sec >= 0)
+    val complete = canonical.subsetOf(ran.map(_.name).toSet) &&
+      !ran.exists(r => canonical(r.name) && r.timedOut)
+    val total = ran.filter(r => canonical(r.name)).map(_.sec).sum
+    ("metric" -> "stream_total") ~
+      ("value" -> (if (complete) fixed(total, 3) else JNull)) ~
+      ("tiers_filtered" -> tierFilter.fold[JValue](JNothing)(
+        f => JArray(f.toList.sorted.map(JString(_))))) ~
+      ("unit" -> "sec") ~ ("sf" -> sfDir) ~
+      ("tiers" -> JObject(ran.toList.map { r =>
+        r.name -> (("rows" -> r.rows) ~ ("sec" -> fixed(r.sec, 3)) ~
+          ("rows_per_sec" -> fixed(r.rps, 0)) ~ ("batches" -> r.batches) ~
+          ("state_rows" -> r.stateRows) ~ ("state_bytes" -> r.stateBytes) ~
+          ("timed_out" -> r.timedOut))
+      }))
   }
 }

@@ -66,7 +66,7 @@ object QueriesKpi {
       |         count(*) FILTER (WHERE k >= 88 AND k < 96) AS client_4xx,
       |         count(*) FILTER (WHERE k >= 96) AS server_5xx,
       |         count(*) FILTER (WHERE k % 20 = 0) AS parse_errors,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_elapsed_ms,
+      |         CAST(sum(CAST(value AS DECIMAL(38,2))) AS DOUBLE) / count(*) AS avg_elapsed_ms,
       |         ${OracleSql.sortedListSql("value")} AS lv
       |  FROM b GROUP BY 1, 2
       |), kpi AS (

@@ -201,16 +201,15 @@ object Tables {
     * 2.4M destinations ride a codegen'd explode off 20k rows — identical
     * token arithmetic, ~100× fewer rows through the join. On a cluster
     * this is exactly GraphX/Pregel's edge-partition layout: adjacency
-    * blocks stay put, only node-sized rank tables move. */
+    * blocks stay put, only node-sized rank tables move. Not rebalanced:
+    * every loop over it (Adjacency.pinDirected, Bfs.levelsAdj) hash-
+    * partitions it by `src` at loop width right after its sizing read,
+    * so a round-robin split first would move the arrays twice. */
   def copurchaseAdjacency(spark: SparkSession, sfDir: String): DataFrame =
-    // rebalanced: the staged file is node-sized (few parquet files), but
-    // the explodes downstream fan back out to edge volume — without the
-    // re-split that pushed-down expansion runs on as many cores as the
-    // scan has files (the q56/q120 single-task floor)
-    rebalance(graft.operators.Staging.stagedOrDerive(spark, "copurchase_adj",
+    graft.operators.Staging.stagedOrDerive(spark, "copurchase_adj",
         Seq(path(sfDir, "lineitem"))) {
       graft.operators.Adjacency.directed(copurchaseEdgesWithDeg(spark, sfDir))
-    })
+    }
 
   /** Distinct node ids of the co-purchase graph — staged so the
     * PageRank-family token-scale count and final densify are node-sized
@@ -226,7 +225,10 @@ object Tables {
     * prediction iterate over (see [[copurchaseAdjacency]] for why
     * adjacency beats edge rows per round). */
   def copurchaseTop10Adjacency(spark: SparkSession, sfDir: String): DataFrame =
-    // rebalanced for the same reason as [[copurchaseAdjacency]]
+    // rebalanced: the staged file is node-sized (few parquet files), but
+    // LinkPredict explodes it back to edge volume in its scan stage —
+    // without the re-split that expansion runs on as many cores as the
+    // scan has files (the q56/q120 single-task floor)
     rebalance(graft.operators.Staging.stagedOrDerive(spark,
         "copurchase_top10_adj", Seq(path(sfDir, "lineitem"))) {
       graft.operators.Adjacency.undirected(copurchaseTop10Edges(spark, sfDir),
@@ -236,15 +238,17 @@ object Tables {
   /** WEIGHTED undirected adjacency over the co-purchase pair counts:
     * (id, nbrs) with nbrs = sorted (d, w) structs, w = 1000000 div
     * shared-order count — the affinity-distance graph q123 relaxes
-    * over, in the node-sized layout the SSSP rounds want. */
+    * over, in the node-sized layout the SSSP rounds want. Not rebalanced,
+    * for the reason [[copurchaseAdjacency]] gives (ShortestPath.distancesAdj
+    * re-partitions it by `src`). */
   def copurchaseWeightedAdjacency(spark: SparkSession, sfDir: String): DataFrame =
-    rebalance(graft.operators.Staging.stagedOrDerive(spark, "copurchase_wadj",
+    graft.operators.Staging.stagedOrDerive(spark, "copurchase_wadj",
         Seq(path(sfDir, "lineitem"))) {
       graft.operators.Adjacency.undirectedWeighted(
         copurchasePairCounts(spark, sfDir)
           .select(col("src"), col("dst"), expr("1000000L div cnt").as("w")),
         "src", "dst", "w")
-    })
+    }
 
   /** Market-basket aggregates over DISTINCT (order, part) occurrences —
     * the shared inputs of q105 lift / q130 association rules. Note the

@@ -94,20 +94,6 @@ object Verify {
         graft.operators.LoopCache.clearMemo()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter { case (k, _) => keep(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     // A FILTERED run must not clobber the full oracle_sql.json: stale
     // per-query parquet dirs from a previous full run would remain in
     // outDir, and a later full DuckDB compare against the shrunken map
@@ -115,7 +101,7 @@ object Verify {
     // sibling partial file instead.
     val oracleFile =
       if (only.isDefined) "oracle_sql.partial.json" else "oracle_sql.json"
-    Files.writeString(Paths.get(s"$outDir/$oracleFile"), json)
+    writeOracleSql(s"$outDir/$oracleFile", keep)
     // this JVM's codegen totals (under local-cluster, the driver's only):
     // every session shares one class loader (see CliUtil.builder), so a
     // run compiles each distinct class once; a return to per-session
@@ -127,4 +113,11 @@ object Verify {
     println(s"[verify] codegen: $compiles classes compiled in $compileMs ms")
     spark.stop()
   }
+
+  /** `{"<query>": "<oracle SQL>", ...}` for the queries `keep` selects —
+    * the map `tools/check_oracle.py` replays in DuckDB. */
+  private[graft] def writeOracleSql(path: String, keep: String => Boolean): Unit =
+    Files.writeString(Paths.get(path), ArtifactJson.text(org.json4s.JObject(
+      SparkEntry.oracleSql.toList.filter { case (k, _) => keep(k) }
+        .map { case (k, v) => k -> org.json4s.JString(v) })))
 }

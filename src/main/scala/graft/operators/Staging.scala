@@ -3,6 +3,9 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{JObject, JString, JValue}
+
+import graft.ArtifactJson.{fixed, text}
 
 /** Stage-once materialization of shared derived tables — the disk
   * handoff between pipeline stages that the reference itself uses
@@ -49,17 +52,23 @@ object Staging {
     * each derive cost) vs found prebuilt. First record per name wins —
     * a stage derived once and then re-read stays "derived". */
   private val provenance =
-    scala.collection.mutable.LinkedHashMap[String, String]()
-  private def recordStage(name: String, v: String): Unit =
+    scala.collection.mutable.LinkedHashMap[String, JValue]()
+  /** Records a stage's derive seconds (`Some`, written with 3 decimals),
+    * or `label` ("prebuilt", "waited") when this process derived nothing. */
+  private[graft] def recordStage(name: String, derivedSec: Option[Double],
+      label: String): Unit =
     provenance.synchronized {
-      if (!provenance.contains(name)) provenance(name) = v
+      if (!provenance.contains(name))
+        provenance(name) = derivedSec.fold[JValue](JString(label))(fixed(_, 3))
     }
-  /** JSON object `{"name": derive_seconds | "prebuilt", ...}` covering
+  /** `{"name": derive_seconds | "prebuilt" | "waited", ...}` covering
     * every stage touched since JVM start (or the last [[resetProvenance]]). */
-  def provenanceJson: String = provenance.synchronized {
-    provenance.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+  def provenanceObject: JObject = provenance.synchronized {
+    JObject(provenance.toList)
   }
+  /** [[provenanceObject]] as one line: seconds with 3 decimals and no
+    * exponent, labels quoted. The benchmark harness reads it by regex. */
+  def provenanceJson: String = text(provenanceObject)
   def resetProvenance(): Unit = provenance.synchronized(provenance.clear())
 
   /** Per-(session, dir) memo of the staged-read DataFrames. Every bare
@@ -226,9 +235,9 @@ object Staging {
           "a stale partial stage dir keeps winning the rename race; " +
           "delete it manually or point SPARK_GRAFT_STAGE_DIR elsewhere")
     recordStage(name,
-      if (prebuilt) "\"prebuilt\""
-      else if (attempts == 0 && waited) "\"waited\""
-      else f"${(System.nanoTime() - t0) / 1e9}%.3f")
+      if (prebuilt || (attempts == 0 && waited)) None
+      else Some((System.nanoTime() - t0) / 1e9),
+      if (prebuilt) "prebuilt" else "waited")
     // a re-derive under the same dir name (REFRESH, stale-dir retry)
     // must drop the memoized relation — its file list is gone
     readStage(spark, dir.toString, invalidate = !prebuilt)

@@ -105,14 +105,18 @@ object Kpi {
     *    CPython's exact-binary half-even (`py_round`, P11). Batch only:
     *    its scan-order key does not survive micro-batch boundaries.
     *  - crossEngineExact: no rounding; avg is computed from an exact
-    *    DECIMAL(18,2) sum (elapsed values are 2-dp by contract) divided in
-    *    double, and p90 is the builtin `Percentile` — bit-identical to
+    *    DECIMAL(38,2) sum (elapsed values are 2-dp by contract; each is
+    *    rounded to cents first) divided in double, and p90 is the builtin
+    *    `Percentile` — bit-identical to
     *    DuckDB's quantile_cont (verified empirically), which the driver's
     *    hash-compare gate needs.
     *    (DuckDB's round_even on DOUBLE misrounds near ties, and double sums
     *    are order-dependent, so rounded outputs can NOT be made portable.)
     *    Neither aggregate depends on input order, so it is also the tier
     *    the stream serves, exact across any split into micro-batches.
+    *    Its one limit: an `elapsed_ms` of 1e36 or more, or a group sum
+    *    that reaches 1e36, overflows DECIMAL(38,2) and aborts the query
+    *    under ANSI (the faithful tier and the reference accept it).
     */
   def aggregate(normalized: DataFrame, crossEngineExact: Boolean = false): DataFrame =
     aggregateBy(normalized, col("date_utc"), col("date_utc"), crossEngineExact)
@@ -165,7 +169,7 @@ object Kpi {
         // subexpression elimination would never merge them
         (sort_array(transform(collect_list(col("_scan_kv")), valueOf)),
           c => graft.functions.NpPercentile.ofSorted(c, 0.9))
-    // Mean tiers. crossEngineExact: exact DECIMAL(18,2) sum (elapsed is
+    // Mean tiers. crossEngineExact: exact DECIMAL(38,2) sum (elapsed is
     // 2-dp by contract) divided once in double — the correctly-rounded
     // true mean, which DuckDB replays for the hash-portable oracle gate.
     // Faithful tier: np.mean's pairwise summation over the same scan-
@@ -187,7 +191,7 @@ object Kpi {
           c => graft.functions.NpMeanExpression.npMean(
             transform(sort_array(c), valueOf)))
       else
-        (sum(col("elapsed_ms").cast("decimal(18,2)")).cast("double") /
+        (sum(col("elapsed_ms").cast("decimal(38,2)")).cast("double") /
           count(lit(1)), identity)
     // py_round, not bround: Python rounds the exact binary double, bround
     // rounds its shortest decimal repr — they disagree on values like

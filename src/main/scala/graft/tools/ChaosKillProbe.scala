@@ -1,5 +1,9 @@
 package graft.tools
 
+import org.json4s._
+import org.json4s.JsonDSL._
+
+import graft.ArtifactJson.fixed
 
 /** Executor-kill chaos gate (VERDICT r17 #2): run catalog queries on a
   * REAL 2-executor local-cluster, `kill -9` one executor JVM while the
@@ -37,7 +41,6 @@ object ChaosKillProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args(0)
     val outJson = args(1)
     val names = args(2).split(",").map(_.trim).toSeq
@@ -135,13 +138,22 @@ object ChaosKillProbe {
       (name, healthySec, chaosSec, midQuery, identical, attempt)
     }
 
-    val j = results.map { case (n, h, c, mid, id, att) =>
-      f"""{"query":"$n","healthy_sec":$h%.2f,"chaos_sec":$c%.2f,"kill_mid_query":$mid,"identical":$id,"attempts":$att}"""
-    }.mkString("[", ",", "]")
-    val line = s"""{"gate":"chaos_kill","master":"$master","sf":"$sfDir","results":$j}"""
+    val line = graft.ArtifactJson.text(this.line(master, sfDir, results))
     println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       (line + "\n").getBytes("UTF-8"))
     spark.stop()
   }
+
+  /** One gate run: per query, the healthy and chaos seconds, whether the
+    * kill landed mid-query, whether the rows matched, and the attempts —
+    * the line `tools/check_chaos_kill.sh` parses. */
+  private[graft] def line(master: String, sfDir: String,
+      results: Seq[(String, Double, Double, Boolean, Boolean, Int)]): JObject =
+    ("gate" -> "chaos_kill") ~ ("master" -> master) ~ ("sf" -> sfDir) ~
+      ("results" -> results.toList.map { case (n, h, c, mid, id, att) =>
+        ("query" -> n) ~ ("healthy_sec" -> fixed(h, 2)) ~
+          ("chaos_sec" -> fixed(c, 2)) ~ ("kill_mid_query" -> mid) ~
+          ("identical" -> id) ~ ("attempts" -> att)
+      })
 }

@@ -8,19 +8,7 @@ object DumpOracleSql {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracleSql(s"$outDir/oracle_sql.json", _ => true)
     println(s"[dump-oracle] ${graft.SparkEntry.oracleSql.size} oracle texts -> $outDir/oracle_sql.json")
   }
 }

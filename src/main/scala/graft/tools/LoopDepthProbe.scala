@@ -2,10 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Deep-rounds cost probe for the WHOLE caller-budgeted loop-operator
-  * family (companion to DiameterProbe for BFS/SSSP): times each operator
-  * at increasing round budgets on the same corpus, cold per measurement
-  * (cache + memo cleared). Every operator here must read LINEAR marginal
+/** Deep-rounds cost probe for the caller-budgeted loop operators: times
+  * each operator at increasing round budgets on the same corpus, cold per
+  * measurement (cache + memo cleared). Every operator here must read LINEAR marginal
   * cost per round (nested round plans once cost 30+ min of driver-side
   * planning at rounds=20). PageRank.fixedPointAdj and
   * PageRank.personalizedAdj run their rounds as one plan

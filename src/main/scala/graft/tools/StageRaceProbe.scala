@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 /** Cross-process staging race probe (VERDICT r17 #8): two of these
   * JVMs, pointed at ONE fresh SPARK_GRAFT_STAGE_DIR by
@@ -61,7 +62,9 @@ object StageRaceProbe {
       .collect().map(_.toString).mkString("|")
     val hash = java.security.MessageDigest.getInstance("MD5")
       .digest(rows.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    println(s"""{"role":"$role","staged":${graft.operators.Staging.provenanceJson},"n_rows":${df.count()},"hash":"$hash"}""")
+    println(graft.ArtifactJson.text(("role" -> role) ~
+      ("staged" -> graft.operators.Staging.provenanceObject) ~
+      ("n_rows" -> df.count()) ~ ("hash" -> hash)))
     spark.stop()
   }
 }

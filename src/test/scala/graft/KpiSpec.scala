@@ -109,6 +109,20 @@ class KpiSpec extends AnyFunSuite {
     assert(kpi.getAs[Double]("p90_elapsed_ms") == 3.7)
   }
 
+  test("crossEngineExact tier sums elapsed values of 1e17 like the faithful tier") {
+    // DECIMAL(18,2) holds less than 1e16: the exact tier used to abort here
+    val rows = Seq("1e17", "1e17", "2.5", "100").map(v =>
+      ("2026-08-11T00:00:00Z", "/get", "200", v, "ok"))
+    def kpi(exact: Boolean) = Kpi.bitacoraKpi(bitacora(rows),
+      crossEngineExact = exact).collect().head
+    val exact = kpi(exact = true)
+    assert(exact.getAs[Double]("avg_elapsed_ms") ==
+      (BigDecimal("200000000000000102.50") / 4).toDouble)
+    assert(exact.getAs[Double]("p90_elapsed_ms") == 1e17)
+    assert(exact.getAs[Double]("avg_elapsed_ms") ==
+      kpi(exact = false).getAs[Double]("avg_elapsed_ms"))
+  }
+
   test("A6 faithful p90 replays numpy's _lerp at ULP level (both branches)") {
     import graft.functions.NpPercentile
     // the live parity-gate catch: lo=746.21, hi=746.66 at t=0.1 —

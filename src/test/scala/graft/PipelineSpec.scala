@@ -149,6 +149,8 @@ class PipelineSpec extends AnyFunSuite {
         ("2026-08-11T05:00:00Z", "/get", "302", "0.01", null),
         (null, "/get", "200", "5", "ok"), // null guard
         ("2026-08-11T06:00:00Z", "/basic-auth/u/p", "401", "250.5", "ok"),
+        // above DECIMAL(18,2)'s range: the exact sum must still hold it
+        ("2026-08-11T07:00:00Z", "/basic-auth/u/p", "200", "1e17", "ok"),
         ("2026-08-11T23:30:00Z", "/get", "200", "1000", "ok")),
       // moves the 1-hour watermark past 2026-08-12T00:00, closing both
       // earlier days; its own day stays open

@@ -979,4 +979,153 @@ class ScaleSpec extends AnyFunSuite {
       s"range base offsets were not broadcast:\n$plan")
     graft.operators.LoopCache.clearMemo(); spark.catalog.clearCache()
   }
+
+  /** Runs `body` with the given session confs, restoring the old values. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("hot join key: AQE splits the skewed shuffle-join partition, same rows") {
+    // a third of the orders on customer 0 (the skewed replica's shape);
+    // broadcast off so the skew reaches the shuffle, skew thresholds
+    // scaled to the input so the probe-sized hot partition counts as
+    // skewed, as the same key does at cluster scale with the defaults
+    val orders = spark.range(0, 6000, 1, 8).select($"id".as("o_orderkey"),
+      when($"id" % 3 === 0, 0L).otherwise($"id" % 200).as("o_custkey"),
+      // hashed longs: incompressible enough to size the hot partition,
+      // and summed exactly in any order
+      pmod(xxhash64($"id"), lit(1000000007L)).as("o_totalprice"))
+    val customer = spark.range(0, 200).select($"id".as("c_custkey"),
+      concat(lit("seg"), ($"id" % 5).cast("string")).as("c_mktsegment"))
+    def run(skewJoin: Boolean) = withConf(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> skewJoin.toString,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "16",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256") {
+      val agg = orders.join(customer, $"o_custkey" === $"c_custkey")
+        .groupBy($"c_mktsegment")
+        .agg(count(lit(1)).as("n"), sum($"o_totalprice").as("rev"))
+      // collect, not a noop write: only this frame's executed adaptive
+      // plan carries the final skew-split join
+      val rows = agg.collect().map(_.toString).sorted.toSeq
+      (rows, agg.queryExecution.executedPlan.toString)
+    }
+    val (split, splitPlan) = run(skewJoin = true)
+    val (plain, plainPlan) = run(skewJoin = false)
+    assert(splitPlan.contains("skew=true"), splitPlan)
+    assert(!plainPlan.contains("skew=true"), plainPlan)
+    assert(split == plain)
+    assert(split.size == 5)
+  }
+
+  test("hot prefix: SNM candidates stay within n*w and salted blocking " +
+    "stays exact on a planted hot block") {
+    import graft.operators.{FuzzyMatch, SortedNeighborhood}
+    // 150 of 400 docs share one 57-char prefix and differ only in a
+    // trailing number: one blocking key holds a 150-doc block whose
+    // 11,175 pairs are all within the edit-distance cap
+    val docs = (0L until 400L).map { i =>
+      (i, if (i % 8 < 3) s"shared hot prefix marker text near duplicate body number $i"
+        else s"doc $i " + (0 until 6).map(j => s"w${(i * 7 + j * 13) % 97}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val n = docs.count()
+    val w = 3
+    val snm = SortedNeighborhood.candidates(docs, "doc_id", "text", windowSize = w)
+    assert(snm.count() <= n * w)
+    assert(snm.distinct().count() == snm.count())
+    // the salted join spreads the hot block over g(g+1)/2 buckets and
+    // still emits every pair once: equal to the unsalted join (g = 1)
+    def pairs(g: Int) = FuzzyMatch.blockedPairs(docs, "doc_id", "text",
+        saltGroups = g).as[(Long, Long, Int)].collect().sorted.toSeq
+    val salted = pairs(8)
+    assert(salted == pairs(1))
+    assert(salted.size == 150 * 149 / 2)
+    assert(salted.forall { case (a, b, _) => a < b && a % 8 < 3 && b % 8 < 3 })
+  }
+
+  test("hot day and hot hour: the sweep line splits to the hour or the " +
+    "minute, rows equal to the flat path") {
+    import graft.operators.SweepLine
+    val n = 600L
+    val day0 = unix_timestamp(lit("2026-08-10 00:00:00").cast("timestamp"))
+    // every interval starts in one hot day (uniform over its 24 hours)
+    // or one hot hour, plus a few intervals on 3 quiet days
+    def corpus(hotSpan: Long) = spark.range(n).select(
+        (day0 + ($"id" * 7919L) % hotSpan).cast("timestamp").as("st"),
+        (day0 + ($"id" * 7919L) % hotSpan + 60L + $"id" % 3600L)
+          .cast("timestamp").as("et"))
+      .unionByName(spark.range(3).select(
+        (day0 + lit(86400L) * ($"id" + 1L)).cast("timestamp").as("st"),
+        (day0 + lit(86400L) * ($"id" + 1L) + 300L).cast("timestamp").as("et")))
+    def run(iv: org.apache.spark.sql.DataFrame, threshold: Long) = {
+      val out = SweepLine.dailyPeakConcurrency(iv, "st", "et", threshold)
+      val rows = out.collect().map(_.toString).toSeq
+      val plan = out.queryExecution.executedPlan.toString
+      spark.catalog.clearCache(); graft.operators.LoopCache.clearMemo()
+      (rows, plan)
+    }
+    for ((hotSpan, depth) <- Seq(86400L -> "hour#", 3600L -> "minute#")) {
+      val iv = corpus(hotSpan)
+      val (flat, flatPlan) = run(iv, Long.MaxValue)
+      // one threshold, n/6: trips the day check in both corpora and the
+      // hour check only when one hour holds the hot day
+      val (nested, nestedPlan) = run(iv, n / 6)
+      assert(nested == flat, s"hot span $hotSpan")
+      assert(flat.size == 4)
+      assert(!flatPlan.contains("hour#"), flatPlan)
+      assert(nestedPlan.contains(depth), nestedPlan)
+      if (depth == "hour#") assert(!nestedPlan.contains("minute#"), nestedPlan)
+    }
+  }
+
+  test("hot stream entity: the denylist keeps its events out of the " +
+    "interval join's state") {
+    import java.sql.Timestamp
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.StreamingOps
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = Timestamp.valueOf("2026-08-10 09:00:00").getTime
+    def at(sec: Long) = new Timestamp(t0 + sec * 1000L)
+    // user 0 is the planted hot entity: 100 views and 100 clicks inside
+    // one 10-minute window (10,000 joined pairs); users 1-20 are clean
+    val events = (0 until 100).flatMap(i =>
+        Seq((0L, at(i), "view"), (0L, at(i + 1), "click"))) ++
+      (1 to 20).flatMap(u =>
+        Seq((u.toLong, at(u), "view"), (u.toLong, at(u + 30), "click")))
+    val deny = StreamingOps.hotEntities(
+      events.toDF("user_id", "ts", "event_type"), "user_id", maxRate = 50)
+    assert(deny.select("user_id").as[Long].collect().toSeq == Seq(0L))
+    def run(denylist: Option[org.apache.spark.sql.DataFrame], name: String) = {
+      val mem = MemoryStream[(Long, Timestamp, String)]
+      val s = mem.toDF().toDF("user_id", "ts", "event_type")
+      val q = StreamingOps.intervalJoinStream(
+          s.filter($"event_type" === "view"), s.filter($"event_type" === "click"),
+          "user_id", "ts", denylist = denylist)
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      try {
+        mem.addData(events: _*)
+        q.processAllAvailable()
+        (spark.table(name).count(),
+          q.lastProgress.stateOperators.map(_.numRowsTotal).sum)
+      } finally q.stop()
+    }
+    val (guardedRows, guardedState) = run(Some(deny), "hot_entity_guarded")
+    val (plainRows, plainState) = run(None, "hot_entity_plain")
+    assert(plainRows == 10000L + 20L)
+    assert(guardedRows == 20L)
+    // the state holds the clean users' 40 events, never the hot user's 200
+    assert(guardedState > 0 && guardedState <= 40L, guardedState)
+    assert(plainState >= 200L, plainState)
+  }
 }
+
