@@ -144,7 +144,11 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  def main(args: Array[String]): Unit = {
+  /** The JSON lines go to stdout as UTF-8, whatever the host locale. */
+  def main(args: Array[String]): Unit =
+    graft.cli.CliUtil.utf8Stdout(System.out)(run())
+
+  private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val ref = sentinelRef(calibrationDir, hostName, cpus)

@@ -29,19 +29,28 @@ object CliUtil {
     * changed (ADVICE r14). */
   def pinLocale(): Unit = java.util.Locale.setDefault(java.util.Locale.ROOT)
 
+  /** Runs `body` with stdout (`System.out` and Scala's `Console.out`)
+    * printing UTF-8 into `sink`, and restores the previous `System.out`
+    * after. The JVM's default charset follows the host locale (ASCII with
+    * LANG unset, printing "P?rez"), while the reference prints UTF-8
+    * everywhere. The swap is process-wide like the locale pin, so only a
+    * `main` calls it, never a stage's `run`. */
+  def utf8Stdout[T](sink: java.io.OutputStream)(body: => T): T = {
+    val prev = System.out
+    val out = new java.io.PrintStream(sink, true,
+      java.nio.charset.StandardCharsets.UTF_8)
+    System.setOut(out)
+    try Console.withOut(out)(body)
+    finally { out.flush(); System.setOut(prev) }
+  }
+
   /** Everything a CLI `main` does around its stage: [[pinLocale]], a UTF-8
-    * stdout, the flags, and a session stopped at the end. The stdout swap
-    * is process-wide like the locale pin, so it happens here and never in
-    * a stage's `run`: the JVM's default charset follows the host locale
-    * (ASCII with LANG unset, printing "P?rez"), while the reference prints
-    * UTF-8 everywhere. */
+    * stdout ([[utf8Stdout]]), the flags, and a session stopped at the
+    * end. */
   def main(name: String, args: Array[String])(
       body: (SparkSession, Map[String, String]) => Unit): Unit = {
     pinLocale()
-    val out = new java.io.PrintStream(System.out, true,
-      java.nio.charset.StandardCharsets.UTF_8)
-    System.setOut(out)
-    Console.withOut(out) {
+    utf8Stdout(System.out) {
       val spark = session(name)
       try body(spark, parseArgs(args)) finally spark.stop()
     }

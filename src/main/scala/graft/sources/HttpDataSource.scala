@@ -18,46 +18,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * HTTP-session ingest with retry/backoff/auth/cookies/tolerated-4xx/
   * redirect semantics (/root/reference/src/http_client.py).
   *
-  * Usage:
+  * Usage (every option maps to one stage-[1] behaviour, SURVEY S3-S8):
   * {{{
   *   spark.read.format("http")               // or format("graft.sources.HttpDataSource")
   *     .option("urls", "http://h/a,http://h/b")
-  *     .option("method", "GET")              // GET|POST|PUT|DELETE
+  *     .option("method", "POST")             // GET (default) | POST
+  *     .option("body", "a=1").option("contentType",
+  *       "application/x-www-form-urlencoded")          // S7 form post
   *     .option("user", "u").option("password", "p")   // S4 basic auth
   *     .option("maxRetries", "2").option("backoffMs", "500")  // S3
+  *     .option("timeoutMs", "20000")         // per request; caps Retry-After
   *     .option("acceptStatusCodes", "403")   // S6 tolerated statuses
   *     .option("followRedirects", "true")    // S8
   *     .option("cookieSession", "true")      // S5: ordered, one session
-  *     .option("numPartitions", "8")         // contiguous URL slices
-  *     .option("paginateNextField", "next")  // follow body.next per URL
-  *     .option("maxPages", "50")             // chain safety bound
-  *     .option("maxRequestsPerSecond", "10") // per-host pacing (this JVM)
-  *     .option("maxInFlight", "2")           // per-host concurrency cap
   *     .load()
   * }}}
-  *
-  * Pagination: with `paginateNextField`, each fetched page's body is
-  * probed at that (dot-separated) JSON path for the next page's URL
-  * (relative links resolve against the current page); the chain is
-  * followed — in order, within the same task and session — until the
-  * field is absent/null or `maxPages` pages. Each SEED url starts its
-  * own chain, so a seed list + `numPartitions` shards a paged API.
   *
   * Partitioning: one task per URL (fetches parallelize across executors).
   * With `cookieSession=true` all URLs run in ONE task, in order, sharing a
   * CookieManager — cookie continuity forbids parallelism (SURVEY §7.4 R7).
   * Each task owns its HttpClient; retries happen inside the task so a Spark
   * task retry re-runs the whole URL slice idempotently.
-  *
-  * `numPartitions=N` is the multi-URL fleet shape (a paged API sharded
-  * across workers): the URL list is cut into N CONTIGUOUS slices, one
-  * task each — list order is preserved within a slice, so page chains
-  * stay ordered as long as each chain is contiguous in the list. Every
-  * partition owns its client, so with `cookieSession=true` each slice is
-  * its own ordered cookie session (N independent sessions fetching in
-  * parallel — the R7 single-session guarantee applies per slice, which
-  * is exactly what per-shard session APIs want; keep the one-partition
-  * default when ONE continuous session must span every URL).
   */
 class HttpDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "http"
@@ -92,17 +73,11 @@ object HttpDataSource {
       followRedirects = o.getBoolean("followRedirects", true),
       cookieSession = o.getBoolean("cookieSession", false),
       acceptStatusCodes = Option(o.get("acceptStatusCodes")).toSet[String]
-        .flatMap(_.split(",").iterator.map(_.trim).filter(_.nonEmpty).map(_.toInt)),
-      failOnHttpError = o.getBoolean("failOnHttpError", true),
-      paginateNextField = Option(o.get("paginateNextField")).map(_.trim)
-        .filter(_.nonEmpty),
-      maxPages = o.getInt("maxPages", 1000),
-      maxRequestsPerSecond = o.getDouble("maxRequestsPerSecond", 0.0),
-      maxInFlight = o.getInt("maxInFlight", 0))
+        .flatMap(_.split(",").iterator.map(_.trim).filter(_.nonEmpty).map(_.toInt)))
 
   def parseUrls(o: CaseInsensitiveStringMap): Seq[String] = {
-    val urls = Option(o.get("urls")).orElse(Option(o.get("url"))).getOrElse(
-      throw new IllegalArgumentException("http source requires 'urls' (or 'url') option"))
+    val urls = Option(o.get("urls")).getOrElse(
+      throw new IllegalArgumentException("http source requires the 'urls' option"))
     urls.split(",").iterator.map(_.trim).filter(_.nonEmpty).toSeq
   }
 }
@@ -128,17 +103,10 @@ private[sources] class HttpScan(options: CaseInsensitiveStringMap)
     extends Scan with Batch {
   private val urls = HttpDataSource.parseUrls(options)
   private val cfg = HttpDataSource.parseConfig(options)
-  private val numPartitions = options.getInt("numPartitions", 0)
   override def readSchema(): StructType = HttpDataSource.schema
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    if (numPartitions > 0) {
-      // contiguous slices: list order preserved within each partition;
-      // one client (and, if enabled, one cookie session) per slice
-      val n = math.max(1, math.min(numPartitions, urls.size))
-      val per = (urls.size + n - 1) / n
-      urls.grouped(per).map(HttpUrlsPartition(_)).toArray
-    } else if (cfg.cookieSession) Array(HttpUrlsPartition(urls)) // R7: ordered, one session
+    if (cfg.cookieSession) Array(HttpUrlsPartition(urls)) // R7: ordered, one session
     else urls.map(u => HttpUrlsPartition(Seq(u))).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new HttpReaderFactory(cfg)
@@ -153,37 +121,12 @@ private[sources] class HttpReaderFactory(cfg: HttpFetch.Config)
 private[sources] class HttpPartitionReader(urls: Seq[String], cfg: HttpFetch.Config)
     extends PartitionReader[InternalRow] {
   private lazy val client = HttpFetch.newClient(cfg)
-  // (url, page index within its chain); seeds are page 0. A followed
-  // next-link is PREPENDED so a chain's pages stay contiguous and
-  // ordered in the output even with several seeds in one partition.
-  private val pending = scala.collection.mutable.ArrayDeque.from(
-    urls.map(u => (u, 0)))
+  private val pending = urls.iterator
   private var current: HttpFetch.Result = _
 
-  // Jackson rides Spark's own classpath — no extra dependency. The
-  // next-link is read from the body at a dot-separated path (e.g.
-  // "next" or "meta.next_url"); absent / null / non-text ends the chain.
-  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private def nextLink(body: String): Option[String] =
-    cfg.paginateNextField.flatMap { path =>
-      try {
-        val node = path.split('.')
-          .foldLeft(mapper.readTree(body))((n, f) => n.path(f))
-        if (node.isTextual && node.asText.nonEmpty) Some(node.asText) else None
-      } catch { case _: Throwable => None }
-    }
-
   override def next(): Boolean =
-    if (pending.isEmpty) false
-    else {
-      val (u, page) = pending.removeHead()
-      current = HttpFetch.fetch(client, u, cfg)
-      if (page + 1 < cfg.maxPages)
-        nextLink(current.body).foreach { n =>
-          // relative next-links resolve against the page that served them
-          val resolved = java.net.URI.create(u).resolve(n).toString
-          pending.prepend((resolved, page + 1))
-        }
+    pending.hasNext && {
+      current = HttpFetch.fetch(client, pending.next(), cfg)
       true
     }
 

@@ -16,7 +16,10 @@ import scala.jdk.CollectionConverters._
   *    plus 429/503 — the standard transient statuses real APIs emit;
   *  - linear backoff `backoffMs * attempt`, raised to the server's
   *    `Retry-After` (delta-seconds) when present, capped at `timeoutMs`;
-  *  - per-request timeout.
+  *  - per-request timeout;
+  *  - a final status >= 400 outside `acceptStatusCodes` throws
+  *    (`raise_for_status`), failing the task;
+  *  - GET, or POST with a `body` (the form post); other methods throw.
   *
   * Pure JDK (`java.net.http.HttpClient`) — no extra dependencies.
   */
@@ -33,22 +36,7 @@ object HttpFetch {
       timeoutMs: Long = 20000L,
       followRedirects: Boolean = true,
       cookieSession: Boolean = false,
-      acceptStatusCodes: Set[Int] = Set.empty,
-      failOnHttpError: Boolean = true,
-      // pagination: after each response, follow the URL found at this
-      // (dot-separated) JSON body path until absent/null or maxPages
-      paginateNextField: Option[String] = None,
-      maxPages: Int = 1000,
-      // per-host politeness for the numPartitions fleet shape: requests
-      // to the same authority (host:port) are spaced to at most
-      // `maxRequestsPerSecond` and at most `maxInFlight` concurrent,
-      // ACROSS partitions within this JVM (each executor enforces its
-      // own budget — on an N-executor cluster set rate/N per executor;
-      // a cluster-global limiter would need external coordination).
-      // 0 = unlimited. Retries count as requests (each attempt is
-      // throttled), matching what a rate-limited API actually sees.
-      maxRequestsPerSecond: Double = 0.0,
-      maxInFlight: Int = 0)
+      acceptStatusCodes: Set[Int] = Set.empty)
 
   /** @param elapsedMs  response time of the FINAL attempt only (matches the
     *                    reference's per-request elapsed — backoff sleeps and
@@ -83,16 +71,14 @@ object HttpFetch {
     cfg.method.toUpperCase match {
       case "GET" => b.GET()
       case "POST" => b.POST(HttpRequest.BodyPublishers.ofString(cfg.body.getOrElse("")))
-      case "PUT" => b.PUT(HttpRequest.BodyPublishers.ofString(cfg.body.getOrElse("")))
-      case "DELETE" => b.DELETE()
       case m => throw new IllegalArgumentException(s"unsupported method: $m")
     }
     b.build()
   }
 
   /** One URL through the retry policy. Throws after exhausting retries on
-    * network errors; HTTP error statuses throw only when `failOnHttpError`
-    * and not accepted (S6 tolerated-4xx semantics). */
+    * network errors, and on a final status >= 400 that is not in
+    * `acceptStatusCodes` (S6 tolerated-4xx semantics). */
   def fetch(client: HttpClient, url: String, cfg: Config): Result = {
     val req = buildRequest(url, cfg)
     var attempt = 1
@@ -101,16 +87,11 @@ object HttpFetch {
     var attemptMs = 0.0 // latency of the final attempt alone (no backoff)
     var done = false
     while (!done) {
-      // elapsedMs times the SEND alone — throttle queueing/pacing waits
-      // are excluded (the documented per-request contract: server
-      // latency, not politeness delay); totalMs still covers everything
+      val a0 = System.nanoTime()
       last =
-        try Right(HostThrottle.throttled(url, cfg) {
-          val a0 = System.nanoTime()
-          try client.send(req, HttpResponse.BodyHandlers.ofString())
-          finally attemptMs = (System.nanoTime() - a0) / 1e6
-        })
+        try Right(client.send(req, HttpResponse.BodyHandlers.ofString()))
         catch { case e: java.io.IOException => Left(e) }
+        finally attemptMs = (System.nanoTime() - a0) / 1e6
       val retryable = last match {
         case Left(_) => true
         // 403 per the reference; 429/503 are the standard transient
@@ -143,7 +124,7 @@ object HttpFetch {
           s"$url failed after $attempt attempts: ${e.getMessage}", e)
       case Right(r) =>
         val sc = r.statusCode
-        if (cfg.failOnHttpError && sc >= 400 && !cfg.acceptStatusCodes.contains(sc))
+        if (sc >= 400 && !cfg.acceptStatusCodes.contains(sc))
           throw new java.io.IOException(
             s"$url returned HTTP $sc after $attempt attempts")
         val hdrs = r.headers().map().asScala.map {
@@ -151,99 +132,5 @@ object HttpFetch {
         }.toMap
         Result(url, sc, r.body(), hdrs, attemptMs, attempt, totalMs)
     }
-  }
-}
-
-/** Per-host (authority = host:port) request throttle shared by every
-  * partition reader in this JVM — the politeness layer the fleet shape
-  * (`numPartitions=N` on one API) needs: without it N tasks hammer the
-  * host with N concurrent request streams and get rate-limited into the
-  * retry path. Two independent budgets, both optional:
-  *
-  *  - `maxRequestsPerSecond`: request STARTS are spaced at least
-  *    1/rate apart per authority, fleet-wide in this JVM, via an atomic
-  *    next-free-slot clock (lock-free; sleeping happens outside the CAS
-  *    so contending tasks don't serialize on a monitor);
-  *  - `maxInFlight`: a per-authority semaphore bounds concurrent
-  *    requests (the first-seen limit wins for an authority — mixing
-  *    different limits for one host in one session is a config error).
-  *
-  * JVM-scoped by design: each executor enforces its own budget with no
-  * cross-executor chatter (set rate/numExecutors per executor for a
-  * cluster-global target). State is keyed by authority, so two stub
-  * servers on different ports never throttle each other. */
-private[graft] object HostThrottle {
-  // BOTH limits are pinned first-seen (ADVICE r9: rate was read
-  // per-call while in-flight was pinned — mixed configs for one host
-  // got half-applied semantics; now one rule, one warning, covers both)
-  private final class State(val maxInFlight: Int, val ratePerSec: Double) {
-    val sem: java.util.concurrent.Semaphore =
-      if (maxInFlight > 0) new java.util.concurrent.Semaphore(maxInFlight)
-      else null
-    // next allowed request start, in nanoTime coordinates; MinValue
-    // means "no request yet" (nanoTime's origin is arbitrary and may be
-    // negative, so 0 is not a safe sentinel)
-    val nextFree = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-  }
-  private val states =
-    new java.util.concurrent.ConcurrentHashMap[String, State]()
-
-  // authorities whose later reads asked for a DIFFERENT maxInFlight than
-  // the cached first-seen semaphore — warned once, loudly, instead of
-  // silently ignoring the new limit for the JVM's lifetime
-  private val limitMismatchWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def throttled[T](url: String, cfg: HttpFetch.Config)(f: => T): T = {
-    val auth = Option(URI.create(url).getAuthority).getOrElse(url)
-    // an unthrottled Config does NOT bypass an authority's pinned limits:
-    // once any read has throttled a host, every later call in the JVM
-    // flows through that state (and warns of its differing config below)
-    // — otherwise one unconfigured reader would unpace a host that
-    // another reader promised to protect. Only a host NO config has ever
-    // limited skips the machinery entirely.
-    if (cfg.maxRequestsPerSecond <= 0 && cfg.maxInFlight <= 0 &&
-        !states.containsKey(auth)) return f
-    val st = states.computeIfAbsent(auth,
-      _ => new State(cfg.maxInFlight, cfg.maxRequestsPerSecond))
-    if ((st.maxInFlight != cfg.maxInFlight ||
-        st.ratePerSec != cfg.maxRequestsPerSecond) &&
-        limitMismatchWarned.add(auth))
-      System.err.println(
-        s"[http] WARNING: $auth already throttled with maxInFlight=" +
-          s"${st.maxInFlight}, rate=${st.ratePerSec}/s; this read's " +
-          s"maxInFlight=${cfg.maxInFlight}, " +
-          s"rate=${cfg.maxRequestsPerSecond}/s is IGNORED " +
-          "(first-seen limits win per authority per JVM)")
-    if (st.sem != null) st.sem.acquire()
-    try {
-      if (st.ratePerSec > 0) {
-        val interval = (1e9 / st.ratePerSec).toLong
-        // claim the next start slot atomically, then sleep until it
-        var slot = 0L
-        var claimed = false
-        while (!claimed) {
-          val prev = st.nextFree.get()
-          val now = System.nanoTime()
-          slot = if (prev == Long.MinValue) now else math.max(prev, now)
-          claimed = st.nextFree.compareAndSet(prev, slot + interval)
-        }
-        var wait = slot - System.nanoTime()
-        while (wait > 0) {
-          java.util.concurrent.locks.LockSupport.parkNanos(wait)
-          wait = slot - System.nanoTime()
-        }
-      }
-      f
-    } finally if (st.sem != null) st.sem.release()
-  }
-
-  /** Test hook: observed in-flight ceiling would need instrumentation in
-    * the caller; what the spec needs is a reset between scenarios so a
-    * prior test's pacing clock never delays the next. The warned set
-    * resets too — a re-created authority must re-warn (ADVICE r9). */
-  private[graft] def reset(): Unit = {
-    states.clear()
-    limitMismatchWarned.clear()
   }
 }

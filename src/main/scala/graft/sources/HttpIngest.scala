@@ -47,23 +47,17 @@ object HttpIngest {
       StructField("_type", StringType),
       StructField("title", StringType)))))))
 
-  /** P12 core — `.//slide` → rows of (type attr, title child) over a `body`
-    * column, http_client.py:130-132, on Spark 4 native from_xml. */
-  private def slidesOf(df: DataFrame, keep: Seq[org.apache.spark.sql.Column]): DataFrame =
-    df.select(keep :+
-        from_xml(col("body"), slideSchema, Map.empty[String, String].asJava).as("doc"): _*)
-      .select(keep :+ explode(col("doc.slide")).as("s"): _*)
-      .select(keep ++ Seq(col("s._type").as("slide_type"), col("s.title").as("title")): _*)
-
-  /** P12 — XML slide extraction from a URL fetch. */
-  def extractXmlSlides(spark: SparkSession, url: String): DataFrame =
-    slidesOf(read(spark, Seq(url), Map.empty), Seq(col("url")))
-
-  /** P12 over an in-hand body: the stage-[1] CLI persists the raw body AND
-    * prints the parse from ONE fetch (http_client.py:126-136). */
+  /** P12 — `.//slide` → rows of (type attr, title child) over an in-hand
+    * body, http_client.py:130-132, on Spark 4 native from_xml: the
+    * stage-[1] CLI persists the raw body AND prints the parse from ONE
+    * fetch (http_client.py:126-136). */
   def xmlSlidesOfBody(spark: SparkSession, body: String): DataFrame = {
     import spark.implicits._
-    slidesOf(Seq(body).toDF("body"), Seq.empty)
+    Seq(body).toDF("body")
+      .select(from_xml(col("body"), slideSchema,
+        java.util.Collections.emptyMap[String, String]()).as("doc"))
+      .select(explode(col("doc.slide")).as("s"))
+      .select(col("s._type").as("slide_type"), col("s.title").as("title"))
   }
 
   /** P13 — HTML title extraction chain: <title> → first <h1> → SIN_TITULO
@@ -95,12 +89,4 @@ object HttpIngest {
     read(spark, Seq(url), Map("followRedirects" -> "true"))
       .select(col("url"), col("status_code"),
         get_json_object(col("body"), "$.args").as("final_args"))
-
-  private implicit class MapOps(m: Map[String, String]) {
-    def asJava: java.util.Map[String, String] = {
-      val jm = new java.util.HashMap[String, String]()
-      m.foreach { case (k, v) => jm.put(k, v) }
-      jm
-    }
-  }
 }

@@ -178,4 +178,14 @@ class BenchSpec extends AnyFunSuite {
       "contended") == JNull)
     assert((parse(text(Bench.historyLine("t", a, "prodcold"))) \ "contended") == JNull)
   }
+
+  test("utf8Stdout prints a line with a non-ASCII sf path as UTF-8 bytes") {
+    val a = audit(None, None).copy(sf = "/datos/año/sf0.01_ñ")
+    val line = Bench.miniLine("total", a, Seq("q01" -> 1.0), "/d.json")
+    assert(line.contains("año/sf0.01_ñ"), line)
+    val buf = new java.io.ByteArrayOutputStream()
+    graft.cli.CliUtil.utf8Stdout(buf)(println(line))
+    assert(new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8) ==
+      line + System.lineSeparator())
+  }
 }

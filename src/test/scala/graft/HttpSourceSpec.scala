@@ -7,7 +7,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.{col, get_json_object}
 
 /** DSv2 http connector tests against a local stub replaying the httpbin.org
   * response shapes the reference consumes (FIXTURES.md §3). No egress. */
@@ -18,10 +17,7 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var base: String = _
   private val status403Hits = new AtomicInteger(0)
   private val flaky403Hits = new AtomicInteger(0)
-  private val throttleTimes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
   private val rateLimitedTimes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-  private val inflightNow = new AtomicInteger(0)
-  private val inflightMax = new AtomicInteger(0)
   private val retrySetHits = new AtomicInteger(0)
   private val retryFailHits = new AtomicInteger(0)
   private val retryCookieSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -100,30 +96,11 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.mkString(", ") + "}"
       reply(ex, 200, s"""{"form": $form}""")
     })
-    server.createContext("/paged", (ex: HttpExchange) => {
-      val i = Option(ex.getRequestURI.getQuery).getOrElse("i=0")
-        .split("&").collectFirst { case kv if kv.startsWith("i=") =>
-          kv.drop(2).toInt }.getOrElse(0)
-      // pages 0..3; the last page has next: null; links are RELATIVE
-      val next = if (i < 3) s""""/paged?i=${i + 1}"""" else "null"
-      reply(ex, 200, s"""{"page": $i, "next": $next}""")
-    })
     server.createContext("/rate-limited", (ex: HttpExchange) => {
       rateLimitedTimes.add(System.nanoTime())
       if (rateLimitedTimes.size() <= 2)
         reply(ex, 429, "", Map("Retry-After" -> "1"))
       else reply(ex, 200, """{"ok": true}""")
-    })
-    server.createContext("/throttle", (ex: HttpExchange) => {
-      throttleTimes.add(System.nanoTime())
-      reply(ex, 200, """{"ok": true}""")
-    })
-    server.createContext("/slow", (ex: HttpExchange) => {
-      val now = inflightNow.incrementAndGet()
-      inflightMax.accumulateAndGet(now, math.max)
-      Thread.sleep(150)
-      inflightNow.decrementAndGet()
-      reply(ex, 200, """{"ok": true}""")
     })
     server.createContext("/redirect-to", (ex: HttpExchange) => {
       val target = Option(ex.getRequestURI.getQuery).getOrElse("url=/get")
@@ -153,8 +130,7 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       else reply(ex, 200, """{"ok": true}""")
     })
     // a real pool: the default (null) executor serializes every handler
-    // on the dispatcher thread, which would make concurrency invisible
-    // to the /slow in-flight tracker
+    // on the dispatcher thread, and stage [1] sends its tasks concurrently
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
     server.start()
     base = s"http://127.0.0.1:${server.getAddress.getPort}"
@@ -213,8 +189,10 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("P12 XML slide extraction via from_xml") {
-    val rows = graft.sources.HttpIngest.extractXmlSlides(spark, s"$base/xml")
-      .collect()
+    // the stage-[1] path: one fetch, then the parse of its body
+    val body = graft.sources.HttpIngest.read(spark, Seq(s"$base/xml"), Map.empty)
+      .collect().head.getAs[String]("body")
+    val rows = graft.sources.HttpIngest.xmlSlidesOfBody(spark, body).collect()
     assert(rows.map(_.getAs[String]("title")).toSeq == Seq("Wake up", "Overview"))
     assert(rows.forall(_.getAs[String]("slide_type") == "all"))
   }
@@ -303,48 +281,6 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() == 3)
   }
 
-  test("numPartitions slices the url list contiguously across tasks") {
-    val urls = (1 to 5).map(i => s"$base/get?a=$i")
-    val df = graft.sources.HttpIngest.read(spark, urls,
-      Map("numPartitions" -> "2"))
-    assert(df.rdd.getNumPartitions == 2)
-    // ceil-sized contiguous slices: [1,2,3] and [4,5] — every url fetched
-    // exactly once, slice order = list order within each partition
-    val byPart = df.rdd.mapPartitionsWithIndex { (i, rows) =>
-      rows.map(r => (i, r.getAs[String]("url"))) }.collect()
-    assert(byPart.length == 5)
-    assert(byPart.filter(_._1 == 0).map(_._2).toSeq ==
-      urls.take(3), byPart.toSeq.toString)
-    assert(byPart.filter(_._1 == 1).map(_._2).toSeq ==
-      urls.drop(3), byPart.toSeq.toString)
-    // more partitions than urls degrades to one url per task, not empties
-    val wide = graft.sources.HttpIngest.read(spark, urls.take(2),
-      Map("numPartitions" -> "8"))
-    assert(wide.rdd.getNumPartitions == 2)
-    assert(wide.count() == 2)
-  }
-
-  test("pagination follows relative next-links in order, bounded by maxPages") {
-    val df = graft.sources.HttpIngest.read(spark, Seq(s"$base/paged?i=0"),
-      Map("paginateNextField" -> "next"))
-    val pages = df.select(get_json_object(col("body"), "$.page").cast("int"))
-      .collect().map(_.getInt(0)).toSeq
-    // the chain ran in one task, in order, to the null terminator
-    assert(pages == Seq(0, 1, 2, 3), pages.toString)
-    // maxPages truncates the chain
-    val capped = graft.sources.HttpIngest.read(spark, Seq(s"$base/paged?i=0"),
-      Map("paginateNextField" -> "next", "maxPages" -> "2"))
-    assert(capped.count() == 2)
-    // two seeds = two chains; chains stay contiguous per partition
-    val sharded = graft.sources.HttpIngest.read(spark,
-      Seq(s"$base/paged?i=0", s"$base/paged?i=2"),
-      Map("paginateNextField" -> "next", "numPartitions" -> "2"))
-    val byPart = sharded.rdd.mapPartitionsWithIndex { (i, rows) =>
-      rows.map(r => (i, r.getAs[String]("body"))) }.collect()
-    assert(byPart.count(_._1 == 0) == 4) // chain 0..3
-    assert(byPart.count(_._1 == 1) == 2) // chain 2..3
-  }
-
   test("429 retried honoring Retry-After: succeeds on attempt 3, spaced >= 1s") {
     rateLimitedTimes.clear()
     val r = graft.sources.HttpIngest.read(spark,
@@ -364,89 +300,6 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert((p(1) - p(0)) / 1e6 >= 950.0,
         s"attempt gap ${(p(1) - p(0)) / 1e6} ms ignored Retry-After")
     }
-  }
-
-  test("maxRequestsPerSecond paces the numPartitions fleet per host") {
-    graft.sources.HostThrottle.reset()
-    throttleTimes.clear()
-    val urls = (1 to 12).map(i => s"$base/throttle?i=$i")
-    val df = graft.sources.HttpIngest.read(spark, urls,
-      Map("numPartitions" -> "8", "maxRequestsPerSecond" -> "20"))
-    assert(df.count() == 12)
-    // server-side ARRIVAL times: client starts are spaced 50 ms; allow
-    // localhost delivery jitter on individual gaps, and pin the
-    // aggregate pace tightly (11 gaps x 50 ms nominal)
-    val ts = {
-      val it = throttleTimes.iterator(); val b = Seq.newBuilder[Long]
-      while (it.hasNext) b += it.next(); b.result().sorted
-    }
-    assert(ts.size == 12, s"expected 12 requests, saw ${ts.size}")
-    // the load-robust signal is the aggregate span (client STARTS are
-    // paced 50 ms; arrival jitter under a parallel test suite can
-    // compress individual gaps, so per-gap floors flake) — plus a sanity
-    // check that no two arrivals are simultaneous
-    val gaps = ts.sliding(2).map(p => (p(1) - p(0)) / 1e6).toSeq
-    assert(gaps.count(_ < 5.0) <= 1, s"near-simultaneous arrivals: $gaps")
-    assert((ts.last - ts.head) / 1e6 >= 11 * 50 * 0.8,
-      s"total span ${(ts.last - ts.head) / 1e6} ms too fast for 20 rps")
-  }
-
-  test("maxInFlight bounds fleet concurrency per host") {
-    graft.sources.HostThrottle.reset()
-    inflightNow.set(0); inflightMax.set(0)
-    val urls = (1 to 8).map(i => s"$base/slow?i=$i")
-    val df = graft.sources.HttpIngest.read(spark, urls,
-      Map("numPartitions" -> "8", "maxInFlight" -> "2"))
-    assert(df.count() == 8)
-    assert(inflightMax.get() <= 2, s"peak in-flight ${inflightMax.get()} > 2")
-    // control: the same 8-task fleet WITHOUT the cap demonstrably
-    // overlaps (each handler holds 150 ms), so the cap above was load-bearing
-    graft.sources.HostThrottle.reset()
-    inflightMax.set(0)
-    val un = graft.sources.HttpIngest.read(spark,
-      urls.map(_ + "&b=2"), Map("numPartitions" -> "8"))
-    assert(un.count() == 8)
-    // the capped assertion above is the spec; this control shows the
-    // fleet overlaps at all without the cap (>= 2 — under a loaded
-    // parallel suite task launches can partially serialize, so a >= 3
-    // floor flakes even though idle runs reach 8)
-    assert(inflightMax.get() >= 2,
-      s"uncapped fleet never overlapped: peak ${inflightMax.get()}")
-  }
-
-  test("an unthrottled read cannot bypass a host's pinned limits") {
-    // first-seen limits win per authority — INCLUDING against a later
-    // read that configures no limits at all: once any reader promised
-    // the host maxInFlight=2, an unconfigured reader in the same JVM
-    // must flow through the same semaphore, not unpace the host
-    graft.sources.HostThrottle.reset()
-    inflightNow.set(0); inflightMax.set(0)
-    val pin = graft.sources.HttpIngest.read(spark,
-      (1 to 4).map(i => s"$base/slow?i=$i&c=1"),
-      Map("numPartitions" -> "4", "maxInFlight" -> "2"))
-    assert(pin.count() == 4)
-    inflightMax.set(0)
-    val free = graft.sources.HttpIngest.read(spark,
-      (1 to 8).map(i => s"$base/slow?i=$i&c=2"),
-      Map("numPartitions" -> "8")) // no limits configured
-    assert(free.count() == 8)
-    assert(inflightMax.get() <= 2,
-      s"unthrottled read bypassed the pinned cap: peak ${inflightMax.get()}")
-  }
-
-  test("numPartitions + cookieSession: each slice is its own ordered session") {
-    // two independent set→read chains, each contiguous in the list; with
-    // numPartitions=2 each chain runs in its own task with its own
-    // CookieManager, and BOTH reads must see the cookie their slice set
-    val urls = Seq(s"$base/cookies/set", s"$base/cookies",
-      s"$base/cookies/set", s"$base/cookies")
-    val df = graft.sources.HttpIngest.read(spark, urls,
-      Map("numPartitions" -> "2", "cookieSession" -> "true"))
-    assert(df.rdd.getNumPartitions == 2)
-    val sessions = df.filter(col("url") === s"$base/cookies")
-      .select(get_json_object(col("body"), "$.cookies.session").as("s"))
-      .collect().map(_.getString(0)).toSeq
-    assert(sessions == Seq("activa", "activa"), sessions.toString)
   }
 
   test("task retry: session slice re-runs from scratch, no duplicate rows (VERDICT r13 #5)") {

@@ -14,12 +14,14 @@ QUERIES="q12_join_revenue,q94_copurchase_pagerank,q133_funnel_stream_replay"
 export SPARK_SCALA_VERSION=2.13
 export SPARK_GRAFT_MASTER="${SPARK_GRAFT_MASTER:-local-cluster[2,8,8192]}"
 export SPARK_GRAFT_JARS="$(ls target/scala-2.13/*.jar | head -1)"
+WORK="$(mktemp -d /tmp/graft_chaos.XXXXXX)"
+trap 'rm -rf "$WORK"' EXIT
 results=()
 for i in $(seq 1 "$RUNS"); do
   echo "=== chaos run $i/$RUNS ==="
-  tools/run_main.sh graft.tools.ChaosKillProbe "$SF" "/tmp/chaos_run$i.json" \
+  tools/run_main.sh graft.tools.ChaosKillProbe "$SF" "$WORK/run$i.json" \
     "$QUERIES" 2>&1 | grep -E '^\[chaos\]' >&2 || true
-  LINE="$(cat "/tmp/chaos_run$i.json")"
+  LINE="$(cat "$WORK/run$i.json")"
   echo "$LINE"
   python3 - "$LINE" <<'EOF'
 import json, sys
