@@ -67,7 +67,15 @@ object CliUtil {
     * internal clone. With isolation on, each of them would recompile the
     * same classes and run them cold. The engine adds no session artifacts
     * (`spark.jars` is context-wide), so one shared class loader loses
-    * nothing, and every session shares one codegen cache per JVM. */
+    * nothing, and every session shares one codegen cache per JVM.
+    *
+    * Streaming checkpoints go through
+    * [[graft.streaming.LocalCheckpointFileManager]]. Without the native
+    * libhadoop, Spark's default manager starts one shell process (`chmod`,
+    * `readlink`) per checkpoint file or more, and on a small micro-batch
+    * those process starts cost more than the batch's compute. The manager
+    * writes `file:` checkpoints with java.nio and delegates every other
+    * scheme to Spark's default manager. */
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -75,6 +83,8 @@ object CliUtil {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
   def session(name: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

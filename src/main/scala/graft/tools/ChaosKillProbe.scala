@@ -64,7 +64,7 @@ object ChaosKillProbe {
       .config("spark.jars", sys.env("SPARK_GRAFT_JARS"))
       .config("spark.executor.extraJavaOptions", addOpens)
       .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "8g"))
+        executorMemory(master, sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")))
       // default 4 task failures / 4 stage attempts tolerate one murder;
       // what must NOT be raised is anything masking nondeterminism
       .getOrCreate()
@@ -144,6 +144,18 @@ object ChaosKillProbe {
       (line + "\n").getBytes("UTF-8"))
     spark.stop()
   }
+
+  /** `SPARK_GRAFT_EXECUTOR_MEM` if set, else the worker memory of a
+    * `local-cluster[workers,cores,MiB]` master: standalone refuses to
+    * start an executor bigger than its worker. */
+  private[graft] def executorMemory(master: String, env: Option[String]): String =
+    env.getOrElse {
+      val workerMiB = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
+      master match {
+        case workerMiB(mib) => s"${mib}m"
+        case _ => "8g"
+      }
+    }
 
   /** One gate run: per query, the healthy and chaos seconds, whether the
     * kill landed mid-query, whether the rows matched, and the attempts —

@@ -131,6 +131,13 @@ class BenchSpec extends AnyFunSuite {
       """"chaos_sec":5.68,"kill_mid_query":true,"identical":true,"attempts":2}]}"""))
   }
 
+  test("ChaosKillProbe sizes executors to the local-cluster worker unless told") {
+    import graft.tools.ChaosKillProbe.executorMemory
+    assert(executorMemory("local-cluster[2,2,2048]", None) == "2048m")
+    assert(executorMemory("local-cluster[2, 8, 8192]", None) == "8192m")
+    assert(executorMemory("local-cluster[2,2,2048]", Some("1536m")) == "1536m")
+  }
+
   test("provenanceJson keeps its text for derived, prebuilt and waited stages") {
     import graft.operators.Staging
     Staging.resetProvenance()

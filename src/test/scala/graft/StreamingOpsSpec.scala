@@ -650,4 +650,207 @@ class StreamingOpsSpec extends AnyFunSuite {
         Set("L1-hot", "R1-hot"))
     } finally sq.stop()
   }
+
+  // ---- the checkpoint file manager (graft.streaming.LocalCheckpointFileManager)
+
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** A session whose streaming queries checkpoint through Spark's default
+    * manager, which writes `.crc` sidecars and starts a process per file
+    * when libhadoop is missing. */
+  private def sparkDefaultManagerSession() = {
+    val s = spark.newSession()
+    s.conf.set(managerKey, classOf[org.apache.spark.sql.execution.streaming
+      .checkpointing.FileContextBasedCheckpointFileManager].getName)
+    s
+  }
+
+  private type LogRow = (String, String, String, String, String)
+
+  /** Writes each element of `files` into `dir` as one JSON-lines bitácora
+    * file, numbered from `first` and one second newer than the last, so a
+    * file source reads them in this order. */
+  private def writeLogFiles(dir: java.nio.file.Path, first: Int,
+      files: Seq[Seq[LogRow]]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val t0 = System.currentTimeMillis() - 600000L
+    java.nio.file.Files.createDirectories(dir)
+    files.zipWithIndex.foreach { case (rows, i) =>
+      val f = dir.resolve(f"log-${first + i}%02d.json")
+      java.nio.file.Files.write(f, rows.map { case (t, e, s, ms, p) =>
+        s"""{"timestamp_utc":"$t","endpoint":"$e","status_code":"$s",""" +
+          s""""elapsed_ms":"$ms","parse_result":"$p"}"""
+      }.asJava)
+      java.nio.file.Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + (first + i) * 1000L))
+    }
+  }
+
+  test("checkpoint file manager: createAtomic keeps an existing target unless " +
+      "overwriting, and cancel leaves no file") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
+    import graft.streaming.LocalCheckpointFileManager
+    assert(spark.conf.get(managerKey) == classOf[LocalCheckpointFileManager].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_fm")
+    val base = new Path(dir.toUri)
+    val fm = new LocalCheckpointFileManager(base, spark.sparkContext.hadoopConfiguration)
+    assert(fm.isLocal)
+    def file(name: String) = new Path(base, name)
+    def write(p: Path, text: String, overwrite: Boolean,
+        m: CheckpointFileManager = fm): Unit = {
+      val out = m.createAtomic(p, overwriteIfPossible = overwrite)
+      try { out.write(text.getBytes("UTF-8")); out.close() }
+      catch { case e: Throwable => out.cancel(); throw e }
+    }
+    def read(p: Path): String = {
+      val in = fm.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    def names: Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val l = java.nio.file.Files.list(dir)
+      try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+    }
+
+    write(file("0"), "old", overwrite = false)
+    assert(names == Set("0"), s"no Hadoop .crc sidecar: $names")
+    intercept[FileAlreadyExistsException](write(file("0"), "new", overwrite = false))
+    assert(read(file("0")) == "old")
+    write(file("0"), "new", overwrite = true)
+    assert(read(file("0")) == "new")
+
+    // over a file Spark's default manager wrote: its .crc sidecar holds
+    // the old bytes' checksums and must not fail the read of the new ones
+    write(file("1"), "spark's", overwrite = false,
+      new FileContextBasedCheckpointFileManager(base, spark.sparkContext.hadoopConfiguration))
+    assert(names.contains(".1.crc"))
+    write(file("1"), "replaced", overwrite = true)
+    assert(read(file("1")) == "replaced")
+
+    val before = names
+    val cancelled = fm.createAtomic(file("2"), overwriteIfPossible = false)
+    cancelled.write("lost".getBytes("UTF-8"))
+    cancelled.cancel()
+    assert(names == before, s"cancel left ${names -- before}")
+    assert(!fm.exists(file("2")))
+  }
+
+  test("checkpoint file manager: a checkpoint with Hadoop .crc sidecars " +
+      "resumes, and the KPI equals the batch KPI on every closed day") {
+    import java.nio.file.Files
+    import graft.ops.Kpi
+    import graft.streaming.StreamingKpi
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.streaming.Trigger
+    val work = Files.createTempDirectory("graft_ckpt_resume")
+    val logDir = work.resolve("log")
+    val ckpt = work.resolve("ckpt")
+    val out = work.resolve("out").toString
+    def run(session: SparkSession): Unit = {
+      val q = StreamingKpi.kpiStream(StreamingKpi.normalizedStream(
+          session.readStream.schema(Kpi.bitacoraSchema)
+            .option("maxFilesPerTrigger", 1).json(logDir.toString)))
+        .writeStream.format("parquet").outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .option("path", out).option("checkpointLocation", ckpt.toString).start()
+      try q.awaitTermination() finally q.stop()
+    }
+    def offsets(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val l = Files.list(ckpt.resolve("offsets"))
+      try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+    }
+    // 2026-08-11 has rows on both sides of the restart, so its window
+    // state written with .crc sidecars is read back by the resumed query
+    val files: Seq[Seq[LogRow]] = Seq(
+      Seq(
+        ("2026-08-10T01:00:00Z", "/get?a=1", "200", "100", "ok"),
+        ("2026-08-10T02:00:00Z", "/status/404", "404", "12.25", "ok"),
+        ("2026-08-10T03:00:00Z", "/xml", "abc", "7.5", "ok")),
+      Seq(
+        ("2026-08-10T20:00:00Z", "/get", "500", "300", "ok"),
+        ("2026-08-11T01:00:00Z", "/get", "200", "33.3", "error"),
+        ("2026-08-11T02:00:00Z", "/xml", "200", "xx", "ok")),
+      Seq(
+        ("2026-08-11T05:00:00Z", "/get", "302", "0.01", "ok"),
+        ("2026-08-11T06:00:00Z", "/basic-auth/u/p", "401", "250.5", "ok"),
+        ("2026-08-12T04:00:00Z", "/get", "200", "1000", "ok")),
+      // moves the 1-hour watermark past 2026-08-13T00:00, closing the
+      // three earlier days; its own day stays open
+      Seq(("2026-08-13T02:00:00Z", "/get", "200", "1", "ok")))
+
+    writeLogFiles(logDir, 0, files.take(2))
+    run(sparkDefaultManagerSession())
+    val before = offsets()
+    assert(before.contains(".1.crc"), s"Spark's default manager left no .crc: $before")
+    writeLogFiles(logDir, 2, files.drop(2))
+    run(spark)
+    val resumed = offsets().filter(_.forall(_.isDigit)) -- before
+    assert(resumed.nonEmpty, "the restarted query committed no batch")
+    assert(resumed.forall(n => !offsets().contains(s".$n.crc")),
+      s"the resumed batches $resumed wrote .crc sidecars")
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(Kpi.kpiColumns.map(col): _*).collect().map(_.toString).sorted.toSeq
+    val stream = rows(spark.read.parquet(out))
+    val batch = rows(Kpi.bitacoraKpi(files.flatten.toDF(Kpi.bitacoraSchema.fieldNames: _*),
+      crossEngineExact = true).filter($"date_utc" < to_date(lit("2026-08-13"))))
+    assert(batch.map(_.split(",")(0)).distinct == Seq(
+      "[2026-08-10", "[2026-08-11", "[2026-08-12"))
+    assert(stream == batch, s"\nstream=$stream\n batch=$batch")
+  }
+
+  test("checkpointing a 4-micro-batch streaming KPI replay starts no OS process") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import graft.ops.Kpi
+    import graft.streaming.StreamingKpi
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.streaming.Trigger
+    val work = Files.createTempDirectory("graft_ckpt_jfr")
+    val logDir = work.resolve("log").toString
+    writeLogFiles(work.resolve("log"), 0, (0 until 6).map(i => Seq(
+      (f"2026-08-${10 + i}%02dT01:00:00Z", "/get", "200", s"${10 + i}", "ok"),
+      (f"2026-08-${10 + i}%02dT02:00:00Z", "/status/500", "500", "7.5", "ok"))))
+
+    /** Process starts with a checkpoint-code frame while `session` replays
+      * the log, two files per micro-batch, and the replay's batches. */
+    def processStarts(session: SparkSession, name: String): (Int, Int) = {
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val q = try {
+        val q = StreamingKpi.kpiStream(StreamingKpi.normalizedStream(
+            session.readStream.schema(Kpi.bitacoraSchema)
+              .option("maxFilesPerTrigger", 2).json(logDir)))
+          .writeStream.format("noop").outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", work.resolve(s"ckpt-$name").toString).start()
+        try q.awaitTermination() finally q.stop()
+        q
+      } finally rec.stop()
+      val file = work.resolve(s"$name.jfr")
+      rec.dump(file)
+      rec.close()
+      val starts = RecordingFile.readAllEvents(file).asScala.count { e =>
+        e.getEventType.getName == "jdk.ProcessStart" && e.getStackTrace != null &&
+          e.getStackTrace.getFrames.asScala.exists(
+            _.getMethod.getType.getName.startsWith("org.apache.spark.sql.execution.streaming"))
+      }
+      (starts, q.recentProgress.length)
+    }
+
+    val (starts, batches) = processStarts(spark, "graft")
+    assert(batches == 4)
+    assert(starts == 0, s"checkpoint code started $starts processes")
+    // the measure sees the process starts it exists to catch: without
+    // libhadoop, Spark's default manager forks per checkpoint file
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) {
+      val (sparkStarts, _) = processStarts(sparkDefaultManagerSession(), "spark")
+      assert(sparkStarts > 0)
+    }
+  }
 }

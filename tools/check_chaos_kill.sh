@@ -19,8 +19,15 @@ trap 'rm -rf "$WORK"' EXIT
 results=()
 for i in $(seq 1 "$RUNS"); do
   echo "=== chaos run $i/$RUNS ==="
+  status=0
   tools/run_main.sh graft.tools.ChaosKillProbe "$SF" "$WORK/run$i.json" \
-    "$QUERIES" 2>&1 | grep -E '^\[chaos\]' >&2 || true
+    "$QUERIES" >"$WORK/run$i.log" 2>&1 || status=$?
+  grep -E '^\[chaos\]' "$WORK/run$i.log" >&2 || true
+  if [ ! -s "$WORK/run$i.json" ]; then
+    echo "chaos run $i wrote no result (probe exit $status); its last output:" >&2
+    tail -n 40 "$WORK/run$i.log" >&2
+    exit 1
+  fi
   LINE="$(cat "$WORK/run$i.json")"
   echo "$LINE"
   python3 - "$LINE" <<'EOF'
