@@ -696,6 +696,17 @@ object QueriesGraph {
   // rounds; top-10 per role via TakeOrdered (no single-task window).
   // -------------------------------------------------------------------
   def hitsScores(spark: SparkSession, sfDir: String): DataFrame = {
+    val (custAdj, partAdj) = purchaseAdjacencies(spark, sfDir)
+    val s = operators.Hits.scoresAdj(custAdj, partAdj, rounds = 3)
+    def top(role: String): DataFrame = s.filter(col("role") === role)
+      .orderBy(col("score").desc, col("id")).limit(10)
+    top("auth").unionByName(top("hub"))
+      .orderBy(col("role"), col("score").desc, col("id"))
+  }
+
+  /** q122's staged (customer → parts, part → customers) adjacencies. */
+  private[graft] def purchaseAdjacencies(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
     // the customer→part bipartite edge set is an offline artifact like
     // the co-purchase tables: staged once per corpus (keyed on BOTH
     // inputs), so a cold call pays the orders⋈lineitem join + distinct
@@ -716,11 +727,7 @@ object QueriesGraph {
         keyedOn)(operators.Adjacency.neighbors(edges, "custkey", "partkey"))
     val partAdj = operators.Staging.stagedOrDerive(spark, "purchase_adj_part",
         keyedOn)(operators.Adjacency.neighbors(edges, "partkey", "custkey"))
-    val s = operators.Hits.scoresAdj(custAdj, partAdj, rounds = 3)
-    def top(role: String): DataFrame = s.filter(col("role") === role)
-      .orderBy(col("score").desc, col("id")).limit(10)
-    top("auth").unionByName(top("hub"))
-      .orderBy(col("role"), col("score").desc, col("id"))
+    (custAdj, partAdj)
   }
 
   val hitsScoresSql: String = {
@@ -884,6 +891,23 @@ object QueriesGraph {
   // -------------------------------------------------------------------
   def precedenceScc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
+    val (fwdAdj, bwdAdj) = precedenceAdjacencies(spark, sfDir)
+    // pivot = smallest source part id (same value as min(src) over e)
+    val pivot = operators.LoopCache
+      .pinnedRow(fwdAdj.agg(min(col("id")).as("p"))).getLong(0)
+    val seed = Seq(pivot).toDF("id")
+    val fwd = operators.Bfs.levelsAdj(fwdAdj, seed, "id", rounds = 3)
+    val bwd = operators.Bfs.levelsAdj(bwdAdj, seed, "id", rounds = 3)
+    fwd.as("f").join(bwd.as("b"), col("f.id") === col("b.id"))
+      .select(col("f.id").as("part_id"), col("f.level").as("fwd_level"),
+        col("b.level").as("bwd_level"))
+      .orderBy(col("part_id"))
+  }
+
+  /** q128's staged (forward, backward) precedence adjacencies, as its
+    * sweeps read them. */
+  private[graft] def precedenceAdjacencies(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
     // line-number-ordered precedence edges: staged like the co-purchase
     // tables (one fact-table self-join per corpus, not per cold call),
     // in BOTH adjacency orientations — the FW and BW sweeps each iterate
@@ -907,16 +931,7 @@ object QueriesGraph {
     val bwdAdj = Tables.rebalance(operators.Staging.stagedOrDerive(spark,
         "precedence_adj_bwd", liPath)(
       operators.Adjacency.neighbors(e, "dst", "src")))
-    // pivot = smallest source part id (same value as min(src) over e)
-    val pivot = operators.LoopCache
-      .pinnedRow(fwdAdj.agg(min(col("id")).as("p"))).getLong(0)
-    val seed = Seq(pivot).toDF("id")
-    val fwd = operators.Bfs.levelsAdj(fwdAdj, seed, "id", rounds = 3)
-    val bwd = operators.Bfs.levelsAdj(bwdAdj, seed, "id", rounds = 3)
-    fwd.as("f").join(bwd.as("b"), col("f.id") === col("b.id"))
-      .select(col("f.id").as("part_id"), col("f.level").as("fwd_level"),
-        col("b.level").as("bwd_level"))
-      .orderBy(col("part_id"))
+    (fwdAdj, bwdAdj)
   }
 
   val precedenceSccSql: String = {

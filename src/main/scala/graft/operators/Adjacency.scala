@@ -63,19 +63,20 @@ object Adjacency {
     * (src, outdeg, dsts), hash-partitioned by the per-round join key and
     * sorted, so no round needs an exchange or a sort on this side — only
     * the node-sized table it joins moves. The width comes from the EDGE
-    * volume (Σ outdeg, one node-sized pass); rounds run at that width
+    * volume, Σ size(dsts) (equal to Σ outdeg on every [[directed]]
+    * layout), read by [[FooterCounts]]: from the parquet footers of a
+    * staged layout, else by one aggregate query. Rounds run at that width
     * with static plans (see LoopCache.loopSession for why adaptive
     * re-planning is the wrong default inside a fixed-shape loop), and
     * `others` come back bound to the same loop session. Returns (width,
-    * pinned operand, others). Called inside a memo build, so the volume
-    * read is a plain head(): a warm call never gets here. */
+    * pinned operand, others). */
   private[operators] def pinDirected(adj: DataFrame, others: DataFrame*)
       : (Int, DataFrame, Seq[DataFrame]) = {
     val a0 = adj.select(col("src").cast("long").as("src"),
       col("outdeg").cast("long").as("outdeg"),
       col("dsts").cast("array<long>").as("dsts"))
     val w = LoopCache.loopWidth(adj.sparkSession,
-      a0.agg(coalesce(sum(col("outdeg")), lit(0L))).head().getLong(0))
+      FooterCounts(a0, Some("dsts")).arrayLength)
     val tuned = LoopCache.tunedInputs(w, a0 +: others: _*)
     (w, tuned.head.repartition(w, col("src")).sortWithinPartitions("src")
       .persist(StorageLevel.MEMORY_AND_DISK), tuned.tail)

@@ -66,10 +66,11 @@ object Bfs {
     LoopCache.memo(
       Seq("bfs-adj", LoopCache.planKey(a0), LoopCache.planKey(s0), rounds)) {
       // loop-tuned width + static rounds over a src-partitioned stationary
-      // operand (see LoopCache.loopSession); a plain head(), as a warm
-      // call returns the memo above first
-      val w = LoopCache.loopWidth(adj.sparkSession, a0.agg(coalesce(
-        sum(size(col("nbrs")).cast("long")), lit(0L))).head().getLong(0))
+      // operand (see LoopCache.loopSession); the edge volume comes from a
+      // staged layout's parquet footers, else from one aggregate query
+      // (FooterCounts)
+      val w = LoopCache.loopWidth(adj.sparkSession,
+        FooterCounts(a0, Some("nbrs")).arrayLength)
       val Seq(aT, s0T) = LoopCache.tunedInputs(w, a0, s0)
       val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
         .persist(StorageLevel.MEMORY_AND_DISK)

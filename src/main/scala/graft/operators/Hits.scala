@@ -100,9 +100,9 @@ object Hits {
       // loop-tuned width + static half-rounds over aid-partitioned
       // stationary operands (see LoopCache.loopSession); volume = the
       // larger adjacency's edge count (each half-round explodes one
-      // side). Plain head()s: a warm call returns the memo above first.
-      def edgeCount(a: DataFrame): Long = a.agg(coalesce(
-        sum(size(col("nbrs")).cast("long")), lit(0L))).head().getLong(0)
+      // side), from staged layouts' parquet footers, else from one
+      // aggregate query per side (FooterCounts)
+      def edgeCount(a: DataFrame): Long = FooterCounts(a, Some("nbrs")).arrayLength
       val w = LoopCache.loopWidth(srcAdj.sparkSession,
         math.max(edgeCount(sa0), edgeCount(da0)))
       val Seq(saT, daT) = LoopCache.tunedInputs(w, sa0, da0)

@@ -55,10 +55,10 @@ object LabelPropagation {
     val a0 = adj.select(col("id").cast("long").as("nid"),
       col("nbrs").cast("array<long>").as("nbrs"))
     // loop-tuned width + static rounds over an id-partitioned stationary
-    // operand (see LoopCache.loopSession); a plain head(), as a warm call
-    // returns the memo above first
-    val pairVolume = a0.agg(coalesce(sum(size(col("nbrs")).cast("long")),
-      lit(0L))).head().getLong(0)
+    // operand (see LoopCache.loopSession); the pair volume comes from a
+    // staged layout's parquet footers, else from one aggregate query
+    // (FooterCounts)
+    val pairVolume = FooterCounts(a0, Some("nbrs")).arrayLength
     val w = LoopCache.loopWidth(adj.sparkSession, pairVolume)
     // the PAIR exchange is sized from the pair volume itself, NOT capped
     // at the core count (q120's PairRowsPerTask discipline): each round

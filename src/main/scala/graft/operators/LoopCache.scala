@@ -129,7 +129,10 @@ object LoopCache {
     * inheriting the ambient OLAP width, which at node-sized per-round
     * volumes spends more on task scheduling than on work (measured on
     * 5-round PageRank at sf0.1, 2.39M edges: 8-wide+static is 2.1×
-    * faster production-cold than 32-wide+adaptive). */
+    * faster production-cold than 32-wide+adaptive). Graph loops read
+    * their volume with [[FooterCounts]]: from the parquet footers of a
+    * staged layout with no job, else by one aggregate query over the
+    * operand. */
   def loopWidth(spark: org.apache.spark.sql.SparkSession, volumeRows: Long,
       rowsPerTask: Long = 300000L): Int = {
     val cores = spark.sparkContext.defaultParallelism

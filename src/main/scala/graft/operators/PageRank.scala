@@ -91,9 +91,10 @@ object PageRank {
   /** Resolve the token scale: auto-derive from the mass-holding node
     * count ([[AutoTokens]]), or validate an explicit request — worst-case
     * rank ≈ `massNodes·initTokens`, multiplied by dampNum inside the
-    * iteration, must fit BIGINT. The count costs one pass over the
-    * node-sized node (or seed) table. Returns (initTokens, teleport
-    * share). */
+    * iteration, must fit BIGINT. The node count of a staged node table
+    * comes from its parquet footers ([[FooterCounts]]); any other node
+    * table, and the seed table, costs one count query. Returns (initTokens,
+    * teleport share). */
   private def resolveTokens(initTokens: Long, dampNum: Long, dampDen: Long,
       massNodes: => Long): (Long, Long) = {
     val n = math.max(massNodes, 1L)
@@ -137,7 +138,9 @@ object PageRank {
     * per-edge row is scanned, hashed or joined per round. This is the
     * GraphX-style edge-partition answer, expressed declaratively. The
     * node table's row count is the mass-holding node count the token
-    * scale derives from. */
+    * scale derives from; over the staged tables it and the loop width
+    * come from parquet footers ([[FooterCounts]]), so neither starts a
+    * job, and any other input pays one aggregate query for each. */
   def fixedPointAdj(adj: DataFrame, nodes: DataFrame, iterations: Int = 5,
       initTokens: Long = AutoTokens,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
@@ -152,10 +155,10 @@ object PageRank {
         LoopCache.planKey(nodes), iterations, initTokens, dampNum, dampDen)) {
       val (_, a, Seq(nodeIds)) = Adjacency.pinDirected(adj,
         nodes.select(col("id").cast("long").as("id")))
-      // a plain head(), like the width read: a pinned row would outlive
-      // the call as one more cache entry, and a warm call never gets here
+      // the node count comes from the staged node table's parquet
+      // footers (FooterCounts), else from one count query
       val (initTok, teleport) = resolveTokens(initTokens, dampNum, dampDen,
-        nodeIds.agg(count(lit(1))).head().getLong(0))
+        FooterCounts(nodeIds).rows)
       // The rank table stays SPARSE: it only carries nodes with in-edges.
       // A node absent from it has a known rank — `initTokens` before the
       // first round, exactly `teleport` afterwards (no in-edges ⟹ nothing

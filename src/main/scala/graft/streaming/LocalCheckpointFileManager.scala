@@ -4,7 +4,7 @@ import java.io.BufferedOutputStream
 import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocalFileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileAlreadyExistsException, FileStatus, LocalFileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** The streaming checkpoint file manager of every session
@@ -76,12 +76,19 @@ object LocalCheckpointFileManager {
       * Spark's jars register for `file:`, so an overwrite is a POSIX
       * rename. A `.crc` sidecar of the old bytes goes first: a crash
       * between the two steps then leaves the old bytes unchecked, never
-      * the new bytes against a stale checksum. */
+      * the new bytes against a stale checksum. A non-overwriting rename
+      * onto an existing target deletes its temp file before it fails:
+      * Spark's stream has marked itself closed by then, so the caller's
+      * `cancel()` would leave the temp file behind. */
     override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit =
       if (overwriteIfPossible) {
         Files.deleteIfExists(nio(local.getChecksumFile(dst)))
         Files.move(nio(src), nio(dst), StandardCopyOption.ATOMIC_MOVE)
-      } else super.renameTempFile(src, dst, overwriteIfPossible)
+      } else try super.renameTempFile(src, dst, overwriteIfPossible) catch {
+        case e: FileAlreadyExistsException =>
+          Files.deleteIfExists(nio(src))
+          throw e
+      }
 
     override def createCheckpointDirectory(): Path = {
       val qualified = fs.makeQualified(path)

@@ -161,6 +161,26 @@ class ScaleSpec extends AnyFunSuite {
     LoopCache.clearMemo()
   }
 
+  test("PageRank over the staged tables: the width and the token scale " +
+      "start no Spark job") {
+    // the loop width and the node count come from the staged files'
+    // parquet footers, so a cold call runs only the jobs of its final
+    // (2 here); an aggregate read of either (a head()) adds jobs
+    import graft.operators.{LoopCache, PageRank}
+    import graft.tools.TaskEnvelope
+    val sf = "/root/testdata/sf0.001"
+    val adj = Tables.copurchaseAdjacency(spark, sf)
+    val nodes = Tables.copurchaseNodes(spark, sf)
+    spark.catalog.clearCache()
+    LoopCache.clearMemo()
+    val env = TaskEnvelope.measure(spark) {
+      PageRank.fixedPointAdj(adj, nodes); ()
+    }
+    assert(env.jobs == 2, s"a cold fixedPointAdj ran ${env.jobs} jobs")
+    spark.catalog.clearCache()
+    LoopCache.clearMemo()
+  }
+
   test("selective filters and projections reach the parquet scan") {
     val sf = "/root/testdata/sf0.001"
     val q11 = QueriesRelational.filterRevenue(spark, sf)

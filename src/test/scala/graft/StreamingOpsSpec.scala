@@ -717,6 +717,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(names == Set("0"), s"no Hadoop .crc sidecar: $names")
     intercept[FileAlreadyExistsException](write(file("0"), "new", overwrite = false))
     assert(read(file("0")) == "old")
+    assert(names == Set("0"), s"the failed write left its temp file: $names")
     write(file("0"), "new", overwrite = true)
     assert(read(file("0")) == "new")
 
