@@ -64,19 +64,4 @@ object OracleSql {
     * DuckDB list. */
   def sortedListSql(x: String): String =
     s"list_sort(list($x) FILTER (WHERE $x IS NOT NULL))"
-
-  /** `CAST(CAST(x AS VARCHAR) AS typ)` — the replay of Spark's
-    * double→decimal cast. Spark routes through Java's shortest-string
-    * `Double.toString` and rounds HALF_UP; DuckDB's direct cast rounds
-    * the EXACT binary value — the two differ whenever the shortest repr
-    * sits on a decimal midpoint the exact value is just below (r17:
-    * q50's full-mantissa energy at the sf10 replica flipped one row's
-    * 9-dp rounding, 4e-14 in the group mean). Both engines emit Ryu
-    * shortest-round-trip strings, so the VARCHAR hop reproduces Spark's
-    * input digits and DuckDB's string→decimal rounds them HALF_UP like
-    * Java (verified on five crafted midpoint doubles). Use for any cast
-    * of a FULL-PRECISION double; 2-dp-intended data (elapsed_ms) is
-    * never near a midpoint and may cast directly. */
-  def decimalViaStringSql(x: String, typ: String): String =
-    s"CAST(CAST($x AS VARCHAR) AS $typ)"
 }

@@ -25,16 +25,6 @@ object Tables {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  /** Per-(session, path) memo of raw fixture reads — every bare
-    * `spark.read.parquet` re-lists + re-infers schema with a driver job
-    * per call; memoizing the relation is the catalog-table behavior
-    * (see operators/Staging.readStage for the full argument). */
-  private val rawReadCache = scala.collection.mutable.HashMap
-    .empty[(SparkSession, String), DataFrame]
-  private def readParquet(spark: SparkSession, p: String): DataFrame =
-    rawReadCache.synchronized(
-      rawReadCache.getOrElseUpdate((spark, p), spark.read.parquet(p)))
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, sfDir)
@@ -82,7 +72,7 @@ object Tables {
     val raw = path(sfDir, name)
     if (!relayoutKeys.contains(name) ||
         sys.env.get("SPARK_GRAFT_RELAYOUT").contains("0"))
-      return readParquet(spark, raw)
+      return operators.Staging.readParquet(spark, raw)
     val keys = relayoutKeys(name).map(col)
     // partition count is part of the stage KEY (ADVICE r11): the layout
     // bakes in defaultParallelism, so a low-core session (a local[4]
@@ -119,7 +109,7 @@ object Tables {
 
   private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = readParquet(spark, path(sfDir, "events"))
+    val raw = operators.Staging.readParquet(spark, path(sfDir, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // TIMESTAMP(NANOS) file read as raw nanos. ts DIV 1000: floor
@@ -188,11 +178,6 @@ object Tables {
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
     }
 
-  /** (src, dst) projection of [[copurchaseEdgesWithDeg]] — consumers that
-    * don't need degrees get a column-pruned scan of the same stage. */
-  def copurchaseEdges(spark: SparkSession, sfDir: String): DataFrame =
-    copurchaseEdgesWithDeg(spark, sfDir).select("src", "dst")
-
   /** ADJACENCY form of the co-purchase graph: one row per source part —
     * (src, outdeg, dsts) with the destination list sorted. The iterative
     * operators' per-round cost is dominated by per-ROW engine overhead
@@ -202,7 +187,7 @@ object Tables {
     * token arithmetic, ~100× fewer rows through the join. On a cluster
     * this is exactly GraphX/Pregel's edge-partition layout: adjacency
     * blocks stay put, only node-sized rank tables move. Not rebalanced:
-    * every loop over it (Adjacency.pinDirected, Bfs.levelsAdj) hash-
+    * every loop over it (through Adjacency.pin) hash-
     * partitions it by `src` at loop width right after its sizing read,
     * so a round-robin split first would move the arrays twice. */
   def copurchaseAdjacency(spark: SparkSession, sfDir: String): DataFrame =

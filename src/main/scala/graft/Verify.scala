@@ -17,8 +17,9 @@ object Verify {
     // local-cluster[2,16,16384] runs the SAME oracle pipeline with real
     // executor JVMs — custom Catalyst expressions, broadcasts, LoopCache
     // pins and DSv2 readers all cross a genuine serialization boundary.
-    // Requires SPARK_HOME (executor launch) and SPARK_GRAFT_JARS (the
-    // packaged graft jar, fetched by executors at task deserialization).
+    // Requires SPARK_HOME and SPARK_SCALA_VERSION=2.13 (executor launch
+    // from a binary distribution) and SPARK_GRAFT_JARS
+    // (CliUtil.clusterConfs).
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val builder = graft.cli.CliUtil.builder(master, cpus)
       // rank-filter pre-trim (WindowGroupLimit) for corpus-scale quotas:
@@ -27,33 +28,9 @@ object Verify {
       // bound dead-shuffle-file accumulation on big heaps (see Bench)
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "120s"))
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    if (master.startsWith("local-cluster")) {
-      // Fail fast (ADVICE r15): without the packaged jar, every task
-      // deserializes to ClassNotFoundException on the executors and the
-      // per-query catch turns one config mistake into 150 confusing
-      // 'failed' lines.
-      require(sys.env.contains("SPARK_GRAFT_JARS"),
-        "SPARK_GRAFT_MASTER=local-cluster[...] needs SPARK_GRAFT_JARS=" +
-          "<path to the packaged graft jar> (sbt package) so executor " +
-          "JVMs can deserialize graft classes")
-      // Executor JVMs are launched by the in-process Worker; they need the
-      // same JDK17 module opens the driver gets from build.sbt/run_main.sh,
-      // and a memory setting that fits inside the worker's slice.
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar",
-      ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      builder
-        .config("spark.executor.extraJavaOptions", addOpens)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "12g"))
-    }
+    if (master.startsWith("local-cluster"))
+      builder.config(graft.cli.CliUtil.clusterConfs(master, sys.env))
+    else sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

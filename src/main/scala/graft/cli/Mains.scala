@@ -86,6 +86,45 @@ object CliUtil {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
+  /** The confs every main that runs under a `local-cluster[workers,
+    * cores,MiB]` master adds (Verify, ChaosKillProbe). Executor JVMs are
+    * launched by the in-process Worker, so they need the packaged graft
+    * jar (`SPARK_GRAFT_JARS`, from `sbt package`) to deserialize graft
+    * classes, the JDK17 module opens the driver gets from build.sbt and
+    * tools/run_main.sh, and a heap that fits the worker
+    * ([[executorMemory]]). Without the jar every task fails with
+    * ClassNotFoundException on the executors, so its absence fails
+    * here, before the session starts. */
+  def clusterConfs(master: String, env: Map[String, String])
+      : Map[String, String] = {
+    require(env.contains("SPARK_GRAFT_JARS"),
+      s"SPARK_GRAFT_MASTER=$master needs SPARK_GRAFT_JARS=<path to the " +
+        "packaged graft jar> (sbt package) so executor JVMs can " +
+        "deserialize graft classes")
+    val addOpens = Seq(
+      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
+      "java.net", "java.nio", "java.util", "java.util.concurrent",
+      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
+      "sun.security.action", "sun.util.calendar",
+    ).map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" ")
+    Map("spark.jars" -> env("SPARK_GRAFT_JARS"),
+      "spark.executor.extraJavaOptions" -> addOpens,
+      "spark.executor.memory" ->
+        executorMemory(master, env.get("SPARK_GRAFT_EXECUTOR_MEM")))
+  }
+
+  /** `SPARK_GRAFT_EXECUTOR_MEM` if set, else the worker memory of a
+    * `local-cluster[workers,cores,MiB]` master: standalone refuses to
+    * start an executor bigger than its worker. */
+  private[graft] def executorMemory(master: String, env: Option[String]): String =
+    env.getOrElse {
+      val workerMiB = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
+      master match {
+        case workerMiB(mib) => s"${mib}m"
+        case _ => "8g"
+      }
+    }
+
   def session(name: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     builder(s"local[$cpus]", cpus)

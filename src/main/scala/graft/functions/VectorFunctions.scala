@@ -21,10 +21,6 @@ object VectorFunctions {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  /** ‖a‖₂ */
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-
   /** cosine(a,b) = dot/(‖a‖·‖b‖) — dot / (na*nb) exactly like DuckDB's
     * list_cosine_similarity so ranking is cross-engine stable. Native
     * one-pass kernel. */

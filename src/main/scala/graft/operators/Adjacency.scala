@@ -59,27 +59,40 @@ object Adjacency {
     pack(weightedArcs(edges, a, b, w)
       .unionByName(weightedArcs(edges, b, a, w)))
 
-  /** A loop's stationary operand over directed layout `adj`: BIGINT
-    * (src, outdeg, dsts), hash-partitioned by the per-round join key and
-    * sorted, so no round needs an exchange or a sort on this side — only
-    * the node-sized table it joins moves. The width comes from the EDGE
-    * volume, Σ size(dsts) (equal to Σ outdeg on every [[directed]]
-    * layout), read by [[FooterCounts]]: from the parquet footers of a
-    * staged layout, else by one aggregate query. Rounds run at that width
-    * with static plans (see LoopCache.loopSession for why adaptive
-    * re-planning is the wrong default inside a fixed-shape loop), and
-    * `others` come back bound to the same loop session. Returns (width,
-    * pinned operand, others). */
+  /** The operand prologue every adjacency loop shares. Each of
+    * `operands` (keyed by `key`, with neighbors in array column `array`)
+    * is the loop's stationary side: hash-partitioned by the per-round
+    * join key and sorted, so no round needs an exchange or a sort on it,
+    * and only the node-sized table it joins moves. The width comes from
+    * the largest EDGE volume, Σ size(`array`) over one operand, read by
+    * [[FooterCounts]]: from the parquet footers of a staged layout, else
+    * by one aggregate query. Rounds run at that width with static plans
+    * (see LoopCache.loopSession for why adaptive re-planning is the
+    * wrong default inside a fixed-shape loop), and `others` come back
+    * bound to the same loop session, unpinned. Returns (width, volume,
+    * pinned operands, others). */
+  private[operators] def pin(key: String, array: String,
+      operands: Seq[DataFrame], others: DataFrame*)
+      : (Int, Long, Seq[DataFrame], Seq[DataFrame]) = {
+    val volume = operands.map(FooterCounts(_, Some(array)).arrayLength).max
+    val w = LoopCache.loopWidth(operands.head.sparkSession, volume)
+    val (tuned, rest) =
+      LoopCache.tunedInputs(w, operands ++ others: _*).splitAt(operands.size)
+    (w, volume, tuned.map(_.repartition(w, col(key)).sortWithinPartitions(key)
+      .persist(StorageLevel.MEMORY_AND_DISK)), rest)
+  }
+
+  /** [[pin]] over directed layout `adj` as BIGINT (src, outdeg, dsts),
+    * the operand of PageRank and the k-core peel (Σ size(dsts) equals
+    * Σ outdeg on every [[directed]] layout). Returns (width, pinned
+    * operand, others). */
   private[operators] def pinDirected(adj: DataFrame, others: DataFrame*)
       : (Int, DataFrame, Seq[DataFrame]) = {
-    val a0 = adj.select(col("src").cast("long").as("src"),
-      col("outdeg").cast("long").as("outdeg"),
-      col("dsts").cast("array<long>").as("dsts"))
-    val w = LoopCache.loopWidth(adj.sparkSession,
-      FooterCounts(a0, Some("dsts")).arrayLength)
-    val tuned = LoopCache.tunedInputs(w, a0 +: others: _*)
-    (w, tuned.head.repartition(w, col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK), tuned.tail)
+    val (w, _, Seq(a), rest) = pin("src", "dsts",
+      Seq(adj.select(col("src").cast("long").as("src"),
+        col("outdeg").cast("long").as("outdeg"),
+        col("dsts").cast("array<long>").as("dsts"))), others: _*)
+    (w, a, rest)
   }
 
   private def weightedArcs(edges: DataFrame, from: String, to: String,

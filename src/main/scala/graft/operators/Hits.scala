@@ -98,18 +98,10 @@ object Hits {
     LoopCache.memo(Seq("hits-adj", LoopCache.planKey(sa0),
         LoopCache.planKey(da0), rounds, scale)) {
       // loop-tuned width + static half-rounds over aid-partitioned
-      // stationary operands (see LoopCache.loopSession); volume = the
-      // larger adjacency's edge count (each half-round explodes one
-      // side), from staged layouts' parquet footers, else from one
-      // aggregate query per side (FooterCounts)
-      def edgeCount(a: DataFrame): Long = FooterCounts(a, Some("nbrs")).arrayLength
-      val w = LoopCache.loopWidth(srcAdj.sparkSession,
-        math.max(edgeCount(sa0), edgeCount(da0)))
-      val Seq(saT, daT) = LoopCache.tunedInputs(w, sa0, da0)
-      val sa = saT.repartition(w, col("aid")).sortWithinPartitions("aid")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val da = daT.repartition(w, col("aid")).sortWithinPartitions("aid")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // stationary operands (Adjacency.pin); the width comes from the
+      // larger adjacency's edge count, since each half-round explodes one
+      // side
+      val (_, _, Seq(sa, da), _) = Adjacency.pin("aid", "nbrs", Seq(sa0, da0))
       // One half-round: sum incoming scores per target, read the max on
       // the driver (divide-first L∞), pin the raw table, release the
       // superseded one, then re-root on the materialized RDD so the next

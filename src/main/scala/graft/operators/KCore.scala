@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge
 
 /** k-core decomposition by parallel peeling: repeatedly drop nodes whose
   * degree in the surviving induced subgraph falls below the threshold.
@@ -71,44 +70,36 @@ object KCore {
   private def runAdj(adj: DataFrame, rounds: Int, keyTag: Seq[Any],
       threshold: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    // DEEP-ROUNDS SAFE (round 14, the Bfs/ShortestPath pattern): each
-    // round is pinned AND re-rooted, so the SQL plan never nests across
-    // rounds — a plan-identity warm probe would keep full nesting, whose
-    // planning cost blows up superlinearly past ~10 rounds
-    // (LoopDepthProbe kcore_adj: rounds=20 pinned a driver core for 30+
-    // min of pure Catalyst work). A deep peel is a legitimate ask (a
+    // rounds are pinned and re-rooted (LoopCache.pinnedRounds: a
     // high-layering graph peels one layer per round), so the threshold
     // parameters ride the memo key (`keyTag`) in place of plan identity;
-    // warm re-invocations return the memoized final. RDD lineage is kept
-    // (reRoot, not localCheckpoint) — eviction recomputes.
+    // warm re-invocations return the memoized final
     LoopCache.memo(Seq("kcore-adj", LoopCache.planKey(adj), rounds) ++ keyTag) {
       val (_, a, _) = Adjacency.pinDirected(adj)
       // round 0: every node with its full-graph degree — a projection of
-      // the adjacency, no aggregate at all (it already carries outdeg)
-      var alivePinned = LoopCache.step(
-        a.select(col("src").as("id"), col("outdeg").as("degree")),
-        a.limit(0))
-      var alive = SqlBridge.reRoot(alivePinned)
+      // the adjacency, no aggregate at all (it already carries outdeg).
+      // Its seed is an empty frame that was never pinned.
+      val empty = a.limit(0)
+      val (alive0, pinned0) = LoopCache.pinnedRounds(empty, empty, 1)(_ =>
+        a.select(col("src").as("id"), col("outdeg").as("degree")))
       // one row; broadcast so the per-round filter is a map-side compare.
       // Pinned + forced while round 0 is still live, so the derivation
       // reads its cache instead of re-running the round-0 projection
       // from lineage once per round.
-      val kdfF = threshold(alive)
+      val kdfF = threshold(alive0)
       kdfF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       kdfF.head()
       val kdf = broadcast(kdfF)
-      for (_ <- 1 to rounds) {
-        val contrib = a.join(alive.select(col("id")), col("src") === col("id"))
+      // each round releases the previous PINNED frame, round 0's too
+      val (alive, _) = LoopCache.pinnedRounds(alive0, pinned0, rounds) { prev =>
+        a.join(prev.select(col("id")), col("src") === col("id"))
           .select(explode(col("dsts")).as("id"))
           .groupBy(col("id")).agg(count(lit(1)).as("degree"))
-        val next = contrib
-          .join(alive.select(col("id")), Seq("id"), "left_semi")
+          .join(prev.select(col("id")), Seq("id"), "left_semi")
           .crossJoin(kdf).filter(col("degree") >= col("k"))
           .select(col("id"), col("degree"))
-        alivePinned = LoopCache.step(next, alivePinned)
-        alive = SqlBridge.reRoot(alivePinned)
       }
-      // final survivors were pinned by the last step — the threshold row
+      // final survivors were pinned by the last round — the threshold row
       // and the adjacency anchor are no longer load-bearing
       kdfF.unpersist(blocking = false)
       a.unpersist(blocking = false)

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graftbridge.SqlBridge
-
 /** Deterministic label propagation (community detection) — the cheap
   * communities pass between connected components (too coarse: every
   * reachable node merges) and modularity methods (not shuffle-friendly).
@@ -45,21 +43,16 @@ object LabelPropagation {
     * semantics passes duplicate-free lists (as [[communities]] does). */
   def communitiesAdj(adj: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    // DEEP-ROUNDS SAFE (round 16): rounds is caller-supplied, so each
-    // round is pinned AND re-rooted (the BFS pattern) — the SQL
-    // plan never nests across rounds, so a deep-budget call cannot hit
-    // the measured superlinear Catalyst planning cliff (SCALE.md r14);
+    // rounds are pinned and re-rooted (LoopCache.pinnedRounds), and
     // warm re-invocations return the memoized final. Staleness contract:
     // PageRank's object scaladoc.
     LoopCache.memo(Seq("lpaAdj", LoopCache.planKey(adj), rounds)) {
-    val a0 = adj.select(col("id").cast("long").as("nid"),
-      col("nbrs").cast("array<long>").as("nbrs"))
     // loop-tuned width + static rounds over an id-partitioned stationary
-    // operand (see LoopCache.loopSession); the pair volume comes from a
-    // staged layout's parquet footers, else from one aggregate query
-    // (FooterCounts)
-    val pairVolume = FooterCounts(a0, Some("nbrs")).arrayLength
-    val w = LoopCache.loopWidth(adj.sparkSession, pairVolume)
+    // operand (Adjacency.pin); the pair volume comes from a staged
+    // layout's parquet footers, else from one aggregate query
+    val (w, pairVolume, Seq(a), _) = Adjacency.pin("nid", "nbrs",
+      Seq(adj.select(col("id").cast("long").as("nid"),
+        col("nbrs").cast("array<long>").as("nbrs"))))
     // the PAIR exchange is sized from the pair volume itself, NOT capped
     // at the core count (q120's PairRowsPerTask discipline): each round
     // ships Σ deg raw (lab, dst) rows, and the reduce-side (dst, lab)
@@ -69,9 +62,6 @@ object LabelPropagation {
     // spilled ~8 GB per round; ~1M rows per task keeps the map tens of
     // MB and spill-free while extra partitions cost only scheduling.
     val pairW = LoopCache.pairWidth(adj.sparkSession, pairVolume, floor = w)
-    val a = LoopCache.tunedInputs(w, a0).head
-      .repartition(w, col("nid")).sortWithinPartitions("nid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // most frequent label, ties to the SMALLEST — as the two-level
     // CODEGEN argmax (count per (dst, lab), then max(struct(c, −lab))
     // per dst: the q63 shape), with the
@@ -90,30 +80,25 @@ object LabelPropagation {
     // compress to a comparable shuffle payload, the reduce-side maps
     // are sized by the loop width, and every operator stays in
     // whole-stage codegen. Same labels, same min-label tie-break.
-    var labels = a.select(col("nid").as("id"), col("nid").as("lab"))
-    var pinnedPrev = labels // identity seed over the pinned adjacency —
-    // unpersisting ITS plan is a no-op (different plan from `a`)
-    for (_ <- 1 to rounds) {
-      val pinned = LoopCache.step(
-        a.join(labels, col("nid") === col("id"))
-          .select(col("lab"), explode(col("nbrs")).as("dst"))
-          .repartition(pairW, col("dst"))
-          .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("c"))
-          .groupBy(col("dst"))
-          .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("best"))
-          .select(col("dst").as("id"), (-col("best.nl")).as("lab"))
-          // land the round's labels back at loop width w: left at pairW,
-          // the next round's rank join would see mismatched partition
-          // counts and re-exchange the CACHED ADJACENCY (edge-sized,
-          // measured 179 MB/round at the sf10 replica) instead of this
-          // node-sized table
-          .repartition(w, col("id")),
-        pinnedPrev)
-      labels = SqlBridge.reRoot(pinned)
-      pinnedPrev = pinned
-    }
+    // the identity seed is a projection of the pinned adjacency, a
+    // different plan from `a`, so releasing it is a no-op
+    val seed = a.select(col("nid").as("id"), col("nid").as("lab"))
+    val (labels, lastPinned) = LoopCache.pinnedRounds(seed, seed, rounds)(
+      prev => a.join(prev, col("nid") === col("id"))
+        .select(col("lab"), explode(col("nbrs")).as("dst"))
+        .repartition(pairW, col("dst"))
+        .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("c"))
+        .groupBy(col("dst"))
+        .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("best"))
+        .select(col("dst").as("id"), (-col("best.nl")).as("lab"))
+        // land the round's labels back at loop width w: left at pairW,
+        // the next round's rank join would see mismatched partition
+        // counts and re-exchange the CACHED ADJACENCY (edge-sized,
+        // measured 179 MB/round at the sf10 replica) instead of this
+        // node-sized table
+        .repartition(w, col("id")))
     LoopCache.finish(labels.select(col("id"), col("lab").as("community")),
-      a, pinnedPrev)
+      a, lastPinned)
     }
   }
 }

@@ -61,6 +61,39 @@ object LoopCache {
     pinned
   }
 
+  /** The round driver of every loop that pins its rounds (BFS and SSSP,
+    * the k-core peel, label propagation): `rounds` rounds from `seed`,
+    * whose pinned frame is `seedPinned` (the seed itself when it was
+    * never pinned). Each round [[step]]s `round(prev)`, releasing the
+    * previous PINNED frame, and hands the next round that table re-rooted
+    * on its materialized RDD ([[SqlBridge.reRoot]]). Releasing the
+    * re-rooted frame would release nothing: it is a new `LogicalRDD`
+    * plan that was never persisted. Returns (last re-rooted frame, last
+    * pinned frame).
+    *
+    * Why both. PINNED: a BFS, SSSP or k-core round reads its
+    * predecessor twice (the kept side of the min/union and the next
+    * join), so an unpinned loop doubles its plan tree every round,
+    * 2^rounds re-executions (measured: 48 s for 3 BFS rounds at sf0.1,
+    * 2 s pinned), and the release keeps one live entry per loop instead
+    * of one per round.
+    * RE-ROOTED: the round count is the caller's (BFS and SSSP need about
+    * the graph diameter, a high-layering graph peels one k-core layer a
+    * round), and a round plan that nests its predecessor's costs
+    * superlinear Catalyst planning in depth (measured on the skewed
+    * replica corpus: 1.9 s a round at 8 rounds, 14.5 s at 12, unusable
+    * at 20 — SCALE.md round 14; a 20-round k-core held a driver core for
+    * 30+ min). Re-rooting keeps RDD lineage, so an evicted block
+    * recomputes (the ResilienceSpec contract), unlike `localCheckpoint`.
+    * Loops whose round reads its predecessor once run as one plan
+    * instead ([[chain]]). */
+  def pinnedRounds(seed: DataFrame, seedPinned: DataFrame, rounds: Int)(
+      round: DataFrame => DataFrame): (DataFrame, DataFrame) =
+    (1 to rounds).foldLeft((seed, seedPinned)) { case ((prev, prevPinned), _) =>
+      val pinned = step(round(prev), prevPinned)
+      (org.apache.spark.sql.graftbridge.SqlBridge.reRoot(pinned), pinned)
+    }
+
   /** Every `ChainRounds`-th round of a loop run as one plan (PageRank,
     * whose round reads its predecessor once) re-roots the chain on its
     * RDD, unpinned: the final's one job still computes each round once,

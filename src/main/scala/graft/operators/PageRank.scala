@@ -45,9 +45,9 @@ import org.apache.spark.sql.functions._
   * job: the Pregel cost model without its float nondeterminism or a
   * driver round trip per superstep. (BFS, SSSP and k-core read the
   * predecessor twice, HITS bakes its values into the next round: those
-  * pin every round with [[LoopCache.step]].) The edge-list entry points
-  * ([[fixedPoint]], [[personalized]]) build the layout with
-  * [[Adjacency]] and run the same loop.
+  * pin every round, see [[LoopCache.pinnedRounds]].) The edge-list
+  * entry points ([[fixedPoint]], [[personalized]]) build the layout
+  * with [[Adjacency]] and run the same loop.
   *
   * Staleness contract (all variants, round 16): results are memoized for
   * the session by canonicalized input plan + parameters

@@ -39,11 +39,6 @@ object Quantize {
       .otherwise(transform(emb, v => lit(0)))
   }
 
-  /** Convenience single-expression form — recomputes max|v| per element
-    * inside the lambda (O(d²)); prefer [[withCodes]]/[[int8CodesWith]]
-    * on any hot path. */
-  def int8Codes(emb: Column): Column = int8CodesWith(emb, maxAbs(emb))
-
   /** Stage `__ma` (max|v|) and `codes` columns onto `df` — the O(d)
     * quantization pipeline step. */
   def withCodes(df: DataFrame, embCol: String): DataFrame =

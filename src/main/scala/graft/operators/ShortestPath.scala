@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge
-import org.apache.spark.storage.StorageLevel
 
 /** Bounded-hop weighted shortest paths — Bellman-Ford rounds on the
   * min-plus semiring, the weighted sibling of [[Bfs]] (hop levels) in
@@ -25,11 +23,10 @@ import org.apache.spark.storage.StorageLevel
   * per cold invocation; each round joins the node-sized frontier (dist
   * table) against it, fans the edges out inside a codegen'd explode and
   * min-combines map-side. The edge-list entry point ([[distances]])
-  * builds the layout with [[Adjacency]] and runs the same loop. Round
-  * plans are RE-ROOTED on their pinned RDDs
-  * ([[SqlBridge.reRoot]]) so the logical plan never nests across rounds
-  * — depth is limited by data, not by Catalyst plan rendering (the
-  * [[Hits]] lesson). Warm re-invocations return the memoized frame
+  * builds the layout with [[Adjacency]] and runs the same loop, and
+  * [[Bfs]] runs it with a unit step. Rounds are pinned and re-rooted by
+  * [[LoopCache.pinnedRounds]], so depth is limited by data, not by
+  * Catalyst planning. Warm re-invocations return the memoized frame
   * ([[LoopCache.memo]]): zero jobs, zero new cache entries; an
   * invocation leaves exactly one live entry (the final distance table),
   * the same O(1) contract the other loops pin in their specs.
@@ -55,37 +52,32 @@ object ShortestPath {
     * frontier joins the node-sized adjacency and edges fan out inside a
     * codegen'd explode (see PageRank.fixedPointAdj). */
   def distancesAdj(adj: DataFrame, seeds: DataFrame, seedCol: String,
-      rounds: Int = 3): DataFrame = {
+      rounds: Int = 3): DataFrame =
+    relaxAdj("sssp-adj", adj, col("nbrs"), seeds, seedCol, "cost", rounds)(
+      _.select(col("cost"), explode(col("nbrs")).as("nb"))
+        .select(col("nb.d").as("id"), (col("cost") + col("nb.w")).as("cost")))
+
+  /** The min-relaxation loop of [[distancesAdj]] and [[Bfs.levelsAdj]]
+    * over an ADJACENCY layout (id, `nbrs`): `seeds` start at 0 in column
+    * `value`, and each round min-combines the table with `fanOut` of its
+    * join against the adjacency (BIGINT src, nbrs) on `src === id`,
+    * which yields (id, `value`) per reached neighbor. `tag` names the
+    * caller in the memo key. */
+  private[operators] def relaxAdj(tag: String, adj: DataFrame, nbrs: Column,
+      seeds: DataFrame, seedCol: String, value: String, rounds: Int)(
+      fanOut: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    val a0 = adj.select(col("id").cast("long").as("src"), col("nbrs"))
+    val a0 = adj.select(col("id").cast("long").as("src"), nbrs)
     val s0 = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-      .select(col("id"), lit(0L).as("cost"))
+      .select(col("id"), lit(0L).as(value))
     LoopCache.memo(
-      Seq("sssp-adj", LoopCache.planKey(a0), LoopCache.planKey(s0), rounds)) {
-      // loop-tuned width + static rounds over a src-partitioned stationary
-      // operand (see LoopCache.loopSession); the edge volume comes from a
-      // staged layout's parquet footers, else from one aggregate query
-      // (FooterCounts)
-      val w = LoopCache.loopWidth(adj.sparkSession,
-        FooterCounts(a0, Some("nbrs")).arrayLength)
-      val Seq(aT, s0T) = LoopCache.tunedInputs(w, a0, s0)
-      val a = aT.repartition(w, col("src")).sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var dist = s0T
-      var pinnedPrev = s0T // seed table: step's release is a no-op
-      for (_ <- 1 to rounds) {
-        val relaxed = a.join(dist, col("src") === col("id"))
-          .select(col("cost"), explode(col("nbrs")).as("nb"))
-          .select(col("nb.d").as("id"), (col("cost") + col("nb.w")).as("cost"))
-        val pinned = LoopCache.step(
-          dist.unionByName(relaxed)
-            .groupBy(col("id")).agg(min(col("cost")).as("cost")),
-          pinnedPrev)
-        dist = SqlBridge.reRoot(pinned)
-        pinnedPrev = pinned
-      }
-      a.unpersist(blocking = false) // final dist is materialized; adjacency done
-      LoopCache.untuned(dist)
+      Seq(tag, LoopCache.planKey(a0), LoopCache.planKey(s0), rounds)) {
+      val (_, _, Seq(a), Seq(s0T)) = Adjacency.pin("src", "nbrs", Seq(a0), s0)
+      val (last, _) = LoopCache.pinnedRounds(s0T, s0T, rounds)(prev =>
+        prev.unionByName(fanOut(a.join(prev, col("src") === col("id"))))
+          .groupBy(col("id")).agg(min(col(value)).as(value)))
+      a.unpersist(blocking = false) // the final is materialized; adjacency done
+      LoopCache.untuned(last)
     }
   }
 }

@@ -71,21 +71,23 @@ object Staging {
   def provenanceJson: String = text(provenanceObject)
   def resetProvenance(): Unit = provenance.synchronized(provenance.clear())
 
-  /** Per-(session, dir) memo of the staged-read DataFrames. Every bare
+  /** Per-(session, path) memo of parquet reads: the staged tables, and
+    * through [[graft.Tables]] the raw fixture files. Every bare
     * `spark.read.parquet(dir)` call re-lists the dir and re-infers the
-    * schema with a one-task driver job (~0.3-0.7 s on this box) — paid
-    * once per staged table per QUERY without the memo, which at a
-    * 143-query suite dwarfed several stages' actual scan time. This is
-    * the same relation-level metadata caching Spark's own catalog does
-    * for tables; `spark.catalog.clearCache()` (the prodcold protocol)
-    * drops cached DATA but deliberately not this plan-level metadata.
-    * Invalidated whenever this process (re-)derives the stage; an
-    * EXTERNAL rewrite of a stage dir mid-session is outside the
-    * freshness contract exactly as it is for catalog tables. */
+    * schema with a one-task driver job (~0.3-0.7 s on a 4-core host) —
+    * paid once per table per QUERY without the memo, which at a
+    * 143-query suite dwarfed several stages' actual scan time. This is the same
+    * relation-level metadata caching Spark's own catalog does for
+    * tables; `spark.catalog.clearCache()` (the prodcold protocol) drops
+    * cached DATA but deliberately not this plan-level metadata.
+    * `invalidate` drops the entry first: a stage this process (re-)derives
+    * is re-read. An EXTERNAL rewrite of a read path mid-session is
+    * outside the freshness contract exactly as it is for catalog
+    * tables. */
   private val readCache =
     scala.collection.mutable.HashMap.empty[(SparkSession, String), DataFrame]
-  private def readStage(spark: SparkSession, dir: String,
-      invalidate: Boolean): DataFrame = readCache.synchronized {
+  private[graft] def readParquet(spark: SparkSession, dir: String,
+      invalidate: Boolean = false): DataFrame = readCache.synchronized {
     if (invalidate) readCache.remove((spark, dir))
     readCache.getOrElseUpdate((spark, dir), spark.read.parquet(dir))
   }
@@ -240,7 +242,7 @@ object Staging {
       if (prebuilt) "prebuilt" else "waited")
     // a re-derive under the same dir name (REFRESH, stale-dir retry)
     // must drop the memoized relation — its file list is gone
-    readStage(spark, dir.toString, invalidate = !prebuilt)
+    readParquet(spark, dir.toString, invalidate = !prebuilt)
   }
 
   // ---- advisory stage lock (work dedup only — see stagedOrDerive) ----

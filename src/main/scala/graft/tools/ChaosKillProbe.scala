@@ -48,23 +48,9 @@ object ChaosKillProbe {
       "local-cluster[2,8,8192]")
     require(master.startsWith("local-cluster"),
       s"chaos gate needs real executor JVMs, got master=$master")
-    require(sys.env.contains("SPARK_GRAFT_JARS"),
-      "SPARK_GRAFT_JARS=<packaged graft jar> required (sbt package)")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     val spark = graft.cli.CliUtil.builder(master, "8")
       .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      .config("spark.jars", sys.env("SPARK_GRAFT_JARS"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.executor.memory",
-        executorMemory(master, sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")))
+      .config(graft.cli.CliUtil.clusterConfs(master, sys.env))
       // default 4 task failures / 4 stage attempts tolerate one murder;
       // what must NOT be raised is anything masking nondeterminism
       .getOrCreate()
@@ -144,18 +130,6 @@ object ChaosKillProbe {
       (line + "\n").getBytes("UTF-8"))
     spark.stop()
   }
-
-  /** `SPARK_GRAFT_EXECUTOR_MEM` if set, else the worker memory of a
-    * `local-cluster[workers,cores,MiB]` master: standalone refuses to
-    * start an executor bigger than its worker. */
-  private[graft] def executorMemory(master: String, env: Option[String]): String =
-    env.getOrElse {
-      val workerMiB = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
-      master match {
-        case workerMiB(mib) => s"${mib}m"
-        case _ => "8g"
-      }
-    }
 
   /** One gate run: per query, the healthy and chaos seconds, whether the
     * kill landed mid-query, whether the rows matched, and the attempts —

@@ -4,18 +4,22 @@ import org.apache.spark.sql.functions._
 
 /** Deep-rounds cost probe for the caller-budgeted loop operators: times
   * each operator at increasing round budgets on the same corpus, cold per
-  * measurement (cache + memo cleared). Every operator here must read LINEAR marginal
-  * cost per round (nested round plans once cost 30+ min of driver-side
-  * planning at rounds=20). PageRank.fixedPointAdj and
-  * PageRank.personalizedAdj run their rounds as one plan
-  * (LoopCache.chain); LabelPropagation.communitiesAdj and, when `k=` is
-  * given, the k-core peel KCore.survivorsAdj (`kcore_adj`; usually fixed
-  * within a few rounds, but a high-layering graph peels one layer per
-  * round) pin and re-root every round. The edge-list entry points run
-  * these same loops.
+  * measurement (cache + memo cleared), in the session the CLI mains use
+  * (`local[SPARK_GRAFT_CPUS]`, so it measures the host it runs on).
+  * Every operator here must read LINEAR marginal cost per round (nested
+  * round plans once cost 30+ min of driver-side planning at rounds=20).
+  * PageRank.fixedPointAdj and PageRank.personalizedAdj run their rounds
+  * as one plan (LoopCache.chain); Bfs.levelsAdj and
+  * ShortestPath.distancesAdj (one min-relaxation loop, seeded at the
+  * three smallest part ids), LabelPropagation.communitiesAdj and, when
+  * `k=` is given, the k-core peel KCore.survivorsAdj (`kcore_adj`;
+  * usually fixed within a few rounds, but a high-layering graph peels
+  * one layer per round) pin and re-root every round
+  * (LoopCache.pinnedRounds). The edge-list entry points run these same
+  * loops.
   *
-  * Usage: tools/run_main.sh graft.tools.LoopDepthProbe DIR R1 [R2...]
-  *        [only=name,name] [k=K]
+  * Usage: SPARK_GRAFT_CPUS=N tools/run_main.sh graft.tools.LoopDepthProbe
+  *        DIR R1 [R2...] [only=name,name] [k=K]
   */
 object LoopDepthProbe {
   def main(args: Array[String]): Unit = {
@@ -28,9 +32,7 @@ object LoopDepthProbe {
     require(k.isDefined || !only.exists(_.contains("kcore_adj")),
       "kcore_adj needs k=K")
     val rounds = roundArgs.map(_.toInt)
-    val spark = graft.cli.CliUtil.builder("local[32]", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.cli.CliUtil.session("loop-depth")
     spark.sparkContext.setLogLevel("WARN")
 
     def seeds() = graft.Tables.lineitemPartkeys(spark, dir)
@@ -43,6 +45,13 @@ object LoopDepthProbe {
       "ppr_adj" -> (r => graft.operators.PageRank.personalizedAdj(
         graft.Tables.copurchaseAdjacency(spark, dir),
         seeds(), "l_partkey", iterations = r)),
+      "bfs_adj" -> (r => graft.operators.Bfs.levelsAdj(
+        graft.Tables.copurchaseAdjacency(spark, dir)
+          .select(col("src").as("id"), col("dsts").as("nbrs")),
+        seeds(), "l_partkey", rounds = r)),
+      "sssp_adj" -> (r => graft.operators.ShortestPath.distancesAdj(
+        graft.Tables.copurchaseWeightedAdjacency(spark, dir),
+        seeds(), "l_partkey", rounds = r)),
       "lpa_adj" -> (r => graft.operators.LabelPropagation.communitiesAdj(
         graft.Tables.copurchaseTop10Adjacency(spark, dir), rounds = r)),
       "kcore_adj" -> (r => graft.operators.KCore.survivorsAdj(

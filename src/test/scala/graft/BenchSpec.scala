@@ -132,10 +132,23 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("ChaosKillProbe sizes executors to the local-cluster worker unless told") {
-    import graft.tools.ChaosKillProbe.executorMemory
+    import graft.cli.CliUtil.{clusterConfs, executorMemory}
     assert(executorMemory("local-cluster[2,2,2048]", None) == "2048m")
     assert(executorMemory("local-cluster[2, 8, 8192]", None) == "8192m")
     assert(executorMemory("local-cluster[2,2,2048]", Some("1536m")) == "1536m")
+    // the confs Verify and ChaosKillProbe both start a local-cluster with
+    val small = "local-cluster[2,2,2048]"
+    val confs = clusterConfs(small, Map("SPARK_GRAFT_JARS" -> "graft.jar"))
+    assert(confs.keySet == Set("spark.jars", "spark.executor.extraJavaOptions",
+      "spark.executor.memory"))
+    assert(confs("spark.jars") == "graft.jar")
+    assert(confs("spark.executor.memory") == "2048m")
+    val opens = confs("spark.executor.extraJavaOptions").split(" ").grouped(2).toSeq
+    assert(opens.size == 13 && opens.forall(_.head == "--add-opens"))
+    assert(opens.map(_(1)).contains("java.base/sun.nio.ch=ALL-UNNAMED"))
+    assert(clusterConfs(small, Map("SPARK_GRAFT_JARS" -> "graft.jar",
+      "SPARK_GRAFT_EXECUTOR_MEM" -> "1536m"))("spark.executor.memory") == "1536m")
+    intercept[IllegalArgumentException](clusterConfs(small, Map.empty))
   }
 
   test("provenanceJson keeps its text for derived, prebuilt and waited stages") {

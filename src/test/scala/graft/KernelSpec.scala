@@ -366,6 +366,31 @@ class KernelSpec extends AnyFunSuite {
     assert(dAdj.except(dEdges).isEmpty && dEdges.except(dAdj).isEmpty)
   }
 
+  test("BFS levels equal SSSP costs over unit weights, at 3 and 25 rounds") {
+    import graft.operators.{Bfs, ShortestPath}
+    // a 40-node cycle deeper than 25 hops, a shortcut 3 → 30, the edge
+    // 2 → 3 doubled, and 99 → 5 from a node no seed reaches; seed 1 is
+    // repeated
+    val e = ((1L to 39L).map(i => (i, i + 1)) ++
+      Seq((40L, 1L), (3L, 30L), (2L, 3L), (99L, 5L))).toDF("src", "dst")
+    val adj = e.groupBy(col("src").as("id"))
+      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+    val wadj = e.groupBy(col("src").as("id"))
+      .agg(sort_array(collect_list(struct(col("dst").as("d"), lit(1L).as("w"))))
+        .as("nbrs"))
+    val seeds = Seq(1L, 1L, 20L).toDF("id")
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (rounds <- Seq(3, 25)) {
+      val levels = rows(Bfs.levelsAdj(adj, seeds, "id", rounds))
+      assert(levels == rows(ShortestPath.distancesAdj(wadj, seeds, "id", rounds)),
+        s"rounds=$rounds")
+      // 25 rounds run past convergence: node 19 is the farthest, 18 hops
+      assert(!levels.contains(99L) &&
+        levels.values.max == (if (rounds == 3) 3L else 18L))
+    }
+  }
+
   test("adjacency link prediction equals the wedge-join formulation") {
     import graft.operators.{LinkPredict, TriangleCensus}
     val pairs = adjGraphEdges // multiplicity-bearing occurrence pairs
