@@ -150,22 +150,9 @@ object Bench {
 
   private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.cli.CliUtil.cpus(sys.env)
     val ref = sentinelRef(calibrationDir, hostName, cpus)
-    val spark = graft.cli.CliUtil.builder(s"local[$cpus]", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // rank-filter pre-trim for corpus-scale quotas (see Verify.scala)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      // Shuffle files are only deleted after their RDDs are GARBAGE
-      // COLLECTED (ContextCleaner), and a big-heap bench JVM can run a
-      // 157-query pass without a single full GC — Spark's 30min default
-      // periodicGC let the r18 sf10 run accumulate 63 GB of dead shuffle
-      // files and fill the disk. 120s bounds the backlog to a few
-      // queries' worth; the GC itself is off the timed path's critical
-      // sections (it runs in the cleaner thread between queries).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "120s"))
-      .getOrCreate()
+    val spark = graft.cli.CliUtil.session("bench")
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_BENCH_ONLY=q120_link_prediction[,name...] restricts the
     // run to the named queries — a builder-side A/B probe that keeps the
@@ -186,12 +173,10 @@ object Bench {
     // back-to-back prodcold repeats. A long-lived production JVM has
     // compiled its daily query mix; "cold" here means data/cache state,
     // not first-ever-compile. Untimed, and the artifact records the
-    // scope ("warmup":"all-sf0.001"). Opt out: SPARK_GRAFT_WARMUP=first.
-    val warmupScope =
-      if (sys.env.get("SPARK_GRAFT_WARMUP").contains("first")) "first-sf0.001"
-      else "all-sf0.001"
+    // scope ("warmup":"all-sf0.001").
+    val warmupScope = "all-sf0.001"
     val warmupT0 = System.nanoTime()
-    (if (warmupScope == "first-sf0.001") qs.take(1) else qs).foreach { q =>
+    qs.foreach { q =>
       try q.fn(spark, "/root/testdata/sf0.001").write
         .format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }

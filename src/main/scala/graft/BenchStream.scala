@@ -9,8 +9,8 @@ import org.json4s.JsonDSL._
 import graft.ArtifactJson.{fixed, text}
 
 /** Streaming THROUGHPUT bench — the production-path counterpart of the
-  * `streaming/Replay` correctness jig (which collects rows to the driver
-  * to control batch boundaries and is bench=false by design).
+  * `streaming/Replay` correctness jig (which moves slice files in one at
+  * a time to control batch boundaries and is bench=false by design).
   *
   * Here nothing is ever collected: each stateful tier reads its input
   * from a staged PARQUET FILE SOURCE (the batch table split into many
@@ -28,6 +28,10 @@ import graft.ArtifactJson.{fixed, text}
   */
 object BenchStream {
 
+  /** Events per entity above which the guarded interval join's denylist
+    * drops the entity. */
+  private val HotRate = 100000L
+
   private[graft] case class TierResult(
       name: String, rows: Long, sec: Double, batches: Int,
       stateRows: Long, stateBytes: Long, timedOut: Boolean = false) {
@@ -40,17 +44,11 @@ object BenchStream {
 
   private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.cli.CliUtil.builder(s"local[$cpus]", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // rows/batches/state are summed from recentProgress, which keeps
-      // only the last N entries (default 100) — raise it so a small-mft
-      // or large-staging run can't silently undercount (ADVICE r15)
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      // bound dead-shuffle-file accumulation on big heaps (see Bench)
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "120s"))
-      .getOrCreate()
+    val spark = graft.cli.CliUtil.session("bench-stream")
+    // rows/batches/state are summed from recentProgress, which keeps
+    // only the last N entries (default 100) — raise it so a small-mft
+    // or large-staging run can't silently undercount (ADVICE r15)
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     spark.sparkContext.setLogLevel("WARN")
 
     val work = java.nio.file.Files.createTempDirectory("graft-bench-stream")
@@ -190,12 +188,11 @@ object BenchStream {
       // corpus this tier COMPLETES where the unguarded join is
       // output-quadratic in the mega-user's rate; on a uniform corpus no
       // entity trips the cap and the tier measures the guard's overhead
-      // (one broadcast probe per side). SPARK_GRAFT_HOT_RATE sets the
-      // events-per-entity cap (default 100000 — only planted hot keys).
+      // (one broadcast probe per side). The events-per-entity cap is
+      // HotRate: only planted hot keys reach it.
       runTier("interval_join_guarded") { s =>
-        val cap = sys.env.getOrElse("SPARK_GRAFT_HOT_RATE", "100000").toLong
         val deny = streaming.StreamingOps.hotEntities(
-          spark.read.parquet(eventsDir), "user_id", cap)
+          spark.read.parquet(eventsDir), "user_id", HotRate)
         streaming.StreamingOps.intervalJoinStream(
           s.filter(col("event_type") === "view"),
           s.filter(col("event_type") === "click"),

@@ -8,7 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else Queries.benchNames
-    val spark = graft.cli.CliUtil.builder("local[4]", "4").getOrCreate()
+    val spark = graft.cli.CliUtil.session("explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

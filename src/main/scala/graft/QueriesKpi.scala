@@ -87,25 +87,24 @@ object QueriesKpi {
     * (calcular_kpi.py writes the CSV once; generar_reporte.py:262 reads
     * it back — stage [4] never recomputes stage [3]). This memo is that
     * handoff in-session: the first stage-[4] query materializes the KPI
-    * table (~|dates|x|endpoints| rows — KB-sized at any SF) via a lazy
-    * localCheckpoint; later ones reuse it. At cluster scale the staging
-    * becomes a parquet write (CorpusLayout) with identical semantics;
-    * correctness is unaffected (the oracle recomputes the CTE from
-    * scratch either way). Keyed per (session, sfDir); cleared never —
-    * entries are tiny and sessions are short-lived. Contract: the input
-    * dir is immutable for the session's lifetime (the same assumption
-    * any staged file handoff makes — rewriting the inputs mid-session
-    * requires a new session, exactly as it would require re-running the
-    * staging job). */
-  private val stagedKpi =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * table (~|dates|x|endpoints| rows — KB-sized at any SF) in a lazy
+    * pin; later ones reuse it. At cluster scale the staging becomes a
+    * parquet write (CorpusLayout) with identical semantics; correctness
+    * is unaffected (the oracle recomputes the CTE from scratch either
+    * way). Keyed per (session, sfDir) in the operator memo, so
+    * `LoopCache.clearMemo` drops it with the pins `clearCache` released,
+    * and the next stage-[4] query pins the KPI again. Contract: the input
+    * dir is immutable for the memo's lifetime (the same assumption any
+    * staged file handoff makes — rewriting the inputs requires a
+    * `clearMemo`, exactly as it would require re-running the staging
+    * job). */
   private def kpiStaged(spark: SparkSession, sfDir: String): DataFrame =
     // lazy pin + reRoot, not localCheckpoint: the memoized frame lives
-    // for the session, and a cut-lineage checkpoint would fail every
-    // later stage-[4] query if an executor dropped the blocks (r13);
-    // the pinned plan recomputes instead
-    stagedKpi.computeIfAbsent((spark, sfDir),
-      _ => org.apache.spark.sql.graftbridge.SqlBridge.reRoot(
+    // until the next clearMemo, and a cut-lineage checkpoint would fail
+    // every later stage-[4] query if an executor dropped the blocks
+    // (r13); the pinned plan recomputes instead
+    graft.operators.LoopCache.memo(Seq("kpi_staged", spark, sfDir))(
+      org.apache.spark.sql.graftbridge.SqlBridge.reRoot(
         kpiDaily(spark, sfDir)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
 

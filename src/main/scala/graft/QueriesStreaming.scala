@@ -18,11 +18,10 @@ import graft.streaming.{FunnelStream, Replay, StreamingOps}
   * bench=false in the registry: the replay harness controls micro-batch
   * boundaries (the documented seam) — not a scale-representative
   * throughput path. Every replay here rides Replay.replayFiles — a
-  * distributed file feed with the same contiguous-ordered-slice
-  * contract as the MemoryStream harness and NO driver collect (VERDICT
-  * r9 watch item), so the whole q133-q138 oracle gate runs at sf1+
-  * without driver-memory risk; only 1-row aggregates (sentinel
-  * timestamps) ever reach the driver. The production shape is
+  * distributed file feed of contiguous ordered slices with NO driver
+  * collect (VERDICT r9 watch item), so the whole q133-q138 oracle gate
+  * runs at sf1+ without driver-memory risk; only 1-row aggregates
+  * (sentinel timestamps) ever reach the driver. The production shape is
   * `readStream` + the same transform; its scale story (bounded state
   * via watermarks / by-construction register bounds) is documented on
   * each operator.
@@ -221,11 +220,11 @@ object QueriesStreaming {
   //
   // This one rides the FILE-SOURCE replay tier (Replay.replayFiles,
   // VERDICT r9 #5): lineitem is the largest replayed input (60M rows at
-  // sf1 — collecting it to feed MemoryStream is the harness's driver-
-  // memory bottleneck), and the register stream is the safest proof
-  // vehicle for the file tier because its state is order-insensitive by
-  // construction. Slices are range-partitioned on l_orderkey — a real
-  // ordering, but ANY slicing lands on identical registers.
+  // sf1, far too many to collect on the driver), and the register stream
+  // is the safest proof vehicle for the file tier because its state is
+  // order-insensitive by construction. Slices are range-partitioned on
+  // l_orderkey — a real ordering, but ANY slicing lands on identical
+  // registers.
   // -------------------------------------------------------------------
   def distinctRegistersStreamReplay(spark: SparkSession,
       sfDir: String): DataFrame = {

@@ -12,7 +12,6 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet)
       else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Multi-process smoke (VERDICT r14 #1): SPARK_GRAFT_MASTER=
     // local-cluster[2,16,16384] runs the SAME oracle pipeline with real
     // executor JVMs — custom Catalyst expressions, broadcasts, LoopCache
@@ -20,18 +19,8 @@ object Verify {
     // Requires SPARK_HOME and SPARK_SCALA_VERSION=2.13 (executor launch
     // from a binary distribution) and SPARK_GRAFT_JARS
     // (CliUtil.clusterConfs).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = graft.cli.CliUtil.builder(master, cpus)
-      // rank-filter pre-trim (WindowGroupLimit) for corpus-scale quotas:
-      // the 1000-row default defeats it for any realistic target_n
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      // bound dead-shuffle-file accumulation on big heaps (see Bench)
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "120s"))
-    if (master.startsWith("local-cluster"))
-      builder.config(graft.cli.CliUtil.clusterConfs(master, sys.env))
-    else sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    val spark = builder.getOrCreate()
+    val spark = graft.cli.CliUtil.session("verify",
+      sys.env.get("SPARK_GRAFT_MASTER"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => keep(n) }.foreach { case (name, fn) =>
@@ -46,19 +35,9 @@ object Verify {
         // mask the failure as a value mismatch — or worse, a false pass).
         // The cleanup itself must never escape this handler: one query's
         // failure aborting the loop would zero the whole round.
-        try {
-          val dir = Paths.get(s"$outDir/$name")
-          if (Files.exists(dir)) {
-            val walk = Files.walk(dir)
-            try {
-              import scala.jdk.CollectionConverters._
-              walk.iterator().asScala.toSeq.reverse
-                .foreach(p => Files.deleteIfExists(p))
-            } finally walk.close()
-          }
-        } catch { case c: Throwable =>
-          System.err.println(s"[verify] $name stale-cleanup failed: ${c.getMessage}")
-        }
+        val dir = new java.io.File(s"$outDir/$name")
+        if (dir.exists && !org.apache.commons.io.FileUtils.deleteQuietly(dir))
+          System.err.println(s"[verify] $name stale-cleanup failed")
       }
       // finished queries' persisted intermediates are dead weight in a
       // 100+-query session (fresh DataFrames each call never reuse them)
@@ -80,7 +59,7 @@ object Verify {
       if (only.isDefined) "oracle_sql.partial.json" else "oracle_sql.json"
     writeOracleSql(s"$outDir/$oracleFile", keep)
     // this JVM's codegen totals (under local-cluster, the driver's only):
-    // every session shares one class loader (see CliUtil.builder), so a
+    // every session shares one class loader (see CliUtil.confs), so a
     // run compiles each distinct class once; a return to per-session
     // recompiling shows here as a jump in both
     val compiles = org.apache.spark.metrics.source.CodegenMetrics

@@ -56,8 +56,28 @@ object CliUtil {
     }
   }
 
-  /** The session policy every factory shares (the CLI mains, Verify,
-    * Bench, BenchStream, the test session); each adds its own confs.
+  /** The one session factory: the CLI mains, Verify, Bench, BenchStream,
+    * the probes and the test session all build their session here, from
+    * [[confs]]. `master` defaults to `local[<cpus>]` ([[cpus]]). */
+  def session(name: String, master: Option[String] = None): SparkSession =
+    SparkSession.builder().config(confs(name, master, sys.env)).getOrCreate()
+
+  /** The cores a default session runs on: `SPARK_GRAFT_CPUS` when set,
+    * else the cores this JVM sees. */
+  private[graft] def cpus(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+
+  private val LocalN = """local\[\s*(\d+)\s*(?:,\s*\d+\s*)?\]""".r
+  private val LocalCluster =
+    """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*\]""".r
+
+  /** Every conf [[session]] sets, as a pure function of the app name, the
+    * master and the environment.
+    *
+    * Shuffle partitions are the master's task slots: n for `local[n]` and
+    * `local[n,m]`, workers × cores for `local-cluster[w,c,MiB]`, [[cpus]]
+    * for any other master.
     *
     * Artifact isolation is off. Spark 4.1 turns it on by default, which
     * gives every SparkSession its own executor class loader, and Spark
@@ -75,19 +95,46 @@ object CliUtil {
     * `readlink`) per checkpoint file or more, and on a small micro-batch
     * those process starts cost more than the batch's compute. The manager
     * writes `file:` checkpoints with java.nio and delegates every other
-    * scheme to Spark's default manager. */
-  def builder(master: String, shufflePartitions: String): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    * scheme to Spark's default manager.
+    *
+    * The rank-filter pre-trim (WindowGroupLimit) threshold is raised from
+    * its 1000-row default, which defeats it for any corpus-scale quota.
+    *
+    * Shuffle files are only deleted after their RDDs are garbage
+    * collected (ContextCleaner), and a big-heap JVM can run a 157-query
+    * bench pass without a single full GC: Spark's 30 min periodic GC let
+    * an sf10 run accumulate 63 GB of dead shuffle files and fill the
+    * disk. 120 s bounds the backlog to a few queries' worth, and the GC
+    * runs in the cleaner thread, off the queries' critical path.
+    *
+    * Under `local-cluster` the session adds [[clusterConfs]]; under any
+    * other master, `SPARK_GRAFT_JARS` (when set) becomes `spark.jars`. */
+  private[graft] def confs(name: String, master: Option[String],
+      env: Map[String, String]): Map[String, String] = {
+    val m = master.getOrElse(s"local[${cpus(env)}]")
+    val slots = m match {
+      case LocalN(n) => n
+      case LocalCluster(w, c, _) => (w.toInt * c.toInt).toString
+      case _ => cpus(env)
+    }
+    Map(
+      "spark.app.name" -> name,
+      "spark.master" -> m,
+      "spark.sql.shuffle.partitions" -> slots,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[graft.streaming.LocalCheckpointFileManager].getName,
+      "spark.sql.optimizer.windowGroupLimitThreshold" -> "16777216",
+      "spark.cleaner.periodicGC.interval" -> "120s",
+    ) ++ (
+      if (m.startsWith("local-cluster")) clusterConfs(m, env)
+      else env.get("SPARK_GRAFT_JARS").map("spark.jars" -> _))
+  }
 
-  /** The confs every main that runs under a `local-cluster[workers,
-    * cores,MiB]` master adds (Verify, ChaosKillProbe). Executor JVMs are
+  /** The confs a session under a `local-cluster[workers,cores,MiB]`
+    * master adds (Verify, ChaosKillProbe). Executor JVMs are
     * launched by the in-process Worker, so they need the packaged graft
     * jar (`SPARK_GRAFT_JARS`, from `sbt package`) to deserialize graft
     * classes, the JDK17 module opens the driver gets from build.sbt and
@@ -95,7 +142,7 @@ object CliUtil {
     * ([[executorMemory]]). Without the jar every task fails with
     * ClassNotFoundException on the executors, so its absence fails
     * here, before the session starts. */
-  def clusterConfs(master: String, env: Map[String, String])
+  private[graft] def clusterConfs(master: String, env: Map[String, String])
       : Map[String, String] = {
     require(env.contains("SPARK_GRAFT_JARS"),
       s"SPARK_GRAFT_MASTER=$master needs SPARK_GRAFT_JARS=<path to the " +
@@ -117,22 +164,10 @@ object CliUtil {
     * `local-cluster[workers,cores,MiB]` master: standalone refuses to
     * start an executor bigger than its worker. */
   private[graft] def executorMemory(master: String, env: Option[String]): String =
-    env.getOrElse {
-      val workerMiB = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
-      master match {
-        case workerMiB(mib) => s"${mib}m"
-        case _ => "8g"
-      }
-    }
-
-  def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    builder(s"local[$cpus]", cpus)
-      .appName(name)
-      // rank-filter pre-trim for corpus-scale quotas (see Verify.scala)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      .getOrCreate()
-  }
+    env.getOrElse(master match {
+      case LocalCluster(_, _, mib) => s"${mib}m"
+      case _ => "8g"
+    })
 }
 
 /** Stage [1]: the reference's HTTP client run (http_client.py:199-211) —

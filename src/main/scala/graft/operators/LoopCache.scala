@@ -217,8 +217,8 @@ object LoopCache {
     * node-sized volumes that overhead IS the round. Sessions are memoized
     * per (parent, width) so repeated operator calls share one clone.
     *
-    * A new clone costs no recompilation. Every session factory turns
-    * artifact isolation off (`CliUtil.builder`), so clones share the
+    * A new clone costs no recompilation. The session factory turns
+    * artifact isolation off (`CliUtil.confs`), so clones share the
     * parent's executor class loader and with it Spark's codegen cache,
     * which is keyed by (class loader, code). With isolation on (Spark
     * 4.1's default), each clone would recompile every round's classes. The

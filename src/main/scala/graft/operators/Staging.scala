@@ -154,9 +154,9 @@ object Staging {
     * (atomic createFile + heartbeat) makes the loser WAIT for the
     * winner's `_SUCCESS` instead of deriving. The lock is a cost
     * optimization, never a correctness dependency: a crashed holder's
-    * heartbeat stops and the lock goes stale (default 30 s,
-    * SPARK_GRAFT_STAGE_LOCK_STALE_MS), a waiter steals it atomically
-    * (move-to-trash, so exactly one stealer wins) and derives itself;
+    * heartbeat stops and the lock goes stale (`LockStaleMs`, 30 s), a
+    * waiter steals it atomically (move-to-trash, so exactly one stealer
+    * wins) and derives itself;
     * if staleness ever misfires (a >30 s GC pause on the holder), the
     * outcome is merely the pre-r18 double-derive, which the rename
     * protocol already handles. Readers still trust ONLY `_SUCCESS`. */
@@ -207,7 +207,7 @@ object Staging {
             try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
             catch {
               case _: java.nio.file.FileSystemException =>
-                deleteRecursively(tmp)
+                org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
             }
           }
         } finally {
@@ -246,9 +246,7 @@ object Staging {
   }
 
   // ---- advisory stage lock (work dedup only — see stagedOrDerive) ----
-  private def lockStaleMs: Long =
-    sys.env.get("SPARK_GRAFT_STAGE_LOCK_STALE_MS").map(_.toLong)
-      .getOrElse(30000L)
+  private val LockStaleMs = 30000L
   private val LockPollMs = 200L
 
   /** Atomic acquire: createFile wins or loses; the lock body carries a
@@ -279,7 +277,7 @@ object Staging {
     val t = new Thread(() => {
       try {
         while (!Thread.interrupted()) {
-          Thread.sleep(lockStaleMs / 6 max 100L)
+          Thread.sleep(LockStaleMs / 6)
           Files.setLastModifiedTime(lock,
             java.nio.file.attribute.FileTime.fromMillis(
               System.currentTimeMillis()))
@@ -303,7 +301,7 @@ object Staging {
         try System.currentTimeMillis() -
           Files.getLastModifiedTime(lock).toMillis
         catch { case _: java.io.IOException => return }
-      if (age > lockStaleMs) {
+      if (age > LockStaleMs) {
         val trash = stageRoot.resolve(
           s".${lock.getFileName}.stale-${java.util.UUID.randomUUID().toString.take(8)}")
         try {
@@ -329,21 +327,12 @@ object Staging {
         s".${p.getFileName}.trash-${java.util.UUID.randomUUID().toString.take(8)}")
       try {
         Files.move(p, trash, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(trash)
+        org.apache.commons.io.FileUtils.deleteDirectory(trash.toFile)
       } catch {
         case _: java.nio.file.NoSuchFileException |
             _: java.nio.file.FileAlreadyExistsException |
             _: java.nio.file.DirectoryNotEmptyException |
             _: java.nio.file.AtomicMoveNotSupportedException => ()
       }
-    }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      } finally walk.close()
     }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
 
 /** The streaming checkpoint file manager of every session
   * (`spark.sql.streaming.checkpointFileManagerClass`, set in
-  * `CliUtil.builder`).
+  * `CliUtil.confs`).
   *
   * Without the native libhadoop, Hadoop runs a shell command for simple
   * local file operations, so Spark's default manager starts one OS process

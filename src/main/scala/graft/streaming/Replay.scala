@@ -2,108 +2,52 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Micro-batch replay harness: runs a STREAMING operator over the same rows
-  * a batch query reads, split into N ordered micro-batches, and returns the
-  * final sink table as a plain DataFrame — so a streaming tier can face the
-  * exact same DuckDB oracle as its batch twin (the driver's t2 gate),
-  * not just an in-spec streaming≡batch assertion.
+/** File-source micro-batch replay harness: runs a STREAMING operator over
+  * the same rows a batch query reads, split into N ordered micro-batches,
+  * and returns the final sink table as a plain DataFrame — so a streaming
+  * tier can face the exact same DuckDB oracle as its batch twin (the
+  * driver's t2 gate), not just an in-spec streaming≡batch assertion.
   *
-  * This is deliberately TEST/VERIFY infrastructure, not a production path:
-  * the rows are collected to the driver to feed a MemoryStream, because the
-  * replay's whole point is CONTROLLED batch boundaries (contiguous
-  * event-time slices, processed one micro-batch at a time). Verify-SF
-  * inputs are a few thousand rows; production streams use `readStream`
-  * (files/Kafka) with the same transform, where nothing is ever collected.
-  * For replays over tables too big to collect, [[replayFiles]] keeps the
-  * same controlled-boundary contract with a distributed file feed.
+  * Mechanics: `src` is range-partitioned into `numBatches` slices on
+  * `orderCols` (a DISTRIBUTED global ordering — each slice is a
+  * contiguous key range, no single-task sort) and written as parquet,
+  * one file per slice, in one distributed pass; nothing is collected to
+  * the driver. The watched directory starts empty; slice files are moved
+  * in ONE AT A TIME with `processAllAvailable()` between moves, so
+  * micro-batch boundaries are exactly the slice boundaries. Slice sizes
+  * are approximately equal (range boundaries come from sampling);
+  * every replayed operator's contract is stated over CONTIGUOUS ordered
+  * slices, not slice cardinality, so any slicing must land on the same
+  * final table.
   *
-  * Ordering contract: rows are fed in the order given. Operators whose
-  * state transition is commutative+associative+idempotent (register
-  * sketches) accept any order; sequential operators (funnel) are fed
-  * event-time-sorted slices, matching their documented in-order guarantee.
+  * Ordering contract: operators whose state transition is
+  * commutative+associative+idempotent (register sketches) accept any
+  * order; sequential operators (funnel) are fed event-time-sorted
+  * slices, matching their documented in-order guarantee.
   */
 object Replay {
 
   private val ids = new AtomicInteger(0)
 
-  /** Replay `rows` through `pipe` as `numBatches` contiguous micro-batches;
-    * returns the memory-sink table after the last batch is processed.
+  /** Replay `src` through `pipe` as `numBatches` contiguous slices on
+    * `orderCols`; returns the memory-sink table after the last batch.
     *
     * @param mode OutputMode.Complete for streaming aggregations (the sink
     *             table IS the final state), OutputMode.Append for
     *             flatMapGroupsWithState-style emitters (the sink table is
     *             the full emission log).
-    * @param flush extra micro-batches fed AFTER the main chunks, one batch
-    *             per element. Append-mode event-time aggregations
-    *             (session_window, tumbling windows) only emit a group once
-    *             the WATERMARK passes it, and the watermark a batch runs
-    *             with derives from the data of prior batches — so closing
-    *             the final groups takes two more batches: one whose rows
-    *             push max event time past them, and one more to run under
-    *             the advanced watermark. Callers pass far-future sentinel
-    *             rows here (twice) and filter them from the sink. */
-  def replay[T](spark: SparkSession, rows: Seq[T], numBatches: Int,
-      mode: OutputMode, flush: Seq[Seq[T]] = Nil)(
-      pipe: Dataset[T] => DataFrame)(
-      implicit enc: Encoder[T]): DataFrame = {
-    require(numBatches >= 1, s"numBatches=$numBatches must be >= 1")
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[T]
-    val out = pipe(mem.toDS())
-    val sink = s"graft_replay_${ids.incrementAndGet()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-replay-ckpt").toString
-    val query = out.writeStream.format("memory").queryName(sink)
-      .outputMode(mode).option("checkpointLocation", ckpt).start()
-    try {
-      // ceil-sized contiguous slices: every row lands in exactly one batch
-      val per = (rows.size + numBatches - 1).max(1) / numBatches.max(1)
-      (rows.grouped(per.max(1)) ++ flush.iterator).foreach { chunk =>
-        mem.addData(chunk)
-        query.processAllAvailable()
-      }
-    } finally {
-      query.stop()
-      // the temp checkpoint is dead once the query stops (the memory-sink
-      // table lives in the session, not the checkpoint) — delete it so
-      // verify runs don't accumulate graft-replay-ckpt* dirs on /tmp
-      try {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } finally walk.close()
-      } catch { case _: Throwable => () } // cleanup must not mask a result
-    }
-    spark.table(sink)
-  }
-
-  /** FILE-SOURCE replay: the same contiguous-ordered-slice contract as
-    * [[replay]], with nothing ever collected to the driver — the scale
-    * tier of the oracle gate (VERDICT r9 #5: the MemoryStream harness
-    * collects the whole input table, a driver-memory bottleneck at sf1+).
-    *
-    * Mechanics: `src` is range-partitioned into `numBatches` slices on
-    * `orderCols` (a DISTRIBUTED global ordering — each slice is a
-    * contiguous key range, no single-task sort) and written as parquet,
-    * one file per slice, in one distributed pass. The watched directory
-    * starts empty; slice files are moved in ONE AT A TIME with
-    * `processAllAvailable()` between moves, so micro-batch boundaries are
-    * exactly the slice boundaries — the same controlled-batch-order seam
-    * MemoryStream gave us, now fed by the filesystem. Slice sizes are
-    * approximately equal (range boundaries come from sampling) rather
-    * than exactly ceil(n/numBatches); every replayed operator's contract
-    * is stated over CONTIGUOUS ordered slices, not slice cardinality, so
-    * the distinction is immaterial and any slicing must land on the same
-    * final table.
-    *
-    * `flush` batches (far-future sentinels closing event-time windows)
-    * are appended as one file each, after the main slices. */
+    * @param flush extra micro-batches fed AFTER the main slices, one file
+    *             each. Append-mode event-time aggregations (session_window,
+    *             tumbling windows) only emit a group once the WATERMARK
+    *             passes it, and the watermark a batch runs with derives
+    *             from the data of prior batches — so closing the final
+    *             groups takes two more batches: one whose rows push max
+    *             event time past them, and one more to run under the
+    *             advanced watermark. Callers pass far-future sentinel rows
+    *             here (twice) and filter them from the sink. */
   def replayFiles(spark: SparkSession, src: DataFrame, orderCols: Seq[Column],
       numBatches: Int, mode: OutputMode, flush: Seq[DataFrame] = Nil)(
       pipe: DataFrame => DataFrame): DataFrame = {
@@ -153,14 +97,10 @@ object Replay {
       }
     } finally {
       query.stop()
-      try {
-        val walk = Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        } finally walk.close()
-      } catch { case _: Throwable => () } // cleanup must not mask a result
+      // the slices and checkpoint are dead once the query stops (the
+      // memory-sink table lives in the session); the cleanup never
+      // throws, so it cannot mask a result
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
     }
     spark.table(sinkName)
   }

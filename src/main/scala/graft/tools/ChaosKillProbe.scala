@@ -48,12 +48,9 @@ object ChaosKillProbe {
       "local-cluster[2,8,8192]")
     require(master.startsWith("local-cluster"),
       s"chaos gate needs real executor JVMs, got master=$master")
-    val spark = graft.cli.CliUtil.builder(master, "8")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      .config(graft.cli.CliUtil.clusterConfs(master, sys.env))
-      // default 4 task failures / 4 stage attempts tolerate one murder;
-      // what must NOT be raised is anything masking nondeterminism
-      .getOrCreate()
+    // default 4 task failures / 4 stage attempts tolerate one murder;
+    // what must NOT be raised is anything masking nondeterminism
+    val spark = graft.cli.CliUtil.session("chaos-kill", Some(master))
     spark.sparkContext.setLogLevel("WARN")
     val qs = graft.Queries.registry.filter(q => names.contains(q.name))
     require(qs.map(_.name).toSet == names.toSet,

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 /** Deep-rounds cost probe for the caller-budgeted loop operators: times
   * each operator at increasing round budgets on the same corpus, cold per
   * measurement (cache + memo cleared), in the session the CLI mains use
-  * (`local[SPARK_GRAFT_CPUS]`, so it measures the host it runs on).
+  * (`local[SPARK_GRAFT_CPUS]`, else all the host's cores). Each operator
+  * first runs once untimed at the smallest budget, so the JVM's first
+  * codegen compile of its classes falls in no timed call.
   * Every operator here must read LINEAR marginal cost per round (nested
   * round plans once cost 30+ min of driver-side planning at rounds=20).
   * PageRank.fixedPointAdj and PageRank.personalizedAdj run their rounds
@@ -23,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object LoopDepthProbe {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    graft.cli.CliUtil.pinLocale()
     val dir = args(0)
     val (optArgs, roundArgs) = args.drop(1).partition(_.contains("="))
     val opts = optArgs.map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
@@ -57,14 +59,21 @@ object LoopDepthProbe {
       "kcore_adj" -> (r => graft.operators.KCore.survivorsAdj(
         graft.Tables.copurchaseAdjacency(spark, dir), k.get, r)))
 
-    for ((name, fn) <- ops if only.forall(_.contains(name)) &&
-        (name != "kcore_adj" || k.isDefined); r <- rounds) {
+    val selected = ops.filter { case (name, _) =>
+      only.forall(_.contains(name)) && (name != "kcore_adj" || k.isDefined) }
+    /** Output rows and seconds of one call, cache and memo cleared. */
+    def cold(fn: Int => org.apache.spark.sql.DataFrame,
+        r: Int): (Long, Double) = {
       spark.catalog.clearCache()
       graft.operators.LoopCache.clearMemo()
       val t0 = System.nanoTime()
       val n = fn(r).count()
-      println(f"[loop-depth] $name%-14s rounds=$r%-3d out=$n%-8d " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+      (n, (System.nanoTime() - t0) / 1e9)
+    }
+    selected.foreach { case (_, fn) => cold(fn, rounds.min) }
+    for ((name, fn) <- selected; r <- rounds) {
+      val (n, sec) = cold(fn, r)
+      println(f"[loop-depth] $name%-14s rounds=$r%-3d out=$n%-8d $sec%.1f s")
     }
     spark.stop()
   }

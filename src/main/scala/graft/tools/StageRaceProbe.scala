@@ -27,13 +27,13 @@ import org.json4s.JsonDSL._
   */
 object StageRaceProbe {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    graft.cli.CliUtil.pinLocale()
     val role = args(0)
     val peer = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val root = Paths.get(sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
       sys.error("SPARK_GRAFT_STAGE_DIR must point at the shared race root")))
-    val spark = graft.cli.CliUtil.builder("local[8]", "8").getOrCreate()
+    val spark = graft.cli.CliUtil.session("stage-race")
     spark.sparkContext.setLogLevel("ERROR")
 
     // rendezvous: announce readiness, then spin until the peer is ready

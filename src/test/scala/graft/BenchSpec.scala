@@ -149,6 +149,43 @@ class BenchSpec extends AnyFunSuite {
     assert(clusterConfs(small, Map("SPARK_GRAFT_JARS" -> "graft.jar",
       "SPARK_GRAFT_EXECUTOR_MEM" -> "1536m"))("spark.executor.memory") == "1536m")
     intercept[IllegalArgumentException](clusterConfs(small, Map.empty))
+    // every session's confs, as a pure function of (master, env):
+    // shuffle partitions are the master's task slots
+    def sessionConfs(master: Option[String], env: Map[String, String]) =
+      graft.cli.CliUtil.confs("t", master, env)
+    val fixed = Map(
+      "spark.app.name" -> "t",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "graft.streaming.LocalCheckpointFileManager",
+      "spark.sql.optimizer.windowGroupLimitThreshold" -> "16777216",
+      "spark.cleaner.periodicGC.interval" -> "120s")
+    val env4 = Map("SPARK_GRAFT_CPUS" -> "4")
+    assert(sessionConfs(Some("local[4]"), Map.empty) == fixed ++ Map(
+      "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4"))
+    assert(sessionConfs(Some("local[4,2]"), Map.empty) == fixed ++ Map(
+      "spark.master" -> "local[4,2]", "spark.sql.shuffle.partitions" -> "4"))
+    assert(sessionConfs(None, env4) == fixed ++ Map(
+      "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4"))
+    // unset SPARK_GRAFT_CPUS: every core the JVM sees
+    val cores = Runtime.getRuntime.availableProcessors.toString
+    assert(sessionConfs(None, Map.empty) == fixed ++ Map(
+      "spark.master" -> s"local[$cores]",
+      "spark.sql.shuffle.partitions" -> cores))
+    // SPARK_GRAFT_JARS under a local master becomes spark.jars, alone
+    assert(sessionConfs(None, env4 + ("SPARK_GRAFT_JARS" -> "graft.jar")) ==
+      fixed ++ Map("spark.master" -> "local[4]",
+        "spark.sql.shuffle.partitions" -> "4", "spark.jars" -> "graft.jar"))
+    // local-cluster: workers x cores slots, plus the cluster confs
+    val jars = Map("SPARK_GRAFT_JARS" -> "graft.jar")
+    assert(sessionConfs(Some(small), env4 ++ jars) == fixed ++
+      clusterConfs(small, jars) ++ Map("spark.master" -> small,
+        "spark.sql.shuffle.partitions" -> "4"))
+    assert(sessionConfs(Some("local-cluster[2,8,8192]"), jars)(
+      "spark.sql.shuffle.partitions") == "16")
+    intercept[IllegalArgumentException](sessionConfs(Some(small), env4))
   }
 
   test("provenanceJson keeps its text for derived, prebuilt and waited stages") {

@@ -11,11 +11,7 @@ object SparkTestSession {
     // idempotency spec (HttpSourceSpec) needs Spark's real at-least-once
     // task re-execution path. Tests that expect job failure still fail
     // (after one extra attempt); nothing else observes the difference.
-    val s = graft.cli.CliUtil.builder("local[4,2]", "4")
-      // match the prod factories (Verify/Bench/Mains): rank-filter
-      // pre-trim must engage at corpus-scale quotas
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      .getOrCreate()
+    val s = graft.cli.CliUtil.session("graft-test", Some("local[4,2]"))
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -204,6 +200,26 @@ class KpiSpec extends AnyFunSuite {
       // weighted path quantizes daily means to 6-dp decimals -> ~1e-6 abs
       assert(t1 == t2); assert(math.abs(m1 - m2) < 1e-4, s"$t1: $m1 vs $m2")
     }
+  }
+
+  test("stage-[4] KPI hand-off: after clearCache and clearMemo, two " +
+      "stage-[4] queries compute the KPI aggregate once") {
+    val sf = "/root/testdata/sf0.001"
+    def run(q: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      q(spark, sf).write.format("noop").mode("overwrite").save()
+    run(QueriesKpi.reportEndpoint) // pins the KPI
+    spark.catalog.clearCache()
+    graft.operators.LoopCache.clearMemo()
+    run(QueriesKpi.reportGlobal) // computes the KPI and pins it again
+    // the second reads the pin: it reads only shuffle data it wrote
+    // itself, none the KPI aggregate left behind
+    val second = graft.tools.TaskEnvelope.measure(spark) {
+      run(QueriesKpi.globalP90Exact)
+    }
+    assert(second.shuffleWrite > 0)
+    assert(second.shuffleRead == second.shuffleWrite)
+    assert(QueriesKpi.kpiDaily(spark, sf).storageLevel !=
+      org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("S1 FAILFAST: malformed JSONL line aborts (calcular_kpi.py:80-83)") {
