@@ -456,10 +456,10 @@ object QueriesGraph {
     * contribution to C(maxBasket,3) ≈ 41k triples at the default.
     * TPC-H-shaped baskets (≤ ~7 parts) are never touched, so the q114
     * oracle is unaffected; on data where the cap bites, truncation can
-    * drop true triples containing a basket's LARGER part ids — size
-    * [[truncatedBaskets]] into a data-quality check when deploying on
-    * heavy-tailed carts, or pre-prune baskets with the Apriori item/
-    * pair-support filters first (q105's pair tier) so the cap never
+    * drop true triples containing a basket's LARGER part ids — count the
+    * baskets longer than `maxBasket` as a data-quality check when
+    * deploying on heavy-tailed carts, or pre-prune baskets with the
+    * Apriori item/pair-support filters first (q105's pair tier) so the cap never
     * fires. The cap is a per-basket bound, so total work stays linear
     * in basket count at any corpus scale. */
   private[graft] def tripleSupport(
@@ -488,17 +488,6 @@ object QueriesGraph {
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= 2)
   }
-
-  /** Diagnostic twin of [[tripleSupport]]'s cap: how many baskets were
-    * truncated (and the largest seen) — one cheap aggregate over the
-    * basket table, for the data-quality check the cap's scaladoc asks
-    * deployments on heavy-tailed carts to run. */
-  private[graft] def truncatedBaskets(
-      baskets: DataFrame, maxBasket: Int = 64): DataFrame =
-    baskets.agg(
-      sum(when(size(col("s")) > maxBasket, 1L).otherwise(0L))
-        .as("n_truncated"),
-      max(size(col("s"))).as("max_basket"))
 
   val frequentTriplesSql: String =
     """WITH op AS (

@@ -353,14 +353,15 @@ object QueriesRelational {
 
   // -------------------------------------------------------------------
   // q22 — as-of join: each order joined to the customer's most recent
-  // STRICTLY-earlier daily spend (operators/AsOfJoin, union+window —
-  // an operator Spark lacks; DuckDB's native ASOF JOIN is the oracle).
+  // STRICTLY-earlier daily spend (an operator Spark lacks; DuckDB's
+  // native ASOF JOIN is the oracle).
   // -------------------------------------------------------------------
   def asOfPrevSpend(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir)
-    // Day-grain asof (r19, guide §1.2/§2.3): the generic AsOfJoin union
-    // needed TWO orders scans (left rows + the daily aggregate) and ran
-    // its window over |orders|+|days| rows. But this asof's right side
+    // Day-grain asof (r19, guide §1.2/§2.3): a generic as-of join (union
+    // of both sides + last-non-null window) needs TWO orders scans (left
+    // rows + the daily aggregate) and runs its window over
+    // |orders|+|days| rows. But this asof's right side
     // is an aggregate OF the left side's own day grain, so the strict
     // "latest day before mine" is just lag(1) over the day-grain rows:
     // one scan, one (custkey, day) aggregate that also gathers the day's

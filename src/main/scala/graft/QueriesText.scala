@@ -1089,7 +1089,7 @@ object QueriesText {
 
   // ------------------------------------------------------------------
   // q164 — audio silence profiling (Multimodal.stubWaveform +
-  // silenceRuns): the dead-air screen an audio pipeline runs before
+  // silenceRunMediaStats): the dead-air screen an audio pipeline runs before
   // training on clips. Stub waveform (payload poly-31 hash + LCG, the
   // q50 contract; 1 + h mod 240 samples, amplitudes in [0,1024)) →
   // gaps-and-islands silence runs (amp < 128, length ≥ 3) → per-source
@@ -1104,7 +1104,7 @@ object QueriesText {
       "doc_id", "source", "text")
     val samples = Multimodal.stubWaveform(payloads)
     // one-pass per-media stats (Multimodal.silenceRunMediaStats): the
-    // old two-consumer shape (silenceRuns + a separate per-source count
+    // old two-consumer shape (a silence-run table + a per-source count
     // over the same `samples`) expanded the waveform twice — Catalyst
     // duplicates shared subtrees, and the mapPartitions decode is
     // opaque to it. Same values: per-media rows are distinct, so

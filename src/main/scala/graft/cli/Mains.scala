@@ -14,9 +14,18 @@ import graft.report.Report
   *   runMain graft.cli.GenerarReporte --input out/kpi --output out/report.html --umbral_p90 300
   */
 object CliUtil {
+  /** `--name value` pairs → name -> value. Any other shape throws an
+    * IllegalArgumentException naming the token: a token where a flag
+    * belongs that is not `--name`, or a flag whose value is missing
+    * (last token) or is another flag. */
   def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+    args.grouped(2).map { pair =>
+      val k = pair.head
+      if (k.length <= 2 || !k.startsWith("--"))
+        throw new IllegalArgumentException(s"expected a --name flag, got: $k")
+      if (pair.length < 2 || pair(1).startsWith("--"))
+        throw new IllegalArgumentException(s"flag $k has no value")
+      k.drop(2) -> pair(1)
     }.toMap
 
   /** Pin the JVM default locale to ROOT. The reference's Python

@@ -31,13 +31,6 @@ object VectorFunctions {
   def l2Sq(a: Column, b: Column): Column =
     VectorExpressions.l2Sq(a, b)
 
-  /** Deterministic pseudo-random ±1 hyperplane sign for LSH: sign of
-    * xxhash64 of (plane, component). Pure function of the indices — every
-    * executor and every run derives the same planes with no broadcast of
-    * random state. (Reference formulation; the bucket kernel fuses it.) */
-  def hyperplaneSign(plane: Int, component: Column): Column =
-    when(pmod(xxhash64(lit(plane), component), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))
-
   /** Random-hyperplane (SimHash) bucket id over `nPlanes` planes: bit i is
     * the sign of the projection of the embedding onto pseudo-random ±1
     * plane i. Vectors in the same bucket are likely cosine-close. Native

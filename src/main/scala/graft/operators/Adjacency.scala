@@ -9,8 +9,8 @@ import org.apache.spark.storage.StorageLevel
   * sorted array. Per round a loop then joins |nodes| rows and fans the
   * edges out inside a codegen'd explode, instead of scanning one row per
   * edge (see [[PageRank.fixedPointAdj]]). The staged graph tables
-  * ([[graft.Tables]]) and the edge-list entry points of every loop
-  * operator build their layouts here.
+  * ([[graft.Tables]]) and the edge-list entry points
+  * ([[Hits.scores]], [[KCore.survivors]]) build their layouts here.
   *
   * Duplicate edges keep their multiplicity: `collect_list` keeps every
   * row, so a doubled edge appears twice in its neighbor array (and
@@ -18,7 +18,7 @@ import org.apache.spark.storage.StorageLevel
 object Adjacency {
 
   /** BIGINT (src, dst) projection of `edges(srcCol, dstCol)` — the
-    * common first step of every edge-list entry point. */
+    * common first step of an edge-list entry point. */
   def arcs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))

@@ -26,16 +26,6 @@ import org.apache.spark.sql.functions._
   * jobs, zero new cache entries. */
 object Bfs {
 
-  /** Hop levels from `seeds` within `rounds` hops over DIRECTED edges
-    * (pass both orientations for undirected semantics). Returns
-    * (id, level) for reached nodes; seeds are level 0 even when also
-    * reachable by a longer path (min wins). Runs [[levelsAdj]] over the
-    * forward neighbor list [[Adjacency]] builds. */
-  def levels(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, rounds: Int = 3): DataFrame =
-    levelsAdj(Adjacency.neighbors(Adjacency.arcs(edges, srcCol, dstCol),
-      "src", "dst"), seeds, seedCol, rounds)
-
   /** The BFS loop over an ADJACENCY layout (id, sorted nbrs array): per
     * round the frontier joins the node-sized adjacency and the edge
     * fanout happens inside a codegen'd explode — no edge-row cache scan

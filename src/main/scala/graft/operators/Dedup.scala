@@ -97,12 +97,10 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** The LSH banding contract, in ONE place: band `b` keys on
-    * `xxhash64(sig[b·rows+1 .. b·rows+rows])`. Batch candidate pairs,
-    * incremental batch dedup, and the streaming screen
-    * ([[graft.streaming.StreamingOps.nearDupStream]]/`bandBuckets`) all
-    * derive buckets from this helper — bucket identity across them is
-    * load-bearing (a stream probe only ever hits a history bucket built
-    * with bit-identical banding). */
+    * `xxhash64(sig[b·rows+1 .. b·rows+rows])`. Batch candidate pairs and
+    * incremental batch dedup both derive buckets from this helper —
+    * bucket identity across them is load-bearing (a new batch only ever
+    * hits a history bucket built with bit-identical banding). */
   private[graft] def bandStructs(numPerm: Int, bands: Int): Seq[Column] = {
     require(numPerm % bands == 0, s"bands=$bands must divide numPerm=$numPerm")
     val rows = numPerm / bands

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * at 100× the bench corpus, 5.4 s at 2.4M edges → ~102 s at 239M.) The
   * threshold is either a fixed k or derived from the round-0 degrees
   * (num·meanDegree/den, exact integer division) on the operator's own
-  * pinned table. The edge-list entry points build the layout with
-  * [[Adjacency]] and run the same loop.
+  * pinned table. The edge-list entry point ([[survivors]]) builds the
+  * layout with [[Adjacency]] and runs the same loop.
   */
 object KCore {
 
@@ -41,23 +41,15 @@ object KCore {
     survivorsAdj(Adjacency.directed(Adjacency.arcs(edges, srcCol, dstCol)),
       k, rounds)
 
-  /** Survivors at the scale-adaptive threshold k = num·(mean degree)/den
-    * (truncating integer division — replayable in any engine), over
-    * symmetric `edges` as in [[survivors]]. */
-  def survivorsAtMeanFraction(edges: DataFrame, srcCol: String,
-      dstCol: String, num: Long, den: Long, rounds: Int): DataFrame =
-    survivorsAtMeanFractionAdj(
-      Adjacency.directed(Adjacency.arcs(edges, srcCol, dstCol)), num, den,
-      rounds)
-
   /** [[survivors]] over a symmetric adjacency (src, outdeg, sorted
     * dsts), e.g. the staged Tables.copurchaseAdjacency. */
   def survivorsAdj(adj: DataFrame, k: Long, rounds: Int): DataFrame =
     runAdj(adj, rounds, Seq("k", k),
       d0 => d0.sparkSession.range(1).select(lit(k).cast("long").as("k")))
 
-  /** [[survivorsAtMeanFraction]] over the symmetric adjacency (round-0
-    * degrees are its outdeg column). */
+  /** Survivors at the scale-adaptive threshold k = num·(mean degree)/den
+    * (truncating integer division — replayable in any engine) over the
+    * symmetric adjacency (round-0 degrees are its outdeg column). */
   def survivorsAtMeanFractionAdj(adj: DataFrame, num: Long, den: Long,
       rounds: Int): DataFrame =
     runAdj(adj, rounds, Seq("frac", num, den), deg0 => deg0.agg(expr(

@@ -18,29 +18,17 @@ import org.apache.spark.sql.functions._
   * pre-partitioned, the label table node-sized), a codegen'd explode
   * delivering each label to its neighbors, and a (node, label) count
   * whose argmax runs as a `max(struct(count, −label))` aggregate — the
-  * q63 shape — so there is NO per-node ranking window anywhere. The
-  * edge-list entry point ([[communities]]) builds the layout with
-  * [[Adjacency]] and runs the same loop. */
+  * q63 shape — so there is NO per-node ranking window anywhere. Labels
+  * start as the node id; isolated nodes never appear (no neighbors → no
+  * label source); positive ids required (the argmax negates labels for
+  * the tie-break). */
 object LabelPropagation {
-
-  /** Run `rounds` synchronous LPA rounds over UNDIRECTED edges (pass
-    * each edge once; both orientations are generated here, and a pair
-    * listed twice — in either orientation — counts once). Labels start
-    * as the node id. Returns (id, community). Isolated nodes never
-    * appear (no neighbors → no label source); positive ids required (the
-    * argmax negates labels for the tie-break). Runs [[communitiesAdj]]
-    * over the layout [[Adjacency]] builds. */
-  def communities(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int = 4): DataFrame =
-    communitiesAdj(Adjacency.undirected(
-        Adjacency.arcs(edges, srcCol, dstCol), "src", "dst")
-      .select(col("id"), array_distinct(col("nbrs")).as("nbrs")), rounds)
 
   /** The LPA loop over an undirected ADJACENCY layout (id, sorted nbrs
     * array): per round labels join the node-sized adjacency and a
     * codegen'd explode delivers each label to its neighbors. Each entry
     * of a neighbor list is one vote, so a caller wanting simple-graph
-    * semantics passes duplicate-free lists (as [[communities]] does). */
+    * semantics passes duplicate-free lists. Returns (id, community). */
   def communitiesAdj(adj: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     // rounds are pinned and re-rooted (LoopCache.pinnedRounds), and

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Common-neighbor link prediction — "which non-adjacent node pairs are
   * most likely to connect next" — over an ordered (u < v, unique) edge
@@ -60,7 +59,7 @@ object LinkPredict {
     * wedge volume Σ dg·(dg−1)/2 (sizes the pair exchange) and the id
     * range (selects the packed-pair fast path). Pinned, so repeated
     * invocations on the same graph read the cached row. */
-  private def graphStats(deg: DataFrame): (Long, Boolean) = {
+  private[graft] def graphStats(deg: DataFrame): (Long, Boolean) = {
     val r = LoopCache.pinnedRow(deg.select(
       sum(col("dg") * (col("dg") - lit(1L))).as("w"),
       min(col("n")).as("mn"), max(col("n")).as("mx")))
@@ -70,7 +69,7 @@ object LinkPredict {
     else (r.getLong(0) / 2, r.getLong(1) >= 0L && r.getLong(2) < (1L << 31))
   }
 
-  private def nReduceFor(deg: DataFrame, wedgeTotal: Long): Int = {
+  private[graft] def nReduceFor(deg: DataFrame, wedgeTotal: Long): Int = {
     val floorParts = deg.sparkSession.sessionState.conf.numShufflePartitions
     math.min(4096L,
       math.max(floorParts.toLong, wedgeTotal / PairRowsPerTask + 1)).toInt
@@ -94,8 +93,9 @@ object LinkPredict {
   /** Packed fast path: wedge pairs and edge marks travel as one
     * `(a << 32) | b` long (`p`), order-preserving for ids in [0, 2^31).
     * `wedgePacked` emits one `p` row per wedge with a < b. */
-  private def fusedTopPacked(wedgePacked: DataFrame, orderedEdges: DataFrame,
-      deg: DataFrame, topN: Int, nReduce: Int): DataFrame = {
+  private[graft] def fusedTopPacked(wedgePacked: DataFrame,
+      orderedEdges: DataFrame, deg: DataFrame, topN: Int,
+      nReduce: Int): DataFrame = {
     val marked = wedgePacked.select(col("p"), lit(0).as("ef"))
       .unionByName(orderedEdges.select(
         (shiftleft(col("u"), 32) + col("v")).as("p"), lit(1).as("ef")))
@@ -118,8 +118,9 @@ object LinkPredict {
   /** Struct fallback for ids outside [0, 2^31): identical semantics,
     * two-column pair key. `wedgePairs` emits one (a, b) row per wedge
     * with a < b. */
-  private def fusedTopStruct(wedgePairs: DataFrame, orderedEdges: DataFrame,
-      deg: DataFrame, topN: Int, nReduce: Int): DataFrame = {
+  private[graft] def fusedTopStruct(wedgePairs: DataFrame,
+      orderedEdges: DataFrame, deg: DataFrame, topN: Int,
+      nReduce: Int): DataFrame = {
     val marked = wedgePairs.select(col("a"), col("b"), lit(0).as("ef"))
       .unionByName(orderedEdges.select(col("u").as("a"), col("v").as("b"),
         lit(1).as("ef")))
@@ -134,46 +135,15 @@ object LinkPredict {
     scoreTop(top, deg)
   }
 
-  /** Top-`topN` non-adjacent pairs by common-neighbor count over
-    * `orderedEdges(u, v)` (u < v, unique). Returns (a, b,
-    * common_neighbors, jaccard), ordered by (common desc, a, b). */
-  def topCommonNeighborPairs(orderedEdges: DataFrame, topN: Int): DataFrame = {
-    require(topN >= 1, s"topN=$topN must be >= 1")
-    val e = orderedEdges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v"))
-    val adjacency = e.select(col("u").as("n"), col("v").as("nb"))
-      .union(e.select(col("v").as("n"), col("u").as("nb")))
-    val deg = adjacency.groupBy(col("n")).agg(count(lit(1)).as("dg"))
-    val (wedgeTotal, packable) = graphStats(deg)
-    val nReduce = nReduceFor(deg, wedgeTotal)
-    // wedges through a shared middle vertex; a < b counts each unordered
-    // candidate pair exactly once
-    val wedgeJoin = adjacency.as("x").join(adjacency.as("y"),
-      col("x.n") === col("y.n") && col("x.nb") < col("y.nb"))
-    val top =
-      if (packable) fusedTopPacked(
-        wedgeJoin.select((shiftleft(col("x.nb"), 32) + col("y.nb")).as("p")),
-        e, deg, topN, nReduce)
-      else fusedTopStruct(
-        wedgeJoin.select(col("x.nb").as("a"), col("y.nb").as("b")),
-        e, deg, topN, nReduce)
-    // cache probe: reuse a prior invocation's pinned top-N
-    if (LoopCache.cached(top)) return top
-    // the edge set backs the adjacency (twice, for wedges), the fused
-    // edge marks and the degrees — pin both anchors for the single
-    // drive, keep only the N-row final
-    e.persist(StorageLevel.MEMORY_AND_DISK)
-    adjacency.persist(StorageLevel.MEMORY_AND_DISK)
-    LoopCache.finish(top, e, adjacency)
-  }
-
-  /** [[topCommonNeighborPairs]] served from a STAGED adjacency layout
-    * (id, sorted nbrs array) + the ordered edge set: candidate pairs come
-    * from a codegen'd per-row C(deg,2) expansion
-    * (functions/Combinations2) instead of the wedge self-join — the same
+  /** Top-`topN` non-adjacent pairs by common-neighbor count, served from
+    * a STAGED adjacency layout (id, sorted nbrs array) + the ordered edge
+    * set `orderedEdges(u, v)` (u < v, unique). Returns (a, b,
+    * common_neighbors, jaccard), ordered by (common desc, a, b).
+    * Candidate pairs come from a codegen'd per-row C(deg,2) expansion
+    * (functions/Combinations2) instead of a wedge self-join — the same
     * Σ C(deg,2) candidates, but the adjacency streams once with no join
-    * build side, and degrees are `size(nbrs)` (no aggregate). Identical
-    * scores/order. */
+    * build side, and degrees are `size(nbrs)` (no aggregate). The specs
+    * pin it against the wedge-join formulation. */
   def topCommonNeighborPairsAdj(adj: DataFrame, orderedEdges: DataFrame,
       topN: Int): DataFrame = {
     require(topN >= 1, s"topN=$topN must be >= 1")

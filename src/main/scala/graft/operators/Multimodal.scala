@@ -160,86 +160,6 @@ object Multimodal {
     ds.mapPartitions(decodeBatch(codec) _).toDF()
   }
 
-  /** Resized media record: same payload identity, target geometry attached.
-    * A real implementation transforms pixels in `resizeBatch`; the stub
-    * rescales the fake geometry deterministically. */
-  final case class ResizedMedia(
-      media_id: Long, source: String,
-      width: Int, height: Int, resized_payload: Array[Byte])
-
-  /** Resize pipeline: decode-shaped partition-batched transform with a
-    * target box (aspect-preserving fit — the geometry every image pipeline
-    * wants). `codec="stub"` rescales the fake geometry and keeps the
-    * payload bytes; `codec="imageio"` really decodes, bilinear-rescales
-    * and re-encodes the pixels as PNG (undecodable payloads pass through
-    * untouched at 0×0). */
-  def resizeTo(payloads: DataFrame, maxW: Int, maxH: Int,
-      codec: String = "stub"): DataFrame = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    decoderFor(codec) // fail fast on a bad codec name, driver-side
-    def fit(w: Int, h: Int): (Int, Int) = {
-      val scale = math.min(1.0, math.min(maxW.toDouble / w, maxH.toDouble / h))
-      (math.max(1, (w * scale).toInt), math.max(1, (h * scale).toInt))
-    }
-    payloads.as[MediaRecord].mapPartitions { it =>
-      // per-partition codec setup seam (same as decodeBatch)
-      it.map { r =>
-        if (codec == "imageio") {
-          // degrade contract (same as decodeFeatures): a poisoned blob
-          // must never kill the pipeline — and "poisoned" includes
-          // payloads that DECODE fine but then blow up in
-          // createGraphics/drawImage/ImageIO.write (truncated rasters,
-          // exotic color models), so the WHOLE decode-resize-encode
-          // body degrades to the 0×0 pass-through record (ADVICE r16)
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.payload))
-            if (img == null) ResizedMedia(r.media_id, r.source, 0, 0, r.payload)
-            else {
-              val (tw, th) = fit(img.getWidth, img.getHeight)
-              val out = new java.awt.image.BufferedImage(
-                tw, th, java.awt.image.BufferedImage.TYPE_INT_RGB)
-              val g = out.createGraphics()
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, tw, th, null)
-              g.dispose()
-              val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(out, "png", bos)
-              ResizedMedia(r.media_id, r.source, tw, th, bos.toByteArray)
-            }
-          } catch {
-            case _: Exception =>
-              ResizedMedia(r.media_id, r.source, 0, 0, r.payload)
-          }
-        } else {
-          val d = fakeDecode(r)
-          val (tw, th) = fit(d.width, d.height)
-          ResizedMedia(r.media_id, r.source, tw, th, r.payload)
-        }
-      }
-    }.toDF()
-  }
-
-  /** Frame sampling for video-shaped payloads: emit every `stride`-th
-    * frame index up to the stub-derived frame count — the explode-shaped
-    * transform (one row in, k rows out) a video pipeline runs before
-    * per-frame decode. Frame payload extraction is the stubbed seam. */
-  def sampleFrames(payloads: DataFrame, stride: Int): DataFrame = {
-    require(stride >= 1, s"stride must be >= 1, got $stride")
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    payloads.as[MediaRecord].mapPartitions { it =>
-      it.flatMap { r =>
-        val d = fakeDecode(r)
-        val nFrames = 1 + math.floorMod(d.n_bytes, 240L).toInt // stub: ≤10s@24fps
-        (0 until nFrames by stride).map(f => (r.media_id, r.source, f, nFrames))
-      }
-    }.toDF("media_id", "source", "frame_index", "n_frames")
-  }
-
   /** 16-bit perceptual hash (aHash) over the decoded feature vector:
     * bit j is set iff `features[j]` is STRICTLY above the vector mean —
     * compared as `dec(f_j)·16 > Σ dec(f_k)` with dec = an exact
@@ -309,8 +229,8 @@ object Multimodal {
     * fake codec: a deterministic pure function of the payload bytes
     * (same poly-31 hash seed, same LCG walk as `fakeDecode`, so the
     * q164 oracle replays it with the q50 HUGEINT machinery). Sample
-    * count is `1 + h mod 240` (signed floor-mod of the payload hash —
-    * NOT sampleFrames' byte-length rule), amplitudes land in
+    * count is `1 + h mod 240` (signed floor-mod of the payload hash),
+    * amplitudes land in
     * [0, 1024). A real implementation swaps the
     * body for a PCM decoder at this same mapPartitions seam — one
     * iterator per partition, rows exploded per sample. */
@@ -334,8 +254,9 @@ object Multimodal {
 
   /** ONE-PASS per-media silence statistics: (media_id, source,
     * n_samples, n_runs, longest_run, sil_in_runs) — the q164 report's
-    * inputs from a single traversal of the sample stream. Consuming
-    * [[silenceRuns]] and a separate per-media count from the same
+    * inputs from a single traversal of the sample stream. Consuming a
+    * per-run silence table (island key `pos − row_number()` over the
+    * silent rows only) and a separate per-media count from the same
     * `samples` DataFrame duplicates the decode subtree (Catalyst shares
     * nothing across DAG branches — the mapPartitions waveform expansion
     * ran TWICE per q164 call, the heaviest stage of its sf0.1 profile).
@@ -345,7 +266,7 @@ object Multimodal {
     * identical island key — and total sample counts fall out of the
     * same grouped pass (the null island of non-silent rows counts
     * toward n_samples only). Runs shorter than `minRun` are screened in
-    * the per-media re-aggregate, bit-equal to [[silenceRuns]]'s filter;
+    * the per-media re-aggregate, bit-equal to the per-run table's filter;
     * sources/media with no qualifying run report n_runs 0 and NULL
     * longest_run/sil_in_runs (callers coalesce, matching the old
     * left-join shape). One media-keyed window + two same-key
@@ -368,28 +289,6 @@ object Multimodal {
         count(when(isRun, 1)).as("n_runs"),
         max(when(isRun, col("cnt"))).as("longest_run"),
         sum(when(isRun, col("cnt"))).as("sil_in_runs"))
-  }
-
-  /** Silence-run detection over a sample stream — the gaps-and-islands
-    * pass an audio pipeline runs to drop dead air before training on a
-    * clip: consecutive runs of ≥ `minRun` samples below `silenceBelow`,
-    * one row per run with its start and length. The island key is the
-    * classic `pos − row_number()` over the silent rows only — constant
-    * per run, distinct across runs — so the whole detection is one
-    * media-keyed window plus a grouped count, no self-join, no state.
-    * Samples per media bound the window buffer (a production pipeline
-    * chunks clips upstream; the decode emits ≤240 here). */
-  def silenceRuns(samples: DataFrame,
-      silenceBelow: Int, minRun: Int): DataFrame = {
-    require(minRun >= 1, s"minRun=$minRun must be >= 1")
-    val w = Window.partitionBy(col("media_id")).orderBy(col("pos"))
-    samples.filter(col("amp") < silenceBelow)
-      .withColumn("__grp", col("pos") - row_number().over(w))
-      .groupBy(col("media_id"), col("source"), col("__grp"))
-      .agg(count(lit(1)).cast("long").as("run_len"),
-        min(col("pos")).as("run_start"))
-      .filter(col("run_len") >= minRun)
-      .drop("__grp")
   }
 
   /** Scene segmentation over a per-frame feature stream — the cut

@@ -120,20 +120,13 @@ object NgramLm {
     * outgrows broadcast — leave it false and the joins shuffle on the
     * aggregated tables, one row per DISTINCT bigram, which is the skew-safe
     * shape. NLLs stage through DECIMAL(18,6) (the q03/q50 determinism
-    * rule) before the per-document mean. */
-  def bigramScores(df: DataFrame, idCol: String, textCol: String,
-      alpha: Double = 0.4, broadcastModel: Boolean = true): DataFrame =
-    // pin the per-doc scores (the operator's one corpus-sized-input,
-    // doc-sized-output table): a warm re-invocation probes and serves
-    // them without re-running the scoring joins or re-tokenizing
-    LoopCache.finish(
-      scoreBigrams(df, idCol, textCol, fitBigrams(df, idCol, textCol),
-        alpha, broadcastModel))
-
-  /** [[bigramScores]] against an externally fitted (typically STAGED —
-    * a trained LM is the canonical offline artifact of a perplexity
-    * filter) model: the per-call plan tokenizes the corpus once for
-    * scoring and never re-fits the counts. */
+    * rule) before the per-document mean.
+    *
+    * The model is fitted outside the call ([[uniCountTable]] and
+    * [[biCountTable]], typically STAGED — a trained LM is the canonical
+    * offline artifact of a perplexity filter): the per-call plan
+    * tokenizes the corpus once for scoring and never re-fits the
+    * counts. */
   def bigramScoresWithModel(df: DataFrame, idCol: String, textCol: String,
       model: BigramModel, alpha: Double = 0.4,
       broadcastModel: Boolean = true): DataFrame =
@@ -141,7 +134,7 @@ object NgramLm {
       scoreBigrams(df, idCol, textCol, model, alpha, broadcastModel))
 
   /** Raw unigram count table (tok, c1) — the stageable half of
-    * [[fitBigrams]], no session pins. */
+    * a [[BigramModel]], no session pins. */
   def uniCountTable(df: DataFrame, idCol: String, textCol: String): DataFrame =
     tokenArrays(df, idCol, textCol).select(explode(col("ts")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c1"))
@@ -166,26 +159,6 @@ object NgramLm {
         slice(col("ts"), lit(1), size(col("ts")) - 1).as("prev"),
         slice(col("ts"), lit(2), size(col("ts")) - 1).as("tok"))).as("bg"))
       .select(col(idCol), col("bg.prev").as("prev"), col("bg.tok").as("tok"))
-
-  def fitBigrams(df: DataFrame, idCol: String, textCol: String): BigramModel = {
-    val base = tokenArrays(df, idCol, textCol)
-    // Both count tables are session-lived VOCAB-sized pins (the q88
-    // lesson, fitUnigrams): scoreBigrams references uniCounts THREE
-    // times (bigram-hit join, c1_prev join, backoff join) and each
-    // unpinned reference re-drove the whole tokenize+groupBy fit —
-    // per-invocation AND per-reference. Pinned, the fit runs once per
-    // session and warm re-invocations skip the token pass entirely.
-    val uniCounts = base.select(explode(col("ts")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c1"))
-    if (!LoopCache.cached(uniCounts))
-      uniCounts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = LoopCache.pinnedRow(uniCounts.agg(sum(col("c1")))).getLong(0)
-    val biCounts = bigramStream(base, idCol).groupBy(col("prev"), col("tok"))
-      .agg(count(lit(1)).as("c2"))
-    if (!LoopCache.cached(biCounts))
-      biCounts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    BigramModel(uniCounts, biCounts, n)
-  }
 
   /** Score a corpus against a fitted model. Self-scoring never backs off
     * (every observed bigram is in its own fit); held-out scoring exercises

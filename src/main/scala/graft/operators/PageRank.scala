@@ -45,9 +45,8 @@ import org.apache.spark.sql.functions._
   * job: the Pregel cost model without its float nondeterminism or a
   * driver round trip per superstep. (BFS, SSSP and k-core read the
   * predecessor twice, HITS bakes its values into the next round: those
-  * pin every round, see [[LoopCache.pinnedRounds]].) The edge-list
-  * entry points ([[fixedPoint]], [[personalized]]) build the layout
-  * with [[Adjacency]] and run the same loop.
+  * pin every round, see [[LoopCache.pinnedRounds]].) Callers pass the
+  * layout [[Adjacency]] builds (staged by [[graft.Tables]]).
   *
   * Staleness contract (all variants, round 16): results are memoized for
   * the session by canonicalized input plan + parameters
@@ -114,23 +113,10 @@ object PageRank {
     (tokens, (tokens / dampDen) * (dampDen - dampNum))
   }
 
-  /** Run `iterations` exact PageRank steps over `edges(srcCol, dstCol)`
-    * (duplicate edges are NOT deduplicated here — pre-`distinct` if the
-    * graph is simple; a doubled edge counts twice in `outdeg` and carries
-    * its tokens twice). Returns (id, rank_tokens) for every node that
-    * appears as a source or a target. Runs [[fixedPointAdj]] over the
-    * layout [[Adjacency]] builds. */
-  def fixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 5, initTokens: Long = AutoTokens,
-      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
-    val e = Adjacency.arcs(edges, srcCol, dstCol)
-    fixedPointAdj(Adjacency.directed(e), Adjacency.nodes(e), iterations,
-      initTokens, dampNum, dampDen)
-  }
-
   /** The PageRank loop, over an ADJACENCY layout (src, outdeg, dsts) +
-    * node table (staged: Tables.copurchaseAdjacency/copurchaseNodes; from
-    * an edge list: [[fixedPoint]]). Each edge carries
+    * node table (staged: Tables.copurchaseAdjacency/copurchaseNodes;
+    * from an edge list: [[Adjacency.directed]]/[[Adjacency.nodes]]).
+    * Returns (id, rank_tokens) for every node. Each edge carries
     * `(r·dampNum) div (dampDen·outdeg)` tokens, but the per-round operand
     * is node-sized (one row per source, destinations packed in an array),
     * so the join probes |nodes| rows and the edge volume only appears
@@ -194,25 +180,12 @@ object PageRank {
     }
   }
 
-  /** PERSONALIZED fixed-point PageRank: teleport mass flows only to the
-    * `seeds` node set, so ranks measure proximity to the seeds — the
-    * random-walk-with-restart recommender. Same exact-token semantics as
-    * [[fixedPoint]] (BIGINT sums, truncating division, dropped sink
-    * mass); non-seed nodes start at 0 and hold only propagated mass, so
-    * the result is exactly replayable by an external engine. Total mass
-    * is seeds·initTokens, so the overflow guard counts seeds, not nodes.
-    * Runs [[personalizedAdj]] over the layout [[Adjacency]] builds;
-    * duplicate edges keep their multiplicity, as in [[fixedPoint]]. */
-  def personalized(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String,
-      iterations: Int = 5, initTokens: Long = AutoTokens,
-      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame =
-    personalizedAdj(Adjacency.directed(Adjacency.arcs(edges, srcCol, dstCol)),
-      seeds, seedCol, iterations, initTokens, dampNum, dampDen)
-
-  /** The personalized loop over the adjacency layout — [[fixedPointAdj]]'s
-    * arithmetic and node-sized rounds, with the seed teleport re-entering
-    * each round. */
+  /** PERSONALIZED PageRank over the adjacency layout: teleport mass
+    * flows only to the `seeds` node set, so ranks measure proximity to
+    * the seeds (random walk with restart). [[fixedPointAdj]]'s exact
+    * token arithmetic and node-sized rounds, with the seed teleport
+    * re-entering each round; non-seed nodes start at 0. Total mass is
+    * seeds·initTokens, so the overflow guard counts seeds, not nodes. */
   def personalizedAdj(adj: DataFrame, seeds: DataFrame, seedCol: String,
       iterations: Int = 5, initTokens: Long = AutoTokens,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {

@@ -45,8 +45,9 @@ object Repetition {
     * PRODUCTION tier = one MAP-ONLY pass: every metric here is a
     * function of a single document's tokens — no cross-document state
     * exists — so routing per-doc gram counts through explode + two
-    * (doc, gram) shuffles (the relational tiers below) pays the engine's
-    * shuffle machinery for state that never leaves the row. The
+    * (doc, gram) shuffles (the relational tiers, kept as spec references)
+    * pays the engine's shuffle machinery for state that never leaves the
+    * row. The
     * [[graft.functions.RepetitionStatsExpression]] scalar computes all
     * five statistics inside one codegen'd projection: the whole plan is
     * scan→project, zero exchanges, embarrassingly parallel at any corpus
@@ -72,117 +73,11 @@ object Repetition {
         col("st.dup5_chars").as("dup5_chars")))
   }
 
-  /** The relational formulations, kept as the spec REFERENCE tiers (the
-    * oracle SQL mirrors them shape-for-shape, and TextOpsSpec pins the
-    * map-only production tier against both):
-    *
-    * `hashGrams=true` rides every gram shuffle on FIXED-WIDTH
-    * `(xxhash64(gram), length(gram))` instead of the gram string —
-    * 5-gram strings average ~6x a word and dominated q140's shuffle
-    * bytes (VERDICT r9). The dup5 metric needs only count·length, so
-    * hashing is free there; the top-bigram STRING is recovered by a
-    * bounded join-back: collect the (few, usually 1) max-count hashes
-    * per doc and re-derive the lexicographically smallest matching gram
-    * from base's own text map-side — identical tie-break semantics to
-    * the string tier, modulo 64-bit collisions inside one document's
-    * gram set (~1e-13/doc). `hashGrams=false` is the all-strings plan. */
-  def metricsRelational(df: DataFrame, idCol: String, textCol: String,
-      hashGrams: Boolean = true): DataFrame = {
-    // normalize ONCE per branch: every downstream expression (word
-    // stats, both shingle widths) reads the projected `norm` column
-    // instead of re-running the regex normalization inside its own
-    // subtree — Catalyst does not share subexpressions across a Filter
-    // and the Projects below it, so inlining normalizeText at each use
-    // would pay the regex 2x per gram branch
-    val normed = df
-      .select(col(idCol).cast("long").as("doc_id"),
-        TextFunctions.normalizeText(col(textCol)).as("norm"))
-      .filter(length(col("norm")) > 0)
-    val base = normed
-      .select(col("doc_id"), col("norm"),
-        split(col("norm"), " ").as("w"),
-        length(col("norm")).cast("long").as("n_chars"))
-      .select(col("doc_id"), col("norm"), col("n_chars"),
-        size(col("w")).cast("long").as("n_words"),
-        size(array_distinct(col("w"))).cast("long").as("n_distinct"))
-
-    // exploded grams for one shingle width (same tokenization as
-    // Dedup.shingleArray: split(normalizeText, " "))
-    def grams(n: Int) = normed
-      .select(col("doc_id"),
-        explode(graft.functions.ShingleArrayExpression.shingles(
-          split(col("norm"), " "), n)).as("g"))
-    // (doc, gram) counts — partial agg before the doc-keyed shuffle; in
-    // the hashed tier the string is dropped BEFORE the exchange and only
-    // (gh, glen) ride the wire
-    def gramCounts(n: Int) = {
-      val keyed =
-        if (hashGrams)
-          grams(n).select(col("doc_id"), xxhash64(col("g")).as("gh"),
-            length(col("g")).cast("long").as("glen"))
-        else
-          grams(n).select(col("doc_id"), col("g").as("gh"),
-            length(col("g")).cast("long").as("glen"))
-      keyed.groupBy(col("doc_id"), col("gh"), col("glen"))
-        .agg(count(lit(1)).as("c"))
-    }
-
-    // most frequent 2-gram, ties to the lexicographically smallest gram.
-    // String tier: min over (-count, gram) directly. Hashed tier: find
-    // the max count, collect the tied hashes (bounded: ties only — one
-    // hash per doc in the common case), and resolve the winning STRING
-    // later against base's own `norm` column (already present in the
-    // final doc-keyed join) — the same tie-break without ever putting a
-    // gram string on the wire. The hashed branch emits (doc_id, ghs,
-    // top_bigram_count); the string branch emits the resolved string.
-    val counts2 = gramCounts(2)
-    val topBigram = if (!hashGrams) {
-      counts2
-        .groupBy(col("doc_id"))
-        .agg(min(struct((-col("c")).as("negc"), col("gh").as("g"))).as("t"))
-        .select(col("doc_id"), col("t.g").as("top_bigram"),
-          (-col("t.negc")).as("top_bigram_count"))
-    } else {
-      val cmax = counts2.groupBy(col("doc_id"))
-        .agg(max(col("c")).as("top_bigram_count"))
-      counts2.join(cmax, Seq("doc_id"))
-        .filter(col("c") === col("top_bigram_count"))
-        .groupBy(col("doc_id"))
-        .agg(collect_list(col("gh")).as("ghs"),
-          max(col("top_bigram_count")).as("top_bigram_count"))
-    }
-
-    // characters covered by duplicated 5-grams (count·length, no
-    // overlap merge — documented approximation, capped later); needs
-    // only count and length, so the hashed tier pays nothing here
-    val dup5 = gramCounts(5)
-      .filter(col("c") > 1)
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c") * col("glen")).as("dup5_chars"))
-
-    val joined = base
-      .join(topBigram, Seq("doc_id"), "left")
-      .join(dup5, Seq("doc_id"), "left")
-    val resolved =
-      if (!hashGrams) joined
-      else joined.withColumn("top_bigram",
-        // map-side string recovery: smallest of the doc's own 2-grams
-        // whose hash is in the candidate set (ghs is never null here —
-        // every normed doc has >= 1 gram under the short-doc contract —
-        // but a null lambda result just drops the element, so a miss
-        // degrades to NULL -> '' like the string tier's left-join miss)
-        array_min(filter(
-          graft.functions.ShingleArrayExpression.shingles(
-            split(col("norm"), " "), 2),
-          x => array_contains(col("ghs"), xxhash64(x)))))
-    finish(resolved)
-  }
-
   /** Shared finishing projection: per-mille metrics + threshold flag
     * from (doc_id, n_words, n_chars, n_distinct, top_bigram,
     * top_bigram_count, dup5_chars) — identical across all three tiers
     * so the equivalence specs compare full output rows. */
-  private def finish(stats: DataFrame): DataFrame =
+  private[graft] def finish(stats: DataFrame): DataFrame =
     stats
       .select(
         col("doc_id"), col("n_words"), col("n_chars"),

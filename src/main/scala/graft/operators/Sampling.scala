@@ -13,14 +13,11 @@ import org.apache.spark.sql.functions._
   * a plain `filter`, so it pushes down the scan and costs zero shuffle at
   * any scale.
   *
-  * Two keying tiers:
-  *  - [[lehmerSample]]: integer key through a Lehmer/Park-Miller step
-  *    (`key·48271 mod (2^31−1)`) — multiplications stay < 2^63 for keys
-  *    up to ~9.5·10^13, so ANSI mode (Spark 4 default) never overflows,
-  *    and the arithmetic is exact in any engine (oracle-checkable).
-  *  - [[contentHashSample]]: content key through `xxhash64` — for
-  *    sampling on text/bytes where no integer key exists (engine-local:
-  *    xxhash64 has no DuckDB equivalent).
+  * The draw ([[lehmerU]]) takes an integer key through a
+  * Lehmer/Park-Miller step (`key·48271 mod (2^31−1)`) — multiplications
+  * stay < 2^63 for keys up to ~9.5·10^13, so ANSI mode (Spark 4 default)
+  * never overflows, and the arithmetic is exact in any engine
+  * (oracle-checkable).
   */
 object Sampling {
 
@@ -47,10 +44,6 @@ object Sampling {
     val step1 = pmod(key.cast("long") * lit(LehmerA), lit(LehmerM))
     pmod(step1 * lit(LehmerA), lit(LehmerM))
   }
-
-  /** Keep ~`rate` of rows, decided by the integer key alone. */
-  def lehmerSample(df: DataFrame, keyCol: String, rate: Double): DataFrame =
-    df.filter(lehmerU(col(keyCol)) < lit(rate))
 
   /** Per-stratum rates: keep ~rates(s) of rows in stratum s (strata absent
     * from the map are dropped — an explicit allowlist, so a new upstream
@@ -166,18 +159,6 @@ object Sampling {
       .filter(lehmerInt(col(keyCol)) * col("n_before") <
         col("target_n") * lit(LehmerM))
       .drop("n_before", "target_n")
-
-  /** Content-keyed variant: stable under id reassignment (dedup-safe). */
-  def contentHashSample(df: DataFrame, textCol: String, rate: Double): DataFrame = {
-    // xxhash64 ∈ [Long.Min, Long.Max]; shift into [0,1] without overflow.
-    // The comparison is strict (u < rate) for rate < 1 — half-open
-    // bucket semantics — but at rate >= 1.0 "keep everything" must mean
-    // exactly that: the one row hashing to Long.MaxValue maps to
-    // u == 1.0 and a strict compare would drop it (ADVICE r16).
-    if (rate >= 1.0) return df
-    val u = (xxhash64(col(textCol)).cast("double") / lit(2.0 * Long.MaxValue)) + lit(0.5)
-    df.filter(u < lit(rate))
-  }
 
   /** Duplicate-consistent train/val/test assignment: the split key hashes
     * the CONTENT, so byte-identical documents always land in the same

@@ -22,9 +22,8 @@ import org.apache.spark.sql.functions._
   * with nbrs an array of (d, w) structs, src-partitioned and pinned once
   * per cold invocation; each round joins the node-sized frontier (dist
   * table) against it, fans the edges out inside a codegen'd explode and
-  * min-combines map-side. The edge-list entry point ([[distances]])
-  * builds the layout with [[Adjacency]] and runs the same loop, and
-  * [[Bfs]] runs it with a unit step. Rounds are pinned and re-rooted by
+  * min-combines map-side. [[Bfs]] runs the same loop with a unit
+  * step. Rounds are pinned and re-rooted by
   * [[LoopCache.pinnedRounds]], so depth is limited by data, not by
   * Catalyst planning. Warm re-invocations return the memoized frame
   * ([[LoopCache.memo]]): zero jobs, zero new cache entries; an
@@ -32,20 +31,6 @@ import org.apache.spark.sql.functions._
   * the same O(1) contract the other loops pin in their specs.
   */
 object ShortestPath {
-
-  /** Cheapest ≤`rounds`-hop cost from any seed to every reached node,
-    * over `edges(srcCol → dstCol, weightCol)` with non-negative BIGINT
-    * weights. Seeds start at cost 0 (min wins if a seed is also
-    * reachable). Returns (id, cost). Runs [[distancesAdj]] over the
-    * weighted neighbor list [[Adjacency]] builds. */
-  def distances(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, seeds: DataFrame, seedCol: String,
-      rounds: Int = 3): DataFrame =
-    distancesAdj(Adjacency.neighbors(edges.select(
-        col(srcCol).cast("long").as("src"),
-        struct(col(dstCol).cast("long").as("d"),
-          col(weightCol).cast("long").as("w")).as("nb")), "src", "nb"),
-      seeds, seedCol, rounds)
 
   /** The relaxation loop over a weighted ADJACENCY layout — (id, nbrs)
     * with nbrs an array of (d, w) structs: per relaxation the distance

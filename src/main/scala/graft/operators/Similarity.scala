@@ -144,16 +144,10 @@ object Similarity {
     * 100 TB you train on a sample and persist the codebook + cell
     * assignments; serving is the cell-equality join below. Recall is
     * bounded by nProbe/nCentroids; identical vectors always land in the
-    * query's first probe cell. */
-  def ivfKnn(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
-    ivfKnnProbe(ivfIndex(corpus, nCentroids, idCol, embCol),
-      queries, k, nProbe, idCol, embCol)
-
-  /** IVF index build — the OFFLINE half of [[ivfKnn]], split out so
-    * callers can stage it (operators/Staging) instead of re-fitting the
+    * query's first probe cell.
+    *
+    * This is the index build, the OFFLINE half (probe: [[ivfKnnProbe]]),
+    * so callers can stage it (operators/Staging) instead of re-fitting the
     * coarse quantizer on every query call: index construction is a
     * one-off batch job in any real ANN deployment, and re-running 8
     * KMeans passes per probe query was the dominant per-call cost.
@@ -195,7 +189,7 @@ object Similarity {
     assigned.unionByName(centroids)
   }
 
-  /** Probe-time half of [[ivfKnn]] over a pre-built (possibly staged)
+  /** Probe-time half of the IVF knn over a pre-built (possibly staged)
     * [[ivfIndex]] frame. */
   def ivfKnnProbe(
       index: DataFrame, queries: DataFrame, k: Int, nProbe: Int = 2,
@@ -374,24 +368,5 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
         VectorFunctions.cosineSimilarity(col("emb_a"), col("emb_b")).as("cosine"))
       .filter(col("cosine") >= minCosine))
-  }
-
-  /** EXACT cosine pairs ≥ `minCosine` via the full upper-triangle cross
-    * join — guaranteed-complete recall, O(n²) cost. This is the
-    * ground-truth tier for SPECS (asserting a screen's recall on a
-    * bounded slice); production paths use [[cosineNearDupsBanded]]
-    * (screen → exact verify) or [[cosineNearDups]] — never this. */
-  def exactCosinePairs(
-      corpus: DataFrame, minCosine: Double,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val b = corpus.select(col(idCol).as("id"),
-      col(embCol).cast("array<double>").as("emb"))
-    val l = b.select(col("id").as("id_a"), col("emb").as("emb_a"))
-    val r = b.select(col("id").as("id_b"), col("emb").as("emb_b"))
-    l.crossJoin(r)
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        VectorFunctions.cosineSimilarity(col("emb_a"), col("emb_b")).as("cosine"))
-      .filter(col("cosine") >= minCosine)
   }
 }

@@ -23,22 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object TriangleCensus {
 
-  /** Undirected top-k neighbor edges from `edges(srcCol, dstCol)`
-    * occurrence pairs (duplicates = multiplicity): per node keep the k
-    * strongest neighbors, then an undirected edge survives if EITHER
-    * endpoint kept it. Returns (u, v) with u < v, deduplicated. */
-  def topKNeighborEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int): DataFrame = {
-    val m = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("x"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("y"))
-      .filter(col("x") =!= col("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("m"))
-    topKNeighborEdgesFromCounts(m, "x", "y", "m", k)
-  }
-
-  /** [[topKNeighborEdges]] starting from PRE-AGGREGATED pair counts
-    * (`srcCol < dstCol` unique, `cntCol` = multiplicity) — the staged
+  /** Undirected top-k neighbor edges: per node keep the k strongest
+    * neighbors, then an undirected edge survives if EITHER endpoint kept
+    * it. Returns (u, v) with u < v, deduplicated. Starts from
+    * PRE-AGGREGATED pair counts (`srcCol < dstCol` unique, `cntCol` =
+    * multiplicity) — the staged
     * co-occurrence artifact (Tables.copurchasePairCounts), so consumers
     * never re-shuffle the raw pair stream per query. */
   def topKNeighborEdgesFromCounts(counts: DataFrame, srcCol: String,

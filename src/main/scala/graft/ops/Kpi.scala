@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge
 import org.apache.spark.sql.types._
 
 /** The reference's core query (stage [3], /root/reference/src/calcular_kpi.py):
@@ -11,11 +10,12 @@ import org.apache.spark.sql.types._
   * Logical plan (one shuffle):
   *   scan → null-guard filter (P1) → key derivation (P2/P3) + lenient casts
   *   (P4-P6) → hash aggregate A1-A6 (partial+final around an Exchange on the
-  *   group key) → py_round 2dp (P11, CPython-identical half-even) → sort (O1).
-  * The sort is a global `orderBy` on the returned frame. The single-CSV
-  * sink ([[writeKpiCsv]]) runs it inside its one output task, so the CLI
-  * recipe pays no range exchange for it; a caller that collects or writes
-  * a partitioned directory gets the usual range-partitioned sort.
+  *   group key) → py_round 2dp (P11, CPython-identical half-even).
+  * The returned frame is unsorted. The sort (O1) belongs to the output
+  * that promises order: the single-CSV sink ([[writeKpiCsv]]) sorts
+  * inside its one output task, and q01 ([[graft.QueriesKpi.kpiDaily]])
+  * ends in its own `orderBy`. Consumers that re-aggregate the table pay
+  * no range exchange and no sampling job for an order they discard.
   *
   * Scale notes: the p90 is the only aggregate whose buffer grows with its
   * group. Both tiers keep each group's values (the faithful tier a
@@ -87,7 +87,7 @@ object Kpi {
       Normalize.effectiveParseResult(col("parse_result"), anyCastFailed).as("parse_result"))
   }
 
-  /** A1-A6 + P7/P8 + P11 + O1 — the KPI aggregation over a normalized log
+  /** A1-A6 + P7/P8 + P11 — the KPI aggregation over a normalized log
     * with columns (date_utc, endpoint_base, status_code, elapsed_ms,
     * parse_result). Exact p90 is linear interpolation at position
     * (n−1)·0.9, but WHICH lerp depends on the mode, because the two
@@ -120,7 +120,10 @@ object Kpi {
     */
   def aggregate(normalized: DataFrame, crossEngineExact: Boolean = false): DataFrame =
     aggregateBy(normalized, col("date_utc"), col("date_utc"), crossEngineExact)
-      .orderBy(col("date_utc"), col("endpoint_base"))
+
+  /** O1 — the reference's row order, by day then endpoint
+    * (calcular_kpi.py:136). */
+  val kpiOrder: Seq[Column] = Seq(col("date_utc"), col("endpoint_base"))
 
   /** The KPI group body of [[aggregate]], shared by batch and stream: the
     * seven aggregates per (`day`, endpoint_base) group, projected to the
@@ -222,7 +225,7 @@ object Kpi {
         round2(p90Post(col("p90_raw"))).as("p90_elapsed_ms"))
   }
 
-  /** End-to-end reference query: raw bitácora → sorted KPI table. */
+  /** End-to-end reference query: raw bitácora → KPI table, unsorted. */
   def bitacoraKpi(bitacora: DataFrame, crossEngineExact: Boolean = false): DataFrame =
     aggregate(normalized(bitacora), crossEngineExact)
 
@@ -244,15 +247,11 @@ object Kpi {
     spark.read.option("header", "true").schema(kpiSchema).csv(path)
 
   /** K2 — single-CSV sink reproducing the reference's file contract
-    * (calcular_kpi.py:121-153). `singleFile` funnels every row into one
-    * task ([[SqlBridge.singlePartition]], the plan of `coalesce(1)`); a
-    * sorted frame such as [[bitacoraKpi]]'s is sorted inside that task,
-    * so the sink runs no range exchange and no sampling job. A
-    * small-scale compat mode only — at scale, drop it and write a
-    * partitioned directory. */
-  def writeKpiCsv(kpi: DataFrame, dir: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) SqlBridge.singlePartition(kpi) else kpi
-    out.select(kpiColumns.map(col): _*)
+    * (calcular_kpi.py:121-153): `coalesce(1)` funnels every row into one
+    * task with no shuffle, and the O1 sort runs inside that task, so the
+    * sink runs no range exchange and no sampling job. */
+  def writeKpiCsv(kpi: DataFrame, dir: String): Unit =
+    kpi.coalesce(1).sortWithinPartitions(kpiOrder: _*)
+      .select(kpiColumns.map(col): _*)
       .write.mode("overwrite").option("header", "true").csv(dir)
-  }
 }

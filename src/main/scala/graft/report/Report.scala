@@ -2,7 +2,6 @@ package graft.report
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlBridge
 import graft.functions.PyRoundExpression.pyRound
 
 /** Stage [4] — the reporting query + HTML sink
@@ -144,19 +143,12 @@ object Report {
 
   /** The card values and the endpoint table, collected. The KPI table
     * has one row per day and endpoint, so both aggregates run over ONE
-    * partition ([[SqlBridge.singlePartition]]): it satisfies the
-    * group-by, the global aggregate and the sort, which then need no
-    * exchange, and each collect is a single job. */
+    * partition (`coalesce(1)`, no shuffle): it satisfies the group-by,
+    * the global aggregate and the sort, which then need no exchange, and
+    * each collect is a single job. */
   private def collectTables(kpi: DataFrame, umbralP90: Double): (Row, Seq[Row]) = {
-    val one = SqlBridge.singlePartition(kpi)
+    val one = kpi.coalesce(1)
     (globalMetrics(one).collect().head, endpointTable(one, umbralP90).collect().toSeq)
-  }
-
-  /** End-to-end stage [4]: KPI table → HTML string (driver-side render over
-    * the collected ≤#endpoints rows). */
-  def buildReport(kpi: DataFrame, umbralP90: Double): String = {
-    val (g, e) = collectTables(kpi, umbralP90)
-    renderHtml(g, e, umbralP90)
   }
 
   /** The reference's fixed chart basenames (generar_reporte.py:269-270). */

@@ -37,48 +37,4 @@ object StreamingKpi {
     Kpi.aggregateBy(normalized.withWatermark("event_time", watermark),
       window(col("event_time"), "1 day"),
       to_date(col("window.start")).as("date_utc"), crossEngineExact = true)
-
-  /** Per-endpoint running state for the stateful tier. */
-  final case class EndpointState(
-      requests: Long, errors: Long, lastStatus: Int, consecutiveErrors: Long)
-
-  /** Alert event emitted when an endpoint crosses an error streak. */
-  final case class ErrorStreakAlert(
-      endpoint_base: String, consecutive_errors: Long, last_status: Int)
-
-  /** Custom streaming state via flatMapGroupsWithState: tracks per-endpoint
-    * consecutive-5xx streaks and emits an alert each time the streak
-    * reaches `threshold` — the kind of operator-state logic windowed aggs
-    * can't express (streaks reset on success, alerts fire mid-window).
-    * State lives in the state store; one shuffle on endpoint_base. */
-  def errorStreakAlerts(
-      normalized: DataFrame, threshold: Long = 3): org.apache.spark.sql.Dataset[ErrorStreakAlert] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = normalized.sparkSession
-    import spark.implicits._
-    val typed = normalized
-      .select(col("endpoint_base"), col("status_code"),
-        unix_micros(col("event_time")).as("t"))
-      .as[(String, Int, Long)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (endpoint: String, rows: Iterator[(String, Int, Long)], state: GroupState[EndpointState]) =>
-          var s = state.getOption.getOrElse(EndpointState(0, 0, 0, 0))
-          val alerts = scala.collection.mutable.ArrayBuffer.empty[ErrorStreakAlert]
-          // Spark gives no intra-group ordering guarantee for the iterator:
-          // sort the micro-batch's rows by event time so "consecutive" is
-          // well-defined. (Bounded by the batch's per-group volume; for
-          // unbounded groups pre-aggregate upstream.)
-          rows.toArray.sortBy(_._3).foreach { case (_, status, _) =>
-            val isErr = status >= 500
-            val streak = if (isErr) s.consecutiveErrors + 1 else 0L
-            s = EndpointState(
-              s.requests + 1, s.errors + (if (isErr) 1 else 0), status, streak)
-            if (isErr && streak == threshold)
-              alerts += ErrorStreakAlert(endpoint, streak, status)
-          }
-          state.update(s)
-          alerts.iterator
-      }
-  }
 }

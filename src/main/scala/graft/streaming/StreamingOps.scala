@@ -49,8 +49,9 @@ object StreamingOps {
     * both sides are broadcast-anti-joined against it BEFORE the join, so
     * the stateful operator never buffers the pathological key. Excluded
     * entities are NOT silently dropped — route them to a side sink with
-    * [[deniedEvents]] (two queries over the same sources is the standard
-    * Structured Streaming side-output shape). */
+    * a second query over the same sources (a broadcast semi join against
+    * the denylist: the standard Structured Streaming side-output
+    * shape). */
   def intervalJoinStream(
       left: DataFrame, right: DataFrame,
       keyCol: String, tsCol: String,
@@ -97,77 +98,6 @@ object StreamingOps {
       maxRate: Long): DataFrame =
     history.groupBy(col(keyCol)).agg(count(lit(1)).as("n_events"))
       .filter(col("n_events") > maxRate)
-
-  /** The guard's side output: the events [[intervalJoinStream]] excluded,
-    * as their own stream (stream-static broadcast SEMI join — stateless).
-    * Start this as a second query writing to a quarantine sink so
-    * denylisted traffic is auditable rather than silently dropped. */
-  def deniedEvents(stream: DataFrame, keyCol: String,
-      denylist: DataFrame): DataFrame =
-    stream.join(broadcast(denylist.select(col(keyCol))),
-      Seq(keyCol), "left_semi")
-
-  /** Streaming near-duplicate screening against a STATIC historical
-    * corpus: each arriving document is MinHash-signed in-stream (the
-    * signature is a per-row codegen expression — map work, no state) and
-    * its LSH band buckets are probed against the history's bucket table
-    * via a stream-static join. Emits one row per arriving doc:
-    * (idCol, tsCol, n_bucket_hits, near_dup).
-    *
-    * Scale shape: the static side is `historyBuckets` — build it ONCE
-    * from the historical signature table with [[bandBuckets]] and it
-    * behaves like any static dimension (broadcast if it fits, shuffled
-    * hash join otherwise; either way the STREAM side state is zero — a
-    * stream-static join keeps no watermark state at all). This is the
-    * streaming half of [[graft.operators.Dedup.incrementalLshCandidatePairs]]:
-    * the batch operator scores candidate pairs exactly; the stream gives
-    * the cheap online verdict (any-bucket-collision) that routes suspect
-    * docs to the batch scorer.
-    *
-    * The per-doc re-aggregation after the probe is a streaming agg; its
-    * keys include the watermarked event-time column, so per-doc state is
-    * dropped once the watermark passes — bounded like every operator in
-    * this file.
-    *
-    * @param docs   streaming DataFrame with idCol, tsCol, textCol
-    * @param historyBuckets static (band, bucket) table from [[bandBuckets]] */
-  def nearDupStream(
-      docs: DataFrame, idCol: String, tsCol: String, textCol: String,
-      historyBuckets: DataFrame,
-      numPerm: Int = 64, bands: Int = 16, shingleN: Int = 3,
-      watermark: String = "1 hour"): DataFrame = {
-    val tokens = split(graft.functions.TextFunctions.normalizeText(col(textCol)), " ")
-    // banding MUST be bit-identical to the history side: one shared
-    // helper (validates bands | numPerm), and shingleN is a parameter —
-    // a stream signing with a different shingle space than the history
-    // table would silently report every document clean
-    val bandCols = graft.operators.Dedup.bandStructs(numPerm, bands)
-    docs
-      .withWatermark(tsCol, watermark)
-      .select(col(idCol), col(tsCol),
-        graft.functions.MinHashSignatureExpression
-          .minhashSig(tokens, numPerm, shingleN).as("sig"))
-      .select(col(idCol), col(tsCol),
-        explode(array(bandCols: _*)).as("bb"))
-      .select(col(idCol), col(tsCol), col("bb.band"), col("bb.bucket"))
-      .join(historyBuckets.select(col("band"), col("bucket"),
-        lit(1).as("hit")), Seq("band", "bucket"), "left")
-      .groupBy(col(tsCol), col(idCol))
-      .agg(sum(coalesce(col("hit"), lit(0))).as("n_bucket_hits"))
-      .withColumn("near_dup", col("n_bucket_hits") > 0)
-  }
-
-  /** The static history side for [[nearDupStream]]: distinct (band,
-    * bucket) keys of a signature table ([[graft.operators.Dedup.minHashSignatures]]
-    * output). Rebuild on corpus append (or union incrementally). */
-  def bandBuckets(signatures: DataFrame,
-      numPerm: Int = 64, bands: Int = 16): DataFrame = {
-    val bandCols = graft.operators.Dedup.bandStructs(numPerm, bands)
-    signatures
-      .select(explode(array(bandCols: _*)).as("bb"))
-      .select(col("bb.band"), col("bb.bucket"))
-      .distinct()
-  }
 
   /** Continuous gap sessionization via the native `session_window`
     * aggregate: a session closes after `gap` of event-time silence, the

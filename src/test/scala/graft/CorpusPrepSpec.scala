@@ -392,6 +392,14 @@ class CorpusPrepSpec extends AnyFunSuite {
     assert(rep2.head.getAs[Long]("docs_out") == 1L)
   }
 
+  /** The bigram model `QueriesCorpus.bigramSurprisal` stages: both count
+    * tables plus the total token count. */
+  private def fitBigrams(docs: org.apache.spark.sql.DataFrame) = {
+    val uni = NgramLm.uniCountTable(docs, "doc_id", "text")
+    NgramLm.BigramModel(uni, NgramLm.biCountTable(docs, "doc_id", "text"),
+      uni.agg(sum($"c1")).head().getLong(0))
+  }
+
   test("bigramScores: hand-checked NLLs; held-out scoring backs off") {
     import graft.operators.NgramLm.BigramModel
     def dec6(x: Double): BigDecimal =
@@ -399,7 +407,8 @@ class CorpusPrepSpec extends AnyFunSuite {
     // corpus: "a b a b" + "b c" → N=6, c1: a=2 b=3 c=1;
     // c2: (a,b)=2 (b,a)=1 (b,c)=1
     val docs = Seq((1L, "a b a b"), (2L, "b c")).toDF("doc_id", "text")
-    val out = NgramLm.bigramScores(docs, "doc_id", "text")
+    val out = NgramLm.bigramScoresWithModel(docs, "doc_id", "text",
+        fitBigrams(docs))
       .orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // doc 1: first 'a' -ln(2/6); (a,b) -ln(2/2)=0; (b,a) -ln(1/3); (a,b) 0
@@ -411,7 +420,7 @@ class CorpusPrepSpec extends AnyFunSuite {
     assert(out(1) == ((2L, 2L, d2.toDouble)))
     // held-out: "b a c" — (b,a) seen; (a,c) UNSEEN → stupid backoff to
     // alpha*c1(c)/N; first 'b' unigram
-    val model = NgramLm.fitBigrams(docs, "doc_id", "text")
+    val model = fitBigrams(docs)
     val held = NgramLm.scoreBigrams(
       Seq((9L, "b a c")).toDF("doc_id", "text"), "doc_id", "text", model)
       .collect().map(r => (r.getLong(1), r.getDouble(2)))

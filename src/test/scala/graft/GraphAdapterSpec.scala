@@ -18,7 +18,7 @@ class GraphAdapterSpec extends AnyFunSuite {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("PageRank: a doubled edge counts twice in outdeg and carries its tokens twice") {
-    val got = pairs(PageRank.fixedPoint(edges, "src", "dst", iterations = 1))
+    val got = pairs(EdgeLoops.pageRank(edges, "src", "dst", iterations = 1))
     val T = 150000000000L; val init = 1000000000000L
     val c1 = init * 85L / (100L * 3L) // node 1: outdeg 3, not 2
     val c2 = init * 85L / 100L        // nodes 2 and 3: outdeg 1
@@ -42,7 +42,7 @@ class GraphAdapterSpec extends AnyFunSuite {
   test("LPA: a pair listed twice, in either orientation, is one neighbor") {
     // node 1's neighbors are {2, 3}: one vote each, tie to the smaller
     // label 2. Counted per row, {1,3} (3 rows) would outvote {1,2} (2).
-    val got = pairs(LabelPropagation.communities(edges, "src", "dst", rounds = 1))
+    val got = pairs(EdgeLoops.lpaCommunities(edges, "src", "dst", rounds = 1))
     assert(got == Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
   }
 }

@@ -268,11 +268,12 @@ class KernelSpec extends AnyFunSuite {
     val adj = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
       .groupBy(col("src"), col("outdeg"))
       .agg(sort_array(collect_list(col("dst"))).as("dsts"))
-    val viaEdges = PageRank.fixedPoint(e, "src", "dst", iterations = 4)
+    val viaEdges = EdgeLoops.pageRank(e, "src", "dst", iterations = 4)
     val viaAdj = PageRank.fixedPointAdj(adj, nodes, iterations = 4)
     assert(viaAdj.except(viaEdges).isEmpty && viaEdges.except(viaAdj).isEmpty)
     val seeds = Seq(1L, 6L).toDF("id")
-    val pEdges = PageRank.personalized(e, "src", "dst", seeds, "id", iterations = 4)
+    val pEdges = EdgeLoops.personalizedPageRank(e, "src", "dst", seeds, "id",
+      iterations = 4)
     val pAdj = PageRank.personalizedAdj(adj, seeds, "id", iterations = 4)
     assert(pAdj.except(pEdges).isEmpty && pEdges.except(pAdj).isEmpty)
   }
@@ -333,7 +334,7 @@ class KernelSpec extends AnyFunSuite {
       .union(e.select(col("dst").as("id"), col("src").as("nb"))).distinct()
     val adj = ue.groupBy(col("id"))
       .agg(sort_array(collect_list(col("nb"))).as("nbrs"))
-    val viaEdges = LabelPropagation.communities(e, "src", "dst", rounds = 3)
+    val viaEdges = EdgeLoops.lpaCommunities(e, "src", "dst", rounds = 3)
     val viaAdj = LabelPropagation.communitiesAdj(adj, rounds = 3)
     assert(viaAdj.except(viaEdges).isEmpty && viaEdges.except(viaAdj).isEmpty)
   }
@@ -353,7 +354,7 @@ class KernelSpec extends AnyFunSuite {
     import graft.operators.{Bfs, ShortestPath}
     val e = adjGraphEdges
     val seeds = Seq(1L).toDF("id")
-    val bEdges = Bfs.levels(e, "src", "dst", seeds, "id", rounds = 3)
+    val bEdges = EdgeLoops.bfsLevels(e, "src", "dst", seeds, "id", rounds = 3)
     val bAdj = Bfs.levelsAdj(adjOf(e), seeds, "id", rounds = 3)
     assert(bAdj.except(bEdges).isEmpty && bEdges.except(bAdj).isEmpty)
     val we = e.withColumn("w", col("src") * 10L + col("dst")) // distinct costs
@@ -361,7 +362,7 @@ class KernelSpec extends AnyFunSuite {
       .groupBy(col("src").as("id"))
       .agg(sort_array(collect_list(struct(col("dst").as("d"), col("w"))))
         .as("nbrs"))
-    val dEdges = ShortestPath.distances(we, "src", "dst", "w", seeds, "id", rounds = 3)
+    val dEdges = EdgeLoops.ssspDistances(we, "src", "dst", "w", seeds, "id", rounds = 3)
     val dAdj = ShortestPath.distancesAdj(wadj, seeds, "id", rounds = 3)
     assert(dAdj.except(dEdges).isEmpty && dEdges.except(dAdj).isEmpty)
   }
@@ -394,12 +395,12 @@ class KernelSpec extends AnyFunSuite {
   test("adjacency link prediction equals the wedge-join formulation") {
     import graft.operators.{LinkPredict, TriangleCensus}
     val pairs = adjGraphEdges // multiplicity-bearing occurrence pairs
-    val edges = TriangleCensus.topKNeighborEdges(pairs, "src", "dst", k = 3)
+    val edges = EdgeLoops.topKNeighborEdges(pairs, "src", "dst", k = 3)
     val ue = edges.select(col("u").as("id"), col("v").as("nb"))
       .union(edges.select(col("v").as("id"), col("u").as("nb")))
     val adj = ue.groupBy(col("id"))
       .agg(sort_array(collect_list(col("nb"))).as("nbrs"))
-    val viaEdges = LinkPredict.topCommonNeighborPairs(edges, topN = 10)
+    val viaEdges = References.topCommonNeighborPairs(edges, topN = 10)
     val viaAdj = LinkPredict.topCommonNeighborPairsAdj(adj, edges, topN = 10)
     assert(viaAdj.except(viaEdges).isEmpty && viaEdges.except(viaAdj).isEmpty)
   }
@@ -416,7 +417,7 @@ class KernelSpec extends AnyFunSuite {
     val viaEdges = KCore.survivors(e, "src", "dst", k = 3, rounds = 3)
     val viaAdj = KCore.survivorsAdj(adj, k = 3, rounds = 3)
     assert(viaAdj.except(viaEdges).isEmpty && viaEdges.except(viaAdj).isEmpty)
-    val mEdges = KCore.survivorsAtMeanFraction(e, "src", "dst",
+    val mEdges = EdgeLoops.kCoreAtMeanFraction(e, "src", "dst",
       num = 3, den = 4, rounds = 3)
     val mAdj = KCore.survivorsAtMeanFractionAdj(adj, num = 3, den = 4, rounds = 3)
     assert(mAdj.except(mEdges).isEmpty && mEdges.except(mAdj).isEmpty)

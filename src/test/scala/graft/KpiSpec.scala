@@ -182,9 +182,9 @@ class KpiSpec extends AnyFunSuite {
     // NaN/Infinity pass through (BigDecimal would throw)
     assert(PyRoundExpression.round(Double.NaN, 2).isNaN)
     assert(PyRoundExpression.round(Double.PositiveInfinity, 2).isPosInfinity)
-    // and the SQL registration works
-    GraftExtensions.register(spark)
-    assert(spark.sql("SELECT py_round(696.515, 2) AS r").as[Double].head() == 696.51)
+    // the generated code over a non-literal column rounds the same way
+    assert(df.repartition(1).select(PyRoundExpression.pyRound($"x", 2))
+      .as[Double].head() == 696.51)
   }
 
   test("A9 weighted re-aggregation identity: weighted mean of unrounded " +
@@ -218,8 +218,33 @@ class KpiSpec extends AnyFunSuite {
     }
     assert(second.shuffleWrite > 0)
     assert(second.shuffleRead == second.shuffleWrite)
-    assert(QueriesKpi.kpiDaily(spark, sf).storageLevel !=
+    assert(QueriesKpi.kpiAggregate(spark, sf).storageLevel !=
       org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("stage-[4] KPI hand-off pins the unsorted aggregate: no range " +
+      "exchange, fewer jobs than the sorted q01") {
+    val sf = "/root/testdata/sf0.001"
+    def cold(df: => org.apache.spark.sql.DataFrame) = {
+      spark.catalog.clearCache()
+      graft.operators.LoopCache.clearMemo()
+      graft.tools.TaskEnvelope.measure(spark) {
+        df.write.format("noop").mode("overwrite").save()
+      }
+    }
+    val sorted = cold(QueriesKpi.kpiDaily(spark, sf))
+    val staged = cold(QueriesKpi.kpiStaged(spark, sf))
+    // the pinned plan, as the cache holds it after the staging run
+    val pinned = QueriesKpi.kpiAggregate(spark, sf).queryExecution.executedPlan
+      .toString.toLowerCase
+    assert(pinned.contains("inmemoryrelation"), pinned)
+    assert(!pinned.contains("rangepartitioning"), pinned)
+    assert(staged.jobs < sorted.jobs, s"staged ${staged.jobs} vs sorted ${sorted.jobs}")
+    // q01 keeps the reference's (date, endpoint) order
+    val keys = QueriesKpi.kpiDaily(spark, sf)
+      .select($"date_utc".cast("string"), $"endpoint_base").as[(String, String)]
+      .collect().toSeq
+    assert(keys.nonEmpty && keys == keys.sorted)
   }
 
   test("S1 FAILFAST: malformed JSONL line aborts (calcular_kpi.py:80-83)") {

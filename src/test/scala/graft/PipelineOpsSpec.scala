@@ -13,8 +13,8 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("lehmer sampling is deterministic and repartition-invariant") {
     val df = (1L to 2000L).toDF("id")
-    val a = Sampling.lehmerSample(df, "id", 0.3).as[Long].collect().sorted.toSeq
-    val b = Sampling.lehmerSample(df.repartition(7), "id", 0.3)
+    val a = df.filter(Sampling.lehmerU($"id") < 0.3).as[Long].collect().sorted.toSeq
+    val b = df.repartition(7).filter(Sampling.lehmerU($"id") < 0.3)
       .as[Long].collect().sorted.toSeq
     assert(a == b)                       // partitioning must not matter
     assert(math.abs(a.length - 600) < 90) // ~30% ± a loose tolerance
@@ -33,9 +33,9 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("lehmer sampling handles negative keys (pmod keeps the draw in [0,1))") {
     val df = (-1000L to -1L).toDF("id")
-    val kept = Sampling.lehmerSample(df, "id", 0.3).count()
+    val kept = df.filter(Sampling.lehmerU($"id") < 0.3).count()
     assert(kept < 450, s"negative keys over-sampled: $kept/1000 at rate 0.3")
-    assert(Sampling.lehmerSample(df, "id", 0.0).count() == 0)
+    assert(df.filter(Sampling.lehmerU($"id") < 0.0).count() == 0)
   }
 
   test("bloom semi join works when both keys share a column name") {
@@ -53,14 +53,6 @@ class PipelineOpsSpec extends AnyFunSuite {
         graft.functions.VectorFunctions.cosineSimilarity($"a", $"b")).collect()
     }
     assert(e.getMessage != null)
-  }
-
-  test("content-hash sampling keys on the text, not the id") {
-    val df = Seq((1L, "aaa"), (2L, "aaa"), (3L, "bbb")).toDF("id", "text")
-    val kept = Sampling.contentHashSample(df, "text", 0.99)
-      .select($"id").as[Long].collect().toSet
-    // identical text -> identical keep/drop decision
-    assert(kept.contains(1L) == kept.contains(2L))
   }
 
   test("grouped top-k keeps exactly k rows per group with deterministic ties") {
@@ -143,11 +135,14 @@ class PipelineOpsSpec extends AnyFunSuite {
     val cosF = dotF($"a", $"b") / (normF($"a") * normF($"b"))
     val l2F = aggregate(zip_with($"a", $"b", (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
+    // plane p's ±1 sign for component i: the parity of xxhash64(p, i)
+    def signF(p: Int, i: org.apache.spark.sql.Column) =
+      when(pmod(xxhash64(lit(p), i), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))
     val nPlanes = 12
     val bucketF = (0 until nPlanes).map { p =>
       val proj = aggregate(
         zip_with($"a", sequence(lit(0), size($"a") - 1),
-          (v, i) => v * graft.functions.VectorFunctions.hyperplaneSign(p, i)),
+          (v, i) => v * signF(p, i)),
         lit(0.0), (acc, v) => acc + v)
       when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
     }.reduce(_ + _)

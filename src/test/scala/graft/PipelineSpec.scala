@@ -40,6 +40,22 @@ class PipelineSpec extends AnyFunSuite {
     rows.unpersist()
   }
 
+  test("CLI flags: --name value pairs parse; a malformed argument throws") {
+    import graft.cli.CliUtil.parseArgs
+    assert(parseArgs(Array("--seed", "7", "--salida", "-")) ==
+      Map("seed" -> "7", "salida" -> "-"))
+    assert(parseArgs(Array()) == Map.empty)
+    // each malformed shape names its token instead of being dropped
+    for ((args, token) <- Seq(
+        Array("--n_registros", "5", "--seed") -> "--seed", // trailing flag
+        Array("--a", "--b", "1") -> "--a",                 // value is a flag
+        Array("seed", "7") -> "seed",                      // not a flag
+        Array("--", "7") -> "--")) {                       // empty name
+      val e = intercept[IllegalArgumentException](parseArgs(args))
+      assert(e.getMessage.contains(token), e.getMessage)
+    }
+  }
+
   test("end-to-end: generate -> KPI csv -> read back -> report html") {
     val dir = java.nio.file.Files.createTempDirectory("graft_e2e")
     val data = SyntheticBitacora.generate(spark, 2000, seed = 7,
@@ -50,7 +66,9 @@ class PipelineSpec extends AnyFunSuite {
     val back = Kpi.readKpiCsv(spark, s"$dir/kpi")
     assert(back.count() == kpi.count())
     assert(back.schema == Kpi.kpiSchema)
-    val html = Report.buildReport(back, umbralP90 = 300.0)
+    val outHtml = dir.resolve("report.html")
+    Report.writeReportArtifacts(back, umbralP90 = 300.0, outHtml)
+    val html = java.nio.file.Files.readString(outHtml)
     assert(html.contains("Total requests"))
     assert(html.contains("alerta"))
     assert(html.contains("chart-data"))
@@ -242,9 +260,9 @@ class PipelineSpec extends AnyFunSuite {
       .flatMap(_.collect { case s: SortArray if s.base.isInstanceOf[ArrayTransform] => s })
     assert(p90Sorts.size == 1, s"p90 buffer sorted ${p90Sorts.size} times:\n$plan")
     assert(kpiJobs <= 2, s"KPI sink ran $kpiJobs jobs")
-    // same rows, same order as the frame itself
+    // same rows as the frame, in the reference's (date, endpoint) order
     val back = Kpi.readKpiCsv(spark, s"$dir/kpi")
-    assert(back.collect().toSeq == kpi.collect().toSeq)
+    assert(back.collect().toSeq == kpi.orderBy(Kpi.kpiOrder: _*).collect().toSeq)
 
     val (reportJobs, _) = jobsAndPlans(
       Report.writeReportArtifacts(back, 300.0, dir.resolve("report.html")))

@@ -64,43 +64,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("as-of join property: matches the naive quadratic reference, ∀ inputs") {
-    val caseGen = for {
-      left <- Gen.nonEmptyListOf(for {
-        k <- Gen.oneOf("a", "b", "c")
-        t <- Gen.chooseNum(0L, 50L)
-      } yield (k, t))
-      right <- Gen.nonEmptyListOf(for {
-        k <- Gen.oneOf("a", "b", "c")
-        t <- Gen.chooseNum(0L, 50L)
-      } yield (k, t))
-      strict <- Gen.oneOf(true, false)
-    } yield (left, right.distinct, strict) // right unique per (key,time): operator contract
-    samples(caseGen, 12).foreach { case (left, right, strict) =>
-      val lDf = left.zipWithIndex.map { case ((k, t), i) => (k, t, i.toLong) }
-        .toDF("k", "t", "lid")
-      val rDf = right.map { case (k, t) => (k, t, t * 1000.0 + k.hashCode % 7) }
-        .toDF("k", "t", "v")
-      val collected = graft.operators.AsOfJoin
-        .asOf(lDf, rDf, "k", "t", "t", Seq("v"), strict)
-        .select($"lid", $"v").collect()
-      // LEFT cardinality: exactly one output row per left row (a duplicate
-      // would vanish in the map below and escape the value checks)
-      assert(collected.length == left.size,
-        s"cardinality ${collected.length} != ${left.size} strict=$strict")
-      val got = collected
-        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
-      left.zipWithIndex.foreach { case ((k, t), i) =>
-        val want = right
-          .filter { case (rk, rt) => rk == k && (if (strict) rt < t else rt <= t) }
-          .sortBy(_._2).lastOption
-          .map { case (rk, rt) => rt * 1000.0 + rk.hashCode % 7 }
-        assert(got(i.toLong) == want,
-          s"left=($k,$t) strict=$strict right=$right")
-      }
-    }
-  }
-
   test("A1-A4 property: group counts preserve total minus dropped rows") {
     val rowGen = Gen.nonEmptyListOf(for {
       ts <- Gen.option(Gen.oneOf("2026-08-10T00:00:00Z", "2026-08-11T12:30:00Z"))

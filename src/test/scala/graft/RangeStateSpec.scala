@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.RangeJoin
-import graft.streaming.StreamingKpi
 
 class RangeStateSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -34,30 +32,5 @@ class RangeStateSpec extends AnyFunSuite {
         points, intervals, Seq("k"), "t", "lo", "hi", 100L)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-  }
-
-  test("flatMapGroupsWithState: error-streak alerts fire at threshold, reset on success") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, String, String, String, String)]
-    val streamDf = mem.toDF().toDF(
-      "timestamp_utc", "endpoint", "status_code", "elapsed_ms", "parse_result")
-    val alerts = StreamingKpi.errorStreakAlerts(
-      StreamingKpi.normalizedStream(streamDf), threshold = 2)
-    val q = alerts.writeStream.outputMode("append")
-      .format("memory").queryName("alerts").start()
-    try {
-      def ev(i: Int, sc: String) =
-        (f"2026-08-10T00:00:$i%02dZ", "/get", sc, "1.0", "ok")
-      mem.addData(ev(1, "500"), ev(2, "502")) // streak reaches 2 -> alert
-      q.processAllAvailable()
-      mem.addData(ev(3, "200"), ev(4, "503")) // reset, streak 1 -> no alert
-      q.processAllAvailable()
-      mem.addData(ev(5, "500")) // streak reaches 2 again -> second alert
-      q.processAllAvailable()
-      val got = spark.table("alerts").collect()
-      assert(got.length == 2)
-      assert(got.forall(_.getAs[String]("endpoint_base") == "/get"))
-      assert(got.forall(_.getAs[Long]("consecutive_errors") == 2L))
-    } finally q.stop()
   }
 }

@@ -153,9 +153,9 @@ class ResilienceSpec extends AnyFunSuite {
     val seeds = Seq(1L).toDF("id")
     coldStart()
     val runs: Seq[(String, () => org.apache.spark.sql.DataFrame, Boolean)] = Seq(
-      ("lpa_edge", () => LabelPropagation.communities(e, "src", "dst", rounds = 3), true),
+      ("lpa_edge", () => EdgeLoops.lpaCommunities(e, "src", "dst", rounds = 3), true),
       ("lpa_adj", () => LabelPropagation.communitiesAdj(adjU, rounds = 3), true),
-      ("ppr_edge", () => PageRank.personalized(e, "src", "dst", seeds, "id",
+      ("ppr_edge", () => EdgeLoops.personalizedPageRank(e, "src", "dst", seeds, "id",
         iterations = 3), true),
       // kcore's memo sits INSIDE an untuned() rebind, so the hit is
       // same-plan, not same-object

@@ -4,36 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 
-/** Scale-mechanics tests: bucketed co-located joins (shuffle elimination)
-  * and IVF recall against the brute-force reference. */
+/** Scale-mechanics tests: plan shapes (shuffle elimination, pushdown,
+  * loop rounds) and ANN recall against the brute-force reference. */
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  test("bucketed tables join without a shuffle on the bucket key") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh")
-    val o = Tables.orders(spark, "/root/testdata/sf0.001")
-    val c = Tables.customer(spark, "/root/testdata/sf0.001")
-    graft.operators.CorpusLayout.writeBucketed(
-      o, "orders_b", s"$wh/orders_b", "o_custkey", 8)
-    graft.operators.CorpusLayout.writeBucketed(
-      c, "customer_b", s"$wh/customer_b", "c_custkey", 8)
-    // disable auto-broadcast so the join would otherwise need a shuffle
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("orders_b")
-        .join(spark.table("customer_b"),
-          col("o_custkey") === col("c_custkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"), plan)
-      assert(joined.count() == o.count()) // every order has a customer
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS orders_b")
-      spark.sql("DROP TABLE IF EXISTS customer_b")
-    }
-  }
 
   test("LoopCache: N-round iterative ops leave O(1) live cache entries") {
     val sc = spark.sparkContext
@@ -50,21 +25,21 @@ class ScaleSpec extends AnyFunSuite {
     // each operator may keep its pinned FINAL table, nothing per-round:
     // 5 rounds without the release would leak 5-6 entries per run
     assert(delta(sc.getPersistentRDDs.size) {
-      operators.Bfs.levels(edges, "src", "dst", seeds, "id", rounds = 5).count()
+      EdgeLoops.bfsLevels(edges, "src", "dst", seeds, "id", rounds = 5).count()
     } <= 1, "Bfs leaked per-round level tables")
     // PageRank keeps its pinned final. The node count that sizes the
     // token scale is a plain head() inside the memo build, so it leaves
     // no entry, and a warm re-invocation skips it through the memo (the
     // adjacency-loop test below pins PageRank at exactly 1 entry)
     assert(delta(sc.getPersistentRDDs.size) {
-      operators.PageRank.fixedPoint(edges, "src", "dst", iterations = 5).count()
+      EdgeLoops.pageRank(edges, "src", "dst", iterations = 5).count()
     } <= 2, "PageRank leaked its edge anchor")
     // re-invocation must add NOTHING: the memo returns the pinned final
     assert(delta(sc.getPersistentRDDs.size) {
-      operators.PageRank.fixedPoint(edges, "src", "dst", iterations = 5).count()
+      EdgeLoops.pageRank(edges, "src", "dst", iterations = 5).count()
     } == 0, "warm PageRank re-invocation missed its pinned count/final")
     assert(delta(sc.getPersistentRDDs.size) {
-      operators.LabelPropagation.communities(edges, "src", "dst", rounds = 5).count()
+      EdgeLoops.lpaCommunities(edges, "src", "dst", rounds = 5).count()
     } <= 1, "LPA leaked its edge anchor")
     assert(delta(sc.getPersistentRDDs.size) {
       val vecs = (1L to 40L).map(i => (i, Seq.tabulate(4)(d => ((i * 7 + d) % 13).toInt)))
@@ -212,8 +187,8 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("hash sampling is a pure pushdown-safe filter (no shuffle, no agg)") {
-    val s = graft.operators.Sampling.lehmerSample(
-      Tables.documents(spark, "/root/testdata/sf0.001"), "doc_id", 0.3)
+    val s = Tables.documents(spark, "/root/testdata/sf0.001")
+      .filter(graft.operators.Sampling.lehmerU($"doc_id") < 0.3)
     val plan = s.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
   }
@@ -266,52 +241,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(hashEx <= 2, s"$hashEx hash exchanges:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
-  }
-
-  test("evolved-schema corpus read: old batches null-fill new columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
-    try {
-      // batch 1: original schema; batch 2: adds a `lang` column
-      Seq((1L, "a")).toDF("doc_id", "text")
-        .write.parquet(s"$dir/batch=1")
-      Seq((2L, "b", "en")).toDF("doc_id", "text", "lang")
-        .write.parquet(s"$dir/batch=2")
-      val got = graft.operators.CorpusLayout.readEvolved(spark, dir)
-        .select($"doc_id", $"lang")
-        .as[(Long, Option[String])].collect().sortBy(_._1).toSeq
-      assert(got == Seq((1L, None), (2L, Some("en"))))
-      // the plain reader picks ONE file's schema and would drop `lang`
-      // for some read orders — the helper exists precisely for this
-      assert(graft.operators.CorpusLayout.readEvolved(spark, dir)
-        .columns.contains("lang"))
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively(): Unit
-    }
-  }
-
-  test("partitioned corpus layout: filters prune partition directories") {
-    val outPath = java.nio.file.Files.createTempDirectory("graft_part")
-    val out = outPath.toString
-    try {
-      val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      graft.operators.CorpusLayout.writePartitioned(docs, out, Seq("source"))
-      // directory-per-source on disk
-      val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-        .map(_.getName).filter(_.startsWith("source=")).sorted
-      assert(dirs.length == 20, dirs.mkString(","))
-      val back = graft.operators.CorpusLayout.readPartitioned(spark, out)
-        .filter(col("source") === "src3")
-      val plan = back.queryExecution.executedPlan.toString
-      // the filter must land in PartitionFilters (directory pruning), and
-      // the scan must report only the matching partition's files
-      assert(plan.contains("PartitionFilters: [isnotnull(source"), plan)
-      assert(back.count() == docs.filter(col("source") === "src3").count())
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
   }
 
   test("q58 per-key average: one orders scan, window in place of the self-join") {
@@ -386,7 +315,8 @@ class ScaleSpec extends AnyFunSuite {
   test("IVF knn: perfect recall on planted exact duplicates, bounded candidates") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = emb.filter($"vec_id" < 5)
-    val ivf = Similarity.ivfKnn(emb, queries, k = 1, nCentroids = 8, nProbe = 2)
+    val ivf = Similarity.ivfKnnProbe(Similarity.ivfIndex(emb, nCentroids = 8),
+        queries, k = 1, nProbe = 2)
       .collect()
     // rank-1 neighbor under IVF must match brute force for the planted case:
     // query vectors ARE corpus vectors, so their own cell is probed first and
@@ -421,7 +351,7 @@ class ScaleSpec extends AnyFunSuite {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select($"id_a".cast("long"), $"id_b".cast("long"))
         .as[(Long, Long)].collect().toSet
-    val exact = pairSet(Similarity.exactCosinePairs(corpus, minCosine = 0.99))
+    val exact = pairSet(References.exactCosinePairs(corpus, minCosine = 0.99))
     val bandedDf = Similarity.cosineNearDupsBanded(corpus, minCosine = 0.99)
     val banded = pairSet(bandedDf)
     assert(banded == exact,
@@ -554,7 +484,7 @@ class ScaleSpec extends AnyFunSuite {
     // relational reference tier: the (doc, gram) shuffles were q140's
     // dominant cost when they keyed on raw 5-gram strings (VERDICT r9
     // #3); the hashed tier must keep them at 3 longs/row
-    val rel = graft.operators.Repetition
+    val rel = References
       .metricsRelational(docs, "doc_id", "text", hashGrams = true)
       .queryExecution.executedPlan
     val gramEx = nodes(rel).collect {

@@ -100,33 +100,6 @@ class StreamingOpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming near-dup screen: history collision flagged, fresh doc clean") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = (1 to 40).map(i => s"word$i").mkString(" ")
-    val nearDup = (1 to 39).map(i => s"word$i").mkString(" ") + " wordX"
-    val fresh = (1 to 40).map(i => s"fresh$i").mkString(" ")
-    val history = Seq((100L, base)).toDF("doc_id", "text")
-    val buckets = StreamingOps.bandBuckets(
-      graft.operators.Dedup.minHashSignatures(history, "doc_id", "text"))
-    val mem = MemoryStream[(Long, String, Timestamp)]
-    val docs = mem.toDF().toDF("doc_id", "text", "ts")
-    val q = StreamingOps.nearDupStream(docs, "doc_id", "ts", "text", buckets,
-        watermark = "10 minutes")
-      .select($"doc_id", $"near_dup")
-      .writeStream.outputMode("append").format("memory").queryName("nd").start()
-    try {
-      mem.addData(
-        (1L, nearDup, ts("2026-08-10 00:00:01")), // collides with history
-        (2L, fresh, ts("2026-08-10 00:00:02")))   // no shared buckets
-      q.processAllAvailable()
-      mem.addData((99L, fresh, ts("2026-08-10 12:00:00"))) // advance watermark
-      q.processAllAvailable()
-      val got = spark.table("nd").as[(Long, Boolean)].collect().toMap
-      assert(got(1L), "near-dup of a history doc must be flagged")
-      assert(!got(2L), "unrelated doc must pass clean")
-    } finally q.stop()
-  }
-
   test("streaming session_window matches batch sessionization semantics") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp)]
@@ -635,20 +608,6 @@ class StreamingOpsSpec extends AnyFunSuite {
       s"guard perturbed clean keys: guarded=$guarded clean=$cleanUnguarded")
     assert(unguarded.contains(("L1-hot", "R1-hot")),
       "fixture broken: unguarded run should match the hot key")
-
-    // side output: the excluded events are auditable, not silently dropped
-    val memS = MemoryStream[(Long, Timestamp, String)]
-    val sq = StreamingOps.deniedEvents(
-        memS.toDF().toDF("key", "ts", "tag"), "key", deny)
-      .select($"tag")
-      .writeStream.outputMode("append").format("memory").queryName("ij_denied")
-      .start()
-    try {
-      memS.addData(lRows: _*); memS.addData(rRows: _*)
-      sq.processAllAvailable()
-      assert(spark.table("ij_denied").as[String].collect().toSet ==
-        Set("L1-hot", "R1-hot"))
-    } finally sq.stop()
   }
 
   // ---- the checkpoint file manager (graft.streaming.LocalCheckpointFileManager)

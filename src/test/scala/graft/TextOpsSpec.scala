@@ -64,11 +64,17 @@ class TextOpsSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("minhash_sig registered for SQL via GraftExtensions") {
-    GraftExtensions.register(spark)
-    val got = spark.sql(
-      "SELECT minhash_sig(split('a b c d', ' '), 8, 3) AS s").collect().head
-    assert(got.getAs[scala.collection.Seq[Long]]("s").length == 8)
+  test("minhash_sig over a column: codegen equals the folded literal") {
+    import graft.functions.MinHashSignatureExpression.minhashSig
+    val toks = split(lit("a b c d"), " ")
+    // a literal argument folds at plan time (interpreted eval); the
+    // repartitioned column runs the generated code
+    val folded = spark.range(1).select(minhashSig(toks, 8, 3).as("s"))
+    assert(!folded.queryExecution.optimizedPlan.toString.contains("minhash"))
+    val want = folded.head().getSeq[Long](0)
+    val got = Seq("a b c d").toDF("t").repartition(1)
+      .select(minhashSig(split($"t", " "), 8, 3)).head().getSeq[Long](0)
+    assert(want.length == 8 && got == want)
   }
 
   test("simhash expression is hash-identical to the relational formulation") {
@@ -170,26 +176,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(stats.map(_.getAs[String]("source")).toSeq == Seq("s1", "s2"))
   }
 
-  test("multimodal resize and frame-sample: deterministic geometry, bounded output") {
-    val docs = Seq((1L, "s1", "abcdef"), (2L, "s1", "x")).toDF("doc_id", "source", "text")
-    val payloads = Multimodal.payloadFromText(docs, "doc_id", "source", "text")
-    val resized = Multimodal.resizeTo(payloads, 640, 480).collect()
-    assert(resized.length == 2)
-    resized.foreach { r =>
-      assert(r.getAs[Int]("width") <= 640 && r.getAs[Int]("width") >= 1)
-      assert(r.getAs[Int]("height") <= 480 && r.getAs[Int]("height") >= 1)
-    }
-    val frames = Multimodal.sampleFrames(payloads, stride = 24)
-    val byId = frames.groupBy($"media_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(byId.keySet == Set(1L, 2L))
-    // stride sampling emits ceil(n_frames / stride) rows, ≥ 1 per payload
-    val f1 = frames.filter($"media_id" === 1L).collect()
-    assert(f1.forall(_.getAs[Int]("frame_index") % 24 == 0))
-    assert(f1.map(_.getAs[Int]("n_frames")).distinct.length == 1)
-  }
-
-  test("imageio codec: REAL png decode + resize through the same mapPartitions seam") {
+  test("imageio codec: REAL png decode through the mapPartitions seam") {
     // fixture: a real 64x32 PNG encoded in-test with javax.imageio — left
     // half black, right half white, so the 4x4 luminance thumbnail has a
     // known structure (cells 0-1 of each row ~0, cells 2-3 ~1)
@@ -223,18 +210,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(bad.getAs[String]("format") == "undecodable")
     assert(bad.getAs[Int]("width") == 0)
     assert(bad.getAs[scala.collection.Seq[Float]]("features").forall(_ == 0f))
-    // real resize: aspect-preserving fit to 16x16 -> 16x8, re-encoded as
-    // a decodable PNG whose pixels kept the half-black/half-white split
-    val resized = Multimodal.resizeTo(payloads, 16, 16, codec = "imageio")
-      .orderBy($"media_id").collect()
-    assert(resized(0).getAs[Int]("width") == 16 &&
-      resized(0).getAs[Int]("height") == 8)
-    val re = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
-      resized(0).getAs[Array[Byte]]("resized_payload")))
-    assert(re.getWidth == 16 && re.getHeight == 8)
-    assert((re.getRGB(1, 4) & 0xffffff) == 0x000000)
-    assert((re.getRGB(14, 4) & 0xffffff) == 0xffffff)
-    assert(resized(1).getAs[Int]("width") == 0) // undecodable passthrough
   }
 
   test("aHash16 + phash pairs: complete at hamming<=1, brute-force-checked") {
@@ -316,12 +291,12 @@ class TextOpsSpec extends AnyFunSuite {
     val samples = (amps1.zipWithIndex.map { case (a, i) => (1L, "s", i + 1, a) }
       ++ amps2.zipWithIndex.map { case (a, i) => (2L, "s", i + 1, a) })
       .toDF("media_id", "source", "pos", "amp")
-    val runs = Multimodal.silenceRuns(samples, silenceBelow = 128, minRun = 3)
+    val runs = References.silenceRuns(samples, silenceBelow = 128, minRun = 3)
       .select($"media_id", $"run_start", $"run_len")
       .as[(Long, Int, Long)].collect().toSet
     assert(runs == Set((1L, 2, 3L), (2L, 1, 4L)), runs)
     // min-run boundary: raising minRun to 4 drops media 1's run
-    assert(Multimodal.silenceRuns(samples, 128, 4)
+    assert(References.silenceRuns(samples, 128, 4)
       .select($"media_id").as[Long].collect().toSeq == Seq(2L))
     // stub waveform: deterministic, the 1 + hash mod 240 length contract
     // (hand-replayed), amplitudes in range, partition-invariant
@@ -361,7 +336,7 @@ class TextOpsSpec extends AnyFunSuite {
           coalesce($"longest_run", lit(0L)), coalesce($"sil_in_runs", lit(0L)))
         .as[(Long, Long, Long, Long, Long)].collect()
         .map { case (m, a, b, c, d) => m -> ((a, b, c, d)) }.toMap
-      val runs = Multimodal.silenceRuns(samples, 128, minRun)
+      val runs = References.silenceRuns(samples, 128, minRun)
         .select($"media_id", $"run_len").as[(Long, Long)].collect()
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       val counts = rows.groupBy(_._1).view.mapValues(_.size.toLong).toMap
@@ -423,43 +398,48 @@ class TextOpsSpec extends AnyFunSuite {
     assert(n("ab")._2 == 2 && n("x")._2 == 1)
   }
 
-  test("rolling_hash registered for SQL via GraftExtensions; literal folds") {
-    GraftExtensions.register(spark)
-    val got = spark.sql("SELECT rolling_hash('hello') AS h, rolling_hash('hello', 37) AS h37")
-      .collect().head
+  test("rolling_hash over a column equals hashBytes; literal folds") {
+    import RollingHashExpression.rollingHash
+    val got = Seq("hello").toDF("t").repartition(1)
+      .select(rollingHash($"t").as("h"), rollingHash($"t", 37L).as("h37"))
+      .head()
     assert(got.getAs[Long]("h") ==
       RollingHashExpression.hashBytes("hello".getBytes("UTF-8"), 31L))
     assert(got.getAs[Long]("h37") ==
       RollingHashExpression.hashBytes("hello".getBytes("UTF-8"), 37L))
     // foldable: a literal argument constant-folds at plan time
-    val plan = spark.sql("SELECT rolling_hash('x') AS h").queryExecution
-      .optimizedPlan.toString
+    val plan = spark.range(1).select(rollingHash(lit("x")).as("h"))
+      .queryExecution.optimizedPlan.toString
     assert(!plan.toLowerCase.contains("rolling_hash"), plan)
   }
 
-  test("md5_register / md5_word32 registered for SQL; equal their hex contracts") {
-    GraftExtensions.register(spark)
-    val got = spark.sql(
-      """SELECT md5_register('42') AS pk,
-        |       CAST(conv(substring(md5('42'),1,2),16,10) AS INT) AS reg_sql,
-        |       md5_word32('hello') AS w,
-        |       CAST(conv(substring(md5('hello'),1,8),16,10) AS BIGINT) AS w_sql
-        |""".stripMargin).collect().head
+  test("md5_register / md5_word32 over a column: hex contracts hold") {
+    import graft.functions.Md5RegisterExpression.md5Register
+    import graft.functions.Md5Word32Expression.md5Word32
+    val got = Seq(("42", "hello")).toDF("k", "t").repartition(1)
+      .select(md5Register($"k").as("pk"),
+        conv(substring(md5($"k"), 1, 2), 16, 10).cast("int").as("reg_sql"),
+        md5Word32($"t").as("w"),
+        conv(substring(md5($"t"), 1, 8), 16, 10).cast("bigint").as("w_sql"))
+      .head()
     assert(got.getAs[Int]("pk") >> 6 == got.getAs[Int]("reg_sql"))
     assert((got.getAs[Int]("pk") & 63) >= 1 && (got.getAs[Int]("pk") & 63) <= 53)
     assert(got.getAs[Long]("w") == got.getAs[Long]("w_sql"))
   }
 
-  test("vector kernels registered for SQL via GraftExtensions") {
-    GraftExtensions.register(spark)
-    val got = spark.sql(
-      """SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c,
-        |       l2_sq(array(0.0d, 3.0d), array(4.0d, 0.0d)) AS l,
-        |       hyperplane_bucket(array(1.0d, 2.0d), 8) AS b""".stripMargin)
-      .collect().head
+  test("vector kernels over a column: codegen equals the folded literal") {
+    import graft.functions.VectorExpressions.{cosineSim, hyperplaneBucket, l2Sq}
+    def kernels(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      Seq(cosineSim(a, a).as("c"), l2Sq(a, b).as("l"),
+        hyperplaneBucket(b, 8).as("bk"))
+    val lits = kernels(typedLit(Array(0.0, 3.0)), typedLit(Array(4.0, 0.0)))
+    val folded = spark.range(1).select(lits: _*).head()
+    val got = Seq((Array(0.0, 3.0), Array(4.0, 0.0))).toDF("a", "b")
+      .repartition(1).select(kernels($"a", $"b"): _*).head()
     assert(got.getAs[Double]("c") == 1.0)
     assert(got.getAs[Double]("l") == 25.0)
-    assert(got.getAs[Long]("b") >= 0L && got.getAs[Long]("b") < 256L)
+    assert(got.getAs[Long]("bk") >= 0L && got.getAs[Long]("bk") < 256L)
+    assert(got == folded)
   }
 
   test("cosine similarity column matches manual computation") {
@@ -587,10 +567,10 @@ class TextOpsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val mapOnly = operators.Repetition.metrics(docs, "doc_id", "text")
       .orderBy($"doc_id").collect().toSeq
-    val hashed = operators.Repetition
+    val hashed = References
       .metricsRelational(docs, "doc_id", "text", hashGrams = true)
       .orderBy($"doc_id").collect().toSeq
-    val strings = operators.Repetition
+    val strings = References
       .metricsRelational(docs, "doc_id", "text", hashGrams = false)
       .orderBy($"doc_id").collect().toSeq
     assert(mapOnly.nonEmpty)

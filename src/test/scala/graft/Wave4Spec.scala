@@ -27,7 +27,7 @@ class Wave4Spec extends AnyFunSuite {
     // 2→1, 3→1, 4→1, 1→2 (so node 1 has an out-edge; 3 and 4 are
     // teleport-only after round 1)
     val edges = Seq((2L, 1L), (3L, 1L), (4L, 1L), (1L, 2L)).toDF("src", "dst")
-    val got = PageRank.fixedPoint(edges, "src", "dst", iterations = 2)
+    val got = EdgeLoops.pageRank(edges, "src", "dst", iterations = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // exact replay of the token semantics: r1 = T + Σ floor(85·r0/(100·deg))
     val T = 150000000000L; val init = 1000000000000L
@@ -45,9 +45,9 @@ class Wave4Spec extends AnyFunSuite {
 
   test("pagerank is bit-identical under repartitioning") {
     val edges = (1L to 200L).map(i => (i, i * 7 % 97 + 1)).toDF("src", "dst")
-    val a = PageRank.fixedPoint(edges, "src", "dst")
+    val a = EdgeLoops.pageRank(edges, "src", "dst")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val b = PageRank.fixedPoint(edges.repartition(13), "src", "dst")
+    val b = EdgeLoops.pageRank(edges.repartition(13), "src", "dst")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     assert(a.toSeq == b.toSeq)
   }
@@ -57,15 +57,14 @@ class Wave4Spec extends AnyFunSuite {
     // dropped), nodes 3/4 never receive anything and stay absent.
     val edges = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")
     val seeds = Seq(Tuple1(1L)).toDF("id")
-    val got = graft.operators.PageRank
-      .personalized(edges, "src", "dst", seeds, "id", iterations = 2)
+    val got = EdgeLoops.personalizedPageRank(edges, "src", "dst", seeds, "id",
+        iterations = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val T = 150000000000L
     // r1 = {1: T, 2: 85% of 1e12}; r2 = {1: T, 2: 85% of T}
     assert(got == Map(1L -> T, 2L -> T * 85L / 100L))
-    val again = graft.operators.PageRank
-      .personalized(edges.repartition(5), "src", "dst", seeds, "id",
-        iterations = 2)
+    val again = EdgeLoops.personalizedPageRank(edges.repartition(5), "src", "dst",
+        seeds, "id", iterations = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == got)
   }
@@ -173,13 +172,11 @@ class Wave4Spec extends AnyFunSuite {
     // two triangles bridged by 3–10; hand-replayed 4 synchronous rounds
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (10L, 11L), (10L, 12L), (11L, 12L), (3L, 10L)).toDF("u", "v")
-    val got = graft.operators.LabelPropagation
-      .communities(edges, "u", "v", rounds = 4)
+    val got = EdgeLoops.lpaCommunities(edges, "u", "v", rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 3L, 11L -> 3L, 12L -> 3L))
-    val again = graft.operators.LabelPropagation
-      .communities(edges.repartition(5), "u", "v", rounds = 4)
+    val again = EdgeLoops.lpaCommunities(edges.repartition(5), "u", "v", rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == got)
   }
@@ -217,16 +214,14 @@ class Wave4Spec extends AnyFunSuite {
     val k4 = for { a <- 1L to 4L; b <- (a + 1) to 4L } yield (a, b)
     val pairs = (k4 ++ Seq((4L, 5L), (6L, 7L)))
       .toDF("src", "dst")
-    val edges = graft.operators.TriangleCensus
-      .topKNeighborEdges(pairs, "src", "dst", k = 10)
+    val edges = EdgeLoops.topKNeighborEdges(pairs, "src", "dst", k = 10)
     val got = graft.operators.TriangleCensus.perNodeTriangles(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
     // top-1 sparsification keeps only each node's strongest neighbor:
     // with all multiplicities 1 the tiebreak is the smallest id, so node
     // 1's edges to 2 plus everyone's fallback to 1 → a star, no triangle
-    val sparse = graft.operators.TriangleCensus
-      .topKNeighborEdges(pairs, "src", "dst", k = 1)
+    val sparse = EdgeLoops.topKNeighborEdges(pairs, "src", "dst", k = 1)
     assert(graft.operators.TriangleCensus
       .perNodeTriangles(sparse).count() == 0)
   }

@@ -36,7 +36,7 @@ class Wave5Spec extends AnyFunSuite {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("src", "dst")
     val seeds = Seq(Tuple1(1L)).toDF("id")
-    val got = Bfs.levels(edges, "src", "dst", seeds, "id", rounds = 3)
+    val got = EdgeLoops.bfsLevels(edges, "src", "dst", seeds, "id", rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
     // node 5 is 4 hops out, 10/11 disconnected: none appear
@@ -54,12 +54,12 @@ class Wave5Spec extends AnyFunSuite {
     val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
     // 2 nodes x initTokens x dampNum must stay under 2^63: 5e18 x 85 blows
     val e = intercept[IllegalArgumentException] {
-      PageRank.fixedPoint(edges, "src", "dst", iterations = 1,
+      EdgeLoops.pageRank(edges, "src", "dst", iterations = 1,
         initTokens = 5000000000000000000L, dampNum = 85L, dampDen = 100L)
     }
     assert(e.getMessage.contains("overflow"))
     // and the default scale still works on the same graph
-    assert(PageRank.fixedPoint(edges, "src", "dst", iterations = 1)
+    assert(EdgeLoops.pageRank(edges, "src", "dst", iterations = 1)
       .count() == 2L)
   }
 

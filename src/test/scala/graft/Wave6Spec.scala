@@ -76,7 +76,7 @@ class Wave6Spec extends AnyFunSuite {
     // so 1/(2+1-1) = 0.5. Adjacent pairs must not appear.
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L))
       .toDF("u", "v")
-    val got = operators.LinkPredict.topCommonNeighborPairs(edges, topN = 10)
+    val got = References.topCommonNeighborPairs(edges, topN = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     assert(got == Map(
@@ -91,7 +91,7 @@ class Wave6Spec extends AnyFunSuite {
     val off = 1L << 33
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L))
       .map { case (u, v) => (u + off, v + off) }.toDF("u", "v")
-    val got = operators.LinkPredict.topCommonNeighborPairs(edges, topN = 10)
+    val got = References.topCommonNeighborPairs(edges, topN = 10)
       .collect().map(r => (r.getLong(0) - off, r.getLong(1) - off) ->
         (r.getLong(2), r.getDouble(3))).toMap
     assert(got == Map(
@@ -205,7 +205,7 @@ class Wave6Spec extends AnyFunSuite {
       (2L, 4L, 1L)).toDF("s", "d", "w")
     val seeds = Seq(Tuple1(1L)).toDF("n")
     def run(rounds: Int): Map[Long, Long] =
-      operators.ShortestPath.distances(edges, "s", "d", "w", seeds, "n",
+      EdgeLoops.ssspDistances(edges, "s", "d", "w", seeds, "n",
         rounds = rounds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(run(2) == Map(1L -> 0L, 2L -> 5L, 3L -> 2L, 4L -> 11L))
@@ -219,12 +219,12 @@ class Wave6Spec extends AnyFunSuite {
     val seeds = Seq(Tuple1(1L)).toDF("n")
     val before = sc.getPersistentRDDs.size
     // depth 8: far past where un-re-rooted nested round plans blow up
-    operators.ShortestPath.distances(edges, "s", "d", "w", seeds, "n",
+    EdgeLoops.ssspDistances(edges, "s", "d", "w", seeds, "n",
       rounds = 8).count()
     val afterFirst = sc.getPersistentRDDs.size
     assert(afterFirst - before == 1,
       s"expected 1 live entry, got ${afterFirst - before}")
-    operators.ShortestPath.distances(edges, "s", "d", "w", seeds, "n",
+    EdgeLoops.ssspDistances(edges, "s", "d", "w", seeds, "n",
       rounds = 8).count()
     assert(sc.getPersistentRDDs.size == afterFirst)
   }
@@ -302,8 +302,7 @@ class Wave6Spec extends AnyFunSuite {
       .count() == 0) // empty graph: null max guarded, divide by 1
     val wEdges = Seq((1L, 2L, 5L)).toDF("s", "d", "w")
     val noSeeds = Seq.empty[Tuple1[Long]].toDF("n")
-    assert(operators.ShortestPath
-      .distances(wEdges, "s", "d", "w", noSeeds, "n", rounds = 2)
+    assert(EdgeLoops.ssspDistances(wEdges, "s", "d", "w", noSeeds, "n", rounds = 2)
       .count() == 0) // no seeds: nothing reached
     val oneDoc = Seq((1L, Seq("a", "b"))).toDF("id", "toks")
     assert(operators.PrefixJoin.selfJoin(oneDoc, "id", "toks", 60, 100)
@@ -348,8 +347,8 @@ class Wave6Spec extends AnyFunSuite {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (5L, 1L))
       .toDF("s", "d")
     val seed = Seq(1L).toDF("id")
-    val fwd = operators.Bfs.levels(e, "s", "d", seed, "id", rounds = 3)
-    val bwd = operators.Bfs.levels(
+    val fwd = EdgeLoops.bfsLevels(e, "s", "d", seed, "id", rounds = 3)
+    val bwd = EdgeLoops.bfsLevels(
       e.select(col("d").as("s"), col("s").as("d")), "s", "d", seed, "id",
       rounds = 3)
     val scc = fwd.as("f").join(bwd.as("b"), col("f.id") === col("b.id"))
